@@ -22,6 +22,7 @@ from dataclasses import dataclass, field
 from typing import Optional
 
 from pyspark.sql import Column, functions as F
+from pyspark.sql.types import DataType
 
 
 @dataclass(frozen=True)
@@ -67,16 +68,29 @@ class CountRollup(Rollup):
         return F.sum(col)
 
 
+def exact_avg(total: Column, count: Column, avg_type: DataType) -> Column:
+    """AVG from its sum and count: ``total / count`` cast to
+    ``avg_type``, the type Spark's ``avg`` gives the same input. For a
+    decimal the cast rounds the exact quotient HALF_UP. Spark's own
+    ``avg`` of a decimal narrower than 12 digits is not exact: the
+    optimizer rule DecimalAggregates rewrites it into a double average,
+    which misses HALF_UP ties in the last digit (an exact mean of
+    52532.2545125 comes back as 52532.254512)."""
+    return (total / count).cast(avg_type)
+
+
 @dataclass(frozen=True)
 class AverageRollup(Rollup):
     """AVG. Re-aggregation is NOT avg-of-avgs; the planner decomposes an
     average metric into sum+count partials when an outer group-by is
-    required and recombines (plans/planner.py)."""
+    required and recombines (plans/planner.py). Both forms go through
+    ``exact_avg``, so the planner passes AVG's result type for the
+    source column."""
 
     reaggregatable = False
 
-    def agg(self, col: Column) -> Column:
-        return F.avg(col)
+    def agg(self, col: Column, avg_type: DataType) -> Column:
+        return exact_avg(F.sum(col), F.count(col), avg_type)
 
     def reagg(self, col: Column) -> Column:
         raise ValueError("AverageRollup cannot be re-aggregated directly; "

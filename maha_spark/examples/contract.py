@@ -1239,11 +1239,13 @@ QUERIES: dict[str, dict] = {
     # -- §2.4 AverageRollup through the non-re-aggregatable path: the dim
     #    join forces join-then-agg (or sum/count OGB decomposition) so the
     #    result is the TRUE average over joined rows, never avg-of-avgs.
-    #    Spark AVG(DECIMAL(8,2)) yields DECIMAL(12,6) via exact HALF_UP
-    #    division; the oracle replicates it with integer arithmetic
-    #    ((2a+b) // 2b is half-up a/b) because DuckDB divides decimals as
-    #    doubles. (RESTORED r13: the declared set grew to 52 — rotation
-    #    that removes a driver-visible entry is permanently ended.)
+    #    AVG(DECIMAL(8,2)) has type DECIMAL(12,6). Spark's own avg of so
+    #    narrow a decimal is a double average (optimizer rule
+    #    DecimalAggregates), so AverageRollup computes the exact
+    #    sum/count and the cast to DECIMAL(12,6) rounds it HALF_UP
+    #    (core/rollup.exact_avg). The oracle replicates that with integer
+    #    arithmetic ((2a+b) // 2b is half-up a/b) because DuckDB divides
+    #    decimals as doubles.
     "q32_avg_rollup": {
         "request": {
             "cube": "tpch",
@@ -1271,8 +1273,7 @@ QUERIES: dict[str, dict] = {
             FROM s
         """,
     },
-    # -- §2.7 union view (UNION ALL with per-branch constants; RESTORED
-    #    r13 alongside q32_avg_rollup — see its note)
+    # -- §2.7 union view (UNION ALL with per-branch constants)
     "q16_union_view": {
         "request": {
             "cube": "tpch_union",

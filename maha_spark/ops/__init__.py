@@ -2,9 +2,9 @@
 their driver-contract registration.
 
 ``entry_queries`` / ``entry_oracles`` are consumed by ``__spark_entry__``:
-every operator is a (Spark callable, DuckDB oracle SQL) pair; operators
-that are approximate by construction (ANN within LSH buckets) register
-without an oracle and get the driver's rows-only check.
+every contract operator is a (Spark callable, DuckDB oracle SQL) pair.
+Public operators outside the contract are listed in ``pytest_only_ops``
+with the pytest that pins each.
 """
 
 from __future__ import annotations
@@ -31,55 +31,25 @@ def entry_queries() -> dict[str, Callable]:
     return {
         "op_text_stats": text.text_profile,
         "op_contamination": contamination.contamination,
-        # r10 rotation: the ExactSubstr REMOVAL leg IN (the detection
-        # leg has been on contract since r9; the removal output is now
-        # driver-hash-checked through a composed DuckDB twin — detection
-        # CTEs + keep-first rank + positional text rebuild). Slots from
-        # op_chunking (exact oracle pinned in test_ops_quality.py; also
-        # composed inside op_curate, which stays on contract) and
-        # op_winnow_pairs (on since r7; exact oracle pinned in
-        # test_ops_winnow.py, winnow coverage retained on contract by
-        # op_winnow_matches + op_winnow_contamination).
+        # ExactSubstr removal: hash-checked through a composed DuckDB
+        # twin (detection CTEs + keep-first rank + positional rebuild)
         "op_exact_substring_dedup": substring.exact_substring_dedup_op,
-        # r8 rotation: the r7 flagships IN (the driver had never
-        # hash-checked them) — positional winnow matches (df-capped
-        # boilerplate guard) and SemDeDup via the seed-centroid SQL twin
-        # (bit-parity oracle; the Lloyd/kernel variant stays
-        # pytest-pinned). q14_distinct_dims and q31_post_result_decode
-        # OUT after six stable rounds — pinned every round against the
-        # SAME DuckDB oracles in tests/test_offcontract_queries.py.
+        # positional winnow matches (df-capped boilerplate guard)
         "op_winnow_matches": winnow.winnow_matches,
-        # r9 wave-3 rotation: the passage-level benchmark decontamination
-        # twin IN (exact DuckDB oracle existed since r7 but the driver
-        # had never hash-checked it — the last such op); slot from
-        # q16_union_view (fuzz union-battery + off-contract pin).
+        # passage-level benchmark decontamination
         "op_winnow_contamination": winnow.winnow_contamination,
-        # new r9 operators straight onto the contract (third wave):
         # ExactSubstr duplicated-span detection (Lee et al. ACL'22 —
-        # exhaustive window hashing, the exact complement to winnowing's
-        # sampled fingerprints) and the CCNet-style bigram-LM perplexity
-        # quality score (integer micro-nat aggregation for cross-engine
-        # bit parity). Slots from q15_outer_filter and
-        # q29_static_mapping_filter (both long-stable; pinned against
-        # the same oracles in tests/test_offcontract_queries.py, with
-        # OuterFilter/reverse-map coverage retained by the fuzz
-        # batteries and q7).
+        # exhaustive window hashing) and the CCNet-style bigram-LM
+        # perplexity score (integer micro-nat aggregation for
+        # cross-engine bit parity)
         "op_exact_substring_spans": substring.exact_substring_spans,
         "op_lm_perplexity": lm.lm_perplexity,
+        # SemDeDup via the seed-centroid SQL twin (bit-parity oracle);
+        # the Lloyd-iterated kernel is pinned in pytest (semdedup_lloyd)
         "op_semdedup": semdedup.semdedup_op,
-        # r7 rotation: batch sessionize back IN (exact oracle, pure window
-        # functions); its streaming twin moves to pytest-only — the stream
-        # == batch bit-identity pin in test_ops_sessions.py means the
-        # driver's hash check on the batch op transitively covers both
+        # the streaming twin's stream == batch pin (test_ops_sessions.py)
+        # makes this hash check cover both
         "op_sessionize": sessions.sessionize,
-        # r9 rotation: asof_join back IN (out since r7; exact DuckDB
-        # ASOF JOIN oracle, ops/asof.py) and token_quantiles back IN
-        # (out since r6; exact quantile oracle, ops/packing.py) —
-        # closing the r8 VERDICT's rotation-debt list. Their slots plus
-        # op_mm_pixel_stats' come from q3_daily_revenue, q11_having and
-        # q37_dim_rowcount (redundant coverage: grain/macros via
-        # q20/q27, part-grain rollup + HAVING via q2/q12, dim rowcount
-        # via q6/q19), pinned in tests/test_offcontract_queries.py.
         "op_asof_join": asof.asof_join,
         "op_token_quantiles": packing.token_quantiles,
         "op_dedup_signatures": dedup.dedup_signatures,
@@ -88,69 +58,46 @@ def entry_queries() -> dict[str, Callable]:
         "op_dedup_embed_cosine": dedup.dedup_embed_cosine,
         "op_dedup_simhash_pairs": dedup.dedup_simhash_pairs,
         "op_dedup_clusters": dedup.dedup_clusters,
-        # r6 rotation: op_dedup_incremental (the crawl-ingest incremental
-        # dedup flow, ops/incremental.py) takes op_sim_lsh_buckets' slot;
-        # the bucket histogram keeps its exact oracle off-contract in
-        # tests/test_ops_packing.py
+        # the crawl-ingest incremental dedup flow (ops/incremental.py)
         "op_dedup_incremental": incremental.dedup_incremental_op,
         "op_curate": pipeline.curate_corpus,
         "op_sketch_setops": sketches.sketch_setops,
         "op_sim_topk": similarity.sim_topk,
-        # r11 rotation: op_sim_pairs and op_embed_quantize OFF contract
-        # (exact oracles pinned in test_ops_packing.py; pairwise-cosine
-        # coverage retained on contract by op_sim_topk +
-        # op_dedup_embed_cosine, int8 quantization is per-row codegen
-        # exercised by the pin every round). Their slots restore
-        # q3_daily_revenue and q15_outer_filter — the two oldest
-        # off-contract cube queries (out since r9).
-        # r9 rotation (second wave): the RH-LSH bucket histogram back IN
-        # (out since r6; its md5-derived hyperplanes make the bucket
-        # assignment an exact SQL expression, so the DuckDB oracle is
-        # bit-exact) — the last rotation-debt entry with an exact oracle
-        # that had never returned to the contract. Its slot comes from
-        # q22_or_notlike (Or/NotLike/IsNull coverage retained by q12 +
-        # the fuzz batteries + the off-contract pin).
+        # md5-derived hyperplanes make the bucket assignment an exact SQL
+        # expression, so the DuckDB oracle is bit-exact
         "op_sim_lsh_buckets": similarity.sim_lsh_buckets,
-        # new r9 operator straight onto the contract: mergeable
-        # frequent-items partials (Druid datasketches frequentItems
-        # parity) — day partials over events served weekly with provable
+        # mergeable frequent-items partials (Druid datasketches
+        # frequentItems parity): day partials served weekly with provable
         # [lb, ub] bounds; the oracle inlines the identical build+serve
-        # in exact integer arithmetic. Slot from q13_two_chains (its
-        # two-chain plan stays pinned physically in test_plan_shape.py
-        # plus the off-contract oracle).
+        # in exact integer arithmetic
         "op_freq_topk": freqtopk.freq_topk,
         "op_mm_decode": multimodal.mm_decode_features,
-        # r9: the REAL PNG decoder under a driver-grade oracle — the
-        # r8 VERDICT's Missing #2 (op_mm_decode hashes only the stub).
-        # Deterministic doc_id-derived PNGs (all five scanline filters)
-        # are encoded, decoded with decode_png, and checksummed; the
-        # DuckDB oracle computes the checksums analytically.
+        # the real PNG decoder: deterministic doc_id-derived PNGs (all
+        # five scanline filters) are encoded, decoded with decode_png and
+        # checksummed; the DuckDB oracle computes the checksums
+        # analytically
         "op_mm_pixel_stats": multimodal.mm_pixel_stats,
         "op_pack_sequences": packing.pack_sequences,
         "op_sample_stratified": packing.sample_profile,
-        # Entries kept as public API + pytest (not in the 50-entry driver
-        # contract): approx_set_counts (HLL) and sim_ann_topk/ivf are
-        # approximate by construction (rows-only checks only —
-        # test_ops.py pins their recall/rsd), and mm_resize /
-        # mm_frame_sample share op_mm_decode's mapInPandas plumbing
-        # (test_ops.py pins their oracles' semantics).
         "op_stream_hourly": hourly.streaming_hourly,
     }
 
 
 def pytest_only_ops() -> dict[str, tuple[Callable, str]]:
-    """Public pipeline operators NOT in the 50-entry driver contract:
-    name -> (callable, the pytest that pins it). Every rotation in or out
-    of ``entry_queries`` must move the operator between these two
-    registries — ``tools/gen_contract_map.py`` regenerates the README
-    table from both, and ``tests/test_contract_map.py`` fails if either
-    the table or this split goes stale (an operator in neither registry
-    is orphaned; in both is double-booked)."""
+    """Public pipeline operators NOT in the 52-entry contract:
+    name -> (callable, the pytest that pins it). An operator moving in or
+    out of ``entry_queries`` must move between these two registries —
+    ``tools/gen_contract_map.py`` regenerates the README table from both,
+    and ``tests/test_contract_map.py`` fails if either the table or this
+    split goes stale (an operator in neither registry is orphaned; in
+    both is double-booked). Approximate operators (HLL counts, ANN
+    top-k) live here because they have no exact SQL oracle: their pins
+    are recall/rsd gates."""
     from . import (bpe, chunking, dedup, incremental, lm, multimodal,
                    packing, semdedup, sessions, similarity, sketches,
                    substring, winnow)
     return {
-        # new r9: end-to-end BPE tokenizer fitting (train on the corpus
+        # end-to-end BPE tokenizer fitting (train on the corpus
         # word-frequency table, encode the corpus) — iterative by
         # construction, so no single-statement SQL twin exists; pinned
         # against a pure-Python Sennrich reference instead
@@ -159,20 +106,16 @@ def pytest_only_ops() -> dict[str, tuple[Callable, str]]:
                          "vs Python reference; batched trainer == "
                          "sequential with a pinned job-count cut; "
                          "partitioning invariance; lossless round-trip)"),
-        # r10 rotation: op_chunking and op_winnow_pairs OFF contract
-        # (slots went to op_exact_substring_dedup — which itself moved
-        # OUT of this registry onto the contract — and q16_union_view's
-        # return); both keep their exact DuckDB pins
         "chunk_documents": (chunking.chunk_documents,
                             "test_ops_quality.py (exact DuckDB oracle "
                             "at default + custom chunk/overlap sizes)"),
         "winnow_pairs": (winnow.winnow_pairs,
                          "test_ops_winnow.py (exact DuckDB oracle + "
                          "planted-overlap semantics)"),
-        # new r9: the crawl-ingest legs — persisted window-hash index
-        # (batch spans == one-shot over the union, bit-identical;
-        # append == rebuild) and persisted LM model (fit once, score
-        # batches; == in-memory training bit-identically)
+        # the crawl-ingest legs — persisted window-hash index (batch
+        # spans == one-shot over the union, bit-identical; append ==
+        # rebuild) and persisted LM model (fit once, score batches;
+        # == in-memory training bit-identically)
         "exsub_incremental": (substring.exsub_incremental,
                               "test_ops_substring.py (incremental == "
                               "one-shot union; append == rebuild; "
@@ -192,16 +135,8 @@ def pytest_only_ops() -> dict[str, tuple[Callable, str]]:
         "lm_perplexity_ref": (lm.lm_perplexity_ref,
                               "test_ops_lm.py (exact DuckDB oracle incl. "
                               "unseen-bigram backoff)"),
-        # freq_topk went STRAIGHT onto the contract (op_freq_topk, r9);
-        # its bound/guarantee property pins live in test_freq_items.py.
-        # winnow_contamination rotated ON contract r9 wave 3
-        # (op_winnow_contamination); its planted-passage pin in
-        # test_ops_winnow.py remains as redundant coverage.
-        # asof_join and token_quantiles rotated back ON contract r9
-        # (op_asof_join / op_token_quantiles); their off-contract pins
-        # in test_ops_packing.py remain as redundant coverage
         # the Lloyd-iterated kernel variant of SemDeDup; the contract
-        # slot (op_semdedup) runs the seed-centroid SQL twin, pinned
+        # entry (op_semdedup) runs the seed-centroid SQL twin, pinned
         # equal to this kernel in test_ops_semdedup.py
         "semdedup_lloyd": (semdedup.semdedup,
                            "test_ops_semdedup.py (independent numpy "
@@ -209,14 +144,7 @@ def pytest_only_ops() -> dict[str, tuple[Callable, str]]:
                            "sql-twin equivalence)"),
         "streaming_sessions": (sessions.streaming_sessions,
                                "test_ops_sessions.py (stream == batch "
-                               "bit-identical + late-event drop; rotated "
-                               "out r7 for batch op_sessionize)"),
-        # sim_lsh_buckets rotated back ON contract r9 (op_sim_lsh_buckets);
-        # its off-contract pin in test_ops_packing.py remains as
-        # redundant coverage
-        # r11 rotation: all-pairs cosine and int8 quantization OFF
-        # contract (slots restored q3_daily_revenue / q15_outer_filter);
-        # both keep their exact DuckDB oracles pinned every round
+                               "bit-identical + late-event drop)"),
         "sim_pairs": (similarity.sim_pairs,
                       "test_ops_packing.py (exact DuckDB oracle) + "
                       "test_ops.py::test_sim_pairs_contract_is_nonvacuous"),
@@ -227,14 +155,9 @@ def pytest_only_ops() -> dict[str, tuple[Callable, str]]:
                            "recall + determinism gates)"),
         "approx_set_counts": (sketches.approx_set_counts,
                               "test_ops.py::test_hll_within_rsd"),
-        "sim_ann_topk": (similarity.sim_ann_topk,
-                         "test_ops.py::test_ann_topk_quality"),
-        "sim_ivf_topk": (similarity.sim_ivf_topk,
-                         "test_ops.py::test_ivf_topk_quality"),
-        "sim_pq_topk": (similarity.sim_pq_topk,
-                        "test_ops.py::test_pq_topk_quality"),
-        "sim_ivfpq_topk": (similarity.sim_ivfpq_topk,
-                           "test_ops.py::test_ivfpq_topk_quality"),
+        "ann_topk": (similarity.ann_topk,
+                     "test_ops.py::test_ann_topk_quality (index specs "
+                     "LSH, IVF, PQ, IVF,PQ: recall + determinism gates)"),
         "mm_resize": (multimodal.mm_resize,
                       "test_ops_packing.py (exact oracle)"),
         "mm_frame_sample": (multimodal.mm_frame_sample,
@@ -245,16 +168,16 @@ def pytest_only_ops() -> dict[str, tuple[Callable, str]]:
                              "test_ops_packing.py (vs exact quantiles)"),
         "dedup_stream_exact": (dedup.streaming_dedup,
                                "test_ops.py::test_streaming_dedup_across_batches"),
-        # new r9: continuous crawl-ingest near-dup maintenance — the
+        # continuous crawl-ingest near-dup maintenance — the
         # foreachBatch twin of the batch incremental flow
         "dedup_stream_incremental": (
             incremental.streaming_dedup_incremental,
             "test_dedup_incremental.py (stream drain == sequential "
             "batch calls: pairs, index bit-identity, replay no-op)"),
-        # new r10: stream-maintained frequent-items partials (per-batch
-        # appended, mergeable-summaries valid at every instant) and the
-        # PODS'12 partial merge used as their compaction job — the
-        # contract slot for the family remains op_freq_topk
+        # stream-maintained frequent-items partials (per-batch appended,
+        # mergeable-summaries valid at every instant) and the PODS'12
+        # partial merge used as their compaction job — the contract
+        # entry for the family is op_freq_topk
         "freq_stream_partials": (
             _stream_freq().streaming_freq_partials,
             "test_stream_freq.py (bounds contain exact counts at every "

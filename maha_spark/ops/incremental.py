@@ -195,31 +195,24 @@ CELLS_TABLE = "ann_cells"
 
 
 def materialize_ann_index(spark: SparkSession, emb: DataFrame,
-                          dst_dir: str, k: int | None = None,
+                          dst_dir: str,
                           centroids: DataFrame | None = None) -> str:
     """Build a persisted IVF index under ``dst_dir``: ``ann_centroids``
-    (cell, centroid — k rows) and ``ann_cells`` (cell, vec_id,
-    embedding — the inverted lists). Pass ``centroids`` to assign against
-    a pre-trained codebook instead of training on ``emb`` (the
-    rebuild-for-verification path in tests)."""
-    from .similarity import IVF_CELLS, ivf_centroids
+    (cell, centroid — ``IVF_CELLS`` rows) and ``ann_cells`` (cell,
+    vec_id, embedding — the inverted lists). Pass ``centroids`` to
+    assign against a pre-trained codebook instead of training on ``emb``
+    (the rebuild-for-verification path in tests)."""
+    from .similarity import ivf_cells, ivf_centroids
 
-    cents = centroids if centroids is not None \
-        else ivf_centroids(emb, k or IVF_CELLS)
+    cents = centroids if centroids is not None else ivf_centroids(emb)
     cdst = os.path.join(dst_dir, CENTROIDS_TABLE)
     cents.write.mode("overwrite").parquet(cdst)
     # re-read so assignment uses the STORED doubles — float round-trips
     # must not make the persisted index diverge from later appends
     stored = spark.read.parquet(cdst)
-    _assigned_cells(emb, stored).write.mode("overwrite").parquet(
+    ivf_cells(emb, stored).write.mode("overwrite").parquet(
         os.path.join(dst_dir, CELLS_TABLE))
     return dst_dir
-
-
-def _assigned_cells(emb: DataFrame, cents: DataFrame) -> DataFrame:
-    from .similarity import _ivf_assign
-    return (_ivf_assign(emb, cents, probe=1)
-            .select("cell", "vec_id", "embedding"))
 
 
 def ann_index_append(spark: SparkSession, index_dir: str,
@@ -231,46 +224,25 @@ def ann_index_append(spark: SparkSession, index_dir: str,
     ``materialize_ann_index`` when drift accumulates (the standard IVF
     operational trade; recall on appended data degrades only as its
     distribution drifts from the training corpus)."""
+    from .similarity import ivf_cells
+
     cents = spark.read.parquet(os.path.join(index_dir, CENTROIDS_TABLE))
-    (_assigned_cells(new_emb, cents).write.mode("append")
+    (ivf_cells(new_emb, cents).write.mode("append")
      .parquet(os.path.join(index_dir, CELLS_TABLE)))
 
 
 def ann_index_topk(spark: SparkSession, index_dir: str,
-                   queries: DataFrame, nprobe: int | None = None,
-                   top: int | None = None) -> DataFrame:
+                   queries: DataFrame) -> DataFrame:
     """Approximate top-k neighbors of ``queries`` (vec_id, embedding)
-    from the persisted inverted lists: each query probes its ``nprobe``
-    nearest stored centroids (broadcast) and scores only those cells'
-    vectors — work per query is corpus/k x nprobe, never all-pairs,
-    and the (cell) equi-join is the shuffle key exactly as in the
-    in-memory kernel (``similarity.sim_ivf_topk``)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
+    from the persisted inverted lists — the same IVF candidate, exact
+    cosine and rank code as the in-memory ``IVF`` index spec
+    (``similarity.ann_topk``)."""
+    from .similarity import exact_topk, ivf_candidates
 
-    from .common import dot_fold_sql
-    from .similarity import IVF_NPROBE, TOPK, _ivf_assign
-
-    cents = spark.read.parquet(os.path.join(index_dir, CENTROIDS_TABLE))
-    cells = (spark.read.parquet(os.path.join(index_dir, CELLS_TABLE))
-             .selectExpr("cell", "vec_id AS nid", "embedding AS nv"))
-    probed = (_ivf_assign(queries, cents, probe=nprobe or IVF_NPROBE)
-              .selectExpr("cell", "vec_id AS qid", "embedding AS qv"))
-    cos = (f"({dot_fold_sql('qv', 'nv')} "
-           f"/ (sqrt({dot_fold_sql('qv', 'qv')}) * "
-           f"sqrt({dot_fold_sql('nv', 'nv')})))")
-    # no dedup needed: each stored vector lives in exactly ONE cell
-    # (probe=1 at assignment), so a (qid, nid) pair arises at most once
-    # even at nprobe>1 — a .distinct() here would be a full extra
-    # shuffle of the candidate set before the per-qid window
-    pairs = (probed.join(cells, "cell")
-             .filter("qid != nid")
-             .selectExpr("qid", "nid", f"round({cos}, 6) AS cos_sim"))
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("nid").asc())
-    return (pairs.withColumn("rank", F.row_number().over(w))
-            .filter(f"rank <= {top or TOPK}")
-            .select("qid", "rank", "nid", "cos_sim"))
+    return exact_topk(ivf_candidates(
+        queries,
+        spark.read.parquet(os.path.join(index_dir, CENTROIDS_TABLE)),
+        spark.read.parquet(os.path.join(index_dir, CELLS_TABLE))))
 
 
 # ------------------------------------------------- driver-contract entry

@@ -17,9 +17,10 @@ Cluster-safe designs (no driver-side collect of the corpus):
   driver state.
 - ``sim_lsh_buckets``: random-hyperplane LSH bucketing (8 planes derived
   deterministically from md5, so both engines agree bit-for-bit).
-- ``sim_ann_topk``: approximate top-k searched within LSH buckets only,
-  with multi-table banding (L=2 hash tables) for recall; the bucket is the
-  shuffle key.
+- ``ann_topk``: approximate top-k under a FAISS index-factory style spec
+  (``LSH``, ``IVF``, ``PQ``, ``IVF,PQ``): one candidate generator (LSH
+  multi-table buckets, IVF cells, or none) composed with one scorer
+  (exact cosine, or ADC over PQ codes) and the shared rank step.
 
 The dot product is accumulated dim-by-dim left-to-right in numpy — the
 exact IEEE association order of the explicit 64-term SQL sum the DuckDB
@@ -117,6 +118,19 @@ def _pdf_matrix(pdf: "object", id_col: str = "vec_id",
 
 
 # ------------------------------------------------------------- top-k
+def _rank_topk(scored: DataFrame, score: str) -> DataFrame:
+    """The rank step of every top-k path: each query's ``TOPK`` best
+    (qid, nid, score) rows under the total order (score desc, nid asc),
+    as (qid, rank, nid, score)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+    w = Window.partitionBy("qid").orderBy(
+        F.col(score).desc(), F.col("nid").asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(f"rank <= {TOPK}")
+            .select("qid", "rank", "nid", score))
+
+
 def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k. The query side is bounded (vec_id cap) and
     broadcast as a numpy matrix; the CORPUS streams through mapInPandas —
@@ -162,15 +176,9 @@ def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     out.append((qid, int(cand_ids[s]), float(cand_cos[s])))
             yield pd.DataFrame(out, columns=["qid", "nid", "cos_sim"])
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
     cand = emb.mapInPandas(
         local_topk, schema="qid long, nid long, cos_sim double")
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("nid").asc())
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(f"rank <= {TOPK}")
-            .select("qid", "rank", "nid", "cos_sim"))
+    return _rank_topk(cand, "cos_sim")
 
 
 def sim_topk_oracle() -> str:
@@ -393,7 +401,7 @@ def sim_lsh_buckets_oracle() -> str:
     """
 
 
-# --------------------------------------------------------------- IVF ANN
+# --------------------------------------------------------------- IVF
 IVF_CELLS = 16
 # nprobe/k = 1/4: the standard IVF operating point — searching 25% of the
 # corpus recovers ~2/3 of exact top-1s on a mostly-unclustered corpus (and
@@ -402,28 +410,33 @@ IVF_NPROBE = 4
 IVF_ITERS = 2
 
 
+def _md5_seeds(emb: DataFrame, k: int) -> DataFrame:
+    """(vec_id, embedding, h) of the k vectors with the smallest
+    md5(vec_id): a deterministic pseudo-random sample (no RNG, identical
+    on every run/engine) seeding both IVF and PQ k-means."""
+    return (emb.selectExpr(
+                "vec_id", "embedding",
+                "conv(substr(md5(CAST(vec_id AS STRING)), 1, 7), 16, 10) "
+                "AS h")
+            # vec_id tie-break: 28-bit prefixes can collide (birthday
+            # ~n²/2^29); without it the k-th seed at a collision
+            # boundary is arbitrary — and the semdedup DuckDB oracle
+            # reproduces this exact ordering
+            .orderBy("h", "vec_id").limit(k))
+
+
 def ivf_centroids(emb: DataFrame, k: int = IVF_CELLS,
                   iters: int = IVF_ITERS) -> DataFrame:
     """Deterministic k-means centroids as pure DataFrame ops.
 
-    Seeds are the k vectors with the smallest md5(vec_id) (a deterministic
-    pseudo-random sample — no RNG, identical on every run/engine). Each
-    Lloyd iteration is one broadcast-join assignment (corpus x k centroid
-    rows) plus one groupBy mean — the standard scalable k-means shape:
-    nothing driver-side, shuffle is k partial sums per partition.
-    Returns (cell, centroid array<double>).
+    Seeds are ``_md5_seeds``. Each Lloyd iteration is one broadcast-join
+    assignment (corpus x k centroid rows) plus one groupBy mean — the
+    standard scalable k-means shape: nothing is collected, shuffle is
+    k partial sums per partition. Returns (cell, centroid array<double>).
     """
     from pyspark.sql import functions as F
     n_dims = DIM
-    seeds = (emb.selectExpr(
-                "vec_id", "embedding",
-                "conv(substr(md5(CAST(vec_id AS STRING)), 1, 7), 16, 10) "
-                "AS h")
-             # vec_id tie-break: 28-bit prefixes can collide (birthday
-             # ~n²/2^29); without it the k-th seed at a collision
-             # boundary is arbitrary — and the semdedup driver oracle
-             # reproduces this exact ordering in DuckDB
-             .orderBy("h", "vec_id").limit(k)
+    seeds = (_md5_seeds(emb, k)
              .selectExpr("vec_id AS seed_id", "embedding AS centroid")
              # seed_id tie-break on the renumbering too: two seed
              # centroids sharing a first coordinate would otherwise get
@@ -459,15 +472,14 @@ def _ivf_assign(emb: DataFrame, cents: DataFrame, probe: int) -> DataFrame:
     scored = (emb.crossJoin(F.broadcast(cents))
               .selectExpr(
                   "vec_id", "embedding", "cell",
-                  f"({dot_fold_sql('embedding', 'centroid')} "
-                  f"/ (sqrt({dot_fold_sql('embedding', 'embedding')}) * "
-                  f"sqrt({dot_fold_sql('centroid', 'centroid')}))) AS sim"))
+                  f"{_cos_sql('embedding', 'centroid', one_based=False)} "
+                  "AS sim"))
     if probe == 1:
         # single-cell assignment is an argmax, not a rank: a map-side-
         # combined max_by collapses each vector's k candidate rows
         # INSIDE its scan partition (the broadcast crossJoin emits them
         # adjacently), so the exchange carries one row per vector
-        # instead of k and no sort runs (r12, guide §2.3 "aggregate
+        # instead of k and no sort runs (guide §2.3 "aggregate
         # before you shuffle"; the window spelling shuffled corpus x k
         # rows, then sorted every k-row group). The (sim DESC, cell
         # ASC) tie-break is the struct max on (sim, -cell) — structs
@@ -487,80 +499,33 @@ def _ivf_assign(emb: DataFrame, cents: DataFrame, probe: int) -> DataFrame:
             .select("vec_id", "embedding", "cell", "crank", "sim"))
 
 
-def sim_ivf_topk(spark: SparkSession, sf_dir: str,
-                 k: int = IVF_CELLS, nprobe: int = IVF_NPROBE) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: partition the corpus into k
-    centroid cells, then search each query's ``nprobe`` nearest cells only.
-
-    The scale path the FAISS-style IVF index uses, expressed Spark-first:
-    centroid training and assignment are broadcast joins + groupBy means
-    (k rows broadcast, corpus streamed), and the search is an equi-join on
-    cell — work proportional to corpus/k * nprobe per query, never
-    all-pairs. Approximate by construction -> pytest recall gate instead
-    of a SQL oracle (tests/test_ops.py::test_ivf_topk_quality).
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = scoped_cache(ivf_centroids(emb, k))
-    # corpus side: each vector lives in its single nearest cell
-    corpus = (_ivf_assign(emb, cents, probe=1)
-              .selectExpr("cell", "vec_id AS nid", "embedding AS nv"))
-    # query side: probe the nprobe nearest cells
-    queries = (_ivf_assign(emb, cents, probe=nprobe)
-               .selectExpr("cell", "vec_id AS qid", "embedding AS qv"))
-    cos = (f"({dot_fold_sql('qv', 'nv')} "
-           f"/ (sqrt({dot_fold_sql('qv', 'qv')}) * "
-           f"sqrt({dot_fold_sql('nv', 'nv')})))")
-    pairs = (queries.join(corpus, "cell")
-             .filter("qid != nid")
-             .selectExpr("qid", "nid", f"round({cos}, 6) AS cos_sim")
-             .distinct())
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("nid").asc())
-    return (pairs.withColumn("rank", F.row_number().over(w))
-            .filter(f"rank <= {TOPK}")
-            .select("qid", "rank", "nid", "cos_sim"))
+def ivf_cells(emb: DataFrame, cents: DataFrame) -> DataFrame:
+    """The inverted lists: (cell, vec_id, embedding), each vector in its
+    single nearest cell."""
+    return (_ivf_assign(emb, cents, probe=1)
+            .select("cell", "vec_id", "embedding"))
 
 
-def sim_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-k: brute force restricted to same-LSH-bucket
-    candidates, with MULTI-TABLE banding (L independent 8-plane tables)
-    so recall survives unlucky single-table splits. The (table, bucket)
-    pair is the shuffle key, so each partition does local work instead of
-    an all-pairs cross join; candidate pairs found by several tables are
-    deduplicated before ranking.
-    Approximate by construction -> no SQL oracle (rows-only check)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-    emb = load_table(spark, sf_dir, "embeddings")
+def ivf_candidates(queries: DataFrame, cents: DataFrame,
+                   cells: DataFrame) -> DataFrame:
+    """(qid, qv, qn, nid, nv, nn) candidate pairs (vectors with their
+    norms): each query probes its ``IVF_NPROBE`` nearest centroids
+    (broadcast) and pairs with the vectors of those ``cells`` only —
+    work per query is corpus/k x nprobe, never all-pairs, and the cell
+    equi-join is the shuffle key.
+
+    No dedup needed: each stored vector lives in exactly ONE cell
+    (``ivf_cells``), so a (qid, nid) pair arises at most once — a
+    ``.distinct()`` here would be a full extra shuffle of the candidate
+    set before the per-qid window."""
     norm = _norm_sql("embedding", one_based=False)
-    # explode literal table ids; embedding/nrm pass through the Generate
-    # and a CASE computes ONLY that row's table bucket — exploding an
-    # array of computed buckets re-evaluated every table's 8 plane dots
-    # per emitted row (see ops/text.py gram_rows_spark)
-    bucket_case = "CASE t " + " ".join(
-        f"WHEN {t} THEN "
-        f"{_bucket_sql('embedding', one_based=False, table=t)}"
-        for t in range(N_TABLES)) + " END"
-    with_b = (emb.selectExpr("vec_id", "embedding", f"{norm} AS nrm",
-                             f"explode(sequence(0, {N_TABLES - 1})) AS t")
-              .selectExpr("vec_id", "embedding", "nrm",
-                          f"named_struct('t', t, 'b', {bucket_case}) "
-                          f"AS bkt"))
-    a = with_b.selectExpr("bkt", "vec_id AS qid", "embedding AS qv",
-                          "nrm AS qn")
-    b = with_b.selectExpr("bkt", "vec_id AS nid", "embedding AS nv",
-                          "nrm AS nn")
-    cos = f"({dot_fold_sql('qv', 'nv')} / (qn * nn))"
-    pairs = (a.join(b, "bkt").filter("qid != nid")
-             .selectExpr("qid", "nid", f"round({cos}, 6) AS cos_sim")
-             .distinct())
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("nid").asc())
-    return (pairs.withColumn("rank", F.row_number().over(w))
-            .filter(f"rank <= {TOPK}")
-            .select("qid", "rank", "nid", "cos_sim"))
+    probed = (_ivf_assign(queries, cents, probe=IVF_NPROBE)
+              .selectExpr("cell", "vec_id AS qid", "embedding AS qv",
+                          f"{norm} AS qn"))
+    return (probed.join(cells.selectExpr("cell", "vec_id AS nid",
+                                         "embedding AS nv",
+                                         f"{norm} AS nn"), "cell")
+            .filter("qid != nid"))
 
 
 # ------------------------------------------------------------ quantization
@@ -633,7 +598,6 @@ def embed_quantize_oracle() -> str:
         FROM q
     """
 
-
 # ------------------------------------------------------------------ PQ
 #: product quantization: m subspaces x k codes (FAISS-style IVFPQ's PQ
 #: half). 64-dim vectors -> 16 sub-vectors of 4 dims, 64 centroids each:
@@ -644,24 +608,23 @@ PQ_M = 16
 PQ_K = 64
 PQ_ITERS = 4
 PQ_QUERIES = 50
-PQ_TOPK = 5
 
 
 def _normed(emb: DataFrame) -> DataFrame:
     """Unit-normalize so inner product == cosine (ADC then ranks by IP)."""
-    n = f"sqrt({dot_fold_sql('embedding', 'embedding')})"
+    n = _norm_sql("embedding", one_based=False)
     return emb.selectExpr(
         "vec_id",
         f"transform(embedding, x -> CAST(x AS DOUBLE) / ({n})) AS embedding")
 
 
-def _sub_frame(emb: DataFrame, m: int) -> DataFrame:
+def _sub_frame(emb: DataFrame) -> DataFrame:
     """(vec_id, sub, svec): one row per subspace. The explode emits a
     LITERAL index sequence; the slice computes after the Generate from
     the passed-through embedding (the cheap-generator rule)."""
-    sub = DIM // m
+    sub = DIM // PQ_M
     return (emb.selectExpr("vec_id", "embedding",
-                           f"explode(sequence(0, {m - 1})) AS sub")
+                           f"explode(sequence(0, {PQ_M - 1})) AS sub")
             .selectExpr("vec_id", "sub",
                         f"slice(embedding, sub * {sub} + 1, {sub}) "
                         "AS svec"))
@@ -686,27 +649,19 @@ def _assign_nearest_sub(subs: DataFrame, cents) -> DataFrame:
             .withColumn("rn", F.row_number().over(w)).filter("rn = 1"))
 
 
-def _md5_seed_ids(emb: DataFrame, k: int) -> DataFrame:
-    """Deterministic pseudo-random k-sample: the k vec_ids with the
-    smallest md5 (shared by IVF and PQ seeding — no RNG anywhere)."""
-    return (emb.selectExpr(
-                "vec_id",
-                "conv(substr(md5(CAST(vec_id AS STRING)), 1, 7), 16, "
-                "10) AS h")
-            # vec_id tie-break: same rationale as ivf_centroids — a
-            # 28-bit prefix collision at the rank-k boundary must not
-            # make codebook training run-dependent
-            .orderBy("h", "vec_id").limit(k).select("vec_id"))
+def pq_codebooks(emb: DataFrame) -> DataFrame:
+    """Per-subspace k-means codebooks: (sub, code, centroid array<double>).
 
-
-def _train_codebooks(subs: DataFrame, seed_ids: DataFrame, k: int,
-                     iters: int, sub_dims: int) -> DataFrame:
-    """Lloyd loop over a prepared (vec_id, sub, svec) frame — all m
-    subspaces train in one assignment join + one groupBy mean per round;
-    never a per-subspace driver loop."""
+    Deterministic (seeds = ``_md5_seeds``, identical every run). All m
+    subspaces train in one assignment join + one groupBy mean per round
+    — never a per-subspace Python loop. Broadcast side is m*k centroid
+    rows; the corpus streams."""
     from pyspark.sql import functions as F
 
-    cents = (subs.join(F.broadcast(seed_ids), "vec_id")
+    sub_dims = DIM // PQ_M
+    subs = _sub_frame(_normed(emb))
+    cents = (subs.join(F.broadcast(_md5_seeds(emb, PQ_K).select("vec_id")),
+                       "vec_id")
              .selectExpr("sub", "vec_id AS seed_id", "svec AS centroid")
              # seed_id tie-break: same collision class as ivf_centroids'
              # cell renumbering — sub-centroids sharing a first
@@ -715,7 +670,7 @@ def _train_codebooks(subs: DataFrame, seed_ids: DataFrame, k: int,
                          "CAST(row_number() OVER (PARTITION BY sub "
                          "ORDER BY centroid[0], seed_id) - 1 "
                          "AS INT) AS code"))
-    for _ in range(iters):
+    for _ in range(PQ_ITERS):
         best = _assign_nearest_sub(subs, cents)
         cents = (best.groupBy("sub", "code")
                  .agg(*[F.avg(F.expr(f"svec[{c}]")).alias(f"a{c}")
@@ -727,189 +682,137 @@ def _train_codebooks(subs: DataFrame, seed_ids: DataFrame, k: int,
     return cents
 
 
-def pq_codebooks(emb: DataFrame, m: int = PQ_M, k: int = PQ_K,
-                 iters: int = PQ_ITERS) -> DataFrame:
-    """Per-subspace k-means codebooks: (sub, code, centroid array<double>).
-
-    Deterministic (seeds = k vectors with smallest md5(vec_id), identical
-    every run). Broadcast side is m*k centroid rows; the corpus streams."""
-    return _train_codebooks(_sub_frame(_normed(emb), m),
-                            _md5_seed_ids(emb, k), k, iters, DIM // m)
-
-
-def _encode_from_subs(subs: DataFrame, cents: DataFrame) -> DataFrame:
-    """(vec_id, codes array<int>) from a prepared (vec_id, sub, svec)
-    frame — the ONE place codes ordering/tie-breaking is defined, shared
-    by raw-vector and residual encoders."""
+def pq_encode(emb: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id, codes array<int>): nearest sub-centroid per subspace —
+    the m-byte compressed representation. One broadcast join + window
+    argmin + one groupBy; corpus never collected."""
     from pyspark.sql import functions as F
 
-    return (_assign_nearest_sub(subs, cents)
+    return (_assign_nearest_sub(_sub_frame(_normed(emb)), cents)
             .groupBy("vec_id")
             .agg(F.expr("transform(array_sort(collect_list("
                         "struct(sub, code))), s -> s.code) AS codes")))
 
 
-def pq_encode(emb: DataFrame, cents: DataFrame, m: int = PQ_M) -> DataFrame:
-    """(vec_id, codes array<int>): nearest sub-centroid per subspace —
-    the m-byte compressed representation. One broadcast join + window
-    argmin + one groupBy; corpus never collected."""
-    return _encode_from_subs(_sub_frame(_normed(emb), m), cents)
+def _adc_scores(pairs: DataFrame, queries: DataFrame,
+                emb: DataFrame) -> DataFrame:
+    """(qid, nid, approx_sim) for candidate ``pairs`` by ADC (asymmetric
+    distance computation): queries stay exact, the corpus is scored from
+    its PQ codes through a per-query lookup table
+    LUT[q][sub][code] = <q_sub, centroid>.
 
-
-def sim_pq_topk(spark: SparkSession, sf_dir: str,
-                topk: int = PQ_TOPK, m: int = PQ_M, k: int = PQ_K,
-                iters: int = PQ_ITERS) -> DataFrame:
-    """PQ approximate top-k via ADC (asymmetric distance computation):
-    queries stay exact, the corpus is scored from its codes through a
-    per-query lookup table LUT[q][sub][code] = <q_sub, centroid>.
-
-    Scale shape: LUT is Q * m * k rows (bounded query side, broadcast);
-    the corpus contributes m rows per vector to ONE equi-join on
-    (sub, code) and one (qid, vec_id) groupBy — never all-pairs over raw
-    vectors, and the scored side carries codes only (m ints), not the
-    d-dim arrays. Approximate by construction -> pytest recall gate
-    (tests/test_ops.py::test_pq_topk_quality) instead of a SQL oracle.
-    """
+    Scale shape: the LUT is Q * m * k rows (bounded query side,
+    broadcast); each candidate contributes m rows to ONE equi-join on
+    (qid, sub, code) and one (qid, nid) groupBy — the scored side
+    carries codes only (m ints), not the d-dim arrays. Each pair's m
+    parts arrive adjacently from one posexplode, so the sum folds them
+    in subspace order whatever the candidate plan."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = F.broadcast(pq_codebooks(emb, m=m, k=k,
-                                     iters=iters).localCheckpoint())
-    codes = pq_encode(emb, cents, m=m)
-    queries = _normed(emb.filter(f"vec_id < {PQ_QUERIES}"))
-
-    lut = (F.broadcast(
-        _sub_frame(queries, m).selectExpr("vec_id AS qid", "sub",
-                                          "svec AS qsub")
-        .join(cents, "sub")
-        .selectExpr("qid", "sub", "code",
-                    f"{dot_fold_sql('qsub', 'centroid')} AS part")))
-
-    corpus = (codes.selectExpr(
-        "vec_id", f"posexplode(codes) AS (sub, code)"))
-    scored = (corpus.join(lut, ["sub", "code"])
-              .filter("vec_id != qid")
-              .groupBy("qid", "vec_id")
-              .agg(F.sum("part").alias("approx_sim")))
-    w = Window.partitionBy("qid").orderBy(
-        F.col("approx_sim").desc(), F.col("vec_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(f"rank <= {topk}")
-            .selectExpr("qid", "rank", "vec_id AS nid", "approx_sim")
-            .orderBy("qid", "rank"))
-
-
-def sim_ivfpq_topk(spark: SparkSession, sf_dir: str,
-                   topk: int = PQ_TOPK, cells: int = IVF_CELLS,
-                   nprobe: int = IVF_NPROBE, m: int = PQ_M,
-                   k: int = PQ_K, residual: bool = False) -> DataFrame:
-    """IVF + PQ composed: the coarse quantizer prunes candidates to each
-    query's ``nprobe`` nearest cells and survivors score from their
-    m-byte PQ codes through the broadcast ADC lookup table.
-
-    ``residual=True`` is the faithful FAISS-IVFADC variant: each vector's
-    residual (x - cell centroid) is product-quantized and scoring
-    decomposes as <q, x> ~= <q, c_cell> + <q, r_code>. Measured on the
-    synthetic corpus the plain variant recalls slightly BETTER (0.47 vs
-    0.44 @5): the clusters' discriminative structure lives in the cell
-    assignment, so residuals quantize relatively worse — hence the
-    default. Both share every scale property: candidate work is
-    corpus/cells * nprobe per query (cell = shuffle key), scored bytes
-    are m per vector instead of d doubles, and the only broadcast sides
-    are the centroid table, the codebooks (m*k rows), and the bounded
-    per-query LUT (+ Q x cells cell-term table under residual).
-    Approximate by construction -> pytest recall gates
-    (test_ops.py::test_ivfpq_topk_quality).
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    emb_n = _normed(emb)
-    cents = ivf_centroids(emb, k=cells).localCheckpoint()
-
-    if not residual:
-        corpus_cells = _ivf_assign(emb, cents, probe=1) \
-            .select("vec_id", "cell")
-        books = F.broadcast(pq_codebooks(emb, m=m, k=k).localCheckpoint())
-        codes = pq_encode(emb, books, m=m)
-        queries = emb.filter(f"vec_id < {PQ_QUERIES}")
-        q_cells = _ivf_assign(queries, cents, probe=nprobe) \
-            .selectExpr("vec_id AS qid", "cell")
-        lut = (F.broadcast(
-            _sub_frame(_normed(queries), m)
-            .selectExpr("vec_id AS qid", "sub", "svec AS qsub")
-            .join(books, "sub")
-            .selectExpr("qid", "sub", "code",
-                        f"{dot_fold_sql('qsub', 'centroid')} AS part")))
-        cand = (corpus_cells.join(F.broadcast(q_cells), "cell")
-                .filter("vec_id != qid").select("qid", "vec_id"))
-        scored = (cand.join(codes, "vec_id")
-                  .selectExpr("qid", "vec_id",
-                              "posexplode(codes) AS (sub, code)")
-                  .join(lut, ["qid", "sub", "code"])
-                  .groupBy("qid", "vec_id")
-                  .agg(F.sum("part").alias("approx_sim")))
-        w = Window.partitionBy("qid").orderBy(
-            F.col("approx_sim").desc(), F.col("vec_id").asc())
-        return (scored.withColumn("rank", F.row_number().over(w))
-                .filter(f"rank <= {topk}")
-                .selectExpr("qid", "rank", "vec_id AS nid", "approx_sim")
-                .orderBy("qid", "rank"))
-    ncents = F.broadcast(cents.selectExpr(
-        "cell",
-        f"transform(centroid, x -> x / sqrt("
-        f"{dot_fold_sql('centroid', 'centroid')})) AS ncentroid"))
-
-    # residual frame: normalized vector minus its (normalized) cell
-    # centroid, exploded into subspaces
-    assigned = (_ivf_assign(emb, cents, probe=1).select("vec_id", "cell")
-                .join(emb_n, "vec_id").join(ncents, "cell")
-                .selectExpr(
-                    "vec_id", "cell",
-                    "zip_with(embedding, ncentroid, (x, c) -> x - c) "
-                    "AS embedding").localCheckpoint())
-    res_subs = _sub_frame(assigned.select("vec_id", "embedding"), m)
-    books = F.broadcast(_train_codebooks(
-        res_subs, _md5_seed_ids(emb, k), k, PQ_ITERS,
-        DIM // m).localCheckpoint())
-    codes = (_encode_from_subs(res_subs, books)
-             .join(assigned.select("vec_id", "cell"), "vec_id"))
-
-    queries = emb.filter(f"vec_id < {PQ_QUERIES}")
-    q_cells = _ivf_assign(queries, cents, probe=nprobe) \
-        .selectExpr("vec_id AS qid", "cell")
-    qn = _normed(queries)
-    # cell term <q, c_cell> per (qid, cell) — bounded: Q * cells rows
-    cell_term = (F.broadcast(
-        qn.selectExpr("vec_id AS qid", "embedding AS q")
-        .join(ncents, F.lit(True))
-        .selectExpr("qid", "cell",
-                    f"{dot_fold_sql('q', 'ncentroid')} AS cterm")))
-    lut = (F.broadcast(
-        _sub_frame(qn, m)
+    books = F.broadcast(pq_codebooks(emb).localCheckpoint())
+    codes = pq_encode(emb, books).withColumnRenamed("vec_id", "nid")
+    lut = F.broadcast(
+        _sub_frame(_normed(queries))
         .selectExpr("vec_id AS qid", "sub", "svec AS qsub")
         .join(books, "sub")
         .selectExpr("qid", "sub", "code",
-                    f"{dot_fold_sql('qsub', 'centroid')} AS part")))
+                    f"{dot_fold_sql('qsub', 'centroid')} AS part"))
+    return (pairs.select("qid", "nid").join(codes, "nid")
+            .selectExpr("qid", "nid", "posexplode(codes) AS (sub, code)")
+            .join(lut, ["qid", "sub", "code"])
+            .groupBy("qid", "nid")
+            .agg(F.sum("part").alias("approx_sim")))
 
-    # candidates: corpus rows in any of the query's probed cells
-    cand = (codes.join(F.broadcast(q_cells), "cell")
-            .filter("vec_id != qid"))
-    res_term = (cand.selectExpr("qid", "vec_id",
-                                "posexplode(codes) AS (sub, code)")
-                .join(lut, ["qid", "sub", "code"])
-                .groupBy("qid", "vec_id")
-                .agg(F.sum("part").alias("rterm")))
-    scored = (cand.select("qid", "vec_id", "cell")
-              .join(cell_term, ["qid", "cell"])
-              .join(res_term, ["qid", "vec_id"])
-              .selectExpr("qid", "vec_id",
-                          "cterm + rterm AS approx_sim"))
-    w = Window.partitionBy("qid").orderBy(
-        F.col("approx_sim").desc(), F.col("vec_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(f"rank <= {topk}")
-            .selectExpr("qid", "rank", "vec_id AS nid", "approx_sim")
-            .orderBy("qid", "rank"))
+
+# ---------------------------------------------------------- ANN top-k
+#: index specs in FAISS index-factory style
+#: (https://github.com/facebookresearch/faiss/wiki): an optional coarse
+#: candidate generator (LSH buckets or IVF cells) and a code (exact
+#: vectors, or PQ codes scored by ADC)
+INDEX_SPECS = ("LSH", "IVF", "PQ", "IVF,PQ")
+
+
+def _lsh_candidates(emb: DataFrame) -> DataFrame:
+    """(qid, qv, qn, nid, nv, nn) pairs (vectors with their norms)
+    sharing a bucket in any of N_TABLES
+    independent 8-plane tables (multi-table banding, so recall survives
+    unlucky single-table splits). The (table, bucket) pair is the
+    shuffle key, so each partition does local work instead of an
+    all-pairs cross join. A pair colliding in several tables is kept
+    only under the FIRST of them, so each pair arises once with no
+    dedup shuffle."""
+    # explode literal table ids; the per-table buckets are computed once
+    # per vector below the Generate and pass through it — exploding an
+    # array of computed buckets re-evaluates it per emitted row (see
+    # ops/text.py gram_rows_spark)
+    bkts = "array(" + ", ".join(
+        _bucket_sql("embedding", one_based=False, table=t)
+        for t in range(N_TABLES)) + ")"
+    norm = _norm_sql("embedding", one_based=False)
+    with_b = (emb.selectExpr("vec_id", "embedding", f"{norm} AS nrm",
+                             f"{bkts} AS bkts")
+              .selectExpr("vec_id", "embedding", "nrm", "bkts",
+                          f"explode(sequence(0, {N_TABLES - 1})) AS t")
+              .selectExpr("vec_id", "embedding", "nrm", "bkts",
+                          "named_struct('t', t, 'b', bkts[t]) AS bkt"))
+    a = with_b.selectExpr("bkt", "vec_id AS qid", "embedding AS qv",
+                          "nrm AS qn", "bkts AS qb")
+    b = with_b.selectExpr("bkt", "vec_id AS nid", "embedding AS nv",
+                          "nrm AS nn", "bkts AS nb")
+    first_hit = "array_position(zip_with(qb, nb, (x, y) -> x = y), true)"
+    return (a.join(b, "bkt")
+            .filter(f"qid != nid AND {first_hit} = bkt.t + 1")
+            .select("qid", "qv", "qn", "nid", "nv", "nn"))
+
+
+def exact_topk(pairs: DataFrame) -> DataFrame:
+    """(qid, rank, nid, cos_sim): candidate pairs (qid, qv, qn, nid, nv,
+    nn) re-ranked by exact cosine. The candidate generators compute each
+    norm once per vector row, not once per pair; the value is
+    ``_cos_sql``'s to the bit (same folds, same operation order)."""
+    return _rank_topk(
+        pairs.selectExpr(
+            "qid", "nid",
+            f"round({dot_fold_sql('qv', 'nv')} / (qn * nn), 6) AS cos_sim"),
+        "cos_sim")
+
+
+def ann_topk(spark: SparkSession, sf_dir: str, index: str) -> DataFrame:
+    """Approximate top-k neighbors over ``embeddings`` under an index
+    spec from ``INDEX_SPECS``: a candidate generator composed with a
+    scorer and one rank step.
+
+    - candidates: ``LSH`` pairs vectors that share a multi-table bucket
+      (``_lsh_candidates``); ``IVF`` pairs each query with the vectors
+      of its nprobe nearest cells (``ivf_candidates`` over freshly
+      trained centroids — the search the persisted index runs,
+      ``incremental.ann_index_topk``); a bare ``PQ`` pairs each query
+      with every vector.
+    - scores: exact cosine (``cos_sim``), or for the ``PQ`` specs ADC
+      over PQ codes (``approx_sim``, ``_adc_scores``). ADC broadcasts a
+      per-query lookup table, so its queries are the bounded
+      ``vec_id < PQ_QUERIES``; exact specs query every vector.
+
+    Approximate by construction -> pytest recall gates
+    (tests/test_ops.py::test_ann_topk_quality) instead of a SQL oracle.
+    """
+    from pyspark.sql import functions as F
+
+    if index not in INDEX_SPECS:
+        raise ValueError(f"unknown ANN index spec {index!r}; "
+                         f"expected one of {INDEX_SPECS}")
+    emb = load_table(spark, sf_dir, "embeddings")
+    adc = index.endswith("PQ")
+    queries = emb.filter(f"vec_id < {PQ_QUERIES}") if adc else emb
+    if index == "LSH":
+        pairs = _lsh_candidates(emb)
+    elif index.startswith("IVF"):
+        cents = scoped_cache(ivf_centroids(emb))
+        pairs = ivf_candidates(queries, cents, ivf_cells(emb, cents))
+    else:
+        pairs = (emb.selectExpr("vec_id AS nid")
+                 .crossJoin(F.broadcast(queries.selectExpr("vec_id AS qid")))
+                 .filter("qid != nid"))
+    if adc:
+        return _rank_topk(_adc_scores(pairs, queries, emb), "approx_sim")
+    return exact_topk(pairs)

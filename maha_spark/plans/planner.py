@@ -38,7 +38,7 @@ from ..core.columns import (
 )
 from ..core.filters import Filter, ResolvedField
 from ..core.rollup import (AverageRollup, CardinalityRollup, NoopRollup,
-                           Rollup)
+                           Rollup, exact_avg)
 from ..model.request_model import (
     CONSTANT, DIM_ATTR, FACT_DIM, METRIC, DimJoinChain, ProjectedField,
     RequestModel,
@@ -661,11 +661,11 @@ class Planner:
                     sub = {r: _q(key_alias_by_sql[_q(r)]) for r in refs}
                     post_noop.append((alias, expand_expr(col.expr, sub)))
                     continue
-            aggs.append(self._agg_expr(col, table).alias(alias))
+            aggs.append(self._agg_expr(col, table, df).alias(alias))
         for name, col in base_needed.items():
             # derived exprs always read the __base_-prefixed internal copy,
             # even when the same metric is also directly projected
-            aggs.append(self._agg_expr(col, table).alias(f"__base_{name}"))
+            aggs.append(self._agg_expr(col, table, df).alias(f"__base_{name}"))
         # average decomposition partials for possible OGB re-agg
         if model.requires_outer_group_by:
             for alias, col in direct:
@@ -681,7 +681,7 @@ class Planner:
             # projections are pending)
             alias0, _sql0 = post_noop.pop(0)
             col0 = dict(direct)[alias0]
-            aggs.append(self._agg_expr(col0, table).alias(alias0))
+            aggs.append(self._agg_expr(col0, table, df).alias(alias0))
 
         if not aggs:
             # pure dim/scan projection at fact grain (queryType=scan)
@@ -718,8 +718,14 @@ class Planner:
             return F.expr(expand_expr(col.expr, resolver))
         return F.expr(_col_sql(table.columns, col.name))
 
-    def _agg_expr(self, col: FactCol, table: FactTable) -> Column:
-        return col.rollup.agg(self._agg_source(col, table))
+    def _agg_expr(self, col: FactCol, table: FactTable,
+                  df: DataFrame) -> Column:
+        src = self._agg_source(col, table)
+        if isinstance(col.rollup, AverageRollup):
+            # AVG's result type for this source, resolved against df
+            avg_type = df.select(F.avg(src)).schema[0].dataType
+            return col.rollup.agg(src, avg_type)
+        return col.rollup.agg(src)
 
     # ------------------------------------------------------------------
     # dimension side
@@ -873,9 +879,9 @@ class Planner:
             elif p.kind == DIM_ATTR:
                 keys.append(F.col(_q(p.alias)))
         base_needed, direct, derived = self._metric_plan(model)
-        aggs = [self._agg_expr(col, table).alias(alias) for alias, col in direct]
+        aggs = [self._agg_expr(col, table, df).alias(alias) for alias, col in direct]
         for name, col in base_needed.items():
-            aggs.append(self._agg_expr(col, table).alias(f"__base_{name}"))
+            aggs.append(self._agg_expr(col, table, df).alias(f"__base_{name}"))
         gdf = df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
 
         # HAVING-style filters on metric aliases (same resolution as the
@@ -912,8 +918,11 @@ class Planner:
             col = table.columns.get(p.pub_col.name)
             if isinstance(col, FactCol):
                 if isinstance(col.rollup, AverageRollup):
-                    aggs.append((F.sum(F.col(_q(f"__avgsum_{p.alias}"))) /
-                                 F.sum(F.col(_q(f"__avgcnt_{p.alias}")))).alias(p.alias))
+                    # the inner aggregate's AVG column carries AVG's type
+                    aggs.append(exact_avg(
+                        F.sum(F.col(_q(f"__avgsum_{p.alias}"))),
+                        F.sum(F.col(_q(f"__avgcnt_{p.alias}"))),
+                        df.schema[p.alias].dataType).alias(p.alias))
                 else:
                     aggs.append(col.rollup.reagg(F.col(_q(p.alias))).alias(p.alias))
         # re-aggregate base partials for derived metrics (sum-of-sums)

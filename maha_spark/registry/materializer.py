@@ -291,7 +291,7 @@ def _recommendation_frame(spark, binding, registry: Registry,
     # aggregate with the BASE table's column definitions (expr + original
     # rollup — COUNT(*) partials, filtered sums, row-level expressions),
     # stored under the rollup's re-declared name
-    aggs = [planner._agg_expr(base.columns[n], base).alias(n)
+    aggs = [planner._agg_expr(base.columns[n], base, df).alias(n)
             for n, c in table.columns.items()
             if isinstance(c, FactCol) and not isinstance(c, DerivedFactCol)]
     return (df.groupBy(*keys).agg(*aggs)

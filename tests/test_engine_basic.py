@@ -488,3 +488,35 @@ def test_dim_only_cross_chain_cardinality_guard(spark, engine, monkeypatch):
     monkeypatch.setattr(planner_mod, "DIM_ONLY_CROSS_MAX", 3)
     with _pytest.raises(ValidationError, match="cartesian product"):
         engine.dataframe(req)
+
+
+def test_decimal_avg_rounds_exact_tie_half_up(spark, sf_dir, tmp_path):
+    """AverageRollup over DECIMAL(8,2) is the exact mean rounded HALF_UP
+    to AVG's DECIMAL(12,6). 799 rows of 52532.25 and one of 52535.86
+    have the exact mean 52532.2545125 — a tie at the 6th decimal, where
+    Spark's own avg (a double average after the optimizer's decimal
+    rewrite) returns 52532.254512."""
+    import os
+
+    import pandas as pd
+
+    from maha_spark.engine import engine_for_dir
+    from maha_spark.examples.contract import DAY_ALL, build_contract_registry
+
+    for t in ("orders", "customer", "nation", "region", "supplier", "part"):
+        os.symlink(os.path.join(sf_dir, f"{t}.parquet"),
+                   tmp_path / f"{t}.parquet")
+    one = pd.read_parquet(os.path.join(sf_dir, "lineitem.parquet")).head(1)
+    li = pd.concat([one] * 800, ignore_index=True)
+    li["l_linenumber"] = range(1, 801)
+    li["l_extendedprice"] = [52532.25] * 799 + [52535.86]
+    li.to_parquet(tmp_path / "lineitem.parquet", index=False)
+
+    eng = engine_for_dir(spark, build_contract_registry(), str(tmp_path))
+    rows = eng.dataframe({
+        "cube": "tpch",
+        "selectFields": [{"field": "nation_name"},
+                         {"field": "avg_price_rollup"}],
+        "filterExpressions": [DAY_ALL]}).collect()
+    assert len(rows) == 1
+    assert rows[0]["avg_price_rollup"] == 52532.254513

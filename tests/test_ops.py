@@ -11,26 +11,69 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def test_ann_topk_quality(spark, sf_dir):
-    """ANN within LSH buckets must return valid ranks and mostly agree
-    with the exact top-1 (same-bucket probability for near neighbors)."""
-    from maha_spark.ops.similarity import sim_ann_topk, sim_topk
-    ann = sim_ann_topk(spark, sf_dir).toPandas()
-    assert set(ann.columns) == {"qid", "rank", "nid", "cos_sim"}
+#: per index spec: (score column, top-1 recall floor, mean recall@5
+#: floor over the first PQ_QUERIES queries); None = no gate at that depth
+ANN_GATES = {
+    # exact re-rank inside same-bucket candidates: never beats exact
+    "LSH": ("cos_sim", None, None),
+    # at nprobe/k = 1/4 the probed cells contain the true top-1 for
+    # roughly two-thirds of queries on this corpus
+    "IVF": ("cos_sim", 0.6, None),
+    # m=16 x k=64 codes on the 64-d corpus; measured 0.59 at sf0.01
+    "PQ": ("approx_sim", None, 0.45),
+    # cell pruning can drop true neighbors, so recall trails plain PQ
+    "IVF,PQ": ("approx_sim", None, 0.35),
+}
+
+
+@pytest.mark.parametrize("index", [
+    "LSH",
+    pytest.param("IVF", marks=pytest.mark.slow),
+    pytest.param("PQ", marks=pytest.mark.slow),
+    pytest.param("IVF,PQ", marks=pytest.mark.slow),
+])
+def test_ann_topk_quality(spark, sf_dir, index):
+    """Every ANN index spec returns valid ranks, never beats exact search
+    when it re-ranks by exact cosine, clears its recall gate against
+    exact top-k, and is deterministic (md5 seeds, no RNG) — approximate
+    by construction, so recall gates stand in for a SQL oracle."""
+    from maha_spark.ops.similarity import PQ_QUERIES, ann_topk, sim_topk
+    score, top1_floor, recall5_floor = ANN_GATES[index]
+    ann = ann_topk(spark, sf_dir, index).toPandas()
+    assert set(ann.columns) == {"qid", "rank", "nid", score}
     assert (ann["rank"] >= 1).all() and (ann["rank"] <= 5).all()
     assert not ann.duplicated(["qid", "rank"]).any()
-    # every returned neighbor differs from its query
     assert (ann["qid"] != ann["nid"]).all()
-    # sanity: ANN candidates are a subset of the same-bucket graph, so
-    # each qid appears at most TOPK times
     assert ann.groupby("qid")["rank"].count().max() <= 5
 
     exact = sim_topk(spark, sf_dir).toPandas()
-    top1 = exact[exact["rank"] == 1].set_index("qid")["cos_sim"]
-    ann1 = ann[ann["rank"] == 1].set_index("qid")["cos_sim"]
-    joined = top1.to_frame("exact").join(ann1.to_frame("ann"), how="inner")
-    # ANN top-1 similarity is never better than exact top-1
-    assert (joined["ann"] <= joined["exact"] + 1e-9).all()
+    if score == "cos_sim":
+        top1 = exact[exact["rank"] == 1].set_index("qid")["cos_sim"]
+        ann1 = ann[ann["rank"] == 1].set_index("qid")["cos_sim"]
+        joined = top1.to_frame("exact").join(ann1.to_frame("ann"),
+                                             how="inner")
+        assert (joined["ann"] <= joined["exact"] + 1e-9).all()
+        if top1_floor is not None:
+            recall = (joined["ann"] >= joined["exact"] - 1e-9).mean()
+            assert recall >= top1_floor, f"top-1 recall {recall:.2f}"
+    if recall5_floor is not None:
+        exact = exact[exact.qid < PQ_QUERIES]
+        eset = exact.groupby("qid")["nid"].apply(set)
+        aset = ann.groupby("qid")["nid"].apply(set)
+        recalls = [len(eset[q] & aset[q]) / len(eset[q])
+                   for q in aset.index if q in eset]
+        assert recalls and sum(recalls) / len(recalls) >= recall5_floor
+
+    again = ann_topk(spark, sf_dir, index).toPandas()
+    a = ann.sort_values(["qid", "rank"]).reset_index(drop=True)
+    b = again.sort_values(["qid", "rank"]).reset_index(drop=True)
+    assert a.equals(b)
+
+
+def test_ann_topk_rejects_unknown_spec(spark, sf_dir):
+    from maha_spark.ops.similarity import ann_topk
+    with pytest.raises(ValueError, match="unknown ANN index spec"):
+        ann_topk(spark, sf_dir, "HNSW")
 
 
 def test_hll_within_rsd(spark, sf_dir, duck):
@@ -136,34 +179,6 @@ def test_streaming_dedup_across_batches(spark, tmp_path):
     assert len(rows) == 3 and len(hashes) == 3  # alpha NOT re-emitted
     got_ids = {r["doc_id"] for r in rows}
     assert 5 in got_ids and 4 not in got_ids
-
-
-@pytest.mark.slow
-def test_ivf_topk_quality(spark, sf_dir):
-    """IVF ANN: valid ranks, deterministic centroids, and top-1 recall
-    comparable to exact search on the clustered test corpus."""
-    from maha_spark.ops.similarity import sim_ivf_topk, sim_topk
-    ivf = sim_ivf_topk(spark, sf_dir).toPandas()
-    assert set(ivf.columns) == {"qid", "rank", "nid", "cos_sim"}
-    assert (ivf["rank"] >= 1).all() and (ivf["rank"] <= 5).all()
-    assert not ivf.duplicated(["qid", "rank"]).any()
-    assert (ivf["qid"] != ivf["nid"]).all()
-
-    exact = sim_topk(spark, sf_dir).toPandas()
-    top1 = exact[exact["rank"] == 1].set_index("qid")["cos_sim"]
-    ivf1 = ivf[ivf["rank"] == 1].set_index("qid")["cos_sim"]
-    joined = top1.to_frame("exact").join(ivf1.to_frame("ivf"), how="inner")
-    # ANN never beats exact; at nprobe/k = 1/4 the probed cells contain
-    # the true top-1 for roughly two-thirds of queries on this corpus
-    assert (joined["ivf"] <= joined["exact"] + 1e-9).all()
-    recall = (joined["ivf"] >= joined["exact"] - 1e-9).mean()
-    assert recall >= 0.6, f"IVF top-1 recall too low: {recall:.2f}"
-
-    # determinism: same centroids on a second run
-    ivf2 = sim_ivf_topk(spark, sf_dir).toPandas()
-    a = ivf.sort_values(["qid", "rank"]).reset_index(drop=True)
-    b = ivf2.sort_values(["qid", "rank"]).reset_index(drop=True)
-    assert a.equals(b)
 
 
 def test_binary_decode_batching(spark):
@@ -320,78 +335,6 @@ def test_streaming_append_sink_drops_late_rows(spark, tmp_path):
     assert got[("14", "b")] == (1, 6.0)
     assert set(got) == {("10", "a"), ("11", "a"), ("12", "a"),
                         ("13", "a"), ("14", "b")}
-
-
-@pytest.mark.slow
-def test_pq_topk_quality(spark, sf_dir):
-    """PQ/ADC approximate top-k: valid structure, deterministic
-    codebooks, and recall@5 against exact cosine search above the gate
-    (m=16 x k=64 on the 64-d corpus; measured 0.59 at sf0.01 —
-    quantization is approximate by construction, so a recall gate stands
-    in for a SQL oracle, like the IVF/LSH ANN entries)."""
-    from maha_spark.ops.similarity import (PQ_QUERIES, sim_pq_topk,
-                                           sim_topk)
-
-    pq = sim_pq_topk(spark, sf_dir).toPandas()
-    assert set(pq.columns) == {"qid", "rank", "nid", "approx_sim"}
-    assert (pq["rank"] >= 1).all() and (pq["rank"] <= 5).all()
-    assert not pq.duplicated(["qid", "rank"]).any()
-    assert (pq["qid"] != pq["nid"]).all()
-
-    exact = sim_topk(spark, sf_dir).toPandas()
-    exact = exact[exact.qid < PQ_QUERIES]
-    eset = exact.groupby("qid")["nid"].apply(set)
-    pset = pq.groupby("qid")["nid"].apply(set)
-    recalls = [len(eset[q] & pset[q]) / len(eset[q])
-               for q in pset.index if q in eset]
-    assert recalls and sum(recalls) / len(recalls) >= 0.45
-
-    # determinism: identical output on a rebuild (md5 seeds, no RNG)
-    again = sim_pq_topk(spark, sf_dir).toPandas()
-    assert pq.reset_index(drop=True).equals(again.reset_index(drop=True))
-
-
-@pytest.mark.slow
-def test_ivfpq_topk_quality(spark, sf_dir):
-    """IVF+PQ composition: candidates pruned to nprobe cells, scored from
-    PQ codes. Recall trails plain PQ (cell pruning can drop true
-    neighbors) but must stay useful and deterministic."""
-    from maha_spark.ops.similarity import (PQ_QUERIES, sim_ivfpq_topk,
-                                           sim_topk)
-
-    ivfpq = sim_ivfpq_topk(spark, sf_dir).toPandas()
-    assert set(ivfpq.columns) == {"qid", "rank", "nid", "approx_sim"}
-    assert (ivfpq["rank"] >= 1).all() and (ivfpq["rank"] <= 5).all()
-    assert not ivfpq.duplicated(["qid", "rank"]).any()
-    assert (ivfpq["qid"] != ivfpq["nid"]).all()
-
-    exact = sim_topk(spark, sf_dir).toPandas()
-    exact = exact[exact.qid < PQ_QUERIES]
-    eset = exact.groupby("qid")["nid"].apply(set)
-    pset = ivfpq.groupby("qid")["nid"].apply(set)
-    recalls = [len(eset[q] & pset[q]) / len(eset[q])
-               for q in pset.index if q in eset]
-    assert recalls and sum(recalls) / len(recalls) >= 0.35
-
-
-@pytest.mark.slow
-def test_ivfpq_residual_variant_quality(spark, sf_dir):
-    """The faithful FAISS-IVFADC residual variant: same structure and a
-    (slightly looser) recall gate — kept selectable for corpora where
-    residual quantization wins."""
-    from maha_spark.ops.similarity import (PQ_QUERIES, sim_ivfpq_topk,
-                                           sim_topk)
-
-    res = sim_ivfpq_topk(spark, sf_dir, residual=True).toPandas()
-    assert set(res.columns) == {"qid", "rank", "nid", "approx_sim"}
-    assert not res.duplicated(["qid", "rank"]).any()
-    exact = sim_topk(spark, sf_dir).toPandas()
-    exact = exact[exact.qid < PQ_QUERIES]
-    eset = exact.groupby("qid")["nid"].apply(set)
-    pset = res.groupby("qid")["nid"].apply(set)
-    recalls = [len(eset[q] & pset[q]) / len(eset[q])
-               for q in pset.index if q in eset]
-    assert recalls and sum(recalls) / len(recalls) >= 0.3
 
 
 def test_exact_cos_pairs_planted_pairs(spark, sf_dir):

@@ -364,7 +364,7 @@ def test_generators_explode_only_cheap_sequences(spark):
         "minhash_lsh": dedup.dedup_minhash_lsh(spark, sf),
         "simhash_pairs": dedup.dedup_simhash_pairs(spark, sf),
         "ngram_jaccard": dedup.dedup_ngram_jaccard(spark, sf),
-        "ann_topk": similarity.sim_ann_topk(spark, sf),
+        "ann_topk": similarity.ann_topk(spark, sf, "LSH"),
         "chunking": chunking.chunk_documents(spark, sf),
         "winnow_pairs": winnow.winnow_pairs(spark, sf),
     }

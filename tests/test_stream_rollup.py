@@ -73,13 +73,23 @@ def test_rollup_answers_equal_base_answers(rollup_env, spark, sf_dir):
 
 
 def test_rollup_day_filter_prunes_to_rollup_scan(rollup_env):
+    """Every file the query reads lies under the rollup table: the raw
+    events table is never scanned."""
+    from maha_spark.examples.stream_rollup import ROLLUP_TABLE
+
     df = rollup_env.dataframe({
         "cube": "events_cube",
         "selectFields": [{"field": "hour"}, {"field": "event_count"}],
         "filterExpressions": [{"field": "day", "operator": "between",
                                "from": "1998-01-01", "to": "1998-01-31"}]})
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "events_hourly" in plan
+    # the analyzed plan's file relations: df.inputFiles() reads the
+    # optimized plan, where a cached table is an InMemoryRelation that
+    # lists no files
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    files = [f for i in range(leaves.size())
+             for f in leaves.apply(i).relation().inputFiles()]
+    assert files, "the query reads no files"
+    assert all(f"/{ROLLUP_TABLE}.parquet/" in f for f in files), files
 
 
 def test_streamed_sketch_serves_approx_distinct_any_grain(spark, tmp_path):
