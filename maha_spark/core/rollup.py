@@ -1,14 +1,16 @@
 """Rollup (aggregation) expressions.
 
 Mirrors the reference inventory (maha `core/.../fact/RollupExpression.scala:29-93`)
-as Spark aggregate builders. Every rollup knows how to:
-
-* ``agg(col)``      - aggregate a physical column at the fact grain
-* ``reagg(col)``    - re-aggregate an already-aggregated column at an outer
-                      group-by level (SURVEY §2.4 OGB). Sum-of-sums,
-                      max-of-maxes; Average must NOT be averaged again
-                      (avg re-agg is handled by keeping sum+count pairs);
-                      Noop must not be re-aggregated at all.
+as Spark aggregate builders. Every rollup builds one aggregate,
+``agg(col)``, over raw fact rows. The planner never re-aggregates a
+rollup's output: a request that needs an outer group-by aggregates once,
+at the final grain, after the dim joins (SURVEY §2.4;
+``plans/planner.py`` ``_build_join_then_agg``). ``reaggregatable`` says
+whether a STORED value of the rollup merges losslessly at a coarser
+grain: a pre-aggregated table serves a non-reaggregatable metric only
+to requests grouping at its stored grain (``FactTable.serves_grain``).
+Stored sketch and histogram partials are merged by their own rollups
+(``HllUnionRollup``, ``HistogramMergeRollup``).
 
 CustomRollup (ratio metrics like SUM(spend)/SUM(clicks)) is intentionally
 NOT a rollup here: it is a post-aggregation derived expression over other
@@ -19,7 +21,6 @@ aggregates (see columns.DerivedFactCol), which guarantees the
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Optional
 
 from pyspark.sql import Column, functions as F
 from pyspark.sql.types import DataType
@@ -30,11 +31,8 @@ class Rollup:
     def agg(self, col: Column) -> Column:  # pragma: no cover - abstract
         raise NotImplementedError
 
-    def reagg(self, col: Column) -> Column:
-        """Default outer re-aggregation (used after a dim join widens grain)."""
-        return self.agg(col)
-
-    #: whether this rollup survives a second-level aggregation losslessly
+    #: whether a stored partial of this rollup merges losslessly at a
+    #: coarser grain
     reaggregatable = True
 
 
@@ -63,10 +61,6 @@ class CountRollup(Rollup):
     def agg(self, col: Column) -> Column:
         return F.count(F.lit(1))
 
-    def reagg(self, col: Column) -> Column:
-        # count-of-rows re-aggregates as sum of partial counts
-        return F.sum(col)
-
 
 def exact_avg(total: Column, count: Column, avg_type: DataType) -> Column:
     """AVG from its sum and count: ``total / count`` cast to
@@ -81,34 +75,24 @@ def exact_avg(total: Column, count: Column, avg_type: DataType) -> Column:
 
 @dataclass(frozen=True)
 class AverageRollup(Rollup):
-    """AVG. Re-aggregation is NOT avg-of-avgs; the planner decomposes an
-    average metric into sum+count partials when an outer group-by is
-    required and recombines (plans/planner.py). Both forms go through
-    ``exact_avg``, so the planner passes AVG's result type for the
-    source column."""
+    """AVG through ``exact_avg``: the planner passes AVG's result type
+    for the source column. Not reaggregatable — an average of stored
+    averages is not the average."""
 
     reaggregatable = False
 
     def agg(self, col: Column, avg_type: DataType) -> Column:
         return exact_avg(F.sum(col), F.count(col), avg_type)
 
-    def reagg(self, col: Column) -> Column:
-        raise ValueError("AverageRollup cannot be re-aggregated directly; "
-                         "planner must decompose into sum/count partials")
-
 
 @dataclass(frozen=True)
 class NoopRollup(Rollup):
     """Pass-through: value is not re-aggregated (RollupExpression.scala:34).
-    At fact grain we surface an arbitrary (first) value; an outer group-by
-    keeps first as well — mirrors the reference's 'do not re-aggregate'."""
+    Each group surfaces an arbitrary (first non-null) value."""
 
     reaggregatable = False
 
     def agg(self, col: Column) -> Column:
-        return F.first(col, ignorenulls=True)
-
-    def reagg(self, col: Column) -> Column:
         return F.first(col, ignorenulls=True)
 
 
@@ -128,9 +112,6 @@ class FilteredRollup(Rollup):
     def agg(self, col: Column) -> Column:
         return self.base.agg(F.when(F.expr(self.condition_sql), col))
 
-    def reagg(self, col: Column) -> Column:
-        return self.base.reagg(col)
-
 
 @dataclass(frozen=True)
 class CardinalityRollup(Rollup):
@@ -146,10 +127,6 @@ class CardinalityRollup(Rollup):
         if self.exact:
             return F.count_distinct(col)
         return F.approx_count_distinct(col, self.rsd)
-
-    def reagg(self, col: Column) -> Column:
-        raise ValueError("cardinality cannot be re-aggregated from counts; "
-                         "planner must aggregate at final grain directly")
 
 
 #: default HLL precision shared by every sketch producer (registry
@@ -169,15 +146,13 @@ class HllSketchRollup(Rollup):
     sparse mode and may differ by a few counts past it, where the direct
     build can use the HIP estimator the union drops — both stay within
     the sketch's error bound). ``agg`` builds the sketch from raw
-    values; ``reagg`` (outer group-by over partials) unions."""
+    values; a table storing the sketches merges them with
+    ``HllUnionRollup``."""
 
     lg_k: int = HLL_LG_K
 
     def agg(self, col: Column) -> Column:
         return F.hll_sketch_agg(col, self.lg_k)
-
-    def reagg(self, col: Column) -> Column:
-        return F.hll_union_agg(col, True)
 
 
 @dataclass(frozen=True)
@@ -212,9 +187,9 @@ class HistogramRollup(Rollup):
     ``agg`` builds the histogram with ``bins`` parallel conditional SUM
     aggregates inside one array — each is map-side partially aggregated
     (no collect_list, no per-group state beyond ``bins`` longs), so the
-    build scales like any other sum partial at 100 TB. ``reagg`` merges
-    stored partials bin-by-bin. Values outside [lo, hi) clamp to the
-    edge bins (Druid's approxHistogram does the same with its
+    build scales like any other sum partial at 100 TB. A table storing
+    the partials merges them bin-by-bin with ``HistogramMergeRollup``.
+    Values outside [lo, hi) clamp to the edge bins (Druid's approxHistogram does the same with its
     lowerLimit/upperLimit).
 
     Beyond-reference operator (maha exposes no histogram aggregator);
@@ -246,9 +221,6 @@ class HistogramRollup(Rollup):
             F.sum(F.when(ok & (b == i), F.lit(1))
                   .otherwise(F.lit(0)).cast("bigint"))
             for i in range(self.bins)])
-
-    def reagg(self, col: Column) -> Column:
-        return HistogramMergeRollup(bins=self.bins).agg(col)
 
 
 @dataclass(frozen=True)
@@ -303,7 +275,4 @@ class RoundedSumRollup(Rollup):
     scale: int = 2
 
     def agg(self, col: Column) -> Column:
-        return F.round(F.sum(col), self.scale)
-
-    def reagg(self, col: Column) -> Column:
         return F.round(F.sum(col), self.scale)

@@ -1022,12 +1022,7 @@ QUERIES: dict[str, dict] = {
             GROUP BY 1
         """,
     },
-    # -- §2.2 metric filter -> HAVING (RESTORED to the contract r12
-    #    after three rounds off — the oldest rotation debt with q13;
-    #    slot from q32_avg_rollup, whose exact oracle moved to
-    #    tests/test_offcontract_queries.py — AverageRollup itself stays
-    #    ON contract via q33's avg_price_rollup column + the fuzz
-    #    batteries)
+    # -- §2.2 metric filter -> HAVING
     "q11_having": {
         "request": {
             "cube": "tpch",
@@ -1158,9 +1153,7 @@ QUERIES: dict[str, dict] = {
         """,
     },
     # -- §2.6 timeseries (grain grouping) + §2.8 DAY_OF_WEEK derived
-    #    function (RESTORED to the contract r11 after two rounds off —
-    #    the oldest rotation debt with q15; slot from op_embed_quantize,
-    #    whose exact oracle moved to tests/test_ops_packing.py)
+    #    function
     "q3_daily_revenue": {
         "request": {
             "cube": "tpch",
@@ -1180,10 +1173,7 @@ QUERIES: dict[str, dict] = {
             GROUP BY 1, 2
         """,
     },
-    # -- §2.2 outer filter on final projected aliases (RESTORED to
-    #    the contract r11 after two rounds off — the oldest rotation
-    #    debt with q3; slot from op_sim_pairs, whose exact oracle moved
-    #    to tests/test_ops_packing.py)
+    # -- §2.2 outer filter on final projected aliases
     "q15_outer_filter": {
         "request": {
             "cube": "tpch",
@@ -1206,11 +1196,7 @@ QUERIES: dict[str, dict] = {
             ) WHERE nation_name LIKE '%NATION_1%'
         """,
     },
-    # -- §2.3 two independent join chains in one query (RESTORED to
-    #    the contract r12 after three rounds off — the oldest rotation
-    #    debt with q11; slot from q16_union_view, which was
-    #    driver-verified r10+r11 and keeps its exact oracle in
-    #    tests/test_offcontract_queries.py + the fuzz union-battery)
+    # -- §2.3 two independent join chains in one query
     "q13_two_chains": {
         "request": {
             "cube": "tpch",
@@ -1293,17 +1279,13 @@ QUERIES: dict[str, dict] = {
     },
 }
 
-#: cube queries rotated OFF the driver contract (r8: their
-#: slots went to op_semdedup / op_winnow_matches — the r7 flagships the
-#: driver had never hash-checked). Same structure as QUERIES; pinned
-#: against the same DuckDB oracles every round by
-#: tests/test_offcontract_queries.py, so rotation loses no coverage.
+#: cube queries outside the contract. Same structure as QUERIES;
+#: pinned against their DuckDB oracles by
+#: tests/test_offcontract_queries.py.
 OFFCONTRACT_QUERIES: dict[str, dict] = {
     # -- §1.2 filter on a static-mapped label: reverse map expands the
     #    label back to raw values (DataType.scala reverseStaticMapping;
-    #    rotated out r9: the decode direction stays on contract via q7,
-    #    the reverse map via this pin + the fuzz filter battery; slot
-    #    went to op_lm_perplexity — the CCNet-style LM quality score)
+    #    the decode direction is covered by q7)
     "q29_static_mapping_filter": {
         "request": {
             "cube": "tpch",
@@ -1320,8 +1302,7 @@ OFFCONTRACT_QUERIES: dict[str, dict] = {
             GROUP BY 1
         """,
     },
-    # -- §2.4 dim-only SELECT DISTINCT (rotated out r8 after six stable
-    #    rounds on contract)
+    # -- §2.4 dim-only SELECT DISTINCT
     "q14_distinct_dims": {
         "request": {
             "cube": "tpch",
@@ -1337,7 +1318,7 @@ OFFCONTRACT_QUERIES: dict[str, dict] = {
         """,
     },
     # -- §2.8 post-result function: metric exposed only when the status
-    #    dim matches (POST_RESULT_DECODE; rotated out r8)
+    #    dim matches (POST_RESULT_DECODE)
     "q31_post_result_decode": {
         "request": {
             "cube": "events_cube",
@@ -1354,9 +1335,7 @@ OFFCONTRACT_QUERIES: dict[str, dict] = {
             FROM events GROUP BY 1
         """,
     },
-    # -- §2.5 dim-driven TOTALROWS (rotated out r9: dim-driven
-    #    pagination stays covered by q6, TOTALROWS by q19; slot went to
-    #    op_mm_pixel_stats — the real-PNG-decoder driver oracle)
+    # -- §2.5 dim-driven TOTALROWS
     "q37_dim_rowcount": {
         "request": {
             "cube": "tpch",
@@ -1384,11 +1363,7 @@ OFFCONTRACT_QUERIES: dict[str, dict] = {
             FROM page LEFT JOIN f ON o_orderkey = l_orderkey CROSS JOIN t
         """,
     },
-    # -- §2.2 OR combinator + NOT LIKE + IS NOT NULL (rotated out r9:
-    #    each operator keeps individual coverage — Like/NotIn/range via
-    #    q12, Or/NotLike/IsNull via the fuzz invalid+filter batteries —
-    #    and this exact pin; slot went to op_sim_lsh_buckets, whose
-    #    exact oracle had been off-contract since r6)
+    # -- §2.2 OR combinator + NOT LIKE + IS NOT NULL
     "q22_or_notlike": {
         "request": {
             "cube": "tpch",

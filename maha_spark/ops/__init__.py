@@ -132,9 +132,6 @@ def pytest_only_ops() -> dict[str, tuple[Callable, str]]:
         "lm_score": (lm.lm_score,
                      "test_ops_lm.py (persisted model == in-memory "
                      "bit-identically; batch-composable)"),
-        "lm_perplexity_ref": (lm.lm_perplexity_ref,
-                              "test_ops_lm.py (exact DuckDB oracle incl. "
-                              "unseen-bigram backoff)"),
         # the Lloyd-iterated kernel variant of SemDeDup; the contract
         # entry (op_semdedup) runs the seed-centroid SQL twin, pinned
         # equal to this kernel in test_ops_semdedup.py

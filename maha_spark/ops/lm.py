@@ -156,22 +156,6 @@ def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lm_perplexity_frame(load_table(spark, sf_dir, "documents"))
 
 
-#: deterministic reference-corpus carve for the cross-scoring variant
-#: (every 4th document trains the LM; the rest are scored against it)
-LM_TRAIN_MOD = 4
-
-
-def lm_perplexity_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry entry: CCNet's reference-LM setup — the model trains on
-    the ``doc_id % LM_TRAIN_MOD == 0`` slice and scores the REST, so
-    unseen-bigram/unseen-context backoff paths are exercised (the
-    self-scored contract entry never takes them)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return lm_perplexity_frame(
-        docs.filter(f"doc_id % {LM_TRAIN_MOD} != 0"),
-        train=docs.filter(f"doc_id % {LM_TRAIN_MOD} = 0"))
-
-
 def lm_perplexity_oracle() -> str:
     """DuckDB twin of the self-scored ``lm_perplexity``: identical
     tokenization, identical integer count model, the same micro-nat

@@ -3,32 +3,52 @@
 This single module replaces the reference's six per-engine query
 generators + executors + API-side row merging (maha
 `core/.../query/*QueryGenerator.scala`, `QueryPipeline.scala:908-1280`,
-`query/RowList.scala:244-617`). The plan shape is:
+`query/RowList.scala:244-617`). Every request takes one of four shapes:
 
-    fact.filter(day ∧ forced ∧ fact filters)        -- pushed to the scan
-        .groupBy(fact-grain keys).agg(rollups)       -- partial agg map-side
-        .join(broadcast(dims), fk = pk, <derived>)   -- star joins
-        [.groupBy(final aliases).agg(re-rollups)]    -- outer group-by (OGB)
-        .select(final aliases, derived exprs)
-        .filter(outer filters)
-        .orderBy(...).offset(si).limit(mr)
+* agg-then-join (fact-driven, each joined chain's primary key projected):
+
+      fact.filter(day ∧ forced ∧ fact filters)        -- pushed to the scan
+          .groupBy(fact-grain keys + FKs).agg(rollups) -- partial agg map-side
+          .join(dims, fk = pk)                          -- star joins
+          .filter(HAVING)
+
+* join-then-agg (fact-driven, a chain projects attributes without its
+  primary key — the reference's outer group-by case,
+  OracleOuterGroupByQueryGenerator.scala:35):
+
+      fact.filter(...).join(dims, fk = pk)
+          .groupBy(final aliases).agg(rollups).filter(HAVING)
+
+* dim-driven (forceDimensionDriven): the driving chain is ordered and
+  paginated first, its page keys prefilter the fact, and the aggregated
+  fact is left-joined onto the page;
+* dim-only: per-chain SELECT DISTINCT, cross-joined.
+
+Every shape then runs the same tail:
+
+      .select(final aliases, derived exprs)
+      .filter(outer filters) [.distinct()] [TOTALROWS]
+      .orderBy(...).offset(si).limit(mr)
+      .select(alias AS output name)
 
 Scale notes (100 TB design):
 * filters and column pruning are expressed declaratively so Catalyst pushes
   them into the parquet scan (PushedFilters / ReadSchema);
-* dimension sides are broadcast() — star-schema dims are small relative to
-  the fact, so no shuffle of the fact for joins;
-* aggregation before the join (agg-then-join) shrinks the fact to the
-  grouped grain before any join work; the OGB re-aggregation operates on
-  already-reduced data;
-* the only required shuffle is the one groupBy on the fact's grouping keys
-  (AQE coalesces/handles skew at runtime);
+* dimension sides are broadcast only under a declared-cardinality
+  ceiling (``Planner.BROADCAST_DIM_MAX_ROWS``) — star-schema dims are
+  small relative to the fact, so the fact is not shuffled for joins;
+* agg-then-join shrinks the fact to the grouped grain before any join
+  work; join-then-agg probes the dims with raw rows and shuffles only
+  map-side-combined partials at the final alias grain;
+* the only required shuffle is the one groupBy (AQE coalesces/handles
+  skew at runtime);
 * dim-driven pagination orders/limits the (small) dim side only.
 """
 
 from __future__ import annotations
 
-from typing import Any, Optional
+import os
+from typing import Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
@@ -37,13 +57,11 @@ from ..core.columns import (
     PostResultCol, _PLACEHOLDER, expand_expr, static_mapping_projection,
 )
 from ..core.filters import Filter, ResolvedField
-from ..core.rollup import (AverageRollup, CardinalityRollup, NoopRollup,
-                           Rollup, exact_avg)
+from ..core.rollup import AverageRollup, NoopRollup
 from ..model.request_model import (
-    CONSTANT, DIM_ATTR, FACT_DIM, METRIC, DimJoinChain, ProjectedField,
-    RequestModel,
+    CONSTANT, DIM_ATTR, FACT_DIM, METRIC, DimJoinChain, RequestModel,
 )
-from ..registry.cube import DimensionTable, FactTable, PubCol, PublicDimension
+from ..registry.cube import FactTable, PubCol, PublicDimension
 from .binding import TableBinding
 
 ROW_COUNT_ALIAS = "TOTALROWS"  # Count(*) OVER() TOTALROWS (OracleQueryGeneratorTest.scala:44)
@@ -149,6 +167,15 @@ def _decode_sql(table_cols: dict[str, BaseCol], pub: PubCol) -> str:
     return base
 
 
+def _with_row_count(df: DataFrame, counted: DataFrame) -> DataFrame:
+    """Attach ``TOTALROWS`` = the row count of ``counted`` to every row
+    of ``df``: COUNT(*) OVER() semantics without funneling the result
+    through one partition — a 1-row aggregate broadcast back onto every
+    row (OracleQueryGeneratorTest.scala:44)."""
+    total = counted.agg(F.count(F.lit(1)).alias(ROW_COUNT_ALIAS))
+    return df.crossJoin(F.broadcast(total))
+
+
 class Planner:
     def __init__(self, spark: SparkSession, binding: TableBinding):
         self.spark = spark
@@ -183,38 +210,26 @@ class Planner:
             # additionalParameters.Distinct (RequestModel.scala:1089-1096):
             # dedupe the FINAL projection before row count / pagination —
             # sort fields are validated to be among the selected fields,
-            # so narrowing to the projection aliases is safe here. A
-            # dim-driven plan attached its entity-count TOTALROWS; under
-            # Distinct the count of DISTINCT rows is the meaningful total,
-            # so it is recomputed over the deduped frame.
+            # so narrowing to the projection aliases is safe here.
             df = df.select(*[_q(p.alias) for p in model.projections]) \
                    .distinct()
-            if model.include_row_count:
-                total = df.agg(F.count(F.lit(1)).alias(ROW_COUNT_ALIAS))
-                df = df.crossJoin(F.broadcast(total))
-
-        if model.include_row_count and not model.is_dim_driven \
-                and not model.request_distinct:
-            # COUNT(*) OVER() semantics without funneling the result
-            # through one partition: a 1-row count aggregate broadcast back
-            # onto every row. (Dim-driven requests attach the count of the
-            # UNPAGINATED dim side inside _build_dim_driven — the reference
-            # computes TOTALROWS in the dim subquery before ROW_NUMBER
-            # pagination, OracleQueryGenerator row-count rendering.)
-            total = df.agg(F.count(F.lit(1)).alias(ROW_COUNT_ALIAS))
-            df = df.crossJoin(F.broadcast(total))
+        if model.include_row_count and (model.request_distinct
+                                        or not model.is_dim_driven):
+            # a dim-driven plan attaches the count of its UNPAGINATED dim
+            # side (_build_dim_driven); under Distinct the count of
+            # DISTINCT final rows is the meaningful total instead
+            df = _with_row_count(df, df)
 
         df = self._apply_order_and_page(model, df)
 
-        # rename public aliases -> requested output names last
-        renames = [(p.alias, p.output_name) for p in model.projections
-                   if p.output_name != p.alias]
-        for old, new in renames:
-            df = df.withColumnRenamed(old, new)
-        ordered = [p.output_name for p in model.projections]
+        # public aliases -> requested output names, in one projection (a
+        # rename may take a name another projection still holds)
+        cols = [F.col(_q(p.alias)) if p.output_name == p.alias
+                else F.col(_q(p.alias)).alias(p.output_name)
+                for p in model.projections]
         if model.include_row_count:
-            ordered.append(ROW_COUNT_ALIAS)
-        return df.select(*[_q(c) for c in ordered])
+            cols.append(F.col(ROW_COUNT_ALIAS))
+        return df.select(*cols)
 
     # ------------------------------------------------------------------
     # fact side
@@ -264,6 +279,33 @@ class Planner:
         out = self._apply_partition_pruning(out, table, model)
         return self._apply_timezone(out, table, model)
 
+    def _sidecar_dirs(self, table: FactTable,
+                      model: Optional[RequestModel]
+                      ) -> Optional[tuple[str, str]]:
+        """``(index dir, table dir)`` when the binding dir carries a
+        skipping sidecar directory for this fact and the request may
+        prune on it; None otherwise.
+
+        A shifted-timezone request evaluates filters against LOCAL-day
+        expressions over the stored UTC values (_apply_timezone); the
+        sidecar indexes the stored values, so pruning on the request's
+        local-time literals could drop files whose UTC rows map into the
+        requested local day — abstain entirely, same posture as rollup
+        serving (shifted-tz never rollup-served)."""
+        if model is None or getattr(model, "timezone", None) \
+                or getattr(model, "utc_shifted", False):
+            return None
+        base_dir = getattr(self.binding, "base_dir", None)
+        if base_dir is None or not hasattr(self.binding, "table_pruned"):
+            return None
+        from .skipping import table_index_dir
+        idx_dir = table_index_dir(base_dir, table.name)
+        if not os.path.isdir(idx_dir):
+            return None
+        tdir = self.binding.table_path(table.name) \
+            if hasattr(self.binding, "table_path") else None
+        return None if tdir is None else (idx_dir, tdir)
+
     def _apply_file_skipping(self, table: FactTable,
                              model: Optional[RequestModel],
                              extra_needles: Optional[list] = None
@@ -271,132 +313,64 @@ class Planner:
         """File-level data skipping for needle requests: when the
         binding dir carries a sidecar index (``plans/skipping.py``,
         built by a maintenance job under ``{dir}/_skipidx/{table}/``)
-        for a physical column the request filters by ``=``/``in``, the
-        fact scan reads ONLY files whose zone map + Bloom filter may
-        contain the value(s). Every original filter (day bound, forced
-        filters, the needle itself) still applies to the pruned frame,
-        so Bloom false positives cost an extra file open, never
-        correctness — and false negatives cannot occur by construction.
+        for a physical column the request filters by ``=``/``in``/range/
+        ``isnull``, the fact scan reads ONLY files whose zone map +
+        Bloom filter may contain the value(s). Every original filter
+        (day bound, forced filters, the needle itself) still applies to
+        the pruned frame, so Bloom false positives cost an extra file
+        open, never correctness — and false negatives cannot occur by
+        construction.
+
+        ``extra_needles`` are runtime-derived ``(column, values)`` needles
+        (the dim-driven PAGE-KEY set — collected after dim pagination,
+        bounded by the row caps) under the same guards.
 
         Eligibility is deliberately narrow: plain stored DimCols only —
         no derived expressions (their value space differs from stored
         bytes), no static mappings (filters expand through the reverse
         map elsewhere), no case-insensitive columns (the index hashes
-        exact stored values). Returns None when no filter matches an
-        index — the normal (cached) scan proceeds."""
-        import os as _os
+        exact stored values), no day columns (their request bounds are
+        already served losslessly by directory partition pruning, and
+        their filter values pass through day-grain normalization the
+        sidecar's stored values never saw). Returns None when no needle
+        matches an index — the normal (cached) scan proceeds."""
+        dirs = self._sidecar_dirs(table, model)
+        if dirs is None:
+            return None
+        idx_dir, tdir = dirs
+        from .skipping import index_file_count, index_stale
 
-        if model is None:
-            return None
-        if getattr(model, "timezone", None) or getattr(
-                model, "utc_shifted", False):
-            # a shifted-timezone request evaluates filters against
-            # LOCAL-day expressions over the stored UTC values
-            # (_apply_timezone); the sidecar indexes the stored values,
-            # so pruning on the request's local-time literals could drop
-            # files whose UTC rows map into the requested local day —
-            # abstain entirely, same posture as rollup serving
-            # (shifted-tz never rollup-served)
-            return None
-        base_dir = getattr(self.binding, "base_dir", None)
-        if base_dir is None or not hasattr(self.binding, "table_pruned"):
-            return None
-        from ..core.filters import (BetweenFilter, EqualityFilter,
-                                    GreaterThanFilter, InFilter,
-                                    IsNullFilter, LessThanFilter)
-        from .skipping import (index_file_count, index_stale,
-                               prune_files_any, prune_files_null,
-                               prune_files_range, table_index_dir)
-        idx_dir = table_index_dir(base_dir, table.name)
-        if not _os.path.isdir(idx_dir):
-            return None
-        tdir = self.binding.table_path(table.name) \
-            if hasattr(self.binding, "table_path") else None
-        if tdir is None:
-            return None
-
-        # top-level request filters are CONJUNCTIVE, so per-filter keep
+        # top-level request filters are CONJUNCTIVE, so per-needle keep
         # sets intersect: a file dropped by ANY needle cannot hold a row
         # satisfying the whole predicate (Or combinators are single
-        # opaque Filter objects and never match below — they cannot
-        # prune a branch at a time)
-        kept_sets: list[set[str]] = []
-        totals: list[int] = []
+        # opaque Filter objects and never match — they cannot prune a
+        # branch at a time)
+        needles: list[tuple[Optional[str], Filter | list]] = []
         for f in model.fact_filters:
             pub = model.cube.col_by_alias(f.field) \
                 if hasattr(f, "field") else None
-            name = pub.name if pub is not None else \
-                getattr(f, "field", None)
+            needles.append((pub.name if pub is not None
+                            else getattr(f, "field", None), f))
+        for name, values in (extra_needles or []):
+            vals = [v for v in values if v is not None]
+            if vals:
+                needles.append((name, vals))
+        kept_sets: list[set[str]] = []
+        totals: list[int] = []
+        for name, needle in needles:
             col = table.columns.get(name) if name else None
             if not isinstance(col, DimCol) or col.case_insensitive \
                     or col.dtype.has_static_mapping or col.is_day_column:
-                # day columns are excluded even unshifted: their request
-                # bounds are already served losslessly by directory
-                # partition pruning, and their filter values pass
-                # through day-grain normalization the sidecar's stored
-                # values never saw
                 continue
             if index_stale(tdir, idx_dir, name):
                 # the table was rewritten after this column's sidecar
                 # was built — a stale index can miss a restated day's
                 # new files; never prune on it
                 continue
-            if isinstance(f, (EqualityFilter, InFilter)):
-                values = [f.value] if isinstance(f, EqualityFilter) \
-                    else list(f.values)
-                canon = [_canon_needle(col.dtype, v) for v in values]
-                if any(c is _SKIP for c in canon):
-                    # a needle whose string form may not match Spark's
-                    # CAST(stored AS STRING) would hash to the wrong
-                    # Bloom positions — pruning on it could FALSE-
-                    # NEGATIVE, so the whole filter abstains
-                    continue
-                fl0 = prune_files_any(self.spark, idx_dir, name, canon)
-                fl = set(fl0) if fl0 is not None else None
-            elif isinstance(f, GreaterThanFilter):
-                fl0 = prune_files_range(self.spark, idx_dir, name,
-                                        lo=f.value, lo_inclusive=False)
-                fl = set(fl0) if fl0 is not None else None
-            elif isinstance(f, LessThanFilter):
-                fl0 = prune_files_range(self.spark, idx_dir, name,
-                                        hi=f.value, hi_inclusive=False)
-                fl = set(fl0) if fl0 is not None else None
-            elif isinstance(f, BetweenFilter):
-                fl0 = prune_files_range(self.spark, idx_dir, name,
-                                        lo=f.from_value, hi=f.to_value)
-                fl = set(fl0) if fl0 is not None else None
-            elif isinstance(f, IsNullFilter):
-                fl0 = prune_files_null(self.spark, idx_dir, name)
-                fl = set(fl0) if fl0 is not None else None
-            else:
+            files = self._prune_files(idx_dir, name, col, needle)
+            if files is None:   # no sidecar for this column / no needle
                 continue
-            if fl is None:      # no sidecar for this column
-                continue
-            kept_sets.append(fl)
-            total = index_file_count(idx_dir, name)
-            if total is not None:
-                totals.append(total)
-        # runtime-derived needles (the dim-driven PAGE-KEY set — known
-        # driver-side after dim pagination, bounded by the row caps):
-        # same eligibility guards and the same never-false-negative
-        # contract as the request-filter needles above
-        for name, values in (extra_needles or []):
-            col = table.columns.get(name)
-            if not isinstance(col, DimCol) or col.case_insensitive \
-                    or col.dtype.has_static_mapping or col.is_day_column:
-                continue
-            if index_stale(tdir, idx_dir, name):
-                continue
-            vals = [v for v in values if v is not None]
-            if not vals:
-                continue
-            canon = [_canon_needle(col.dtype, v) for v in vals]
-            if any(c is _SKIP for c in canon):
-                continue
-            fl0 = prune_files_any(self.spark, idx_dir, name, canon)
-            if fl0 is None:
-                continue
-            kept_sets.append(set(fl0))
+            kept_sets.append(set(files))
             total = index_file_count(idx_dir, name)
             if total is not None:
                 totals.append(total)
@@ -415,6 +389,44 @@ class Planner:
             # normal scan
             return None
         return self.binding.table_pruned(table.name, sorted(kept))
+
+    def _prune_files(self, idx_dir: str, name: str, col: DimCol,
+                     needle: Filter | list) -> Optional[list[str]]:
+        """Files the sidecar of ``name`` keeps for one needle: a request
+        filter, or a list of page-key values. None = cannot prune."""
+        from ..core.filters import (BetweenFilter, EqualityFilter,
+                                    GreaterThanFilter, InFilter,
+                                    IsNullFilter, LessThanFilter)
+        from .skipping import (prune_files_any, prune_files_null,
+                               prune_files_range)
+        if isinstance(needle, GreaterThanFilter):
+            return prune_files_range(self.spark, idx_dir, name,
+                                     lo=needle.value, lo_inclusive=False)
+        if isinstance(needle, LessThanFilter):
+            return prune_files_range(self.spark, idx_dir, name,
+                                     hi=needle.value, hi_inclusive=False)
+        if isinstance(needle, BetweenFilter):
+            return prune_files_range(self.spark, idx_dir, name,
+                                     lo=needle.from_value,
+                                     hi=needle.to_value)
+        if isinstance(needle, IsNullFilter):
+            return prune_files_null(self.spark, idx_dir, name)
+        if isinstance(needle, EqualityFilter):
+            values = [needle.value]
+        elif isinstance(needle, InFilter):
+            values = list(needle.values)
+        elif isinstance(needle, list):
+            values = needle
+        else:
+            return None
+        canon = [_canon_needle(col.dtype, v) for v in values]
+        if any(c is _SKIP for c in canon):
+            # a needle whose string form may not match Spark's
+            # CAST(stored AS STRING) would hash to the wrong Bloom
+            # positions — pruning on it could FALSE-NEGATIVE, so the
+            # whole needle abstains
+            return None
+        return prune_files_any(self.spark, idx_dir, name, canon)
 
     def _apply_partition_pruning(self, df: DataFrame, table: FactTable,
                                  model: Optional[RequestModel]) -> DataFrame:
@@ -564,14 +576,11 @@ class Planner:
                     out.append((p.alias, _decode_sql(table.columns, p.pub_col)))
         return out
 
-    def _build_fact_agg(self, model: RequestModel,
-                        extra_keys: Optional[list[str]] = None,
-                        skip_group: bool = False,
-                        prefilter_keys: Optional[tuple[str, DataFrame]] = None,
-                        prefilter_values: Optional[list] = None
-                        ) -> DataFrame:
-        """fact scan -> filter -> (groupBy.agg) with group keys =
-        projected fact dims + FK cols needed by join chains.
+    def _fact_rows(self, model: RequestModel,
+                   prefilter_keys: Optional[tuple[str, DataFrame]] = None,
+                   prefilter_values: Optional[list] = None) -> DataFrame:
+        """Raw fact rows of the request: scan -> forced filters -> row
+        filters -> semi-join chains.
 
         ``prefilter_keys=(fk_col, keys_df)`` semi-joins the RAW fact on the
         driving dimension's paginated key set before any aggregation — the
@@ -603,20 +612,10 @@ class Planner:
                                      dtype=col.dtype if col else None)
             df = df.filter(ff.to_column(raw_resolve))
 
-        row_filters, having = self._split_fact_filters(model)
+        row_filters, _ = self._split_fact_filters(model)
         resolve = self._fact_resolver(model)
         for f in row_filters:
             df = df.filter(f.to_column(resolve))
-
-        keys = self._group_key_exprs(model)
-        fk_cols = [ch.fact_fk_col for ch in model.chains
-                   if ch.join_type != "left_semi"]
-        for fk in (extra_keys or []):
-            if fk not in fk_cols:
-                fk_cols.append(fk)
-        key_exprs = [F.expr(sql).alias(alias) for alias, sql in keys]
-        key_exprs += [F.col(fk).alias(fk) for fk in fk_cols
-                      if fk not in [a for a, _ in keys]]
 
         # semi-join chains reduce the fact BEFORE aggregation; the key
         # set broadcasts only under the dims' declared-cardinality
@@ -633,12 +632,28 @@ class Planner:
             fk_name, keys_df = prefilter_keys
             df = df.join(F.broadcast(keys_df),
                          df[fk_name] == keys_df["__page_key"], "left_semi")
+        return df
 
-        base_needed, direct, derived = self._metric_plan(model)
+    def _build_fact_agg(self, model: RequestModel,
+                        extra_keys: Optional[list[str]] = None,
+                        prefilter_keys: Optional[tuple[str, DataFrame]] = None,
+                        prefilter_values: Optional[list] = None
+                        ) -> DataFrame:
+        """_fact_rows -> groupBy.agg with group keys = projected fact
+        dims + FK cols needed by join chains (+ ``extra_keys``)."""
+        table = model.fact_table
+        df = self._fact_rows(model, prefilter_keys, prefilter_values)
+        keys = self._group_key_exprs(model)
+        fk_cols = [ch.fact_fk_col for ch in model.chains
+                   if ch.join_type != "left_semi"]
+        for fk in (extra_keys or []):
+            if fk not in fk_cols:
+                fk_cols.append(fk)
+        key_exprs = [F.expr(sql).alias(alias) for alias, sql in keys]
+        key_exprs += [F.col(fk).alias(fk) for fk in fk_cols
+                      if fk not in [a for a, _ in keys]]
 
-        if skip_group:
-            return df
-
+        base_needed, direct, _ = self._metric_plan(model)
         aggs: list[Column] = []
         # NoopRollup metrics that are pure functions of BARE group-key
         # columns become post-aggregation projections instead of
@@ -666,13 +681,6 @@ class Planner:
             # derived exprs always read the __base_-prefixed internal copy,
             # even when the same metric is also directly projected
             aggs.append(self._agg_expr(col, table, df).alias(f"__base_{name}"))
-        # average decomposition partials for possible OGB re-agg
-        if model.requires_outer_group_by:
-            for alias, col in direct:
-                if isinstance(col.rollup, AverageRollup):
-                    src = self._agg_source(col, table)
-                    aggs.append(F.sum(src).alias(f"__avgsum_{alias}"))
-                    aggs.append(F.count(src).alias(f"__avgcnt_{alias}"))
 
         if not aggs and post_noop:
             # every metric was noop-rewritten: revert one to its first()
@@ -692,24 +700,32 @@ class Planner:
         gdf = df.groupBy(*key_exprs).agg(*aggs) if key_exprs else df.agg(*aggs)
         for alias, sql in post_noop:
             gdf = gdf.withColumn(alias, F.expr(sql))
+        return self._apply_having(model, gdf)
 
-        # HAVING filters over aggregated metric aliases
-        if having:
-            def having_resolve(alias: str) -> ResolvedField:
-                pub = model.cube.fact_alias_map().get(alias)
-                if pub is not None:
-                    col = table.columns.get(pub.name)
-                    if isinstance(col, DerivedFactCol):
-                        resolver = {n: _q(f"__base_{n}") for n in table.columns}
-                        sql = expand_expr(col.expr, resolver)
-                        return ResolvedField(col=F.expr(sql), sql=sql)
-                    if alias in gdf.columns:
-                        return ResolvedField(col=F.col(_q(alias)), sql=_q(alias))
-                    return ResolvedField(col=F.col(_q(f"__base_{pub.name}")),
-                                         sql=_q(f"__base_{pub.name}"))
-                return ResolvedField(col=F.col(_q(alias)), sql=_q(alias))
-            for f in having:
-                gdf = gdf.filter(f.to_column(having_resolve))
+    def _apply_having(self, model: RequestModel, gdf: DataFrame) -> DataFrame:
+        """HAVING-style filters over the aggregated metric aliases of
+        ``gdf``: a derived metric expands over the ``__base_`` partials,
+        a direct metric reads its own alias (or its ``__base_`` copy
+        when only that was aggregated)."""
+        _, having = self._split_fact_filters(model)
+        table = model.fact_table
+
+        def resolve(alias: str) -> ResolvedField:
+            pub = model.cube.fact_alias_map().get(alias)
+            if pub is not None:
+                col = table.columns.get(pub.name)
+                if isinstance(col, DerivedFactCol):
+                    resolver = {n: _q(f"__base_{n}") for n in table.columns}
+                    sql = expand_expr(col.expr, resolver)
+                    return ResolvedField(col=F.expr(sql), sql=sql)
+                if alias in gdf.columns:
+                    return ResolvedField(col=F.col(_q(alias)), sql=_q(alias))
+                return ResolvedField(col=F.col(_q(f"__base_{pub.name}")),
+                                     sql=_q(f"__base_{pub.name}"))
+            return ResolvedField(col=F.col(_q(alias)), sql=_q(alias))
+
+        for f in having:
+            gdf = gdf.filter(f.to_column(resolve))
         return gdf
 
     def _agg_source(self, col: FactCol, table: FactTable) -> Column:
@@ -821,10 +837,31 @@ class Planner:
     # ------------------------------------------------------------------
     # strategies
     # ------------------------------------------------------------------
-    def _needs_join_agg(self, model: RequestModel) -> bool:
-        """Use join-then-agg (single aggregation at the final grain after
-        joining raw fact rows to the broadcast dims) whenever an outer
-        group-by would otherwise be needed.
+    def _join_chains(self, model: RequestModel, df: DataFrame) -> DataFrame:
+        """Join every chain that projects or sorts onto the fact frame by
+        its fact FK, with the chain's own join type (semi-join chains
+        already reduced the fact in _fact_rows)."""
+        for ch in model.chains:
+            if ch.join_type == "left_semi" or not (ch.has_projection or ch.sorts):
+                continue
+            dimdf = self._build_chain_df(ch)
+            key = f"__dimkey_{ch.fact_fk_col}"
+            df = df.join(self._maybe_broadcast(dimdf, ch.dims),
+                         df[_q(ch.fact_fk_col)] == dimdf[_q(key)],
+                         ch.join_type).drop(key)
+        return df
+
+    def _build_fact_driven(self, model: RequestModel) -> DataFrame:
+        if model.requires_outer_group_by:
+            return self._build_join_then_agg(model)
+        df = self._join_chains(model, self._build_fact_agg(model))
+        return self._final_projection(model, df)
+
+    def _build_join_then_agg(self, model: RequestModel) -> DataFrame:
+        """Single aggregation at the final alias grain after joining the
+        dims to raw fact rows — the plan for every request that needs an
+        outer group-by (a chain projects attributes without its primary
+        key).
 
         The reference's OGB (inner agg + join + outer re-agg,
         OracleOuterGroupByQueryGenerator.scala:35) exists because its
@@ -835,106 +872,20 @@ class Planner:
         ONE exchange of map-side-combined partials at the (tiny) final
         alias grain, and is also the only lossless plan for
         non-re-aggregatable metrics (cardinality, average)."""
-        return model.requires_outer_group_by
-
-    def _build_fact_driven(self, model: RequestModel) -> DataFrame:
-        if self._needs_join_agg(model):
-            return self._build_join_then_agg(model)
-
-        df = self._build_fact_agg(model)
-
-        for ch in model.chains:
-            if ch.join_type == "left_semi" or not (ch.has_projection or ch.sorts):
-                continue
-            dimdf = self._build_chain_df(ch)
-            key = f"__dimkey_{ch.fact_fk_col}"
-            df = df.join(self._maybe_broadcast(dimdf, ch.dims),
-                         df[_q(ch.fact_fk_col)] == dimdf[_q(key)],
-                         ch.join_type).drop(key)
-
-        if model.requires_outer_group_by:
-            df = self._outer_group_by(model, df)
-
-        df = self._final_projection(model, df)
-        return df
-
-    def _build_join_then_agg(self, model: RequestModel) -> DataFrame:
-        """Single aggregation at the final grain after joining dims to raw
-        fact rows (used when metrics are not re-aggregatable)."""
         table = model.fact_table
-        df = self._build_fact_agg(model, skip_group=True)
-        for ch in model.chains:
-            if ch.join_type == "left_semi":
-                continue
-            dimdf = self._build_chain_df(ch)
-            key = f"__dimkey_{ch.fact_fk_col}"
-            df = df.join(self._maybe_broadcast(dimdf, ch.dims),
-                         df[_q(ch.fact_fk_col)] == dimdf[_q(key)],
-                         ch.join_type).drop(key)
-
+        df = self._join_chains(model, self._fact_rows(model))
         keys = []
         for p in model.projections:
             if p.kind == FACT_DIM:
                 keys.append(F.expr(_decode_sql(table.columns, p.pub_col)).alias(p.alias))
             elif p.kind == DIM_ATTR:
                 keys.append(F.col(_q(p.alias)))
-        base_needed, direct, derived = self._metric_plan(model)
+        base_needed, direct, _ = self._metric_plan(model)
         aggs = [self._agg_expr(col, table, df).alias(alias) for alias, col in direct]
         for name, col in base_needed.items():
             aggs.append(self._agg_expr(col, table, df).alias(f"__base_{name}"))
         gdf = df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
-
-        # HAVING-style filters on metric aliases (same resolution as the
-        # agg-then-join path, which applies them inside _build_fact_agg)
-        _, having = self._split_fact_filters(model)
-        if having:
-            def having_resolve(alias: str) -> ResolvedField:
-                pub = model.cube.fact_alias_map().get(alias)
-                if pub is not None:
-                    col = table.columns.get(pub.name)
-                    if isinstance(col, DerivedFactCol):
-                        resolver = {n: _q(f"__base_{n}") for n in table.columns}
-                        sql = expand_expr(col.expr, resolver)
-                        return ResolvedField(col=F.expr(sql), sql=sql)
-                    if alias in gdf.columns:
-                        return ResolvedField(col=F.col(_q(alias)), sql=_q(alias))
-                    return ResolvedField(col=F.col(_q(f"__base_{pub.name}")),
-                                         sql=_q(f"__base_{pub.name}"))
-                return ResolvedField(col=F.col(_q(alias)), sql=_q(alias))
-            for f in having:
-                gdf = gdf.filter(f.to_column(having_resolve))
-        return self._final_projection(model, gdf, keys_present=True)
-
-    def _outer_group_by(self, model: RequestModel, df: DataFrame) -> DataFrame:
-        """Re-aggregate at the final alias grain after dim joins
-        (OracleOuterGroupByQueryGenerator semantics, SURVEY §2.4)."""
-        table = model.fact_table
-        keys = [F.col(_q(p.alias)) for p in model.projections
-                if p.kind in (FACT_DIM, DIM_ATTR)]
-        aggs: list[Column] = []
-        for p in model.projections:
-            if p.kind != METRIC:
-                continue
-            col = table.columns.get(p.pub_col.name)
-            if isinstance(col, FactCol):
-                if isinstance(col.rollup, AverageRollup):
-                    # the inner aggregate's AVG column carries AVG's type
-                    aggs.append(exact_avg(
-                        F.sum(F.col(_q(f"__avgsum_{p.alias}"))),
-                        F.sum(F.col(_q(f"__avgcnt_{p.alias}"))),
-                        df.schema[p.alias].dataType).alias(p.alias))
-                else:
-                    aggs.append(col.rollup.reagg(F.col(_q(p.alias))).alias(p.alias))
-        # re-aggregate base partials for derived metrics (sum-of-sums)
-        for c in df.columns:
-            if c.startswith("__base_"):
-                name = c[len("__base_"):]
-                col = table.columns.get(name)
-                if isinstance(col, FactCol):
-                    aggs.append(col.rollup.reagg(F.col(_q(c))).alias(c))
-                else:
-                    aggs.append(F.sum(F.col(_q(c))).alias(c))
-        return df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
+        return self._final_projection(model, self._apply_having(model, gdf))
 
     def _build_dim_driven(self, model: RequestModel) -> DataFrame:
         """Dim-driven (ROJ) shape: paginate the ORDERED dimension first, then
@@ -945,12 +896,8 @@ class Planner:
         dimdf = self._build_chain_df(driving)
 
         # TOTALROWS = matching dim entities BEFORE pagination (the page
-        # size is not the answer); 1-row aggregate broadcast onto the page
-        total = None
-        if model.include_row_count and not model.request_distinct:
-            # under Distinct the meaningful total is the count of DISTINCT
-            # final rows, computed in build() after the dedupe
-            total = dimdf.agg(F.count(F.lit(1)).alias(ROW_COUNT_ALIAS))
+        # size is not the answer)
+        entities = dimdf
 
         # pre-join ordering + pagination on the dim side
         order = []
@@ -986,25 +933,19 @@ class Planner:
         prefilter = None
         page_values = None
         if paginate_dim and model.max_rows >= 0:
-            prefilter = (driving.fact_fk_col,
-                         dimdf.select(F.col(_q(key)).alias("__page_key")))
             # when the fact carries a skipping sidecar on the driving fk,
             # the page's key VALUES (bounded by the row caps) probe it so
             # the fact scan opens only candidate files. The page is
             # cached first (engine's scoped-cache drain reclaims it) so
             # the driver collect, the semi-join broadcast, and the final
             # dim join all reuse ONE ordered-pagination computation.
-            if (not getattr(model, "timezone", None)
-                    and not getattr(model, "utc_shifted", False)
-                    and self._fact_has_sidecar(model.fact_table,
-                                               driving.fact_fk_col)):
+            if self._fact_has_sidecar(model, driving.fact_fk_col):
                 from ..ops.common import scoped_cache
                 dimdf = scoped_cache(dimdf)
-                prefilter = (driving.fact_fk_col,
-                             dimdf.select(F.col(_q(key))
-                                          .alias("__page_key")))
                 page_values = [r[0] for r in
                                dimdf.select(F.col(_q(key))).collect()]
+            prefilter = (driving.fact_fk_col,
+                         dimdf.select(F.col(_q(key)).alias("__page_key")))
         fact = self._build_fact_agg(model, extra_keys=[driving.fact_fk_col],
                                     prefilter_keys=prefilter,
                                     prefilter_values=page_values)
@@ -1032,27 +973,22 @@ class Planner:
 
         df = df.drop(key)
         out = self._final_projection(model, df, coalesce_defaults=True)
-        if total is not None:
-            out = out.crossJoin(F.broadcast(total))
+        if model.include_row_count and not model.request_distinct:
+            out = _with_row_count(out, entities)
         return out
 
-    def _fact_has_sidecar(self, table: FactTable, col: str) -> bool:
+    def _fact_has_sidecar(self, model: RequestModel, col: str) -> bool:
         """Cheap driver-side probe: does a fresh skipping sidecar for
-        ``col`` exist under the binding dir for this fact? Gates the
-        dim-driven page-key collect — without a sidecar the collect
-        would be a wasted job."""
-        import os as _os
-
-        from .skipping import _index_path, index_stale, table_index_dir
-        base_dir = getattr(self.binding, "base_dir", None)
-        if base_dir is None or not hasattr(self.binding, "table_pruned"):
+        ``col`` exist for this request's fact? Gates the dim-driven
+        page-key collect — without a sidecar the collect would be a
+        wasted job."""
+        from .skipping import _index_path, index_stale
+        dirs = self._sidecar_dirs(model.fact_table, model)
+        if dirs is None:
             return False
-        idx_dir = table_index_dir(base_dir, table.name)
-        if not _os.path.exists(_index_path(idx_dir, col)):
-            return False
-        tdir = self.binding.table_path(table.name) \
-            if hasattr(self.binding, "table_path") else None
-        return tdir is not None and not index_stale(tdir, idx_dir, col)
+        idx_dir, tdir = dirs
+        return os.path.exists(_index_path(idx_dir, col)) \
+            and not index_stale(tdir, idx_dir, col)
 
     def _build_dim_only(self, model: RequestModel) -> DataFrame:
         """Dim-only SELECT DISTINCT (RequestModel.isRequestingDistict).
@@ -1102,11 +1038,10 @@ class Planner:
 
     # ------------------------------------------------------------------
     def _final_projection(self, model: RequestModel, df: DataFrame,
-                          keys_present: bool = False,
                           coalesce_defaults: bool = False) -> DataFrame:
         table = model.fact_table
         cols: list[Column] = []
-        base_needed, direct, derived = self._metric_plan(model)
+        _, _, derived = self._metric_plan(model)
         derived_aliases = {a for a, _ in derived}
         for p in model.projections:
             if p.kind == CONSTANT:
@@ -1160,8 +1095,13 @@ class Planner:
         if not model.outer_filters:
             return df
 
-        def resolve(alias: str) -> ResolvedField:
-            return ResolvedField(col=F.col(_q(alias)), sql=_q(alias))
+        # outer filters name OUTPUT columns; the frame still carries the
+        # projection aliases until build()'s final rename
+        alias_of = {p.output_name: p.alias for p in model.projections}
+
+        def resolve(name: str) -> ResolvedField:
+            alias = _q(alias_of.get(name, name))
+            return ResolvedField(col=F.col(alias), sql=alias)
 
         for f in model.outer_filters:
             df = df.filter(f.to_column(resolve))

@@ -520,3 +520,79 @@ def test_decimal_avg_rounds_exact_tie_half_up(spark, sf_dir, tmp_path):
         "filterExpressions": [DAY_ALL]}).collect()
     assert len(rows) == 1
     assert rows[0]["avg_price_rollup"] == 52532.254513
+
+
+@pytest.fixture(scope="module")
+def contract_engine(spark, sf_dir):
+    from maha_spark.engine import engine_for_dir
+    from maha_spark.examples.contract import build_contract_registry
+    return engine_for_dir(spark, build_contract_registry(), sf_dir)
+
+
+def test_outer_filter_on_select_field_alias(contract_engine):
+    """An outer filter names the OUTPUT column, so it may name a
+    select-field alias; the rows equal the un-aliased request's."""
+    from maha_spark.examples.contract import DAY_ALL
+
+    def req(alias):
+        name = alias or "nation_name"
+        return {
+            "cube": "tpch",
+            "selectFields": [{"field": "nation_name", "alias": alias},
+                             {"field": "revenue"}],
+            "filterExpressions": [DAY_ALL, {
+                "operator": "outer", "filterExpressions": [
+                    {"field": name, "operator": "like",
+                     "value": "NATION_1"}]}]}
+
+    df = contract_engine.dataframe(req("Nation"))
+    assert df.columns == ["Nation", "revenue"]
+    got = sorted(map(tuple, df.collect()))
+    want = sorted(map(tuple, contract_engine.dataframe(req(None)).collect()))
+    assert got == want and len(want) > 0
+
+
+def test_swapped_select_field_aliases(contract_engine):
+    """Two select fields may trade names: each output column carries the
+    values of the field it aliases."""
+    from maha_spark.examples.contract import DAY_ALL
+
+    base = {"cube": "tpch",
+            "selectFields": [{"field": "part_id"}, {"field": "line_count"}],
+            "filterExpressions": [DAY_ALL]}
+    swapped = dict(base, selectFields=[
+        {"field": "part_id", "alias": "line_count"},
+        {"field": "line_count", "alias": "part_id"}])
+    df = contract_engine.dataframe(swapped)
+    assert df.columns == ["line_count", "part_id"]
+    got = sorted(map(tuple, df.collect()))
+    want = sorted(map(tuple, contract_engine.dataframe(base).collect()))
+    assert got == want and len(want) > 0
+
+
+def test_dim_driven_avg_without_dim_key(engine, duck):
+    """Dim-driven request projecting a dim attribute without the dim's
+    key (a model that needs an outer group-by) and a direct AVG metric:
+    one row per supplier, zero-fact suppliers included with a NULL
+    average."""
+    req = {
+        "cube": "lineitem_stats",
+        "selectFields": [{"field": "Supplier Name"},
+                         {"field": "Average Price"}],
+        "filterExpressions": [{"field": "Day", "operator": "between",
+                               "from": "1995-01-01", "to": "1995-01-03"}],
+        "forceDimensionDriven": True,
+    }
+    model = engine.model(req)
+    assert model.is_dim_driven and model.requires_outer_group_by
+    got = [(r[0], None if r[1] is None else float(r[1]))
+           for r in engine.dataframe(req).collect()]
+    exp = duck.execute("""
+        SELECT s_name, avg(l_extendedprice)
+        FROM supplier LEFT JOIN lineitem ON l_suppkey = s_suppkey
+             AND CAST(l_shipdate AS DATE)
+                 BETWEEN DATE '1995-01-01' AND DATE '1995-01-03'
+        GROUP BY s_suppkey, s_name
+    """).fetchall()
+    assert any(v is None for _, v in exp) and any(v for _, v in exp)
+    rows_match(got, exp)

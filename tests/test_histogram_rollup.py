@@ -118,7 +118,7 @@ def test_quantile_within_one_bin_of_exact(ev_engine, duck):
 
 
 def test_merge_rollup_equals_direct_build(spark):
-    """reagg over stored partials == agg over raw values, at a coarser
+    """Merging stored partials == agg over raw values, at a coarser
     grain — the losslessness that justifies advisor carry."""
     from pyspark.sql import functions as F
     rows = [(i % 3, float(i % 17) * 30.0 + (i % 7)) for i in range(200)]

@@ -102,14 +102,6 @@ def test_reference_lm_backoff_paths(spark):
     assert got[3][2] > got[1][2]
 
 
-def test_ref_registry_entry_runs_and_is_disjoint(spark, sf_dir):
-    out = lm.lm_perplexity_ref(spark, sf_dir)
-    rows = out.collect()
-    assert rows
-    assert all(r.doc_id % lm.LM_TRAIN_MOD != 0 for r in rows)
-    assert all(r.ppl > 0 and r.n_bigrams > 0 for r in rows)
-
-
 # ------------------------------------------------- plan shape
 def test_counts_join_not_cartesian_and_one_corpus_scan(spark, sf_dir):
     """Scoring joins are hash joins on token keys (no cartesian), and
