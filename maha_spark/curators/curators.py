@@ -61,14 +61,18 @@ def run_curators(engine: "MahaSparkEngine", model: RequestModel) -> dict[str, An
     """Run requested curators CONCURRENTLY (the reference runs them as
     non-blocking ParRequests, RequestCoordinator.scala:97-151). Spark
     schedules jobs submitted from multiple threads of one session in
-    parallel, so a thread per curator overlaps their cluster work."""
+    parallel, so a thread per curator overlaps their cluster work.
+    Each runs in a copy of the caller's context, so the caches its
+    sub-request allocates land in the request's scope."""
     items = list(model.request.curators.items())
     if len(items) <= 1:
         return {name: _run_one(engine, model, name, cfg)
                 for name, cfg in items}
+    import contextvars
     from concurrent.futures import ThreadPoolExecutor
     with ThreadPoolExecutor(max_workers=min(4, len(items))) as pool:
-        futs = {name: pool.submit(_run_one, engine, model, name, cfg)
+        futs = {name: pool.submit(contextvars.copy_context().run,
+                                  _run_one, engine, model, name, cfg)
                 for name, cfg in items}
         return {name: fut.result() for name, fut in futs.items()}
 

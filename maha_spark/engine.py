@@ -9,17 +9,23 @@ rowcount) composed into one response
 from __future__ import annotations
 
 import datetime as _dt
+import threading
+from collections import deque
 from typing import Any, Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .core.bucketing import BucketSelector
 from .model.request_model import RequestModel, build_request_model
+from .ops.common import held_frames, in_scope, scoped_cache
 from .output.serializers import to_json_response
 from .plans.binding import ParquetBinding, TableBinding
 from .plans.planner import Planner
 from .registry.cube import Registry
 from .request.request import ReportingRequest, parse_request
+
+#: dry-run ledger length: the newest records are kept, older ones drop
+DRY_RUN_LOG_MAX = 1000
 
 
 class MahaSparkEngine:
@@ -40,9 +46,12 @@ class MahaSparkEngine:
         self.request_logger = request_logger
         self.registry_name = registry_name
         #: dry-run shadow execution ledger (RequestModel.scala:1465-1510:
-        #: the dry-run revision's query runs out-of-band, result discarded)
-        self.dry_run_log: list[dict[str, Any]] = []
-        self._dry_run_threads: list[Any] = []
+        #: the dry-run revision's query runs out-of-band, result
+        #: discarded) and its still-running shadow threads
+        self.dry_run_log: deque[dict[str, Any]] = deque(
+            maxlen=DRY_RUN_LOG_MAX)
+        self._dry_run_threads: list[threading.Thread] = []
+        self._dry_run_lock = threading.Lock()
         #: optional result-level cache (Druid broker result cache parity;
         #: execution/result_cache.py) — keyed on canonical request +
         #: per-table mtime stamps, so the maintenance ops' root-mtime
@@ -53,10 +62,10 @@ class MahaSparkEngine:
     def status(self) -> dict[str, Any]:
         """Operational telemetry for a serving operator (REST
         ``/registry/{name}/status``): result-cache hit rates and
-        residency, live op-scoped storage caches, binding DataFrame-memo
-        entries, and the Spark storage layer's persisted-block count —
-        everything needed to see cache behavior without a debugger."""
-        from .ops.common import _SCOPED_CACHES
+        residency, the frames held by open scopes (``scopedCaches``),
+        binding DataFrame-memo entries, and the Spark storage layer's
+        persisted-block count — everything needed to see cache behavior
+        without a debugger."""
         from .plans.binding import _DF_CACHE
 
         try:
@@ -68,7 +77,7 @@ class MahaSparkEngine:
             "registry": self.registry_name,
             "resultCache": (self.result_cache.stats()
                             if self.result_cache is not None else None),
-            "scopedCaches": len(_SCOPED_CACHES),
+            "scopedCaches": held_frames(),
             "bindingCachedTables": len(_DF_CACHE),
             "persistedRdds": n_rdds,
             "dryRunsLogged": len(self.dry_run_log),
@@ -106,9 +115,11 @@ class MahaSparkEngine:
         against the fallback cube revision."""
         from .request.request import ValidationError
         try:
-            # persist before probing so the emptiness check and the
-            # caller's consumption share one execution of the plan
-            df = self.dataframe(request, schema=schema, today=today).cache()
+            # cache (in the caller's scope) before probing so the
+            # emptiness check and the caller's consumption share one
+            # execution of the plan
+            df = scoped_cache(self.dataframe(request, schema=schema,
+                                             today=today))
             if df.limit(1).count() > 0:
                 return df
             df.unpersist()
@@ -124,6 +135,7 @@ class MahaSparkEngine:
                               revision=fallback_revision)
 
     # ------------------------------------------------------------------
+    @in_scope
     def execute(self, request: Union[dict, str, bytes, ReportingRequest],
                 schema: str = "internal",
                 today: Optional[_dt.date] = None,
@@ -132,7 +144,9 @@ class MahaSparkEngine:
                 request_id: Optional[str] = None) -> dict[str, Any]:
         """Full lifecycle incl. curators -> reference JSON envelope.
         Routes through model() so revision A/B bucketing applies on the
-        primary execute path exactly as it does for dataframe()."""
+        primary execute path exactly as it does for dataframe(). The
+        envelope is eager, so the request's own scope releases every
+        cache its planner and curators allocated on return."""
         from .curators.curators import run_curators  # cycle-free local import
         from .log.request_log import (build_log_entry, new_request_id,
                                       now_ms, RequestLogEntry)
@@ -257,32 +271,18 @@ class MahaSparkEngine:
                     self.request_logger.log(entry)
                 except Exception:
                     pass  # the ledger never breaks serving
-            # the envelope above is EAGER (rows are materialized into the
-            # response), so any op-scoped storage blocks left on this
-            # session — the pipeline ops cache intermediate signature
-            # streams (ops/common.scoped_cache) and cannot unpersist
-            # their own lazy plans — are safe to drop here. A long-lived
-            # serving session would otherwise accumulate MEMORY_AND_DISK
-            # blocks across requests (bench.py releases per entry; this
-            # is the same hygiene on the serving path). Unpersist is
-            # semantics-free: a still-held lazy plan just recomputes.
-            try:
-                from .ops.common import release_scoped_caches
-                release_scoped_caches()
-            except Exception:
-                pass
 
     # ------------------------------------------------------------------
     def _spawn_dry_run(self, req: ReportingRequest, schema: str,
                        today: Optional[_dt.date], revision: int) -> None:
-        """Build + execute the shadow revision's plan out-of-band; the
+        """Build + execute the shadow revision's plan out-of-band, in
+        its own scope (it outlives the request that spawned it); the
         result is discarded, only status/rows/error are recorded."""
-        import threading
-
         rec: dict[str, Any] = {"cube": req.cube, "revision": revision,
                                "status": "RUNNING", "rows": -1, "error": ""}
         self.dry_run_log.append(rec)
 
+        @in_scope
         def work() -> None:
             try:
                 df = self.dataframe(req, schema=schema, today=today,
@@ -295,12 +295,17 @@ class MahaSparkEngine:
 
         t = threading.Thread(target=work, daemon=True)
         t.start()
-        self._dry_run_threads.append(t)
+        with self._dry_run_lock:
+            self._dry_run_threads = [
+                w for w in self._dry_run_threads if w.is_alive()]
+            self._dry_run_threads.append(t)
 
-    def wait_for_dry_runs(self, timeout: Optional[float] = None) -> list[dict]:
-        for t in self._dry_run_threads:
+    def wait_for_dry_runs(self, timeout: Optional[float] = None
+                          ) -> deque[dict]:
+        with self._dry_run_lock:
+            threads, self._dry_run_threads = self._dry_run_threads, []
+        for t in threads:
             t.join(timeout)
-        self._dry_run_threads.clear()
         return self.dry_run_log
 
     # ------------------------------------------------------------------

@@ -22,6 +22,7 @@ import uuid
 from dataclasses import asdict, dataclass, field
 from typing import Any, Optional, Union
 
+from ..ops.common import Scope
 from ..request.request import ReportingRequest
 
 
@@ -88,8 +89,8 @@ class AsyncReportRunner:
                 from ..request.request import parse_request
                 req = parse_request(request, schema=schema,
                                     request_type="AsyncRequest")
-            df = self.engine.dataframe(req, schema=schema).cache()
-            try:
+            with Scope() as scope:
+                df = scope.cache(self.engine.dataframe(req, schema=schema))
                 fmt = job.output_format
                 out_df = df.coalesce(1) \
                     if job.extra.get("single_file", True) else df
@@ -116,8 +117,6 @@ class AsyncReportRunner:
                 # cached: the count reuses the materialized result instead
                 # of executing the whole plan a second time
                 job.rows = df.count()
-            finally:
-                df.unpersist()
             job.status = "COMPLETED"
         except Exception as e:
             job.status = "FAILED"

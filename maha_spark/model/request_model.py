@@ -55,6 +55,23 @@ class ProjectedField:
     value: Any = None                # for CONSTANT
 
 
+def resolve_output_column(name: str,
+                          projections: list[ProjectedField]
+                          ) -> Optional[str]:
+    """SQL's ORDER BY name rule, shared by sorts and outer filters:
+    ``name`` is an output name first, else a select field that is not
+    another column's output name. Returns that projection's alias (the
+    column name until the planner's final rename), or None when nothing
+    selected answers to ``name``."""
+    for p in projections:
+        if p.output_name == name:
+            return p.alias
+    for p in projections:
+        if p.alias == name:
+            return p.alias
+    return None
+
+
 @dataclass
 class DimJoinChain:
     """One join chain fact -> d0 -> d1 -> ... ordered fact-adjacent first."""
@@ -405,13 +422,12 @@ def build_request_model(request: ReportingRequest, registry: Registry,
     def classify(f: Filter) -> None:
         nonlocal day_filter
         if isinstance(f, OuterFilter):
-            # outer filters run over the FINAL projected aliases, so every
+            # outer filters run over the FINAL projected columns, so every
             # referenced field must be selected ("OuterFilter ... is not
             # in selected column list")
-            out_names = {p.output_name for p in projections}
             for lf in _leaf_filters(f):
                 for a in lf.fields():
-                    if a not in out_names:
+                    if resolve_output_column(a, projections) is None:
                         errors.append(f"OuterFilter {a!r} is not in "
                                       f"selected column list")
             outer_filters.append(f)
@@ -524,15 +540,17 @@ def build_request_model(request: ReportingRequest, registry: Registry,
     # ------------------------------------------------------------------
     fact_sorts: list[SortBy] = []
     dim_sorts: list[SortBy] = []
-    selected_aliases = {sf.field for sf in request.select_fields}
     for s in request.sort_by:
         # reference rule (RequestModel validation): ordering fields must be
         # among the requested fields — sorting on an unprojected column is
-        # rejected, not silently planned
-        if s.field not in selected_aliases:
+        # rejected, not silently planned. Named by SQL's ORDER BY rule;
+        # the model carries the resolved select field.
+        field = resolve_output_column(s.field, projections)
+        if field is None:
             errors.append(
                 f"Ordering field must be in requested fields: {s.field!r}")
             continue
+        s = SortBy(field, s.order)
         if s.field in dim_alias or s.field in fact_alias:
             fact_sorts.append(s)
         else:

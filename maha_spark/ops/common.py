@@ -1,51 +1,215 @@
 """Shared primitives for the data-pipeline operators (dedup / similarity /
-text analysis).
+text analysis), and the one lifecycle of the Spark storage they hold.
 
 Determinism contract with the DuckDB oracle: every hash is derived from
 ``md5`` hex (identical across engines), integer math stays below 2^63
 (no overflow), and float expressions are written with identical
 association order on both sides so IEEE results are bit-equal.
+
+Storage lifecycle: a :class:`Scope` owns the caches, eager local
+checkpoints and warm threads created while it is current, and releases
+only those. The current scope is a ``ContextVar``, so threads never see
+each other's. ``MahaSparkEngine.execute`` opens one per request (its
+curator threads run in the request's context), as do the dry-run shadow
+thread and the async report worker; ``@in_scope`` opens one per
+maintenance rewrite; ``drain`` one per stream micro-batch. Library
+callers outside any scope (an op called directly, bench harnesses) use
+the root scope and call ``release_scoped_caches()`` once they have
+consumed the op's lazily returned plan.
 """
 
 from __future__ import annotations
 
+import contextvars
+import functools
 import os
+import threading
+from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 #: prime modulus for minhash permutations (fits 32 bits)
 MINHASH_P = 2147483647
 #: rolling-hash modulus
 ROLL_P = 1000000007
 
-#: live op-scoped caches (see scoped_cache) — module-level so a
-#: long-lived session can release them between jobs
-_SCOPED_CACHES: list[DataFrame] = []
+
+class Scope:
+    """Owner of the Spark storage one unit of work allocates.
+    ``with Scope():`` makes it current in this context and releases it
+    on exit. The pipeline ops return LAZY plans over their caches, so
+    they cannot unpersist them; the scope that consumes the plan does."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()  # a scope is shared by threads
+        self._held: list[Callable[[], None]] = []  # unpersist callbacks
+        self._threads: list[threading.Thread] = []
+
+    def _hold(self, unpersist: Callable[[], None]) -> None:
+        with self._lock:
+            self._held.append(unpersist)
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """``df.cache()``, unpersisted (blocking) on release."""
+        df = df.cache()
+        self._hold(lambda: df.unpersist(True))
+        return df
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        """Eager ``localCheckpoint``, which decouples a read from a
+        write to the same files. Its blocks sit below the SQL
+        CacheManager, so release unpersists the checkpoint RDD (the
+        analyzed plan's ``LogicalRDD``) by id."""
+        df = df.localCheckpoint(eager=True)
+        rid = df._jdf.queryExecution().analyzed().rdd().id()
+        jsc = df.sparkSession.sparkContext._jsc
+
+        def unpersist() -> None:
+            rdd = jsc.getPersistentRDDs().get(rid)
+            if rdd is not None:
+                rdd.unpersist()
+        self._hold(unpersist)
+        return df
+
+    def spawn(self, fn: Callable[[], None]) -> threading.Thread:
+        """Run ``fn`` on a daemon thread carrying this context (scope
+        and Spark local properties); release joins it first."""
+        ctx = contextvars.copy_context()
+        t = threading.Thread(
+            target=inheritable_thread_target(lambda: ctx.run(fn)),
+            daemon=True)
+        with self._lock:
+            self._threads.append(t)
+        t.start()
+        return t
+
+    def held(self) -> int:
+        """Frames (caches and checkpoints) held now."""
+        return len(self._held)
+
+    def release(self) -> int:
+        """Join the spawned threads, then unpersist every held frame;
+        returns how many."""
+        with self._lock:
+            threads, self._threads = self._threads, []
+        for t in threads:
+            t.join()
+        with self._lock:
+            held, self._held = self._held, []
+        for unpersist in reversed(held):
+            unpersist()
+        return len(held)
+
+    def __enter__(self) -> "Scope":
+        self._token = _CURRENT.set(self)
+        _OPEN.add(self)
+        return self
+
+    def __exit__(self, *exc) -> None:
+        _CURRENT.reset(self._token)
+        _OPEN.discard(self)
+        self.release()
+
+
+_ROOT = Scope()
+_CURRENT = contextvars.ContextVar("maha_spark_scope", default=_ROOT)
+#: the root and every open scope, for ``held_frames`` telemetry
+_OPEN: set[Scope] = {_ROOT}
+
+
+def current_scope() -> Scope:
+    """The innermost open scope of this context, else the root scope."""
+    return _CURRENT.get()
+
+
+def held_frames() -> int:
+    """Frames held by the root and every open scope."""
+    return sum(s.held() for s in list(_OPEN))
+
+
+def in_scope(fn):
+    """Run each call of ``fn`` in a fresh :class:`Scope` — for work that
+    has consumed what it allocates by the time it returns; never for a
+    function returning a DataFrame over the scope's blocks."""
+    @functools.wraps(fn)
+    def wrap(*args, **kwargs):
+        with Scope():
+            return fn(*args, **kwargs)
+    return wrap
 
 
 def scoped_cache(df: DataFrame) -> DataFrame:
-    """``df.cache()`` with lifecycle tracking: the cached frame is
-    registered so ``release_scoped_caches`` can drop its storage blocks
-    once the op's plan has been consumed.
-
-    The pipeline ops cache intermediate signature streams consumed by
-    multiple branches of one returned plan; the plan is lazy, so the op
-    itself cannot unpersist (the blocks must outlive the caller's
-    action). In a one-shot contract job the session exit reclaims them;
-    a LONG-LIVED serving session would accumulate MEMORY_AND_DISK blocks
-    instead — call ``release_scoped_caches()`` after consuming each
-    op's result (bench.py does, per entry)."""
-    df = df.cache()
-    _SCOPED_CACHES.append(df)
-    return df
+    """Cache ``df`` in the current scope."""
+    return current_scope().cache(df)
 
 
 def release_scoped_caches() -> int:
-    """Unpersist every scoped cache (blocking); returns how many."""
-    n = len(_SCOPED_CACHES)
-    while _SCOPED_CACHES:
-        _SCOPED_CACHES.pop().unpersist(True)
-    return n
+    """Release the current scope; returns how many frames it held."""
+    return current_scope().release()
+
+
+def warm(df: DataFrame) -> threading.Thread:
+    """Materialize ``df`` (a scoped cache) on a thread of the current
+    scope while the caller's driver runs other jobs; a failed warm only
+    means a later cache miss recomputes."""
+    def run() -> None:
+        try:
+            df.write.format("noop").mode("overwrite").save()
+        except Exception:  # noqa: BLE001 — cache miss just recomputes
+            pass
+    return current_scope().spawn(run)
+
+
+def drain(spark: SparkSession, schema, src_dir: str, ckpt_dir: str,
+          fold: Callable[[DataFrame, int], None],
+          max_files_per_trigger: int = 1) -> None:
+    """Drain a parquet file feed to completion (``availableNow``),
+    running ``fold(batch, batch_id)`` for each micro-batch in its own
+    :class:`Scope`, so an arbitrarily long drain holds a bounded block
+    set. The checkpoint only tracks source progress."""
+    def run(batch: DataFrame, batch_id: int) -> None:
+        with Scope():
+            fold(batch, batch_id)
+
+    (spark.readStream.schema(schema).format("parquet")
+     .option("maxFilesPerTrigger", max_files_per_trigger)
+     .load(src_dir)
+     .writeStream
+     .foreachBatch(run)
+     .option("checkpointLocation", ckpt_dir)
+     .trigger(availableNow=True)
+     .start()
+     .awaitTermination())
+
+
+def fold_new_docs(batch: DataFrame, batch_id: int,
+                  seen: Optional[DataFrame], out_dir: str,
+                  emit: Callable[[DataFrame], DataFrame],
+                  append: Callable[[DataFrame], None]) -> None:
+    """One replay-safe index fold of a document micro-batch: anti-join
+    the ``seen`` (already indexed) doc ids; checkpoint the fresh rows
+    BEFORE any write, since ``append`` mutates the table they were
+    anti-joined against; a replay whose docs are all indexed is a no-op
+    (its earlier output stays); else OVERWRITE ``emit``'s rows to
+    ``out_dir/batch_id=N`` BEFORE the ``append`` — a crash between the
+    two replays the batch with its docs still unindexed, and the
+    recomputed rows overwrite the same directory identically."""
+    fresh = batch if seen is None else batch.join(seen, "doc_id",
+                                                  "left_anti")
+    fresh = current_scope().checkpoint(fresh)
+    if not fresh.limit(1).count():
+        return
+    (emit(fresh).withColumn("batch_id", F.lit(batch_id))
+     .write.mode("overwrite")
+     .parquet(os.path.join(out_dir, f"batch_id={batch_id}")))
+    append(fresh)
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the JVM gateway."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
 def fs_exists(spark: SparkSession, path: str) -> bool:
@@ -55,9 +219,7 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
     empty one). Falls back to the local check if the JVM gateway is
     unavailable (plain-Python unit contexts)."""
     try:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, jpath = _hadoop_fs(spark, path)
         return bool(fs.exists(jpath))
     except Exception:
         return os.path.exists(path)
@@ -69,9 +231,7 @@ def fs_touch(spark: SparkSession, path: str) -> None:
     paths use to detect a crash between two non-atomic writes. Local
     fallback mirrors ``fs_exists``."""
     try:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, jpath = _hadoop_fs(spark, path)
         fs.create(jpath, True).close()
     except Exception:
         os.makedirs(os.path.dirname(path), exist_ok=True)
@@ -86,9 +246,7 @@ def fs_list_files(spark: SparkSession, path: str,
     FileSystem API so ``s3a://``-style index roots work; local
     ``os.listdir`` fallback when the gateway is unavailable."""
     try:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, jpath = _hadoop_fs(spark, path)
         out = []
         for st in fs.listStatus(jpath):
             name = st.getPath().getName()
@@ -109,10 +267,9 @@ def fs_rename(spark: SparkSession, src: str, dst: str) -> bool:
     temp-then-rename swap step for maintenance rewrites, portable to
     object-store roots; ``os.rename`` fallback."""
     try:
-        jvm = spark._jvm
-        jsrc = jvm.org.apache.hadoop.fs.Path(src)
-        fs = jsrc.getFileSystem(spark._jsc.hadoopConfiguration())
-        return bool(fs.rename(jsrc, jvm.org.apache.hadoop.fs.Path(dst)))
+        fs, jsrc = _hadoop_fs(spark, src)
+        jdst = spark._jvm.org.apache.hadoop.fs.Path(dst)
+        return bool(fs.rename(jsrc, jdst))
     except Exception:
         try:
             os.rename(src, dst)
@@ -125,9 +282,7 @@ def fs_rmtree(spark: SparkSession, path: str) -> None:
     """Recursively remove a directory tree (no-op when absent) —
     ``shutil.rmtree`` portable to object-store roots."""
     try:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, jpath = _hadoop_fs(spark, path)
         fs.delete(jpath, True)
     except Exception:
         import shutil
@@ -138,64 +293,13 @@ def fs_delete(spark: SparkSession, path: str) -> None:
     """Remove a marker file (no-op when absent) — Hadoop FS with the
     same local fallback as ``fs_exists``/``fs_touch``."""
     try:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, jpath = _hadoop_fs(spark, path)
         fs.delete(jpath, False)
     except Exception:
         try:
             os.remove(path)
         except OSError:
             pass
-
-
-def persistent_rdd_ids(spark: SparkSession) -> set:
-    """IDs of every currently persisted RDD (caches + local
-    checkpoints) — snapshot before creating scoped state, diff after to
-    release exactly what a block of work allocated."""
-    m = spark.sparkContext._jsc.getPersistentRDDs()
-    return set(m.keySet().toArray())
-
-
-def release_new_persistent_rdds(spark: SparkSession, before: set) -> int:
-    """Unpersist every RDD persisted since the ``before`` snapshot —
-    the cleanup for ``localCheckpoint`` blocks, which sit below the SQL
-    CacheManager and are untouched by ``DataFrame.unpersist``. A
-    long-running ingest loop (streaming ``foreachBatch``) calls this per
-    micro-batch so checkpoint blocks never accumulate."""
-    m = spark.sparkContext._jsc.getPersistentRDDs()
-    n = 0
-    for rid in list(m.keySet().toArray()):
-        if rid not in before:
-            m.get(rid).unpersist()
-            n += 1
-    return n
-
-
-def releases_checkpoints(fn):
-    """Release every RDD the wrapped rewrite persisted before it
-    returns: the maintenance primitives ``localCheckpoint`` their
-    survivor rows to decouple read-from-dir and overwrite-to-same-dir,
-    and once the write commits those blocks are dead weight — in a
-    long-lived serving session each maintenance cycle would otherwise
-    grow ``persistedRdds`` forever (found by the r12 soak probe's
-    residency counters). Only for functions that fully materialize
-    their result to storage and return plain values; never wrap
-    anything that returns a DataFrame depending on the blocks."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrap(*args, **kwargs):
-        spark = args[0] if args and isinstance(args[0], SparkSession) \
-            else None
-        if spark is None:
-            return fn(*args, **kwargs)
-        before = persistent_rdd_ids(spark)
-        try:
-            return fn(*args, **kwargs)
-        finally:
-            release_new_persistent_rdds(spark, before)
-    return wrap
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -292,7 +396,3 @@ def dot_fold_sql(a: str, b: str, cast: str = "DOUBLE") -> str:
     return (f"aggregate(zip_with({a}, {b}, (p, q) -> "
             f"CAST(p AS {cast}) * CAST(q AS {cast})), "
             f"CAST(0 AS {cast}), (acc, t) -> acc + t)")
-
-
-def env_flag(name: str, default: str = "1") -> bool:
-    return os.environ.get(name, default) == "1"

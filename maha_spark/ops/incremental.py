@@ -137,21 +137,12 @@ def update_dedup_index(spark: SparkSession, index_dir: str,
 
 
 def dedup_incremental(spark: SparkSession, index_dir: str,
-                      new_docs: DataFrame,
-                      _batch_frames: tuple[DataFrame, DataFrame] | None
-                      = None) -> DataFrame:
+                      new_docs: DataFrame) -> DataFrame:
     """Near-dup pairs (a_id, b_id, jaccard >= 0.8) touching the new
     batch: new-vs-corpus plus new-vs-new, exactly the subset of the
     batch kernel's answer over (corpus + batch) in which at least one
     side is new (corpus-internal pairs were already found when the
-    corpus was indexed). Pairs are canonicalized a_id < b_id.
-
-    ``_batch_frames`` (private) lets a caller that already built —
-    and possibly pre-warmed — the batch's ``(shingle, band)`` frames
-    pass them in instead of rebuilding; they MUST be exactly
-    ``lsh_shingle_frame(new_docs)`` / ``lsh_band_frame`` of it (see
-    ``dedup_incremental_op``'s overlap of the batch warm with the
-    index build)."""
+    corpus was indexed). Pairs are canonicalized a_id < b_id."""
     from pyspark.sql import functions as F
 
     from .common import scoped_cache
@@ -162,12 +153,11 @@ def dedup_incremental(spark: SparkSession, index_dir: str,
     # the new-vs-new self-join plus the new-vs-corpus probe), and both
     # are md5-heavy — cache them so the chains evaluate once per batch.
     # Batch-sized by construction (the crawl drop), so the blocks are
-    # bounded; lifecycle-tracked via scoped_cache (r12, guide §1.2).
-    if _batch_frames is not None:
-        base_new, bands_new = _batch_frames
-    else:
-        base_new = scoped_cache(lsh_shingle_frame(new_docs))
-        bands_new = scoped_cache(lsh_band_frame(base_new))
+    # bounded, and released with the current scope. A caller that
+    # warmed the same two frames beforehand (dedup_incremental_op)
+    # gets its blocks back: the CacheManager matches the rebuilt plans.
+    base_new = scoped_cache(lsh_shingle_frame(new_docs))
+    bands_new = scoped_cache(lsh_band_frame(base_new))
     idx_bands = spark.read.parquet(os.path.join(index_dir, BANDS_TABLE))
     idx_sh = spark.read.parquet(os.path.join(index_dir, SHINGLES_TABLE))
 
@@ -312,38 +302,20 @@ def dedup_incremental_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     # index writes (guide §2.6 "overlap independent jobs"): the two
     # job sets share no inputs beyond the source scan, and the index
     # build's write tails leave cores idle that the batch warm
-    # back-fills. The warmed frames are handed to dedup_incremental
-    # via its private _batch_frames contract (identical construction,
-    # so results are bit-identical to the serial path).
-    import threading
-
-    from .common import scoped_cache
+    # back-fills. dedup_incremental rebuilds the same two plans and
+    # reads the warmed blocks (identical construction, so results are
+    # bit-identical to the serial path).
+    from .common import scoped_cache, warm
 
     batch = docs.filter(f"doc_id % {BATCH_MOD} = 0")
-    base_new = scoped_cache(lsh_shingle_frame(batch))
-    bands_new = scoped_cache(lsh_band_frame(base_new))
-
-    def _warm() -> None:
-        try:
-            # materializes bands_new AND (through it) base_new's blocks
-            bands_new.write.format("noop").mode("overwrite").save()
-        except Exception:  # noqa: BLE001 — cache miss just recomputes
-            pass
-
-    try:
-        from pyspark import inheritable_thread_target
-        warm = threading.Thread(
-            target=inheritable_thread_target(_warm), daemon=True)
-    except ImportError:  # pragma: no cover - very old pyspark
-        warm = threading.Thread(target=_warm, daemon=True)
-    warm.start()
+    w = warm(scoped_cache(lsh_band_frame(
+        scoped_cache(lsh_shingle_frame(batch)))))
     try:
         materialize_dedup_index(
             spark, docs.filter(f"doc_id % {BATCH_MOD} != 0"), idx)
     finally:
-        warm.join()
-    return (dedup_incremental(spark, idx, batch,
-                              _batch_frames=(base_new, bands_new))
+        w.join()
+    return (dedup_incremental(spark, idx, batch)
             .orderBy("a_id", "b_id"))
 
 
@@ -370,21 +342,13 @@ def streaming_dedup_incremental(spark: SparkSession, docs_dir: str,
     the emitted pair set is EXACTLY what repeated batch calls would
     produce (test-pinned).
 
-    Idempotence under replays (foreachBatch re-invokes a batch after a
-    failure; the parquet sink is not transactional):
-
-    * pairs land in ``pairs_dir/batch_id=N`` via per-batch OVERWRITE,
-      and pairs are written BEFORE the index append — a crash between
-      the two replays the batch with its docs still absent from the
-      index, so the recomputed pairs overwrite the same directory
-      (identical rows) and the append then lands once;
-    * a batch whose doc_ids are ALL already indexed (a replay of a fully
-      committed batch — e.g. a sink-committed drain re-run from a fresh
-      checkpoint) is a pure no-op: its previously-emitted pairs are left
-      in place, nothing is appended. A HALF-appended batch (bands
-      landed, crash before shingles) is the one non-idempotent window;
-      restate those ids via the overwrite pattern, as the append
-      contract documents.
+    Replays (foreachBatch re-invokes a batch after a failure; the
+    parquet sink is not transactional) are safe by the fold order of
+    ``ops/common.fold_new_docs``: pairs overwrite ``pairs_dir/batch_id=N``
+    before the index append, and a fully indexed replay is a no-op. A
+    HALF-appended batch (bands landed, crash before shingles) is the
+    one non-idempotent window; restate those ids via the overwrite
+    pattern, as the append contract documents.
 
     ``max_files_per_trigger=1`` mirrors daily-drop ingest (one file ~ one
     crawl partition); raise it when the feed is many small files. State
@@ -392,48 +356,23 @@ def streaming_dedup_incremental(spark: SparkSession, docs_dir: str,
     only tracks source progress, so state size is index-bound, not
     Spark-state-bound, and the index stays queryable/bucketable by every
     batch consumer."""
-    from pyspark.sql import functions as F
-
+    from .common import drain, fold_new_docs
     from .dedup import DOC_SCHEMA
 
     def _fold(batch: DataFrame, batch_id: int) -> None:
-        from .common import persistent_rdd_ids, release_new_persistent_rdds
         s = batch.sparkSession
-        before = persistent_rdd_ids(s)
-        try:
-            bands_path = os.path.join(index_dir, BANDS_TABLE)
-            if os.path.exists(bands_path):
-                check_index_format(index_dir)  # fail fast on v1 index
-                seen = (s.read.parquet(bands_path)
-                        .select("doc_id").distinct())
-                fresh = batch.join(seen, "doc_id", "left_anti")
-            else:
-                materialize_dedup_index(s, batch.limit(0), index_dir)
-                fresh = batch
-            # localCheckpoint: `fresh` is consumed three times (pairs
-            # kernel twice through dedup_incremental's branches, then
-            # the index append) and anti-joins against the very table
-            # the append mutates — materialize BEFORE writing, the
-            # compaction rule (plans/scale.py)
-            fresh = fresh.localCheckpoint(eager=True)
-            if not fresh.limit(1).count():
-                return  # fully-committed replay: keep its pairs, no-op
-            pairs = dedup_incremental(s, index_dir, fresh)
-            (pairs.withColumn("batch_id", F.lit(batch_id))
-             .write.mode("overwrite")
-             .parquet(os.path.join(pairs_dir, f"batch_id={batch_id}")))
-            update_dedup_index(s, index_dir, fresh, assume_new=True)
-        finally:
-            # one checkpoint per micro-batch would otherwise accrete
-            # for the stream's whole life (the substring fold's rule)
-            release_new_persistent_rdds(s, before)
+        bands_path = os.path.join(index_dir, BANDS_TABLE)
+        if os.path.exists(bands_path):
+            check_index_format(index_dir)  # fail fast on v1 index
+            seen = s.read.parquet(bands_path).select("doc_id").distinct()
+        else:
+            materialize_dedup_index(s, batch.limit(0), index_dir)
+            seen = None
+        fold_new_docs(
+            batch, batch_id, seen, pairs_dir,
+            emit=lambda fresh: dedup_incremental(s, index_dir, fresh),
+            append=lambda fresh: update_dedup_index(
+                s, index_dir, fresh, assume_new=True))
 
-    q = (spark.readStream.schema(DOC_SCHEMA).format("parquet")
-         .option("maxFilesPerTrigger", max_files_per_trigger)
-         .load(docs_dir)
-         .writeStream
-         .foreachBatch(_fold)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(spark, DOC_SCHEMA, docs_dir, ckpt_dir, _fold,
+          max_files_per_trigger)

@@ -34,49 +34,24 @@ QUALITY_MIN = 0.42
 
 
 def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import threading
-
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from .common import scoped_cache
+    from .common import scoped_cache, warm
     from .contamination import BENCH_MOD, contaminated_doc_ids
     from .dedup import dedup_clusters
     from .text import text_profile
 
     # Overlap the three independent heavy legs (guide §2.6 "overlap
-    # independent jobs"): dedup_clusters runs a BOUNDED driver probe
-    # (its bridge-graph collect) whose wall time used to serialize
-    # before the final action could even start computing the profile
-    # or the contamination id set. Both independent legs are cached
-    # and materialized from driver threads WHILE the probe runs —
-    # Spark's scheduler runs the job sets concurrently (2-3 in flight
-    # per the guide) — so the composed action later reads them from
-    # storage instead of recomputing them after the probe. Each cache
-    # is consumed exactly once; it exists to shift the work into the
-    # probe's shadow, and release_scoped_caches reclaims it per
-    # request/entry as usual.
+    # independent jobs"): the profile and the contamination id set are
+    # cached and warmed on scope threads WHILE dedup_clusters runs its
+    # bounded driver probe (the bridge-graph collect) — Spark runs the
+    # job sets concurrently — so the composed action reads them from
+    # storage instead of computing them after the probe.
     prof = scoped_cache(text_profile(spark, sf_dir))
     cont = scoped_cache(contaminated_doc_ids(spark, sf_dir))
 
-    def _warm(df: DataFrame):
-        def run() -> None:
-            try:
-                df.write.format("noop").mode("overwrite").save()
-            except Exception:  # noqa: BLE001 — cache miss just recomputes
-                pass
-        return run
-
-    try:
-        from pyspark import inheritable_thread_target
-        warms = [threading.Thread(
-            target=inheritable_thread_target(_warm(df)), daemon=True)
-            for df in (prof, cont)]
-    except ImportError:  # pragma: no cover - very old pyspark
-        warms = [threading.Thread(target=_warm(df), daemon=True)
-                 for df in (prof, cont)]
-    for w in warms:
-        w.start()
+    warms = [warm(prof), warm(cont)]
     try:
         clus = dedup_clusters(spark, sf_dir, ordered=False).select(
             "doc_id", "cluster_id", "cluster_size")

@@ -65,11 +65,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from .common import (duck_h60_sql, duck_words_sql, fs_delete, fs_exists,
-                     fs_touch, h60_sql, load_table, persistent_rdd_ids,
-                     releases_checkpoints,
-                     release_new_persistent_rdds, release_scoped_caches,
-                     scoped_cache, words_sql)
+from .common import (current_scope, drain, duck_h60_sql, duck_words_sql,
+                     fold_new_docs, fs_delete, fs_exists, fs_touch,
+                     h60_sql, in_scope, load_table, scoped_cache,
+                     words_sql)
 
 #: duplicated-window length in words — the minimum verbatim run the
 #: detector reports (the paper uses 50 BPE tokens at web scale; the
@@ -143,8 +142,8 @@ def exact_substring_spans_frame(docs: DataFrame,
     # the window stream feeds the occurrence count AND the semi-join
     # probe — uncached, the md5-per-window hash chain (the op's dominant
     # per-row cost) evaluated twice over the corpus (r12, guide §1.2;
-    # same recipe as the minhash base frame). Lifecycle-released per
-    # entry via release_scoped_caches; MEMORY_AND_DISK spills at scale.
+    # same recipe as the minhash base frame). Released with the
+    # current scope; MEMORY_AND_DISK spills at scale.
     wh = scoped_cache(_window_hashes(docs, length))
     dup_h = (wh.groupBy("h").agg(F.count(F.lit(1)).alias("occ"))
              .filter("occ >= 2").select("h"))
@@ -386,7 +385,7 @@ def _seen_docs(spark: SparkSession, index_dir: str) -> DataFrame:
             .select("doc_id").distinct())
 
 
-@releases_checkpoints
+@in_scope
 def reconcile_exsub_sidecar(spark: SparkSession, index_dir: str) -> None:
     """Rebuild the doc_id sidecar from the windows table (one
     single-column index scan). Run at ingest-stream (re)start: a crash
@@ -396,8 +395,9 @@ def reconcile_exsub_sidecar(spark: SparkSession, index_dir: str) -> None:
     makes the streaming fold's replay idempotent (a replayed batch
     whose windows already landed is filtered out by the reconciled
     sidecar instead of double-appending)."""
-    ids = (spark.read.parquet(_windows_path(index_dir))
-           .select("doc_id").distinct().localCheckpoint(eager=True))
+    ids = current_scope().checkpoint(
+        spark.read.parquet(_windows_path(index_dir))
+        .select("doc_id").distinct())
     ids.write.mode("overwrite").parquet(_docs_path(index_dir))
     # the invariant now holds — clear any crash marker a torn
     # update_exsub_index left behind
@@ -524,21 +524,12 @@ def streaming_exsub_incremental(spark: SparkSession, docs_dir: str,
     duplicated spans (vs corpus-so-far + the batch itself, via
     ``exsub_incremental``) and folding the batch's window rows into the
     persisted index — the streaming twin of the batch incremental flow,
-    mirroring ``ops/incremental.py::streaming_dedup_incremental``'s
-    idempotence design:
-
-    * spans land in ``spans_dir/batch_id=N`` via per-batch OVERWRITE,
-      written BEFORE the index append, so a crash between the two
-      replays the batch with its windows still absent from the index
-      and the recomputed spans overwrite identically;
-    * a replay whose doc_ids are all already indexed is a pure no-op
-      (previously-emitted spans stay, nothing re-appends) — the
-      sidecar is reconciled against the windows table at stream start
-      so a crash between the windows and sidecar appends cannot leak a
-      double-append through a stale sidecar;
-    * every cache/localCheckpoint a fold allocates is released at the
-      end of that fold (persistent-RDD snapshot diff + scoped-cache
-      drain), so an arbitrarily long drain holds a bounded block set.
+    with the replay-safe fold order of ``ops/common.fold_new_docs``
+    (spans overwrite ``spans_dir/batch_id=N`` before the index append;
+    a fully indexed replay is a no-op). The sidecar is reconciled
+    against the windows table at stream start, so a crash between the
+    windows and sidecar appends cannot leak a double-append through a
+    stale sidecar.
 
     State lives in the INDEX (linear in corpus tokens), not the
     streaming state store — the checkpoint only tracks source progress.
@@ -550,43 +541,24 @@ def streaming_exsub_incremental(spark: SparkSession, docs_dir: str,
 
     def _fold(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
-        before = persistent_rdd_ids(s)
-        try:
-            if fs_exists(s, _windows_path(index_dir)):
-                fresh = batch.join(_seen_docs(s, index_dir),
-                                   "doc_id", "left_anti")
-            else:
-                materialize_exsub_index(s, batch.limit(0), index_dir,
-                                        length=length)
-                fresh = batch
-            # consumed twice (span probe + index append) and anti-joined
-            # against the table the append mutates — materialize first
-            # (the compaction rule, plans/scale.py)
-            fresh = fresh.localCheckpoint(eager=True)
-            if not fresh.limit(1).count():
-                return
-            spans = exsub_incremental(s, index_dir, fresh, length=length)
-            (spans.withColumn("batch_id", F.lit(batch_id))
-             .write.mode("overwrite")
-             .parquet(os.path.join(spans_dir, f"batch_id={batch_id}")))
-            update_exsub_index(s, index_dir, fresh, length=length,
-                               assume_new=True)
-        finally:
-            release_scoped_caches()
-            release_new_persistent_rdds(s, before)
+        if fs_exists(s, _windows_path(index_dir)):
+            seen = _seen_docs(s, index_dir)
+        else:
+            materialize_exsub_index(s, batch.limit(0), index_dir,
+                                    length=length)
+            seen = None
+        fold_new_docs(
+            batch, batch_id, seen, spans_dir,
+            emit=lambda fresh: exsub_incremental(s, index_dir, fresh,
+                                                 length=length),
+            append=lambda fresh: update_exsub_index(
+                s, index_dir, fresh, length=length, assume_new=True))
 
-    q = (spark.readStream.schema(DOC_SCHEMA).format("parquet")
-         .option("maxFilesPerTrigger", max_files_per_trigger)
-         .load(docs_dir)
-         .writeStream
-         .foreachBatch(_fold)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(spark, DOC_SCHEMA, docs_dir, ckpt_dir, _fold,
+          max_files_per_trigger)
 
 
-@releases_checkpoints
+@in_scope
 def compact_exsub_index(spark: SparkSession, index_dir: str,
                         target_file_mb: int = 256,
                         min_files: int = 8) -> int:
@@ -601,7 +573,7 @@ def compact_exsub_index(spark: SparkSession, index_dir: str,
     is collapsed to one distinct file whenever the windows compact.
 
     The rewrite reads and replaces the same directory, so rows are
-    MATERIALIZED first (``localCheckpoint`` — the standard decoupling,
+    MATERIALIZED first (a scope checkpoint — the standard decoupling,
     plans/scale.py) and the file-count target derives from on-disk
     bytes, like the day-partition compactor."""
     import math
@@ -618,7 +590,7 @@ def compact_exsub_index(spark: SparkSession, index_dir: str,
     want = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
     if want >= len(files):
         return 0
-    df = spark.read.parquet(path).localCheckpoint(eager=True)
+    df = current_scope().checkpoint(spark.read.parquet(path))
     df.repartition(want).write.mode("overwrite").parquet(path)
     reconcile_exsub_sidecar(spark, index_dir)
     # engine-maintained rewrite -> stamp (plans/versioning contract)
@@ -627,7 +599,7 @@ def compact_exsub_index(spark: SparkSession, index_dir: str,
     return want
 
 
-@releases_checkpoints
+@in_scope
 def remove_docs_from_exsub_index(spark: SparkSession, index_dir: str,
                                  doc_ids: DataFrame) -> None:
     """Erase documents from the window-hash index (the GDPR-erasure /
@@ -644,12 +616,13 @@ def remove_docs_from_exsub_index(spark: SparkSession, index_dir: str,
     is a legitimate fresh append (the append-contract probe will pass).
     """
     tomb = F.broadcast(doc_ids.select("doc_id").distinct())
-    survivors = (spark.read.parquet(_windows_path(index_dir))
-                 .join(tomb, "doc_id", "left_anti")
-                 .localCheckpoint(eager=True))
+    scope = current_scope()
+    survivors = scope.checkpoint(
+        spark.read.parquet(_windows_path(index_dir))
+        .join(tomb, "doc_id", "left_anti"))
     survivors.write.mode("overwrite").parquet(_windows_path(index_dir))
     if fs_exists(spark, _docs_path(index_dir)):
-        kept = (spark.read.parquet(_docs_path(index_dir))
-                .join(tomb, "doc_id", "left_anti")
-                .localCheckpoint(eager=True))
+        kept = scope.checkpoint(
+            spark.read.parquet(_docs_path(index_dir))
+            .join(tomb, "doc_id", "left_anti"))
         kept.write.mode("overwrite").parquet(_docs_path(index_dir))

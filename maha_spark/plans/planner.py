@@ -60,6 +60,7 @@ from ..core.filters import Filter, ResolvedField
 from ..core.rollup import AverageRollup, NoopRollup
 from ..model.request_model import (
     CONSTANT, DIM_ATTR, FACT_DIM, METRIC, DimJoinChain, RequestModel,
+    resolve_output_column,
 )
 from ..registry.cube import FactTable, PubCol, PublicDimension
 from .binding import TableBinding
@@ -936,8 +937,8 @@ class Planner:
             # when the fact carries a skipping sidecar on the driving fk,
             # the page's key VALUES (bounded by the row caps) probe it so
             # the fact scan opens only candidate files. The page is
-            # cached first (engine's scoped-cache drain reclaims it) so
-            # the driver collect, the semi-join broadcast, and the final
+            # cached first (released with the request's scope) so the
+            # driver collect, the semi-join broadcast, and the final
             # dim join all reuse ONE ordered-pagination computation.
             if self._fact_has_sidecar(model, driving.fact_fk_col):
                 from ..ops.common import scoped_cache
@@ -1014,10 +1015,10 @@ class Planner:
             # guard's count materializes it lazily (one part at a time
             # — a rejected request never evaluates past the part that
             # blows the cap) and the cross-join reuses the cached rows;
-            # the engine drains scoped caches in execute()'s finally,
+            # the request's scope releases them when execute() returns,
             # so a long-lived serving session accumulates nothing, and
-            # a lost-executor recomputes from lineage (a localCheckpoint
-            # would be unrecoverable)
+            # a lost-executor recomputes from lineage (a local
+            # checkpoint would be unrecoverable)
             from ..ops.common import scoped_cache
             from ..request.request import ValidationError
             parts = [scoped_cache(p) for p in parts]
@@ -1095,12 +1096,12 @@ class Planner:
         if not model.outer_filters:
             return df
 
-        # outer filters name OUTPUT columns; the frame still carries the
-        # projection aliases until build()'s final rename
-        alias_of = {p.output_name: p.alias for p in model.projections}
-
+        # outer filters name output columns (SQL's ORDER BY rule); the
+        # frame still carries the projection aliases until build()'s
+        # final rename
         def resolve(name: str) -> ResolvedField:
-            alias = _q(alias_of.get(name, name))
+            alias = _q(resolve_output_column(name, model.projections)
+                       or name)
             return ResolvedField(col=F.col(alias), sql=alias)
 
         for f in model.outer_filters:
@@ -1111,7 +1112,7 @@ class Planner:
         order: list[Column] = []
         sorted_fields: set[str] = set()
         for s in model.request.sort_by:
-            name = s.field
+            name = resolve_output_column(s.field, model.projections)
             if name in df.columns:
                 c = F.col(_q(name))
                 order.append(c.desc() if s.order == "DESC" else c.asc())

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..ops.common import releases_checkpoints
+from ..ops.common import current_scope, in_scope
 
 
 def salted_join(fact: DataFrame, dim: DataFrame, key: str,
@@ -140,7 +140,7 @@ def overwrite_day_partitions(df: DataFrame, dst_dir: str,
     bump_table_version(dst_dir)
 
 
-@releases_checkpoints
+@in_scope
 def compact_day_partitions(spark: SparkSession, dst_dir: str,
                            partition_col: str = "dt",
                            target_file_mb: int = 256,
@@ -187,15 +187,15 @@ def compact_day_partitions(spark: SparkSession, dst_dir: str,
     if not days:
         return []
     # one job for ALL days needing compaction: read them (partition-
-    # pruned) and MATERIALIZE via localCheckpoint BEFORE the overwrite —
+    # pruned) and MATERIALIZE via a scope checkpoint BEFORE the overwrite —
     # the write deletes the very files this read consumes, and without
     # the checkpoint that is only safe because overwrite_day_partitions
     # happens to shuffle (repartition) and dynamic overwrite defers
     # deletion to commit; the checkpoint makes the decoupling explicit
     # instead of an accident of the downstream plan.
-    df = (spark.read.parquet(dst_dir)
-          .filter(F.col(partition_col).isin(days))
-          .localCheckpoint(eager=True))
+    df = current_scope().checkpoint(
+        spark.read.parquet(dst_dir)
+        .filter(F.col(partition_col).isin(days)))
     # honor target_file_mb per day: the per-task writer rolls to a new
     # file every max_records_per_file rows, so a day of B bytes lands in
     # ~ceil(B / target) files instead of collapsing into one oversized
@@ -290,7 +290,7 @@ def zorder_expr(df: DataFrame, cols: list[str], zbits: int = 6,
     return z
 
 
-@releases_checkpoints
+@in_scope
 def zorder_day_partitions(spark: SparkSession, dst_dir: str,
                           cols: list[str], partition_col: str = "dt",
                           target_file_mb: float = 256, zbits: int = 6,
@@ -340,8 +340,8 @@ def zorder_day_partitions(spark: SparkSession, dst_dir: str,
             f"z-order columns {unknown} not in {sorted(src.columns)}")
     # materialize BEFORE the overwrite: the write deletes the files this
     # read consumes (same decoupling as compact_day_partitions)
-    df = (src.filter(F.col(partition_col).isin(sel))
-          .localCheckpoint(eager=True))
+    df = current_scope().checkpoint(
+        src.filter(F.col(partition_col).isin(sel)))
     n_rows = df.count()
     cap = None
     if n_rows > 0 and sel_bytes > 0:
@@ -369,7 +369,7 @@ def _refuse_null_keys(df: DataFrame, join_keys: list[str],
             f"replace/delete anything")
 
 
-@releases_checkpoints
+@in_scope
 def upsert_day_partitions(spark: SparkSession, delta: DataFrame,
                           dst_dir: str, keys: list[str],
                           partition_col: str = "dt",
@@ -407,7 +407,8 @@ def upsert_day_partitions(spark: SparkSession, delta: DataFrame,
     join_keys = [partition_col] + [k for k in keys if k != partition_col]
     # pay the delta's lineage ONCE: everything below (validation aggs,
     # days collect, anti-join, union, write) reads the checkpointed rows
-    delta = delta.localCheckpoint(eager=True)
+    scope = current_scope()
+    delta = scope.checkpoint(delta)
     n = delta.count()
     if n == 0:
         return []
@@ -432,12 +433,12 @@ def upsert_day_partitions(spark: SparkSession, delta: DataFrame,
         out = delta
     # materialize BEFORE the overwrite (the write deletes the files the
     # survivor read consumes — same decoupling as compaction/zorder)
-    out = out.localCheckpoint(eager=True)
+    out = scope.checkpoint(out)
     overwrite_day_partitions(out, dst_dir, partition_col=partition_col,
                              max_records_per_file=max_records_per_file)
     return days
 
-@releases_checkpoints
+@in_scope
 def delete_from_day_partitions(spark: SparkSession, tombstones: DataFrame,
                                dst_dir: str, keys: list[str],
                                partition_col: str = "dt",
@@ -464,7 +465,8 @@ def delete_from_day_partitions(spark: SparkSession, tombstones: DataFrame,
     import shutil
 
     join_keys = [partition_col] + [k for k in keys if k != partition_col]
-    tombstones = tombstones.select(*join_keys).localCheckpoint(eager=True)
+    scope = current_scope()
+    tombstones = scope.checkpoint(tombstones.select(*join_keys))
     if not os.path.isdir(dst_dir) or tombstones.count() == 0:
         return []
     _refuse_null_keys(tombstones, join_keys, "tombstones")
@@ -472,9 +474,9 @@ def delete_from_day_partitions(spark: SparkSession, tombstones: DataFrame,
                   tombstones.select(partition_col).distinct().collect())
     existing = (spark.read.parquet(dst_dir)
                 .filter(F.col(partition_col).isin(days)))
-    survivors = (existing.join(
+    survivors = scope.checkpoint(existing.join(
         F.broadcast(tombstones.select(*join_keys).distinct()),
-        join_keys, "left_anti").localCheckpoint(eager=True))
+        join_keys, "left_anti"))
     # split surviving days (rewrite) from emptied days (remove the dir)
     alive = {str(r[0]) for r in
              survivors.select(partition_col).distinct().collect()}

@@ -28,6 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..core.freqitems import FREQ_K, freq_items_partial, merge_freq_partials
+from ..ops.common import drain
 from .hourly import EVENT_SCHEMA
 
 
@@ -46,15 +47,8 @@ def streaming_freq_partials(spark: SparkSession, events_dir: str,
         (part.write.mode("overwrite")
          .parquet(os.path.join(partials_dir, f"batch_id={batch_id}")))
 
-    q = (spark.readStream.schema(EVENT_SCHEMA).format("parquet")
-         .option("maxFilesPerTrigger", max_files_per_trigger)
-         .load(events_dir)
-         .writeStream
-         .foreachBatch(_fold)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(spark, EVENT_SCHEMA, events_dir, ckpt_dir, _fold,
+          max_files_per_trigger)
 
 
 def compact_freq_partials(spark: SparkSession, partials_dir: str,

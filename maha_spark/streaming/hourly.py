@@ -82,24 +82,6 @@ def hourly_stream(spark: SparkSession, events_dir: str,
             .select(*outs))
 
 
-def run_available_now(spark: SparkSession, sf_dir: str,
-                      table_name: str = "stream_hourly") -> DataFrame:
-    """DEBUG-ONLY harness: drain the backlog into an in-memory sink with
-    complete mode. Driver-side state — never the scale path (that is
-    ``drain_append``, a parquet sink in append mode)."""
-    agg = hourly_stream(spark, sf_dir, glob="events.parquet")
-    with tempfile.TemporaryDirectory(prefix="maha-ckpt-") as ckpt:
-        q = (agg.writeStream
-             .format("memory")
-             .queryName(table_name)
-             .outputMode("complete")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-    return spark.table(table_name)
-
-
 class bounded_shuffle:
     """Temporarily bound ``spark.sql.shuffle.partitions`` for a streaming
     drain. One state-store instance (plus, for stateful Pandas ops, one
@@ -190,8 +172,9 @@ def unload_state_stores(spark: SparkSession) -> None:
     drags later queries (drain wall time degraded 3.4s -> 26s over a
     12-query session in the round-11 probe; with per-drain unloads it
     holds ~2s flat). The streaming-twin pytest suites pin bit-identity
-    across drains, so the unload is pure lifecycle hygiene — the same
-    role ``release_scoped_caches`` plays for the batch ops. Do not
+    across drains, so the unload is pure lifecycle hygiene — for state
+    stores, what a released ``ops/common.Scope`` is for storage
+    blocks. Do not
     call it while another streaming query is mid-batch (its providers
     would reload from the checkpoint on the next batch — correct but
     paying a re-read)."""

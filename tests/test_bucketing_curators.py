@@ -120,36 +120,61 @@ def test_timeshift(contract_engine, duck):
         pytest.approx(prev, rel=1e-12)
 
 
-def test_dry_run_shadow_execution(spark):
-    """A dry_run revision selected by bucketing is built AND executed
-    out-of-band (result discarded, status recorded) — the serving result
-    comes from the primary revision only."""
+def _dry_run_engine(spark, sf_dir):
+    """Engine whose bucketing shadows every tpch request with a
+    revision-2 dry run of the same shape."""
     import dataclasses
 
     from maha_spark.engine import MahaSparkEngine
     from maha_spark.examples.contract import build_contract_registry
     from maha_spark.plans.binding import ParquetBinding
     reg = build_contract_registry()
-    # register a revision-2 shadow of the tpch cube (same shape)
     base = reg.fact("tpch")
     reg.register_fact(dataclasses.replace(base, revision=2), default=False)
     sel = BucketSelector({
         "tpch": CubeBucketConfig("tpch", internal={0: 100},
                                  dry_run={2: 100}),
     })
-    eng = MahaSparkEngine(spark, reg,
-                          ParquetBinding(spark, "/root/testdata/sf0.001"),
-                          bucket_selector=sel)
-    out = eng.execute({"cube": "tpch",
-                       "selectFields": [{"field": "return_flag"},
-                                        {"field": "revenue"}],
-                       "filterExpressions": [DAY_ALL]}, user_id="u1")
+    return MahaSparkEngine(spark, reg, ParquetBinding(spark, sf_dir),
+                           bucket_selector=sel)
+
+
+_FLAG_REVENUE = {"cube": "tpch",
+                 "selectFields": [{"field": "return_flag"},
+                                  {"field": "revenue"}],
+                 "filterExpressions": [DAY_ALL]}
+
+
+def test_dry_run_shadow_execution(spark, sf_dir):
+    """A dry_run revision selected by bucketing is built AND executed
+    out-of-band (result discarded, status recorded) — the serving result
+    comes from the primary revision only."""
+    eng = _dry_run_engine(spark, sf_dir)
+    out = eng.execute(_FLAG_REVENUE, user_id="u1")
     assert len(out["rows"]) == 3  # served from revision 0
     log = eng.wait_for_dry_runs(timeout=120)
     assert len(log) == 1
     assert log[0]["revision"] == 2
     assert log[0]["status"] == "COMPLETED"
     assert log[0]["rows"] == 3
+
+
+def test_dry_run_ledger_is_bounded(spark, sf_dir, monkeypatch):
+    """The ledger keeps the newest DRY_RUN_LOG_MAX records and finished
+    shadow threads are dropped, so neither grows for the engine's
+    whole life."""
+    from maha_spark import engine as engine_mod
+
+    monkeypatch.setattr(engine_mod, "DRY_RUN_LOG_MAX", 2)
+    eng = _dry_run_engine(spark, sf_dir)
+    for _ in range(3):
+        for t in list(eng._dry_run_threads):
+            t.join(120)
+        eng.execute(_FLAG_REVENUE, user_id="u1")
+        assert len(eng._dry_run_threads) == 1
+    log = eng.wait_for_dry_runs(timeout=120)
+    assert len(log) == 2 == eng.status()["dryRunsLogged"]
+    assert [r["status"] for r in log] == ["COMPLETED"] * 2
 
 
 def test_curators_run_concurrently(contract_engine, monkeypatch):

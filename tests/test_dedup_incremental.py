@@ -66,6 +66,35 @@ def test_incremental_matches_batch_kernel_restriction(
     assert not (got & (full - expected))
 
 
+def test_warmed_batch_frames_reused_by_rebuilt_plans(spark, split,
+                                                     tmp_path):
+    """dedup_incremental_op warms the batch's shingle and band caches,
+    then dedup_incremental rebuilds the same two plans: the rebuilt
+    band frame — even over an independently built batch frame — reads
+    the warmed InMemoryRelation, and the pairs equal the unwarmed
+    path's row for row."""
+    from maha_spark.ops.common import Scope, scoped_cache
+    from maha_spark.ops.dedup import lsh_band_frame, lsh_shingle_frame
+
+    corpus, batch = split
+    idx = str(tmp_path / "idx")
+    materialize_dedup_index(spark, corpus, idx)
+    with Scope():
+        plain = (dedup_incremental(spark, idx, batch)
+                 .orderBy("a_id", "b_id").collect())
+    with Scope():
+        (scoped_cache(lsh_band_frame(scoped_cache(lsh_shingle_frame(batch))))
+         .write.format("noop").mode("overwrite").save())
+        again = (spark.read.parquet(os.path.join(SRC, "documents.parquet"))
+                 .filter("doc_id % 5 = 0"))
+        rebuilt = lsh_band_frame(lsh_shingle_frame(again))
+        assert rebuilt._jdf.queryExecution().withCachedData() \
+            .nodeName() == "InMemoryRelation"
+        warmed = (dedup_incremental(spark, idx, batch)
+                  .orderBy("a_id", "b_id").collect())
+    assert warmed == plain and plain
+
+
 def test_update_then_reindex_equivalence(spark, split, index_dir,
                                          tmp_path_factory):
     corpus, new = split

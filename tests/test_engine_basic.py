@@ -424,12 +424,12 @@ def test_additional_column_info_value_injection_rejected(spark):
         reset_ctx_replacements(tok)
 
 
-def test_engine_execute_releases_scoped_caches(spark, engine, sf_dir):
-    """Serving-path cache hygiene: op-scoped storage blocks (the
-    pipeline ops cache intermediate signature streams their lazy plans
-    cannot unpersist) are drained by engine.execute's finally, so a
-    long-lived REST/engine session does not accumulate MEMORY_AND_DISK
-    blocks across requests."""
+def test_engine_execute_releases_scoped_caches(spark, engine, sf_dir,
+                                               monkeypatch):
+    """Serving-path cache hygiene: a request's own planner caches (the
+    dim-only cross-chain parts) are gone when ``execute`` returns, while
+    an op's caches made outside any request live in the root scope,
+    survive the request, and go on ``release_scoped_caches()``."""
     import json
 
     from maha_spark.ops import common as ops_common
@@ -437,10 +437,13 @@ def test_engine_execute_releases_scoped_caches(spark, engine, sf_dir):
 
     req = json.dumps({
         "cube": "lineitem_stats",
-        "selectFields": [{"field": "Return Flag"}, {"field": "Revenue"}],
+        "selectFields": [{"field": "Nation Name"},
+                         {"field": "Supplier Nation Name"}],
         "filterExpressions": [{"field": "Day", "operator": "between",
-                               "from": "1995-01-01", "to": "1995-01-31"}],
+                               "from": "1995-01-01", "to": "2001-12-31"}],
+        "distinct": True,
     })
+    root = ops_common.current_scope()
 
     def n_cached() -> int:
         return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
@@ -453,12 +456,25 @@ def test_engine_execute_releases_scoped_caches(spark, engine, sf_dir):
     ops_common.release_scoped_caches()
     n0 = n_cached()
 
-    dedup_simhash_pairs(spark, sf_dir).count()   # registers a scoped cache
-    assert len(ops_common._SCOPED_CACHES) > 0
-    assert n_cached() > n0
+    # the request caches its two chain parts in its own scope
+    made = []
+    cache = ops_common.Scope.cache
+    monkeypatch.setattr(ops_common.Scope, "cache", lambda self, df: (
+        made.append(self) or cache(self, df)))
+    assert engine.execute(req)["rows"]
+    monkeypatch.undo()
+    assert len(made) == 2 and made[0] is made[1] is not root
+    assert n_cached() == n0
+
+    dedup_simhash_pairs(spark, sf_dir).count()   # caches in the root scope
+    held = root.held()
+    assert held > 0
+    n_op = n_cached()
+    assert n_op > n0
 
     assert engine.execute(req)["rows"]
-    assert ops_common._SCOPED_CACHES == []
+    assert root.held() == held and n_cached() == n_op
+    assert ops_common.release_scoped_caches() == held
     # blocking unpersist: the op's JVM storage blocks are gone too
     assert n_cached() == n0
 
@@ -568,6 +584,51 @@ def test_swapped_select_field_aliases(contract_engine):
     got = sorted(map(tuple, df.collect()))
     want = sorted(map(tuple, contract_engine.dataframe(base).collect()))
     assert got == want and len(want) > 0
+
+
+def test_sort_on_select_field_alias(contract_engine):
+    """A sort may name the output alias (SQL's ORDER BY rule, as outer
+    filters do): the page equals the un-aliased request sorted by the
+    field, in order."""
+    from maha_spark.examples.contract import DAY_ALL
+
+    def req(alias):
+        return {"cube": "tpch",
+                "selectFields": [{"field": "nation_name", "alias": alias},
+                                 {"field": "revenue"}],
+                "filterExpressions": [DAY_ALL],
+                "sortBy": [{"field": alias or "nation_name",
+                            "order": "DESC"}],
+                "rowsPerPage": 5}
+
+    df = contract_engine.dataframe(req("Nation"))
+    assert df.columns == ["Nation", "revenue"]
+    got = list(map(tuple, df.collect()))
+    want = list(map(tuple, contract_engine.dataframe(req(None)).collect()))
+    assert got == want and len(want) == 5
+
+
+def test_sort_with_swapped_select_field_aliases(contract_engine):
+    """With two select fields trading names, a sort name is the output
+    column first: ``line_count`` sorts the aliased part_id column."""
+    from maha_spark.examples.contract import DAY_ALL
+
+    def req(fields, sorts):
+        return {"cube": "tpch", "selectFields": fields,
+                "filterExpressions": [DAY_ALL],
+                "sortBy": [{"field": f, "order": o} for f, o in sorts],
+                "rowsPerPage": 10}
+
+    base = req([{"field": "part_id"}, {"field": "line_count"}],
+               [("line_count", "DESC"), ("part_id", "ASC")])
+    swapped = req([{"field": "part_id", "alias": "line_count"},
+                   {"field": "line_count", "alias": "part_id"}],
+                  [("part_id", "DESC"), ("line_count", "ASC")])
+    df = contract_engine.dataframe(swapped)
+    assert df.columns == ["line_count", "part_id"]
+    got = list(map(tuple, df.collect()))
+    want = list(map(tuple, contract_engine.dataframe(base).collect()))
+    assert got == want and len(want) == 10
 
 
 def test_dim_driven_avg_without_dim_key(engine, duck):

@@ -16,7 +16,9 @@ the ``_table_version`` stamp contract. Pins:
    as before compaction, in fewer files, with the doc sidecar
    reconciled;
 5. every rewritten artifact's ``_table_version`` advanced (the report
-   exposes the post-cycle stamps for scheduler alerting).
+   exposes the post-cycle stamps for scheduler alerting);
+6. the rewrite primitives release their checkpoints once the write
+   commits.
 """
 
 from __future__ import annotations
@@ -29,9 +31,9 @@ import sys
 
 import pytest
 
-# soak-style end-to-end suites (their session fixtures alone cost ~25 s):
-# slow tail, excluded from the default run (see pyproject.toml)
-pytestmark = pytest.mark.slow
+# the soak-style cycle pins share one module fixture that alone costs
+# ~25 s: slow tail, excluded from the default run (see pyproject.toml)
+slow = pytest.mark.slow
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -79,6 +81,15 @@ def _docs(spark, rows):
 
 def _text(tag):
     return " ".join(f"{tag}{i}" for i in range(substring.EXSUB_L + 2))
+
+
+def _stage_exsub(spark, idx):
+    substring.materialize_exsub_index(
+        spark, _docs(spark, [(0, _text("base"))]), idx)
+    for i in range(1, 9):
+        substring.update_exsub_index(
+            spark, idx, _docs(spark, [(i, _text(f"b{i}x"))]),
+            assume_new=True)
 
 
 def _freq_events(spark, vals):
@@ -138,12 +149,7 @@ def cycle(spark, tmp_path_factory):
 
     # ---- exsub index: materialize + 8 fragmenting appends
     idx = os.path.join(work, "exsub_idx")
-    substring.materialize_exsub_index(
-        spark, _docs(spark, [(0, _text("base"))]), idx)
-    for i in range(1, 9):
-        substring.update_exsub_index(
-            spark, idx, _docs(spark, [(i, _text(f"b{i}x"))]),
-            assume_new=True)
+    _stage_exsub(spark, idx)
     wpath = substring._windows_path(idx)
     files_before = len([f for f in os.listdir(wpath)
                         if f.endswith(".parquet")])
@@ -164,6 +170,7 @@ def cycle(spark, tmp_path_factory):
             "v0": {"roll": roll_v0, "freq": freq_v0, "idx": idx_v0}}
 
 
+@slow
 def test_rollup_restored_bit_identical_through_binding(spark, cycle):
     assert _rows(spark, cycle["roll"]) == cycle["full"]
     # through the binding: the memo is keyed on _table_version, so this
@@ -172,6 +179,7 @@ def test_rollup_restored_bit_identical_through_binding(spark, cycle):
     assert bound.count() == len(cycle["full"])
 
 
+@slow
 def test_dim_driven_sidecar_built_by_cycle(cycle):
     report = cycle["report"]
     assert "lineitem" in report["sidecars"]
@@ -180,6 +188,7 @@ def test_dim_driven_sidecar_built_by_cycle(cycle):
     assert any("l_orderkey" in p for p in built)
 
 
+@slow
 def test_freq_compaction_matches_standalone(spark, cycle):
     got = spark.read.parquet(cycle["pdir"]).select("day", "freq_items")
     # standalone compaction of the identical copy
@@ -192,6 +201,7 @@ def test_freq_compaction_matches_standalone(spark, cycle):
     assert total == 7
 
 
+@slow
 def test_exsub_compaction_row_multiset_unchanged(spark, cycle):
     wpath = substring._windows_path(cycle["idx"])
     files_after = len([f for f in os.listdir(wpath)
@@ -205,8 +215,40 @@ def test_exsub_compaction_row_multiset_unchanged(spark, cycle):
     assert side == set(range(9))
 
 
+@slow
 def test_every_rewritten_artifact_stamp_advanced(cycle):
     rep, v0 = cycle["report"], cycle["v0"]
     assert rep["versions"][cycle["roll"]] > max(v0["roll"], 0.0)
     assert rep["versions"][cycle["pdir"]] > max(v0["freq"], 0.0)
     assert rep["versions"][cycle["idx"]] > max(v0["idx"], 0.0)
+
+
+def test_maintenance_rewrites_release_their_checkpoints(spark, tmp_path):
+    """The rewrite primitives checkpoint their survivor rows, and those
+    blocks are dead once the write commits — persisted RDDs must not
+    grow across a compaction, or a nightly cycle in a long-lived
+    serving session accretes them forever."""
+    from maha_spark.plans.scale import compact_day_partitions
+
+    def persisted_ids():
+        m = spark.sparkContext._jsc.getPersistentRDDs()
+        return set(m.keySet().toArray())
+
+    idx = str(tmp_path / "exsub_idx")
+    _stage_exsub(spark, idx)
+    # day-partitioned table with many intentionally tiny files per day
+    # (written per-day so overwrite's day-shuffle can't pre-coalesce)
+    tbl = str(tmp_path / "days")
+    for d in (1, 2):
+        df = spark.createDataFrame(
+            [(i, float(i)) for i in range(200)], "k int, v double")
+        df.repartition(5).write.parquet(tbl + f"/dt=2024-01-0{d}")
+
+    before = persisted_ids()
+    assert substring.compact_exsub_index(spark, idx,
+                                         target_file_mb=64) > 0
+    substring.reconcile_exsub_sidecar(spark, idx)
+    days = compact_day_partitions(spark, tbl, target_file_mb=64)
+    assert days == ["2024-01-01", "2024-01-02"]   # really compacted
+    assert spark.read.parquet(tbl).count() == 400
+    assert persisted_ids() == before

@@ -101,3 +101,37 @@ def test_centroid_renumbering_tie_break(spark):
     got = {r["cell"]: r["centroid"]
            for r in ivf_centroids(emb, k=k, iters=0).collect()}
     assert got == expected
+
+
+def test_staged_text_stats_equals_naive_spelling(spark, sf_dir):
+    """text_stats_frame (staged, single-evaluation HOFs) must produce
+    exactly the rows/columns of the naive one-projection spelling of
+    ``_stats_exprs(spark_side=True)`` — the form the DuckDB oracle
+    mirrors term by term."""
+    from maha_spark.ops import text
+    from maha_spark.ops.common import load_table, words_sql
+
+    docs = load_table(spark, sf_dir, "documents")
+    exprs = text._stats_exprs("w", spark_side=True)
+    proj = [f"{sql} AS {name}" for name, sql in exprs.items()]
+    naive = (docs.selectExpr("doc_id", "text", f"{words_sql()} AS w")
+             .selectExpr("doc_id", *proj))
+    staged = text.text_stats_frame(docs)
+    a = naive.orderBy("doc_id").toPandas()
+    b = staged.orderBy("doc_id").toPandas()
+    assert list(a.columns) == list(b.columns)
+    assert a.equals(b)
+
+
+def test_staged_text_stats_single_vote_evaluation(spark, sf_dir):
+    """The staged plan must evaluate each language-vote filter once:
+    the naive spelling inlined ``size(filter(w, ...))`` 14x per row
+    (every lang_pred branch + stop_ratio + quality_score)."""
+    from maha_spark.ops import text
+    from maha_spark.ops.common import load_table
+
+    plan = text.text_stats_frame(
+        load_table(spark, sf_dir, "documents"))._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert plan.count("size(filter(w") <= 4   # one per language
+    assert plan.count("array_distinct(w") <= 1

@@ -197,13 +197,13 @@ def test_scoped_caches_released(spark, sf_dir):
     """VERDICT r7 #7: the cached signature streams are registered as
     scoped caches; release_scoped_caches() drops their storage blocks
     (the long-lived-session hygiene contract)."""
-    from maha_spark.ops.common import _SCOPED_CACHES, release_scoped_caches
+    from maha_spark.ops.common import current_scope, release_scoped_caches
     release_scoped_caches()
     sc = spark.sparkContext._jsc.sc()
     before = len(sc.getRDDStorageInfo())
     winnow.winnow_pairs(spark, sf_dir).count()
     winnow.winnow_matches(spark, sf_dir).count()
-    assert len(_SCOPED_CACHES) == 2
+    assert current_scope().held() == 2
     assert len(sc.getRDDStorageInfo()) > before
     assert release_scoped_caches() == 2
     assert len(sc.getRDDStorageInfo()) <= before

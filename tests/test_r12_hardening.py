@@ -222,35 +222,6 @@ def test_maintenance_cycle_over_file_uri(spark, tmp_path):
     assert report["errors"] == []
 
 
-def test_maintenance_rewrites_release_their_checkpoints(spark, tmp_path):
-    """r12 soak regression pin: the rewrite primitives localCheckpoint
-    their survivor rows, and those blocks are dead once the write
-    commits — persistedRdds must not grow across a compaction, or a
-    nightly cycle in a long-lived serving session accretes them
-    forever (the soak's residency counters caught +2 per cycle)."""
-    from maha_spark.ops.common import persistent_rdd_ids
-    from maha_spark.plans.scale import compact_day_partitions
-
-    idx = str(tmp_path / "exsub_idx")
-    _stage_exsub(spark, idx)
-    # day-partitioned table with many intentionally tiny files per day
-    # (written per-day so overwrite's day-shuffle can't pre-coalesce)
-    tbl = str(tmp_path / "days")
-    for d in (1, 2):
-        df = spark.createDataFrame(
-            [(i, float(i)) for i in range(200)], "k int, v double")
-        df.repartition(5).write.parquet(tbl + f"/dt=2024-01-0{d}")
-
-    before = persistent_rdd_ids(spark)
-    assert substring.compact_exsub_index(spark, idx,
-                                         target_file_mb=64) > 0
-    substring.reconcile_exsub_sidecar(spark, idx)
-    days = compact_day_partitions(spark, tbl, target_file_mb=64)
-    assert days == ["2024-01-01", "2024-01-02"]   # really compacted
-    assert spark.read.parquet(tbl).count() == 400
-    assert persistent_rdd_ids(spark) == before
-
-
 def test_maintenance_cycle_isolates_step_failures(spark, engine,
                                                   tmp_path, monkeypatch):
     """A failing rollup refresh must not starve the compaction legs:

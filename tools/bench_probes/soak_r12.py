@@ -20,10 +20,10 @@ Findings (both fixed + pinned in-round):
    cached request.
 2. ``persistedRdds`` grew +2 across the maintenance cycle — the
    rewrite primitives' localCheckpoint blocks outlived their writes
-   (fix: ``ops/common.releases_checkpoints`` on the compaction/upsert/
-   delete/reconcile primitives + per-batch release in the streaming
-   LSH fold; pin: ``test_r12_hardening.py::test_maintenance_rewrites_
-   release_their_checkpoints``).
+   (fix: ``ops/common.in_scope`` on the compaction/upsert/delete/
+   reconcile primitives + one scope per streaming micro-batch; pin:
+   ``test_maintenance_cycle.py::test_maintenance_rewrites_release_
+   their_checkpoints``).
 
 Usage: python tools/bench_probes/soak_r12.py [sf_dir] [out_json]
 Writes tools/bench_probes/soak_r12.json by default.
