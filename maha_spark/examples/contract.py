@@ -30,7 +30,7 @@ from ..core.grain import DAILY, HOURLY
 from ..core.filters import EqualityFilter, LessThanFilter
 from ..core.rollup import (
     AverageRollup, CardinalityRollup, CountRollup, FilteredRollup,
-    HLL_LG_K, HistogramMergeRollup, HistogramRollup, HllSketchRollup,
+    HistogramMergeRollup, HistogramRollup, HllSketchRollup,
     HllUnionRollup, MaxRollup, MinRollup, NoopRollup, RoundedSumRollup,
     SumRollup, hist_quantile_sql,
 )
@@ -104,10 +104,10 @@ SQL_CHARGE_ROW = (f"CAST(ROUND({SQL_PRICE} * (1 - {SQL_DISC}) "
 
 def _li_partial_col_defs() -> dict:
     """Stored-partial column declarations shared by every lineitem
-    rollup table (same physical names as the base's per-row quantized
-    columns; here they are SUMS/MAX/MIN per grain row) — one spelling so
-    the table definitions cannot drift from each other or from
-    ``_li_partial_aggs``."""
+    rollup table: the base's per-row quantized columns under the same
+    names, stored as SUMS/MAX/MIN per grain row (the materializer builds
+    each from the base column of that name) and re-declared with the
+    rollup that merges them."""
     return {
         **{k: FactCol(k, IntType(), rollup=SumRollup()) for k in
            ("qty_dec", "price_dec", "disc_price_dec", "charge_dec",
@@ -1435,289 +1435,80 @@ def run_query(spark, sf_dir: str, name: str):
     return df
 
 
-def _li_cents_select() -> list[str]:
-    """The quantized per-row inputs every lineitem rollup materializer
-    aggregates — ONE spelling, so all rollups stay bit-identical to the
-    base cube's per-row cents columns."""
-    c = {k: v.format(l_quantity="l_quantity",
-                     l_extendedprice="l_extendedprice",
-                     l_discount="l_discount", l_tax="l_tax")
-         for k, v in (("qty", QTY_C), ("price", PRICE_C),
-                      ("disc_price", DISC_PRICE_C), ("charge", CHARGE_C),
-                      ("disc", DISC_H))}
-    return [f"{c['qty']} AS qty_c", f"{c['price']} AS price_c",
-            f"{c['disc_price']} AS disc_price_c",
-            f"{c['charge']} AS charge_c", f"{c['disc']} AS disc_c"]
+def _declared_rollup(spark, src_dir: str, cube: str, name: str) -> tuple:
+    """``(spark, binding, registry, cube, table)`` — the
+    ``registry/materializer.py`` arguments that build the declared
+    rollup ``name`` of ``cube`` from the raw tables under ``src_dir``."""
+    from ..plans.binding import ParquetBinding
 
-
-def _li_partial_aggs() -> list:
-    """The summable/max/min stored-partial aggregates shared by every
-    lineitem rollup (grain-specific extras like the daily rollup's exact
-    order distinct are appended by the caller)."""
-    from pyspark.sql import functions as F
-    return [
-        F.expr("SUM(qty_c)").alias("qty_dec"),
-        F.expr("SUM(price_c)").alias("price_dec"),
-        F.expr("SUM(disc_price_c)").alias("disc_price_dec"),
-        F.expr("SUM(charge_c)").alias("charge_dec"),
-        F.expr("SUM(disc_c)").alias("disc_dec"),
-        # the base's FilteredRollup: SUM over non-matching groups is
-        # NULL, and NULL partials vanish in the rollup's re-SUM — the
-        # exact raw-row semantics
-        F.expr("SUM(CASE WHEN l_returnflag = 'R' THEN qty_c END)")
-         .alias("ret_qty_dec"),
-        F.expr("SUM(disc_price_c)").alias("rounded_rev_raw"),
-        F.count(F.lit(1)).alias("line_count"),
-        F.max("l_extendedprice").alias("max_price_raw"),
-        F.min("l_extendedprice").alias("min_price_raw"),
-    ]
-
-
-def _lineitem_daily_frame(li):
-    """The ``lineitem_daily`` aggregate at its materialized grain
-    (day, return flag, line status) — shared by the full materializer and
-    the incremental day refresh so both produce bit-identical rows."""
-    from pyspark.sql import functions as F
-
-    return (li.selectExpr(
-        "date_trunc('day', l_shipdate) AS l_shipdate",
-        "l_returnflag", "l_linestatus", "l_orderkey", "l_extendedprice",
-        *_li_cents_select())
-     .groupBy("l_shipdate", "l_returnflag", "l_linestatus")
-     .agg(*_li_partial_aggs(),
-          F.countDistinct("l_orderkey").alias("order_cnt"),
-          F.first(F.expr("upper(l_returnflag)")).alias("status_label_raw"))
-     .withColumn("dt", F.to_date(F.col("l_shipdate"))))
+    reg = build_contract_registry()
+    fact = reg.fact(cube)
+    table = next(t for t in fact.tables if t.name == name)
+    return spark, ParquetBinding(spark, src_dir), reg, fact, table
 
 
 def materialize_lineitem_rollup(spark, src_dir: str, dst_dir: str,
                                 partitioned: bool = False) -> str:
-    """Write the ``lineitem_daily`` rollup's physical table from the raw
-    lineitem under ``src_dir`` into ``dst_dir``. Stored partials use the
-    SAME per-row cents quantization as the base cube columns (QTY_C et
-    al.), so serving from the rollup is bit-identical to aggregating raw
-    rows; the grain-guarded columns (exact order distinct, upper-cased
-    status label) are stored AT the (day, return flag, line status)
-    grain.
-
-    ``partitioned=True`` writes the Hive day-partitioned directory
-    layout (``lineitem_daily/dt=.../``) instead of a flat file — the
-    shape ``refresh_lineitem_rollup`` maintains incrementally."""
-    import os
-
-    from ..plans.binding import ParquetBinding
-
-    df = _lineitem_daily_frame(ParquetBinding(spark, src_dir)
-                               .table("lineitem"))
-    if partitioned:
-        from pyspark.sql import functions as F
-        out = os.path.join(dst_dir, "lineitem_daily")
-        # one file per dt= directory (see scale.overwrite_day_partitions)
-        (df.repartition(F.col("dt")).write.mode("overwrite")
-           .partitionBy("dt").parquet(out))
-    else:
-        out = os.path.join(dst_dir, "lineitem_daily.parquet")
-        df.write.mode("overwrite").parquet(out)
-    return out
+    """Write the ``lineitem_daily`` rollup (day, return flag, line
+    status) from the raw lineitem under ``src_dir`` into ``dst_dir``;
+    ``partitioned=True`` writes the Hive day-partitioned layout that
+    ``refresh_lineitem_rollup`` maintains."""
+    from ..registry.materializer import materialize_rollup
+    return materialize_rollup(
+        *_declared_rollup(spark, src_dir, "tpch", "lineitem_daily"),
+        dst_dir, partitioned=partitioned)
 
 
 def refresh_lineitem_rollup(spark, src_dir: str, dst_dir: str,
                             from_day: str, to_day: str) -> str:
-    """Incrementally refresh a day range of the PARTITIONED
-    ``lineitem_daily`` rollup from the raw fact: re-aggregate only
-    ``[from_day, to_day]`` (inclusive, 'YYYY-MM-DD') and dynamically
-    overwrite just those ``dt=`` directories — days outside the range are
-    untouched. This is how late-arriving/restated fact data is folded in
-    at 100 TB: the raw scan is partition-pruned to the affected days and
-    the rewrite cost is proportional to the restated window, not the
-    table. The refreshed rows are bit-identical to a full rebuild's
-    (same ``_lineitem_daily_frame``; pinned in
-    tests/test_rollup_incremental.py)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from ..plans.binding import ParquetBinding
-    from ..plans.scale import overwrite_day_partitions
-
-    li = ParquetBinding(spark, src_dir).table("lineitem")
-    # bound the raw day column; on a dt-partitioned raw layout the dt
-    # bound is the PartitionFilter (directory pruning), the timestamp
-    # bound handles flat files
-    li = li.filter(
-        (F.col("l_shipdate") >= F.to_timestamp(F.lit(from_day)))
-        & (F.col("l_shipdate")
-           < F.to_timestamp(F.date_add(F.to_date(F.lit(to_day)), 1))))
-    if "dt" in li.columns:
-        li = li.filter(F.col("dt").between(F.lit(from_day), F.lit(to_day)))
-    out = os.path.join(dst_dir, "lineitem_daily")
-    # overwrite_day_partitions bumps the root mtime itself, so the
-    # binding's mtime-keyed memo (_DF_CACHE) rebuilds for every caller
-    overwrite_day_partitions(_lineitem_daily_frame(li), out)
-    return out
-
-
-def _lineitem_nation_frame(li, orders, cust):
-    """The ``lineitem_daily_nation`` aggregate at its (day, customer
-    nation, market segment) grain — shared by the full materializer and
-    the incremental day refresh so both produce bit-identical rows.
-    ``c_mktsegment`` is stored denormalized (``DimCol.materializes``)
-    so segment filters/groupings serve without any customer join.
-
-    Joins are LEFT OUTER: an orphan l_orderkey/o_custkey (no matching
-    order/customer) groups under ``cust_nation_fk = NULL``, exactly the
-    row the query-time left_outer chain on the RAW fact would produce —
-    so rollup-served and raw-served totals agree even on data without
-    FK integrity (TPC-H has it; a crawl warehouse may not)."""
-    from pyspark.sql import functions as F
-
-    return (li.join(orders.select("o_orderkey", "o_custkey"),
-                    li["l_orderkey"] == orders["o_orderkey"], "left")
-            .join(F.broadcast(cust.select("c_custkey", "c_nationkey",
-                                          "c_mktsegment")),
-                  orders["o_custkey"] == cust["c_custkey"], "left")
-            .selectExpr(
-                "date_trunc('day', l_shipdate) AS l_shipdate",
-                "c_nationkey AS cust_nation_fk", "c_mktsegment",
-                "l_returnflag", "l_extendedprice", *_li_cents_select())
-            .groupBy("l_shipdate", "cust_nation_fk", "c_mktsegment")
-            .agg(*_li_partial_aggs())
-            .withColumn("dt", F.to_date(F.col("l_shipdate"))))
-
-
-def _lineitem_part_frame(li):
-    """The ``lineitem_daily_part`` aggregate at its materialized grain
-    (day, part key) — the q2/q11 serving shape. Rows are bounded by
-    DISTINCT (day, part) pairs, so on the row-multiplied scaled tiers
-    the table stays ~constant while the raw fact grows with the
-    multiplier."""
-    from pyspark.sql import functions as F
-
-    return (li.selectExpr(
-        "date_trunc('day', l_shipdate) AS l_shipdate",
-        "l_partkey", "l_returnflag", "l_extendedprice",
-        *_li_cents_select())
-     .groupBy("l_shipdate", "l_partkey")
-     .agg(*_li_partial_aggs())
-     .withColumn("dt", F.to_date(F.col("l_shipdate"))))
+    """Re-aggregate ``[from_day, to_day]`` (inclusive, 'YYYY-MM-DD') of
+    the PARTITIONED ``lineitem_daily`` rollup; days outside the range
+    are untouched (``refresh_rollup``)."""
+    from ..registry.materializer import refresh_rollup
+    return refresh_rollup(
+        *_declared_rollup(spark, src_dir, "tpch", "lineitem_daily"),
+        dst_dir, from_day, to_day)
 
 
 def materialize_lineitem_part_rollup(spark, src_dir: str, dst_dir: str,
                                      partitioned: bool = False) -> str:
-    """Write the ``lineitem_daily_part`` rollup (day x part key, cents
-    partials — serving is bit-identical to the raw aggregate). The
-    stored ``l_partkey`` keeps the part chain joinable exactly like the
-    raw fact. ``partitioned=True`` writes the Hive dt-partitioned
-    layout (maintain day ranges with ``plans.scale.
-    overwrite_day_partitions`` over ``_lineitem_part_frame`` of a
-    bounded raw scan, as the other two lineitem rollups do)."""
-    import os
-
-    from ..plans.binding import ParquetBinding
-
-    df = _lineitem_part_frame(ParquetBinding(spark, src_dir)
-                              .table("lineitem"))
-    if partitioned:
-        from pyspark.sql import functions as F
-        out = os.path.join(dst_dir, "lineitem_daily_part")
-        (df.repartition(F.col("dt")).write.mode("overwrite")
-           .partitionBy("dt").parquet(out))
-    else:
-        out = os.path.join(dst_dir, "lineitem_daily_part.parquet")
-        df.write.mode("overwrite").parquet(out)
-    return out
+    """Write the ``lineitem_daily_part`` rollup (day, part key) — the
+    q2/q11 serving shape."""
+    from ..registry.materializer import materialize_rollup
+    return materialize_rollup(
+        *_declared_rollup(spark, src_dir, "tpch", "lineitem_daily_part"),
+        dst_dir, partitioned=partitioned)
 
 
 def materialize_lineitem_nation_rollup(spark, src_dir: str, dst_dir: str,
                                        partitioned: bool = False) -> str:
-    """Write the ``lineitem_daily_nation`` AGGREGATE-JOIN rollup: the
-    orders -> customer join is paid here, once; the stored
-    ``cust_nation_fk`` re-enters the customer_nation dim chain at query
-    time (chain rebasing) and the stored ``c_mktsegment`` serves
-    segment filters/groupings directly. Partials use the same per-row cents
-    quantization as the base cube, so serving is bit-identical to the
-    raw join+aggregate plan. ``partitioned=True`` writes the Hive
-    dt-partitioned layout that ``refresh_lineitem_nation_rollup``
-    maintains incrementally."""
-    import os
-
-    from ..plans.binding import ParquetBinding
-
-    b = ParquetBinding(spark, src_dir)
-    df = _lineitem_nation_frame(b.table("lineitem"), b.table("orders"),
-                                b.table("customer"))
-    if partitioned:
-        from pyspark.sql import functions as F
-        out = os.path.join(dst_dir, "lineitem_daily_nation")
-        (df.repartition(F.col("dt")).write.mode("overwrite")
-           .partitionBy("dt").parquet(out))
-    else:
-        out = os.path.join(dst_dir, "lineitem_daily_nation.parquet")
-        df.write.mode("overwrite").parquet(out)
-    return out
+    """Write the ``lineitem_daily_nation`` AGGREGATE-JOIN rollup (day,
+    customer nation, market segment): the orders -> customer -> nation
+    join is paid here, once. ``partitioned=True`` writes the layout
+    ``refresh_lineitem_nation_rollup`` maintains."""
+    from ..registry.materializer import materialize_rollup
+    return materialize_rollup(
+        *_declared_rollup(spark, src_dir, "tpch", "lineitem_daily_nation"),
+        dst_dir, partitioned=partitioned)
 
 
 def refresh_lineitem_nation_rollup(spark, src_dir: str, dst_dir: str,
                                    from_day: str, to_day: str) -> str:
     """Day-range restatement of the PARTITIONED aggregate-join rollup:
-    only the restated days' line items re-join orders/customer (the
-    lineitem scan is partition-pruned; orders/customer are read in full
-    — the join is keyed, so at cluster scale the dim sides broadcast or
-    shuffle by key, never more than the batch needs) and only those
-    ``dt=`` directories are dynamically overwritten. Bit-identical to a
-    full rebuild (same ``_lineitem_nation_frame``; pinned in
-    tests/test_rollup_incremental.py)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from ..plans.binding import ParquetBinding
-    from ..plans.scale import overwrite_day_partitions
-
-    b = ParquetBinding(spark, src_dir)
-    li = b.table("lineitem")
-    li = li.filter(
-        (F.col("l_shipdate") >= F.to_timestamp(F.lit(from_day)))
-        & (F.col("l_shipdate")
-           < F.to_timestamp(F.date_add(F.to_date(F.lit(to_day)), 1))))
-    if "dt" in li.columns:
-        li = li.filter(F.col("dt").between(F.lit(from_day), F.lit(to_day)))
-    out = os.path.join(dst_dir, "lineitem_daily_nation")
-    overwrite_day_partitions(
-        _lineitem_nation_frame(li, b.table("orders"), b.table("customer")),
-        out)  # bumps the root mtime itself (memo invalidation)
-    return out
+    only the restated days' line items re-join the customer chain
+    (``refresh_rollup``)."""
+    from ..registry.materializer import refresh_rollup
+    return refresh_rollup(
+        *_declared_rollup(spark, src_dir, "tpch", "lineitem_daily_nation"),
+        dst_dir, from_day, to_day)
 
 
 def materialize_events_rollup(spark, src_dir: str, dst_dir: str) -> str:
-    """Write the ``events_hourly`` rollup's physical table from the raw
-    events under ``src_dir`` into ``dst_dir`` (one batch job producing
-    exactly the content the streaming maintainer emits —
-    tests/test_stream_rollup.py pins stream == batch). The stored partials
-    use the SAME per-row cents quantization as the base cube columns, so
-    serving from the rollup is bit-identical to aggregating raw rows."""
-    import os
-
-    from ..plans.binding import ParquetBinding
-
-    from pyspark.sql import functions as F
-
-    ev = ParquetBinding(spark, src_dir).table("events")
-    out = os.path.join(dst_dir, "events_hourly.parquet")
-    (ev.selectExpr(
-        "date_trunc('hour', ts) AS ts", "event_type", "user_id", "value",
-        "CAST(value * 100000 + 0.5 AS BIGINT) AS value_dec")
-     .groupBy("ts", "event_type")
-     .agg(F.sum("value_dec").alias("value_dec"),
-          F.count(F.lit(1)).alias("event_count"),
-          F.countDistinct("user_id").alias("user_cnt"),
-          F.hll_sketch_agg("user_id", HLL_LG_K).alias("user_hll"),
-          # the SAME partial builder as the base cube column, so
-          # quantiles served from the rollup are bit-identical to raw
-          HistogramRollup().agg(F.col("value")).alias("value_hist"))
-     # the registry declares partition_columns=['dt']: carry the column
-     # so the planner's Day bound applies to it (row filter on the flat
-     # fixture; a Hive-partitioned rewrite would prune directories)
-     .withColumn("dt", F.to_date(F.col("ts")))
-     .write.mode("overwrite").parquet(out))
-    return out
+    """Write the flat ``events_hourly`` rollup (hour, event type) from
+    the raw events under ``src_dir`` — the content the streaming
+    maintainer emits (tests/test_stream_rollup.py pins stream ==
+    batch)."""
+    from ..registry.materializer import materialize_rollup
+    return materialize_rollup(
+        *_declared_rollup(spark, src_dir, "events_cube", "events_hourly"),
+        dst_dir)

@@ -20,8 +20,8 @@ def entry_queries() -> dict[str, Callable]:
     exact one.
 
     ``op_dedup_signatures`` is the single entry for the three
-    signature-family dedups (exact / wordset / simhash); the individual
-    functions remain public API (dedup.dedup_exact etc.).
+    signature-family dedups (exact / wordset / simhash) — one pass
+    computing all three fingerprints.
     """
     from . import (asof, chunking, contamination, dedup, freqtopk,
                    incremental, lm, multimodal, packing, pipeline,
@@ -44,8 +44,8 @@ def entry_queries() -> dict[str, Callable]:
         # cross-engine bit parity)
         "op_exact_substring_spans": substring.exact_substring_spans,
         "op_lm_perplexity": lm.lm_perplexity,
-        # SemDeDup via the seed-centroid SQL twin (bit-parity oracle);
-        # the Lloyd-iterated kernel is pinned in pytest (semdedup_lloyd)
+        # SemDeDup over seed centroids (bit-parity oracle); the
+        # Lloyd-centroid variant is pinned in pytest (semdedup_lloyd)
         "op_semdedup": semdedup.semdedup_op,
         # the streaming twin's stream == batch pin (test_ops_sessions.py)
         # makes this hash check cover both
@@ -132,13 +132,11 @@ def pytest_only_ops() -> dict[str, tuple[Callable, str]]:
         "lm_score": (lm.lm_score,
                      "test_ops_lm.py (persisted model == in-memory "
                      "bit-identically; batch-composable)"),
-        # the Lloyd-iterated kernel variant of SemDeDup; the contract
-        # entry (op_semdedup) runs the seed-centroid SQL twin, pinned
-        # equal to this kernel in test_ops_semdedup.py
+        # SemDeDup over Lloyd-trained centroids; the contract entry
+        # (op_semdedup) runs the same keep rule over seed centroids
         "semdedup_lloyd": (semdedup.semdedup,
                            "test_ops_semdedup.py (independent numpy "
-                           "kernel oracle + hot-cluster split + "
-                           "sql-twin equivalence)"),
+                           "oracle + planted duplicate + determinism)"),
         "streaming_sessions": (sessions.streaming_sessions,
                                "test_ops_sessions.py (stream == batch "
                                "bit-identical + late-event drop)"),

@@ -25,8 +25,9 @@ import functools
 import os
 import threading
 from typing import Callable, Optional
+from urllib.parse import urlparse
 
-from pyspark import inheritable_thread_target
+from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 #: prime modulus for minhash permutations (fits 32 bits)
@@ -51,8 +52,14 @@ class Scope:
             self._held.append(unpersist)
 
     def cache(self, df: DataFrame) -> DataFrame:
-        """``df.cache()``, unpersisted (blocking) on release."""
-        df = df.cache()
+        """``df.cache()``, unpersisted (blocking) on release. A plan
+        Spark's CacheManager already holds (another scope's cache, a
+        binding's table) is one shared entry: this scope neither
+        re-caches nor releases it, so its owner's frame stays cached."""
+        with _CACHE_LOCK:
+            if df.storageLevel != StorageLevel.NONE:
+                return df
+            df = df.cache()
         self._hold(lambda: df.unpersist(True))
         return df
 
@@ -112,6 +119,8 @@ class Scope:
         self.release()
 
 
+#: makes a scope's CacheManager lookup and its ``cache()`` one step
+_CACHE_LOCK = threading.Lock()
 _ROOT = Scope()
 _CURRENT = contextvars.ContextVar("maha_spark_scope", default=_ROOT)
 #: the root and every open scope, for ``held_frames`` telemetry
@@ -212,94 +221,89 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
-def fs_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe through the Hadoop FileSystem API — correct on
-    HDFS/S3A/ABFS/GCS where ``os.path.exists`` would silently return
-    False (and let a bootstrap branch clobber a remote table with an
-    empty one). Falls back to the local check if the JVM gateway is
-    unavailable (plain-Python unit contexts)."""
+def _on_fs(spark: SparkSession, path: str, hadoop: Callable, local: Callable):
+    """``hadoop(fs, jpath)`` through the Hadoop FileSystem API — correct
+    on HDFS/S3A/ABFS/GCS. Only a scheme-less path falls back to
+    ``local()`` (plain-Python unit contexts have no JVM gateway); on a
+    URI the error propagates, since a local answer about ``s3a://...``
+    is wrong (an ``exists`` reading False would let a bootstrap branch
+    clobber the remote table with an empty one)."""
     try:
         fs, jpath = _hadoop_fs(spark, path)
-        return bool(fs.exists(jpath))
+        return hadoop(fs, jpath)
     except Exception:
-        return os.path.exists(path)
+        if urlparse(path).scheme:
+            raise
+        return local()
+
+
+def fs_exists(spark: SparkSession, path: str) -> bool:
+    """Existence probe."""
+    return _on_fs(spark, path, lambda fs, p: bool(fs.exists(p)),
+                  lambda: os.path.exists(path))
 
 
 def fs_touch(spark: SparkSession, path: str) -> None:
-    """Create (or truncate) an empty marker file through the Hadoop
-    FileSystem API — the in-progress sentinel the index-maintenance
-    paths use to detect a crash between two non-atomic writes. Local
-    fallback mirrors ``fs_exists``."""
-    try:
-        fs, jpath = _hadoop_fs(spark, path)
-        fs.create(jpath, True).close()
-    except Exception:
+    """Create (or truncate) an empty marker file — the in-progress
+    sentinel the index-maintenance paths use to detect a crash between
+    two non-atomic writes."""
+    def local() -> None:
         os.makedirs(os.path.dirname(path), exist_ok=True)
         with open(path, "w"):
             pass
+    _on_fs(spark, path, lambda fs, p: fs.create(p, True).close(), local)
 
 
 def fs_list_files(spark: SparkSession, path: str,
                   suffix: str = ".parquet") -> list[tuple[str, int]]:
     """(path, byte size) of every direct child file with ``suffix`` —
-    the file-stat probe compaction sizing needs, through the Hadoop
-    FileSystem API so ``s3a://``-style index roots work; local
-    ``os.listdir`` fallback when the gateway is unavailable."""
-    try:
-        fs, jpath = _hadoop_fs(spark, path)
-        out = []
-        for st in fs.listStatus(jpath):
-            name = st.getPath().getName()
-            if st.isFile() and name.endswith(suffix):
-                out.append((path.rstrip("/") + "/" + name, st.getLen()))
-        return out
-    except Exception:
+    the file-stat probe compaction sizing needs; empty when ``path`` is
+    absent."""
+    def hadoop(fs, jpath) -> list:
+        if not fs.exists(jpath):
+            return []
+        return [(path.rstrip("/") + "/" + st.getPath().getName(),
+                 st.getLen()) for st in fs.listStatus(jpath)
+                if st.isFile() and st.getPath().getName().endswith(suffix)]
+
+    def local() -> list:
         try:
             return [(os.path.join(path, f),
                      os.path.getsize(os.path.join(path, f)))
                     for f in os.listdir(path) if f.endswith(suffix)]
         except OSError:
             return []
+    return _on_fs(spark, path, hadoop, local)
 
 
 def fs_rename(spark: SparkSession, src: str, dst: str) -> bool:
     """Move a file or directory (dst must not exist) — the
-    temp-then-rename swap step for maintenance rewrites, portable to
-    object-store roots; ``os.rename`` fallback."""
-    try:
-        fs, jsrc = _hadoop_fs(spark, src)
-        jdst = spark._jvm.org.apache.hadoop.fs.Path(dst)
-        return bool(fs.rename(jsrc, jdst))
-    except Exception:
+    temp-then-rename swap step for maintenance rewrites."""
+    def local() -> bool:
         try:
             os.rename(src, dst)
             return True
         except OSError:
             return False
+    return _on_fs(spark, src, lambda fs, p: bool(fs.rename(
+        p, spark._jvm.org.apache.hadoop.fs.Path(dst))), local)
 
 
 def fs_rmtree(spark: SparkSession, path: str) -> None:
-    """Recursively remove a directory tree (no-op when absent) —
-    ``shutil.rmtree`` portable to object-store roots."""
-    try:
-        fs, jpath = _hadoop_fs(spark, path)
-        fs.delete(jpath, True)
-    except Exception:
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    """Recursively remove a directory tree (no-op when absent)."""
+    import shutil
+    _on_fs(spark, path, lambda fs, p: fs.delete(p, True),
+           lambda: shutil.rmtree(path, ignore_errors=True))
 
 
 def fs_delete(spark: SparkSession, path: str) -> None:
-    """Remove a marker file (no-op when absent) — Hadoop FS with the
-    same local fallback as ``fs_exists``/``fs_touch``."""
-    try:
-        fs, jpath = _hadoop_fs(spark, path)
-        fs.delete(jpath, False)
-    except Exception:
+    """Remove a marker file (no-op when absent)."""
+    def local() -> None:
         try:
             os.remove(path)
         except OSError:
             pass
+    _on_fs(spark, path, lambda fs, p: fs.delete(p, False), local)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -2,9 +2,9 @@
 
 Scale-first designs:
 
-- ``dedup_exact`` / ``dedup_wordset``: one hash-groupBy shuffle keyed by a
-  content fingerprint — the 100 TB path is a straight map-side-combine
-  aggregation, no pairwise work.
+- ``dedup_signatures``: exact content hash, order-insensitive wordset
+  fingerprint and simhash per document, each with its family's keeper —
+  map-side-combined hash-groupBys, no pairwise work.
 - ``dedup_minhash_lsh``: shingle -> minhash signature (k=24) -> banded
   bucket join (b=12, r=2) -> exact-Jaccard verification of candidates.
   Work is proportional to bucket collisions, never all-pairs.  The DuckDB
@@ -41,47 +41,6 @@ HAMMING_T = 3  # < SIMHASH_CHUNKS so the chunk join is lossless
 #: bridge graphs at or under this many edges (~32 MB of longs) finish
 #: with a driver-side union-find; larger graphs iterate distributed
 LOCAL_CC_MAX_EDGES = 2_000_000
-
-
-# --------------------------------------------------------------- exact
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-    docs = load_table(spark, sf_dir, "documents")
-    return (docs.selectExpr("md5(text) AS content_hash", "doc_id")
-            .groupBy("content_hash")
-            .agg(F.min("doc_id").alias("keeper_doc_id"),
-                 F.count(F.lit(1)).alias("dup_count")))
-
-
-def dedup_exact_oracle() -> str:
-    return """
-        SELECT md5(text) AS content_hash, MIN(doc_id) AS keeper_doc_id,
-               COUNT(*) AS dup_count
-        FROM documents GROUP BY 1
-    """
-
-
-# ------------------------------------------------------------- wordset
-def dedup_wordset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-insensitive fingerprint (sorted distinct words): catches
-    shuffled/reordered duplicates exact dedup misses."""
-    from pyspark.sql import functions as F
-    docs = load_table(spark, sf_dir, "documents")
-    fp = (f"md5(array_join(array_sort(array_distinct({words_sql()})), ' '))")
-    return (docs.selectExpr(f"{fp} AS wordset_fp", "doc_id")
-            .groupBy("wordset_fp")
-            .agg(F.min("doc_id").alias("keeper_doc_id"),
-                 F.count(F.lit(1)).alias("dup_count"))
-            .filter("dup_count > 1"))
-
-
-def dedup_wordset_oracle() -> str:
-    return f"""
-        SELECT md5(array_to_string(list_sort(list_distinct(
-                   {duck_words_sql()})), ' ')) AS wordset_fp,
-               MIN(doc_id) AS keeper_doc_id, COUNT(*) AS dup_count
-        FROM documents GROUP BY 1 HAVING COUNT(*) > 1
-    """
 
 
 # -------------------------------------------------------- minhash LSH
@@ -340,11 +299,6 @@ def dedup_minhash_lsh_oracle() -> str:
 NGRAM_JACCARD_T = 0.7
 
 
-def _bigrams_spark(words: str) -> str:
-    return (f"array_distinct(transform(sequence(1, size({words}) - 1), "
-            f"i -> concat_ws(' ', {words}[i-1], {words}[i])))")
-
-
 def _bigrams_duck(words: str) -> str:
     return (f"list_distinct(list_transform(range(1, len({words})), "
             f"i -> {words}[i] || ' ' || {words}[i+1]))")
@@ -558,10 +512,10 @@ def streaming_dedup_df(spark: SparkSession, docs_dir: str) -> DataFrame:
 
     ``dropDuplicates`` on a streaming frame keeps the seen-key set in the
     checkpointed state store, partitioned by the hash — the streaming twin
-    of ``dedup_exact``'s hash-groupBy, and the shape an ingest pipeline
-    uses to dedupe a continuous document feed. State grows with distinct
-    keys; bound it with ``dropDuplicatesWithinWatermark`` when the feed
-    has event time (the test corpus has none).
+    of ``dedup_signatures``' exact-hash family, and the shape an ingest
+    pipeline uses to dedupe a continuous document feed. State grows with
+    distinct keys; bound it with ``dropDuplicatesWithinWatermark`` when
+    the feed has event time (the test corpus has none).
     """
     raw = (spark.readStream.schema(DOC_SCHEMA).format("parquet")
            .load(docs_dir))
@@ -590,9 +544,8 @@ def dedup_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     wordset fingerprint, and 32-bit simhash, each with its group's keeper
     (min doc_id) and duplicate count.
 
-    One driver-contract entry covering the three signature-family dedup
-    ops (``dedup_exact`` / ``dedup_wordset`` / ``dedup_simhash``) in a
-    single pass.
+    One driver-contract entry covering the three signature families
+    (exact content hash, wordset fingerprint, simhash) in a single pass.
 
     Scale shape: signature computation is pure codegen; the
     keeper/count columns are map-side-combined ``groupBy(fingerprint)``

@@ -20,16 +20,11 @@ keep-farthest / keep-random within eps-groups to be near-equivalent:
 
 100 TB path: centroid training and assignment are broadcast joins +
 groupBy means (``similarity.ivf_centroids`` — k rows broadcast, corpus
-streamed); the per-cluster kernel is an Arrow-batched
-``applyInPandas`` whose unit of work is one cluster, so ``k`` is chosen
-to bound cluster size to worker memory (n/k vectors * dim * 8 B; the
-paper's 50k clusters keep this in the tens of MB at web scale).  A
-pathologically hot cluster is the one skew risk — mitigated by
-``max_cell_size``: cells over the cap are recursively re-clustered
-(``_assign_bounded``, the same trick FAISS uses for imbalanced IVF
-lists), with a loud raise if a cell of identical vectors cannot be
-split.  ``semdedup_sql_frame`` is the join-spelled twin that has no
-per-worker matrix at all (and bit-matches the DuckDB oracle).
+streamed); the keep rule is a cell-keyed self-join + groupBy max
+(``semdedup_sql_frame``), so no worker materializes a per-cluster
+matrix — a hot cluster becomes a large streamed join AQE can
+skew-split. Every float expression carries the left-to-right
+association the DuckDB oracle reproduces bit-for-bit.
 
 No reference analogue (yahoo/maha has no embedding surface); this op
 belongs to the training-data-pipeline axis, next to ``ops/dedup.py``
@@ -49,155 +44,29 @@ from .similarity import IVF_CELLS, _ivf_assign, ivf_centroids
 #: ~0.45 (see ``PAIR_COS_T``), so the default aligns there to stay
 #: nonvacuous on the driver corpus.
 SEMDEDUP_EPS = 0.45
-#: recursive-split rounds before declaring a cell un-splittable (a cell
-#: of > max_cell_size IDENTICAL vectors cannot be split by any
-#: clustering — every member ties to the same sub-centroid)
-SPLIT_ROUNDS = 6
-
-_OUT_SCHEMA = ("vec_id BIGINT, cell INT, cent_sim DOUBLE, "
-               "max_prior_sim DOUBLE, keep BOOLEAN")
-
-
-def _assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
-    """``(vec_id, embedding, cell, centroid)`` — each vector with its
-    nearest-centroid cell and that cell's centroid attached (broadcast —
-    k rows), so every downstream kernel is self-contained per cluster."""
-    from pyspark.sql import functions as F
-    return (_ivf_assign(emb, cents, probe=1)
-            .select("vec_id", "embedding", "cell")
-            .join(F.broadcast(cents), "cell")
-            .select("vec_id", "embedding", "cell", "centroid"))
-
-
-def _assign_bounded(emb: DataFrame, cents: DataFrame,
-                    max_cell_size: int) -> DataFrame:
-    """``_assign`` with the hot-cluster guard: any cell over
-    ``max_cell_size`` members is recursively re-clustered
-    (``ivf_centroids`` over the oversized cell's members — the FAISS
-    trick for imbalanced IVF lists), so the per-cluster Arrow kernel's
-    m x m gram matrix stays bounded by the cap. Sub-cells get fresh
-    integer ids past the current maximum; each member's ``centroid`` is
-    its SUB-cluster's centroid (the keep rule orders within the
-    sub-cluster, which is the cluster that actually bounds the pairwise
-    comparison). Raises after ``SPLIT_ROUNDS`` if a cell cannot be
-    split below the cap (> cap identical vectors) — a loud error beats
-    OOMing a worker.
-
-    Driver-side cost: one k-row ``collect`` of cell sizes per round;
-    everything else is DataFrame ops (``localCheckpoint`` per round
-    truncates the union lineage, same precedent as
-    ``dedup.near_dup_clusters``)."""
-    from pyspark.sql import functions as F
-
-    assigned = _assign(emb, cents)
-    for _ in range(SPLIT_ROUNDS):
-        sizes = {r["cell"]: r["n"] for r in
-                 assigned.groupBy("cell")
-                 .agg(F.count(F.lit(1)).alias("n")).collect()}
-        hot = sorted(c for c, n in sizes.items() if n > max_cell_size)
-        if not hot:
-            return assigned
-        next_cell = max(sizes) + 1
-        parts = [assigned.filter(~F.col("cell").isin([int(c) for c in hot]))]
-        for c in hot:
-            members = (assigned.filter(F.col("cell") == int(c))
-                       .select("vec_id", "embedding"))
-            sub_k = min(max(2, -(-sizes[c] // max_cell_size) * 2), sizes[c])
-            sub = ivf_centroids(members, k=sub_k).selectExpr(
-                f"CAST(cell + {next_cell} AS INT) AS cell", "centroid")
-            next_cell += sub_k
-            parts.append(_assign(members, sub))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        assigned = out.localCheckpoint()
-    worst = (assigned.groupBy("cell").count()
-             .agg(F.max("count")).first()[0])
-    if worst > max_cell_size:
-        raise ValueError(
-            f"semdedup: a cluster of {worst} members cannot be split "
-            f"below max_cell_size={max_cell_size} after {SPLIT_ROUNDS} "
-            "rounds — the cell contains more identical (or cosine-"
-            "indistinguishable) vectors than the cap; raise the cap or "
-            "exact-dedup the corpus first")
-    return assigned
-
-
-def semdedup_frame(emb: DataFrame, cents: DataFrame,
-                   eps: float = SEMDEDUP_EPS,
-                   max_cell_size: int | None = None) -> DataFrame:
-    """``(vec_id, cell, cent_sim, max_prior_sim, keep)`` — one row per
-    vector; ``keep=false`` marks semantic duplicates.
-
-    ``cents`` is a ``(cell, centroid)`` frame (``ivf_centroids`` or a
-    persisted index's centroids) — passing it in keeps the kernel
-    reusable over a frozen index and lets tests feed both the op and an
-    independent oracle the same centroids.
-
-    All float math happens inside the kernel in float64 numpy so the
-    result is a pure function of (embeddings, centroids): cosine to
-    centroid for the ordering, one m x m gram matrix for the pairwise
-    sims, both rounded to 6 decimals before the eps comparison so the
-    reported values and the keep decision are consistent.
-
-    ``max_cell_size`` bounds the kernel's per-cluster gram matrix: cells
-    over the cap are recursively re-clustered (``_assign_bounded``)
-    before the kernel runs — the hot-cluster guard for skewed corpora.
-    """
-    import numpy as np
-    import pandas as pd
-
-    assigned = (_assign(emb, cents) if max_cell_size is None
-                else _assign_bounded(emb, cents, max_cell_size))
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
-        cent = np.asarray(pdf["centroid"].iloc[0], dtype=np.float64)
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        cent_sim = np.round(
-            (mat @ cent) / (norms * np.sqrt(cent @ cent)), 6)
-        order = np.lexsort((pdf["vec_id"].to_numpy(), -cent_sim))
-        m = mat[order] / norms[order, None]
-        sims = np.round(m @ m.T, 6)
-        max_prior = np.full(len(order), -1.0)
-        for i in range(1, len(order)):
-            max_prior[i] = sims[i, :i].max()
-        out = pd.DataFrame({
-            "vec_id": pdf["vec_id"].to_numpy()[order],
-            "cell": pdf["cell"].to_numpy()[order],
-            "cent_sim": cent_sim[order],
-            "max_prior_sim": max_prior,
-            "keep": max_prior < eps,
-        })
-        return out
-
-    return (assigned.groupBy("cell").applyInPandas(kernel, _OUT_SCHEMA)
-            .orderBy("vec_id"))
 
 
 def semdedup(spark: SparkSession, sf_dir: str,
-             k: int = IVF_CELLS, eps: float = SEMDEDUP_EPS,
-             max_cell_size: int | None = None) -> DataFrame:
-    """SemDeDup over the ``embeddings`` table at the module defaults."""
+             k: int = IVF_CELLS, eps: float = SEMDEDUP_EPS) -> DataFrame:
+    """SemDeDup over the ``embeddings`` table with Lloyd-trained
+    centroids (``ivf_centroids`` at its default iterations)."""
     emb = load_table(spark, sf_dir, "embeddings")
     cents = scoped_cache(ivf_centroids(emb, k))
-    return semdedup_frame(emb, cents, eps, max_cell_size=max_cell_size)
+    return semdedup_sql_frame(emb, cents, eps)
 
 
 def semdedup_sql_frame(emb: DataFrame, cents: DataFrame,
                        eps: float = SEMDEDUP_EPS) -> DataFrame:
-    """Pure-Catalyst twin of ``semdedup_frame`` — the keep rule as a
-    within-cell self-join instead of the per-cluster Arrow kernel.
+    """``(vec_id, cell, cent_sim, max_prior_sim, keep)`` — one row per
+    vector; ``keep=false`` marks semantic duplicates.
 
-    Same output, different physical shape: the "max similarity to an
-    EARLIER member" is a cell-keyed equi-join (a earlier than b by
-    (cent_sim DESC, vec_id ASC)) + groupBy max, so no worker ever
-    materializes an m x m matrix — a hot cell becomes a large streamed
-    join AQE can skew-split, not an OOM. The kernel twin wins when
-    clusters are many and small (one Arrow batch per cluster); this one
-    is the contract/serving spelling because every float expression
-    (``_cos_sql`` fold) carries the left-to-right association the DuckDB
-    oracle reproduces bit-for-bit.
+    ``cents`` is a ``(cell, centroid)`` frame (``ivf_centroids`` or a
+    persisted index's centroids), so the keep rule runs over a frozen
+    index and tests feed it and an independent oracle the same
+    centroids. The "max similarity to an EARLIER member" is a
+    cell-keyed equi-join (a earlier than b by (cent_sim DESC, vec_id
+    ASC)) + groupBy max; cosines are rounded to 6 decimals before the
+    eps comparison, so the reported values and the keep decision agree.
     """
     from pyspark.sql import functions as F
 

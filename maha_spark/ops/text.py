@@ -156,7 +156,7 @@ def text_stats_frame(docs: DataFrame) -> DataFrame:
     CollapseProject refuses to re-inline — every vote / distinct /
     fold now runs exactly once per row. Value-identity with the
     un-staged form (and transitively with the DuckDB oracle) is pinned
-    by tests/test_r13_hardening.py."""
+    by tests/test_ops_determinism.py."""
     in_en = _in_list(STOPWORDS["en"])
     votes = {lang: f"size(filter(w, x -> x IN ({_in_list(sw)}))) AS v_{lang}"
              for lang, sw in STOPWORDS.items() if lang != "en"}

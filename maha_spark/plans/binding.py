@@ -85,19 +85,9 @@ def _cache_max_bytes() -> int:
                               CACHE_MAX_BYTES_DEFAULT))
 
 
-#: (path, root mtime) -> on-disk bytes — a dt-partitioned fact has
-#: thousands of files and the size gate must not re-walk them per
-#: table() call; keying on the root mtime invalidates the memo when the
-#: table is rewritten in-process (an overwrite updates the directory)
-_PATH_BYTES_CACHE: dict[tuple[str, float], int] = {}
-
-
 def _path_bytes(path: str) -> int:
     """Total on-disk bytes of a parquet file or directory tree (cheap
-    metadata walk; no data read). Memoized per (path, version)."""
-    key = (path, _mtime(path))
-    if key in _PATH_BYTES_CACHE:
-        return _PATH_BYTES_CACHE[key]
+    metadata walk; no data read)."""
     if os.path.isfile(path):
         total = os.path.getsize(path)
     else:
@@ -110,7 +100,6 @@ def _path_bytes(path: str) -> int:
                     total += os.path.getsize(os.path.join(root, f))
                 except OSError:
                     pass
-    _PATH_BYTES_CACHE[key] = total
     return total
 
 
@@ -135,9 +124,6 @@ CACHE_MAX_ROWS_DEFAULT = 200_000_000
 #: spaced files bound the metadata reads on a 2500-file layout
 _ROWS_SAMPLE_FILES = 8
 
-#: (path, root mtime) -> estimated total rows
-_EST_ROWS_CACHE: dict[tuple[str, float], int] = {}
-
 
 def _cache_max_rows() -> int:
     return int(os.environ.get("MAHA_SPARK_CACHE_MAX_ROWS",
@@ -151,9 +137,6 @@ def _est_rows(path: str) -> int:
     single file; on a multi-file tree the rows-per-byte of the sample is
     applied to the total tree size. Unreadable/non-parquet paths
     estimate 0 (the disk-bytes gate still applies)."""
-    key = (path, _mtime(path))
-    if key in _EST_ROWS_CACHE:
-        return _EST_ROWS_CACHE[key]
     if os.path.isfile(path):
         files = [path]
     else:
@@ -183,11 +166,12 @@ def _est_rows(path: str) -> int:
         rows = 0  # fall back to the disk-bytes gate alone
     if rows and not full and sampled_bytes:
         rows = int(rows / sampled_bytes * total_bytes)
-    _EST_ROWS_CACHE[key] = rows
     return rows
 
 
 def _should_cache(path: str) -> bool:
+    """The size gates, walked once per ``_DF_CACHE`` miss (a new
+    session, path or table version)."""
     return (os.environ.get("MAHA_SPARK_CACHE", "1") == "1"
             and _path_bytes(path) <= _cache_max_bytes()
             and _est_rows(path) <= _cache_max_rows())

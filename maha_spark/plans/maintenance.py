@@ -37,7 +37,7 @@ the freq-compaction swap, the ExactSubstr file-stat probe) routes
 through the Hadoop FileSystem gateway, so the rollup and compaction
 legs run unchanged on scheme-qualified (``s3a://``-style) artifact
 roots — the same portability contract as the version stamps they
-advance (pinned over ``file://`` in ``tests/test_r12_hardening.py``).
+advance (pinned over ``file://`` in ``tests/test_maintenance_cycle.py``).
 Scope caveat: the skipping-SIDECAR legs (advisor build + explicit
 refresh bodies) keep ``plans/skipping.py``'s documented local-FS
 driver-side index files; on an object store, point ``skip_base_dir``

@@ -27,7 +27,7 @@ Design constraints honored:
   ``shiftleft``), pure codegen, no ``collect_set`` of per-file value
   sets (whose state would scale with per-file ndv). ``days=`` rebuilds
   only the restated ``dt=`` directories — the same incremental contract
-  as ``refresh_recommendation`` — and the sidecar swap is atomic per
+  as ``refresh_rollup`` — and the sidecar swap is atomic per
   column file.
 * **Driver-side probe is O(index).** The sidecar has one row per
   (file, column): ~10^5-10^6 rows at 100 TB — the probe is a filter +
@@ -116,7 +116,7 @@ def index_stale(table_dir: str, index_dir: str, col: str) -> bool:
     scan, never prune. Detection is the table VERSION
     (plans/versioning.py: the explicit ``_table_version`` stamp every
     engine-maintained rewrite bumps — ``overwrite_day_partitions`` and
-    through it compaction, ``refresh_recommendation``, the
+    through it compaction, ``refresh_rollup``, the
     materializers — with root mtime as the local-FS fallback; object
     stores have no directory mtime, the stamp is the portable
     contract). External writers that mutate day directories without

@@ -7,7 +7,7 @@ The reference leaves rollup design to the cube author (fact/Fact.scala
 module closes that loop: feed it the ``RequestLogEntry`` stream the
 engine already writes (``log/request_log.py``) and it returns ranked
 ``RollupRecommendation``s — each one a grain the existing machinery can
-materialize (``examples/contract.py`` materializers), register
+materialize (``registry/materializer.py``), register
 (``FactTable`` + ``DimCol(foreign_key=...)`` / ``materializes=...``)
 and serve through the join-aware candidate selection
 (``model/request_model.py`` chain rebasing).

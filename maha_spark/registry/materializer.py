@@ -1,37 +1,50 @@
-"""Generic rollup materializer: turn a ``RollupRecommendation`` into a
-physical aggregate table plus the ``FactTable`` declaration that serves
-it — the apply side of the advisor loop (advise → materialize →
-register → the planner serves it through the existing candidate
-selection and chain rebasing).
+"""Rollup materializer: build the rows of a declared rollup
+``FactTable`` (``FactBuilder.newRollUp`` / ``withNewGrain``,
+fact/Fact.scala:867,1385) from its cube's base fact, and maintain them.
 
-The hand-built rollups (``examples/contract.py`` lineitem_daily /
-lineitem_daily_nation) are the semantic model; this module generalizes
-their conventions to any cube in the registry:
+One builder, ``rollup_frame``, serves every rollup: the contract's
+declared tables (``examples/contract.py``) and the advisor's
+(``rollup_table_from_recommendation``). It reads everything from the
+declaration:
 
-* group keys: the day column stored day-truncated UNDER ITS OWN NAME
-  (the hand-built convention), the recommendation's physical fact dims,
-  one aggregate-join FK per chain (the entry dim's primary key, chain
-  REBASING re-enters there), and denormalized dim attributes
-  (``DimCol.materializes``) for dims shallower than the entry point;
-* metric partials: every base ``FactCol`` whose rollup re-aggregates
-  losslessly from a stored partial — Sum, Count (stored as a partial
-  count, re-declared SumRollup), Max, Min, RoundedSum, and Filtered
+* group keys: the day column truncated to the table's grain under its
+  own name, the stored base-fact dims, each stored FK the base lacks
+  (``DimCol(foreign_key=...)``: the entry dim's primary key under the
+  declared name; chain REBASING re-enters there) and each denormalized
+  dim attribute (``DimCol.materializes``). The last two come from one
+  build-time LEFT join per base FK (``_chain_frame``); exactly one base
+  FK must reach each such dim;
+* metric partials: each stored non-derived ``FactCol`` is its base
+  column's aggregate through the planner's own renderer
+  (``Planner._agg_expr``: expression, filter and rollup), so build-time
+  partials and query-time aggregation cannot drift;
+* a ``dt`` date column for the day-partitioned layout.
+
+``materialize_rollup`` writes the table flat or day-partitioned;
+``refresh_rollup`` rewrites a restated day range of the partitioned
+layout (self-compacting, and refreshing the table's skipping sidecar).
+
+The advisor's declaration (``rollup_table_from_recommendation``) stores:
+
+* the recommendation's physical fact dims, one aggregate-join FK per
+  chain (``{entry}_fk``) and the chain's materialized attributes;
+* every base ``FactCol`` whose rollup re-aggregates losslessly from a
+  stored partial — Sum, Count (stored as a partial count, re-declared
+  SumRollup), Max, Min, RoundedSum on integers, Histogram and Filtered
   (the condition collapses at build; the partial re-declares as the
-  base rollup) — computed with the PLANNER'S OWN aggregation renderer
-  (``Planner._agg_expr``), so build-time partials and query-time
-  aggregation cannot drift;
-* carried declarations: derived dim/fact expressions whose references
-  all resolve to stored columns are re-declared verbatim (they
-  recompute over the partials at query time, exactly like the
-  hand-built tables carry ``revenue`` over ``disc_price_dec``);
-* everything else — Average, Cardinality (exact and approx), Noop, HLL
-  — is EXCLUDED from the table's columns, so requests needing those
-  metrics fail column coverage and correctly fall back to the base
-  fact. (The hand-built tables store such metrics only with explicit
-  grain guards / quantization; automating that is a modeling decision,
-  not a mechanical one.)
+  base rollup);
+* derived dim/fact expressions whose references all resolve to stored
+  columns, re-declared verbatim (they recompute over the partials at
+  query time, as the contract tables carry ``revenue`` over
+  ``disc_price_dec``).
 
-Float caveat the hand-built tables avoid by cents-quantizing: double
+Everything else — Average, Cardinality (exact and approx), Noop, HLL —
+is left out of the advised table, so requests needing those metrics
+fail column coverage and fall back to the base fact. (The contract
+tables store such metrics with explicit grain guards; automating that
+is a modeling decision, not a mechanical one.)
+
+Float caveat the contract tables avoid by cents-quantizing: double
 partials re-aggregate associatively only up to IEEE rounding, so a
 rollup-served SUM can differ from the raw SUM in the last ulps. Quantize
 metric columns (as the contract cubes do) when bit-identity matters.
@@ -47,15 +60,18 @@ from __future__ import annotations
 import dataclasses
 import os
 import re
+from types import SimpleNamespace
 from typing import Optional
 
 from ..core.columns import (_PLACEHOLDER, DerivedDimCol, DerivedFactCol,
                             DimCol, FactCol)
+from ..core.grain import DAILY
 from ..core.rollup import (CountRollup, FilteredRollup, MaxRollup,
                            MinRollup, RoundedSumRollup, SumRollup)
 from ..registry.cube import FactTable, PublicFact, Registry
 
-__all__ = ["rollup_table_from_recommendation",
+__all__ = ["rollup_frame", "materialize_rollup", "refresh_rollup",
+           "rollup_table_from_recommendation",
            "materialize_recommendation", "refresh_recommendation",
            "apply_recommendation"]
 
@@ -84,7 +100,7 @@ def _carried_rollup(r, dtype) -> Optional[object]:
     if isinstance(r, RoundedSumRollup):
         # round(sum(round(partials))) == round(sum(raw)) only when the
         # partials carry no sub-scale residue — integer columns (the
-        # hand-built cents convention); a double partial loses up to a
+        # contract's cents convention); a double partial loses up to a
         # whole rounding unit per grain group
         if isinstance(dtype, IntType):
             return RoundedSumRollup(scale=r.scale)
@@ -104,11 +120,12 @@ def _expr_refs(col) -> set[str]:
 def rollup_table_from_recommendation(registry: Registry, cube: PublicFact,
                                      rec, name: str) -> FactTable:
     """The ``FactTable`` declaration serving ``rec``'s grain (append it
-    to ``cube.tables`` BEFORE building the engine/model)."""
+    to ``cube.tables`` BEFORE building the engine/model). Its rows are
+    day-truncated, so it declares the DAILY grain whatever the base's."""
     base = cube.base_table
     day_col = base.day_column
     cols: dict = {}
-    # day key: same name, day grain (is_day_column carries over)
+    # day key: same name (is_day_column carries over)
     cols[day_col] = base.columns[day_col]
     for c in rec.fact_cols:
         cols[c] = base.columns[c]
@@ -156,7 +173,7 @@ def rollup_table_from_recommendation(registry: Registry, cube: PublicFact,
                                if n != day_col
                                and isinstance(cols[n], DimCol))
     return FactTable(
-        name=name, columns=cols, grain=base.grain, day_column=day_col,
+        name=name, columns=cols, grain=DAILY, day_column=day_col,
         cost=rec.suggested_cost, partition_columns=["dt"],
         discarded=set(base.columns) - set(cols),
         grain_cols=grain)
@@ -180,8 +197,7 @@ def _chain_frame(binding, registry: Registry, base: FactTable, enc):
     attribute columns. Walks the UNION of snowflake branches that carry
     a target dim (forked snowflakes join every needed branch, not just
     one path) with LEFT joins (orphan rows keep NULLs, matching
-    query-time left_outer semantics — the ADVICE-fix convention the
-    hand-built nation rollup follows).
+    query-time left_outer semantics).
 
     Column-name collisions across dim tables along one path would break
     the accumulated select; TPC-H-style per-table prefixes avoid it, and
@@ -254,85 +270,115 @@ def _chain_frame(binding, registry: Registry, base: FactTable, enc):
     return out, fk_col
 
 
-def _recommendation_frame(spark, binding, registry: Registry,
-                          cube: PublicFact, rec, name: str,
-                          fact_df=None):
-    """The rollup's rows at its materialized grain (with the ``dt``
-    date column) — shared by the full materializer and the incremental
-    day-range refresh so both produce bit-identical rows. Partials are
-    computed with the planner's own aggregation renderer
-    (``Planner._agg_expr``) so build and serve cannot drift."""
+def _base_fk(registry: Registry, base: FactTable, dim: str) -> str:
+    """The one base FK column whose dimension chain reaches ``dim``."""
+    fks = []
+    for n, c in base.columns.items():
+        if isinstance(c, DimCol) and c.foreign_key:
+            try:
+                registry.find_dimension_path(c.foreign_key, dim)
+            except KeyError:
+                continue
+            fks.append(n)
+    if len(fks) != 1:
+        raise ValueError(
+            f"{len(fks)} foreign keys of {base.name!r} reach dim {dim!r} "
+            f"({fks}); a stored dim column needs exactly one")
+    return fks[0]
+
+
+def _chains(registry: Registry, base: FactTable, table: FactTable) -> list:
+    """The build-time joins that fill ``table``'s stored dims the base
+    lacks, one per base FK, in the shape ``_chain_frame`` reads (a
+    ``ChainEncoding`` whose stored FK keeps its declared name)."""
+    chains: dict[str, SimpleNamespace] = {}
+    for n, c in table.columns.items():
+        if not isinstance(c, DimCol) or (n in base.columns
+                                         and not c.materializes):
+            continue
+        dim = c.materializes.split(".", 1)[0] if c.materializes \
+            else c.foreign_key
+        if dim is None:
+            raise ValueError(
+                f"stored dim {n!r} of {table.name!r} is not a base column, "
+                f"a foreign key or a materialized attribute")
+        fk = _base_fk(registry, base, dim)
+        ch = chains.setdefault(fk, SimpleNamespace(
+            fact_fk_col=fk, entry_dim=None, suggested_fk=None,
+            materialized=()))
+        if c.materializes:
+            ch.materialized += ((dim, None, c.materializes.split(".", 1)[1]),)
+        elif ch.entry_dim is None:
+            ch.entry_dim, ch.suggested_fk = dim, n
+        else:
+            raise ValueError(f"{table.name!r} stores two foreign keys "
+                             f"through {fk!r}")
+    return list(chains.values())
+
+
+def rollup_frame(spark, binding, registry: Registry, cube: PublicFact,
+                 table: FactTable, fact_df=None):
+    """The rows of the declared rollup ``table`` at its grain, with the
+    ``dt`` date column, built from ``cube``'s base fact (or ``fact_df``,
+    a bounded scan of it) — the one builder behind every materialize and
+    refresh, so both produce bit-identical rows (see the module
+    docstring for what it reads from the declaration)."""
     from pyspark.sql import functions as F
 
     from ..plans.planner import Planner
 
     base = cube.base_table
-    table = rollup_table_from_recommendation(registry, cube, rec, name)
-    planner = Planner(spark, binding)
+    day = base.day_column
     df = fact_df if fact_df is not None else binding.table(base.name)
-    day_col = base.day_column
-
-    # attach each chain's stored columns via a build-time join
-    for enc in rec.chains:
-        if enc.entry_dim is None and not enc.materialized:
-            continue
-        jf, fk_col = _chain_frame(binding, registry, base, enc)
-        df = df.join(F.broadcast(jf),
-                     df[fk_col] == jf["__join_key"], "left") \
-               .drop("__join_key")
-
-    keys = [F.date_trunc("day", F.col(day_col)).alias(day_col)]
-    keys += [F.col(c) for c in rec.fact_cols]
-    for enc in rec.chains:
-        if enc.entry_dim is not None:
-            keys.append(F.col(enc.suggested_fk))
-        for _dn, _a, phys in enc.materialized:
-            keys.append(F.col(phys))
-    # aggregate with the BASE table's column definitions (expr + original
-    # rollup — COUNT(*) partials, filtered sums, row-level expressions),
-    # stored under the rollup's re-declared name
+    for ch in _chains(registry, base, table):
+        jf, fk = _chain_frame(binding, registry, base, ch)
+        df = df.join(F.broadcast(jf), df[fk] == jf["__join_key"],
+                     "left").drop("__join_key")
+    keys = [F.date_trunc(table.grain.trunc_unit, F.col(day)).alias(day)]
+    for n, c in table.columns.items():
+        if isinstance(c, DimCol) and n != day:
+            src = c.materializes.split(".", 1)[1] if c.materializes else n
+            keys.append(F.col(src).alias(n))
+    planner = Planner(spark, binding)
     aggs = [planner._agg_expr(base.columns[n], base, df).alias(n)
-            for n, c in table.columns.items()
-            if isinstance(c, FactCol) and not isinstance(c, DerivedFactCol)]
+            for n, c in table.columns.items() if isinstance(c, FactCol)]
     return (df.groupBy(*keys).agg(*aggs)
-            .withColumn("dt", F.to_date(F.col(day_col))))
+            .withColumn("dt", F.to_date(F.col(day))))
 
 
-def materialize_recommendation(spark, binding, registry: Registry,
-                               cube: PublicFact, rec, dst_dir: str,
-                               name: str, partitioned: bool = False) -> str:
-    """Write the physical aggregate for ``rec`` under ``dst_dir``.
+def materialize_rollup(spark, binding, registry: Registry,
+                       cube: PublicFact, table: FactTable, dst_dir: str,
+                       partitioned: bool = False) -> str:
+    """Write the declared rollup ``table`` under ``dst_dir``.
 
     ``partitioned=False`` writes flat ``{name}.parquet``;
     ``partitioned=True`` writes the Hive day-partitioned layout
-    (``{name}/dt=.../``, one file per day) that
-    ``refresh_recommendation`` maintains incrementally."""
+    (``{name}/dt=.../``, one file per day) that ``refresh_rollup``
+    maintains incrementally."""
     from pyspark.sql import functions as F
 
-    out = _recommendation_frame(spark, binding, registry, cube, rec, name)
+    out = rollup_frame(spark, binding, registry, cube, table)
     if partitioned:
-        dst = os.path.join(dst_dir, name)
+        dst = os.path.join(dst_dir, table.name)
         (out.repartition(F.col("dt")).write.mode("overwrite")
             .partitionBy("dt").parquet(dst))
     else:
-        dst = os.path.join(dst_dir, f"{name}.parquet")
+        dst = os.path.join(dst_dir, f"{table.name}.parquet")
         out.write.mode("overwrite").parquet(dst)
     return dst
 
 
-def refresh_recommendation(spark, binding, registry: Registry,
-                           cube: PublicFact, rec, dst_dir: str, name: str,
-                           from_day: str, to_day: str,
-                           compact_target_mb: Optional[int] = 256) -> str:
+def refresh_rollup(spark, binding, registry: Registry, cube: PublicFact,
+                   table: FactTable, dst_dir: str, from_day: str,
+                   to_day: str,
+                   compact_target_mb: Optional[int] = 256) -> str:
     """Incrementally refresh ``[from_day, to_day]`` (inclusive,
-    'YYYY-MM-DD') of the PARTITIONED advised rollup from the raw fact:
+    'YYYY-MM-DD') of the PARTITIONED rollup ``table`` from the raw fact:
     the raw scan is bounded to the restated window (partition-pruned on
     a ``dt``-partitioned raw layout) and only those ``dt=`` directories
-    are dynamically overwritten — the maintenance loop for
-    advisor-built tables, same contract as
-    ``examples/contract.py::refresh_lineitem_rollup`` (refreshed rows
-    bit-identical to a full rebuild; untouched days physically
-    untouched).
+    are dynamically overwritten, so late or restated fact data costs the
+    window, not the table. Refreshed rows are bit-identical to a full
+    rebuild; days outside the window are physically untouched.
 
     Each refresh cycle also SELF-COMPACTS the table: small files
     accumulated by out-of-band appends (a streaming sink draining into
@@ -355,7 +401,7 @@ def refresh_recommendation(spark, binding, registry: Registry,
     from ..plans.scale import compact_day_partitions, overwrite_day_partitions
     from ..plans.skipping import refresh_skipping_index, table_index_dir
 
-    dst = os.path.join(dst_dir, name)
+    dst = os.path.join(dst_dir, table.name)
     if not os.path.isdir(dst):
         # refusing beats corrupting: the binding gives a directory
         # precedence over {name}.parquet, so refreshing a flat-layout
@@ -374,16 +420,37 @@ def refresh_recommendation(spark, binding, registry: Registry,
     if "dt" in fact.columns:
         fact = fact.filter(F.col("dt").between(F.lit(from_day),
                                                F.lit(to_day)))
-    frame = _recommendation_frame(spark, binding, registry, cube, rec,
-                                  name, fact_df=fact)
-    overwrite_day_partitions(frame, dst)
+    overwrite_day_partitions(
+        rollup_frame(spark, binding, registry, cube, table, fact), dst)
     if compact_target_mb is not None:
         compact_day_partitions(spark, dst,
                                target_file_mb=compact_target_mb)
-    idx_dir = table_index_dir(dst_dir, name)
+    idx_dir = table_index_dir(dst_dir, table.name)
     if os.path.isdir(idx_dir):
         refresh_skipping_index(spark, dst, idx_dir)
     return dst
+
+
+def materialize_recommendation(spark, binding, registry: Registry,
+                               cube: PublicFact, rec, dst_dir: str,
+                               name: str, partitioned: bool = False) -> str:
+    """``materialize_rollup`` of ``rec``'s declaration."""
+    return materialize_rollup(
+        spark, binding, registry, cube,
+        rollup_table_from_recommendation(registry, cube, rec, name),
+        dst_dir, partitioned=partitioned)
+
+
+def refresh_recommendation(spark, binding, registry: Registry,
+                           cube: PublicFact, rec, dst_dir: str, name: str,
+                           from_day: str, to_day: str,
+                           compact_target_mb: Optional[int] = 256) -> str:
+    """``refresh_rollup`` of ``rec``'s declaration — the maintenance
+    loop for advisor-built tables."""
+    return refresh_rollup(
+        spark, binding, registry, cube,
+        rollup_table_from_recommendation(registry, cube, rec, name),
+        dst_dir, from_day, to_day, compact_target_mb=compact_target_mb)
 
 
 def apply_recommendation(engine, rec, dst_dir: str, name: str,
@@ -394,10 +461,9 @@ def apply_recommendation(engine, rec, dst_dir: str, name: str,
     ``partitioned=True`` when the table will be maintained with
     ``refresh_recommendation``."""
     cube = engine.registry.fact(rec.cube)
-    materialize_recommendation(engine.spark, engine.binding,
-                               engine.registry, cube, rec, dst_dir, name,
-                               partitioned=partitioned)
     table = rollup_table_from_recommendation(engine.registry, cube,
                                              rec, name)
+    materialize_rollup(engine.spark, engine.binding, engine.registry, cube,
+                       table, dst_dir, partitioned=partitioned)
     cube.tables.append(table)
     return table

@@ -41,7 +41,8 @@ from maha_spark.core.freqitems import freq_items_partial  # noqa: E402
 from maha_spark.engine import engine_for_dir  # noqa: E402
 from maha_spark.examples.contract import build_contract_registry  # noqa: E402
 from maha_spark.ops import substring  # noqa: E402
-from maha_spark.plans.maintenance import run_maintenance_cycle  # noqa: E402
+from maha_spark.plans.maintenance import (MaintenanceCycleError,  # noqa: E402
+                                          run_maintenance_cycle)
 from maha_spark.plans.versioning import table_version  # noqa: E402
 from maha_spark.registry.advisor import (_NdvProbe,  # noqa: E402
                                          recommend_rollups)
@@ -252,3 +253,83 @@ def test_maintenance_rewrites_release_their_checkpoints(spark, tmp_path):
     assert days == ["2024-01-01", "2024-01-02"]   # really compacted
     assert spark.read.parquet(tbl).count() == 400
     assert persisted_ids() == before
+
+
+# ---------------------------------- file:// roots and step isolation
+def _stage_freq(spark, pdir):
+    for bid, vals in enumerate([[1, 1, 2], [1, 3, 3, 3]]):
+        rows = [(dt.date(2024, 1, 1), str(v)) for v in vals]
+        df = spark.createDataFrame(rows, "day date, user_id string")
+        (freq_items_partial(df, ["day"], "user_id")
+         .write.parquet(pdir.rstrip("/") + f"/batch_id={bid}"))
+
+
+@pytest.mark.slow
+def test_maintenance_cycle_over_file_uri(spark, tmp_path):
+    """One full cycle with every artifact root spelled as a file://
+    URI, against a plain-path control staged identically: compacted
+    artifacts bit-identical, stamps advanced through the URI spelling,
+    and the missing explicit sidecar recorded in the (total) report."""
+    froot = str(tmp_path / "uri")
+    lroot = str(tmp_path / "local")
+    os.makedirs(froot), os.makedirs(lroot)
+    pdir_u = "file://" + froot + "/freq_partials"
+    pdir_l = lroot + "/freq_partials"
+    idx_u = "file://" + froot + "/exsub_idx"
+    idx_l = lroot + "/exsub_idx"
+    _stage_freq(spark, pdir_u), _stage_freq(spark, pdir_l)
+    _stage_exsub(spark, idx_u), _stage_exsub(spark, idx_l)
+    fv0, iv0 = table_version(pdir_u), table_version(idx_u)
+
+    missing = "file://" + froot + "/no_such_sidecar"
+    report = run_maintenance_cycle(
+        spark,
+        skip_tables=[(froot, missing)],
+        freq_partials=[pdir_u], exsub_indexes=[idx_u],
+        compact_target_mb=64)
+    control = run_maintenance_cycle(
+        spark, freq_partials=[pdir_l], exsub_indexes=[idx_l],
+        compact_target_mb=64)
+
+    # bit-identical artifacts across the two spellings
+    assert _rows(spark, pdir_u) == _rows(spark, pdir_l)
+    assert (_rows(spark, substring._windows_path(idx_u))
+            == _rows(spark, substring._windows_path(idx_l)))
+    assert report["freq"][pdir_u] == control["freq"][pdir_l] >= 1
+    assert report["exsub"][idx_u] == control["exsub"][idx_l] > 0
+    # stamps advanced, visible through the URI spelling
+    assert report["versions"][pdir_u] > max(fv0, 0.0)
+    assert report["versions"][idx_u] > max(iv0, 0.0)
+    # the nonexistent explicit sidecar is reported, not silently dropped
+    assert report["sidecars"]["_missing"] == [missing]
+    assert report["errors"] == []
+
+
+def test_maintenance_cycle_isolates_step_failures(spark, engine,
+                                                  tmp_path, monkeypatch):
+    """A failing rollup refresh must not starve the compaction legs:
+    the freq table still compacts, the report carries (step, artifact,
+    error), and the summary MaintenanceCycleError re-raises with the
+    report attached."""
+    import maha_spark.registry.materializer as mat
+
+    def _boom(*a, **k):
+        raise RuntimeError("disk full")
+    monkeypatch.setattr(mat, "refresh_recommendation", _boom)
+
+    pdir = str(tmp_path / "freq_partials")
+    _stage_freq(spark, pdir)
+    with pytest.raises(MaintenanceCycleError) as ei:
+        run_maintenance_cycle(
+            spark, engine=engine,
+            rollups=[{"cube": object(), "rec": None,
+                      "dst_dir": str(tmp_path / "roll"), "name": "r",
+                      "from_day": "2024-01-01", "to_day": "2024-01-02"}],
+            freq_partials=[pdir])
+    report = ei.value.report
+    assert len(report["errors"]) == 1
+    err = report["errors"][0]
+    assert err["step"] == "rollup" and "disk full" in err["error"]
+    # the independent compaction leg still ran and stamped
+    assert report["freq"][pdir] >= 1
+    assert report["versions"][pdir] > 0

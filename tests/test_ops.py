@@ -478,3 +478,20 @@ def test_simhash_pairs_value_collapse_boilerplate(spark, tmp_path):
     out = dedup_simhash_pairs(spark, sf)
     assert out.filter("hamming = 0").count() == 500 * 499 // 2
     assert out.filter("a_id = 9000 OR b_id = 9000").count() == 0
+
+
+# ---------------------------------------------- self-cogroup pruning
+def test_self_cogroup_ops_survive_count_only_consumers(spark, sf_dir):
+    """Both sides of the block-pair cogroups derive from one frame;
+    without fresh right-side aliases, a count()-shaped consumer lets
+    the optimizer prune the right child's payload columns (shared
+    attribute ids) and the pandas kernel crashes on a frame missing
+    vec_id/embedding. Pin count == collect for both kernels."""
+    from maha_spark.ops.common import load_table
+    from maha_spark.ops.similarity import (PAIR_COS_T, cos_neighbor_stats,
+                                           exact_cos_pairs)
+    emb = load_table(spark, sf_dir, "embeddings")
+    pairs = exact_cos_pairs(emb, PAIR_COS_T)
+    assert pairs.count() == len(pairs.collect())
+    stats = cos_neighbor_stats(emb, PAIR_COS_T)
+    assert stats.count() == len(stats.collect()) == emb.count()

@@ -1,6 +1,7 @@
-"""SemDeDup (ops/semdedup.py): exact kernel oracle in independent numpy
-over the Spark-produced centroids/assignment, planted-duplicate
-semantics, and determinism."""
+"""SemDeDup (ops/semdedup.py): the keep rule against an independent
+numpy oracle over the Spark-produced centroids/assignment,
+planted-duplicate semantics, determinism, and the contract entry's
+DuckDB oracle."""
 
 from __future__ import annotations
 
@@ -8,7 +9,6 @@ import os
 import sys
 
 import numpy as np
-import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -22,8 +22,8 @@ def _numpy_oracle(emb_rows, cent_rows, assign_rows, eps):
     """Independent reimplementation of the keep rule: per cluster, order
     by (round(cos-to-centroid,6) DESC, vec_id ASC); drop a member iff an
     earlier member's rounded cosine is >= eps. Per-pair dots are computed
-    one at a time (np.dot on vectors), not via the kernel's gram-matrix
-    matmul — rounding to 6 decimals absorbs summation-order ULPs."""
+    one at a time (np.dot on vectors), not via the SQL fold — rounding
+    to 6 decimals absorbs summation-order ULPs."""
     vecs = {r.vec_id: np.asarray(r.embedding, dtype=np.float64)
             for r in emb_rows}
     cents = {r.cell: np.asarray(r.centroid, dtype=np.float64)
@@ -55,7 +55,7 @@ def _numpy_oracle(emb_rows, cent_rows, assign_rows, eps):
 def test_matches_independent_numpy_oracle(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     cents = similarity.ivf_centroids(emb).cache()
-    got = semdedup.semdedup_frame(emb, cents, EPS).collect()
+    got = semdedup.semdedup_sql_frame(emb, cents, EPS).collect()
     assign = similarity._ivf_assign(emb, cents, probe=1).collect()
     expect = _numpy_oracle(emb.collect(), cents.collect(), assign, EPS)
     assert len(got) == len(expect) == emb.count()
@@ -82,7 +82,7 @@ def test_planted_duplicate_dropped_keep_lower_id(spark):
     emb = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
     cents = similarity.ivf_centroids(emb, k=2).cache()
     out = {r.vec_id: r for r in
-           semdedup.semdedup_frame(emb, cents, eps=0.999).collect()}
+           semdedup.semdedup_sql_frame(emb, cents, eps=0.999).collect()}
     assert out[4].keep, out[4]          # first occurrence is the rep
     assert not out[13].keep, out[13]    # duplicate dropped
     assert out[13].max_prior_sim == 1.0
@@ -95,22 +95,6 @@ def test_determinism(spark, sf_dir):
     assert a == b
 
 
-def test_sql_twin_matches_kernel(spark, sf_dir):
-    """The join-spelled twin (semdedup_sql_frame) and the Arrow kernel
-    (semdedup_frame) agree bit-for-bit at 6-dp rounding over the same
-    centroids — both Lloyd-trained and seed-only."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    for iters in (0, 2):
-        cents = similarity.ivf_centroids(emb, iters=iters).cache()
-        a = sorted(map(tuple,
-                       semdedup.semdedup_frame(emb, cents, EPS).collect()))
-        b = sorted(map(tuple,
-                       semdedup.semdedup_sql_frame(emb, cents,
-                                                   EPS).collect()))
-        cents.unpersist()
-        assert a == b and len(a) > 0, f"iters={iters}"
-
-
 def test_op_matches_duckdb_oracle(spark, duck, sf_dir):
     """The contract entry (seed centroids + SQL keep rule) against its
     DuckDB twin — the parity the driver hash-checks."""
@@ -119,48 +103,3 @@ def test_op_matches_duckdb_oracle(spark, duck, sf_dir):
            duck.execute(semdedup.semdedup_oracle()).fetchall()]
     assert got == exp and len(got) > 0
     assert any(not r[4] for r in got), "oracle corpus drops nothing"
-
-
-@pytest.mark.slow
-def test_hot_cluster_split_bounds_kernel_input(spark):
-    """VERDICT r7 #3: a planted hot cluster (a tight jittered blob that
-    single-cell k-means would put in one cell) is recursively split
-    below max_cell_size, the kernel runs without an oversized gram
-    matrix, and exact duplicates inside the blob are still dropped."""
-    rng = np.random.RandomState(11)
-    blob_center = rng.rand(64)
-    blob = blob_center + 0.05 * rng.rand(300, 64)
-    spread = rng.rand(60, 64) * 5
-    mat = np.vstack([blob, spread])
-    mat[299] = mat[0]  # exact duplicate inside the blob
-    rows = [(i, [float(x) for x in mat[i]]) for i in range(len(mat))]
-    emb = spark.createDataFrame(rows,
-                                "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-    cents = similarity.ivf_centroids(emb, k=2).cache()
-    from maha_spark.ops.semdedup import _assign_bounded
-    bounded = _assign_bounded(emb, cents, max_cell_size=80)
-    sizes = [r["count"] for r in bounded.groupBy("cell").count().collect()]
-    assert max(sizes) <= 80 and sum(sizes) == 360
-    out = {r.vec_id: r for r in
-           semdedup.semdedup_frame(emb, cents, eps=0.9999,
-                                   max_cell_size=80).collect()}
-    cents.unpersist()
-    assert len(out) == 360
-    assert out[0].keep and not out[299].keep  # dup dropped, rep kept
-    assert out[299].max_prior_sim == 1.0
-
-
-@pytest.mark.slow
-def test_unsplittable_identical_cell_raises(spark):
-    """> max_cell_size IDENTICAL vectors tie to the same sub-centroid in
-    every round — the guard raises loudly instead of OOMing a worker."""
-    import pytest
-    v = [float(x) for x in np.arange(64) / 64.0]
-    rows = [(i, v) for i in range(40)]
-    emb = spark.createDataFrame(rows,
-                                "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-    cents = similarity.ivf_centroids(emb, k=2).cache()
-    with pytest.raises(ValueError, match="cannot be split"):
-        semdedup.semdedup_frame(emb, cents, eps=0.9,
-                                max_cell_size=10).collect()
-    cents.unpersist()

@@ -7,6 +7,8 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from maha_spark.ops import substring  # noqa: E402
@@ -440,3 +442,97 @@ def test_remove_docs_erases_influence_and_allows_reingest(spark, tmp_path):
     # re-ingest of the erased id passes the append-contract probe
     substring.update_exsub_index(spark, idx, corpus.filter("doc_id = 1"))
     assert substring.exsub_incremental(spark, idx, batch).count() == 1
+
+
+# ------------------------------------------- batch-path crash safety
+def _corpus(spark, rows):
+    return spark.createDataFrame(
+        [(i, t, "en", "synthetic", len(t)) for i, t in rows],
+        "doc_id long, text string, lang string, source string, "
+        "n_chars long")
+
+
+def _text(tag: str) -> str:
+    return " ".join(f"{tag}{i}" for i in range(substring.EXSUB_L + 2))
+
+
+def _sidecar_ids(spark, idx) -> set:
+    return {r.doc_id for r in
+            spark.read.parquet(substring._docs_path(idx)).collect()}
+
+
+def _windows_doc_counts(spark, idx) -> dict:
+    rows = (spark.read.parquet(substring._windows_path(idx))
+            .groupBy("doc_id").count().collect())
+    return {r.doc_id: r["count"] for r in rows}
+
+
+def test_exsub_crash_between_appends_self_heals(spark, tmp_path,
+                                                monkeypatch):
+    """Kill the call between the windows append and the sidecar append
+    (monkeypatched second _window_hashes), then show the NEXT batch
+    call heals: the pending marker triggers a reconcile, the retried
+    batch is loudly rejected (no silent double-count), and a fresh
+    batch proceeds with the invariant restored."""
+    idx = str(tmp_path / "idx")
+    substring.materialize_exsub_index(
+        spark, _corpus(spark, [(i, _text(f"a{i}x")) for i in range(3)]), idx)
+    batch2 = _corpus(spark, [(10, _text("b")), (11, _text("c"))])
+
+    real = substring._window_hashes
+    calls = {"n": 0}
+
+    def torn(docs, length):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise RuntimeError("simulated crash after windows append")
+        return real(docs, length)
+
+    monkeypatch.setattr(substring, "_window_hashes", torn)
+    with pytest.raises(RuntimeError):
+        substring.update_exsub_index(spark, idx, batch2)
+    monkeypatch.setattr(substring, "_window_hashes", real)
+
+    # torn state: batch2's windows landed, the sidecar did not, and the
+    # in-progress marker survives the crash
+    assert os.path.exists(substring._pending_path(idx))
+    assert 10 not in _sidecar_ids(spark, idx)
+    base_counts = _windows_doc_counts(spark, idx)
+    assert 10 in base_counts
+
+    # the RETRY self-heals: the marker forces a reconcile, after which
+    # the probe sees batch2 as already indexed and refuses — the
+    # alternative (a pass) would double-count every batch2 window
+    with pytest.raises(ValueError, match="already indexed"):
+        substring.update_exsub_index(spark, idx, batch2)
+    assert not os.path.exists(substring._pending_path(idx))
+    assert _windows_doc_counts(spark, idx) == base_counts
+    assert 10 in _sidecar_ids(spark, idx)
+
+    # a NEW batch proceeds normally on the healed index
+    substring.update_exsub_index(spark, idx, _corpus(spark,
+                                                   [(20, _text("d"))]))
+    assert not os.path.exists(substring._pending_path(idx))
+    win_ids = set(_windows_doc_counts(spark, idx))
+    assert _sidecar_ids(spark, idx) == win_ids and 20 in win_ids
+
+
+def test_exsub_presidecar_layout_gets_full_sidecar(spark, tmp_path):
+    """On a legacy (pre-sidecar) index layout, an update must reconcile
+    the FULL sidecar from the windows table before its first sidecar
+    append — appending only the batch's ids would create an incomplete
+    sidecar whose probe passes previously indexed doc_ids (the ADVICE
+    double-append bug)."""
+    import shutil
+    idx = str(tmp_path / "legacy")
+    old = _corpus(spark, [(i, _text(f"e{i}y")) for i in range(4)])
+    substring.materialize_exsub_index(spark, old, idx)
+    shutil.rmtree(substring._docs_path(idx))  # simulate legacy layout
+
+    substring.update_exsub_index(spark, idx, _corpus(spark,
+                                                   [(30, _text("f"))]))
+    assert _sidecar_ids(spark, idx) == {0, 1, 2, 3, 30}
+    # the previously indexed ids are rejected again (they would have
+    # slipped through an incomplete batch-only sidecar)
+    with pytest.raises(ValueError, match="already indexed"):
+        substring.update_exsub_index(spark, idx, old.limit(1))

@@ -454,3 +454,41 @@ def test_refresh_keeps_skipping_sidecar_fresh(spark, applied,
                               else f), f
     kept = prune_files(spark, idx, "customer_nation_fk", 3)
     assert kept  # value exists -> non-empty keep from a FRESH sidecar
+
+
+def test_advised_declaration_is_daily_over_an_hourly_base():
+    """The materializer truncates advised rows to the day, so the
+    declaration says DAILY even over the hourly events cube."""
+    from maha_spark.core.grain import DAILY, HOURLY
+    from maha_spark.examples.contract import build_contract_registry
+    from maha_spark.registry.advisor import RollupRecommendation
+    reg = build_contract_registry()
+    cube = reg.fact("events_cube")
+    assert cube.base_table.grain == HOURLY
+    rec = RollupRecommendation(
+        cube="events_cube", fact_table="events", fact_cols=("event_type",),
+        chains=(), est_rows=1, fact_rows=1, coverage=1.0, n_covered=1,
+        n_eligible=1, suggested_cost=1, base_cost=1)
+    t = rollup_table_from_recommendation(reg, cube, rec, "ev_daily")
+    assert t.grain == DAILY
+
+
+def test_stored_dim_needs_exactly_one_base_fk_path():
+    """A stored FK or materialized attribute is joined in through the
+    one base FK whose chain reaches its dim; none or several is a
+    declaration error, not a guess."""
+    from maha_spark.core.columns import DimCol
+    from maha_spark.examples.contract import build_contract_registry
+    from maha_spark.registry.cube import FactTable
+    from maha_spark.registry.materializer import _base_fk
+    reg = build_contract_registry()
+    base = reg.fact("tpch").base_table
+    assert _base_fk(reg, base, "customer_nation") == "l_orderkey"
+    assert _base_fk(reg, base, "supplier_region") == "l_suppkey"
+    with pytest.raises(ValueError, match="0 foreign keys"):
+        _base_fk(reg, base, "no_such_dim")
+    twice = FactTable(name="f", columns={
+        "a": DimCol("a", foreign_key="orders"),
+        "b": DimCol("b", foreign_key="customer")})
+    with pytest.raises(ValueError, match="2 foreign keys"):
+        _base_fk(reg, twice, "customer_nation")

@@ -87,6 +87,39 @@ def test_scope_nesting_checkpoint_and_spawn(spark):
     assert root is not first is not second
 
 
+def test_scopes_caching_one_plan_share_its_entry(spark):
+    """Two scopes caching the same plan share one CacheManager entry:
+    the inner scope neither re-caches nor releases it, so the outer
+    scope's frame stays cached until the outer scope exits."""
+    def plan():
+        return spark.range(5000).selectExpr("id * 7 AS q")
+
+    with Scope():
+        a = scoped_cache(plan())
+        a.count()
+        with Scope() as b:
+            assert scoped_cache(plan()).count() == 5000
+            assert b.held() == 0
+        assert _is_cached(a)
+    assert not _is_cached(a)
+
+
+def test_binding_cached_table_survives_a_scope(spark, sf_dir, tmp_path):
+    """A table the binding caches (small tables stay hot for the
+    session) is not a scope's to release: caching its plan in a scope
+    leaves it cached after the scope exits."""
+    from maha_spark.plans.binding import ParquetBinding
+
+    shutil.copy(os.path.join(sf_dir, "nation.parquet"), str(tmp_path))
+    table = ParquetBinding(spark, str(tmp_path)).table("nation")
+    assert _is_cached(table)
+    with Scope() as scope:
+        scoped_cache(table).count()
+        assert scope.held() == 0
+    assert _is_cached(table)
+    assert ParquetBinding(spark, str(tmp_path)).table("nation") is table
+
+
 def test_scope_bookkeeping_under_thread_contention():
     """Threads caching into one scope while another releases it lose
     no frame: every cached frame is unpersisted exactly once."""
@@ -96,6 +129,8 @@ def test_scope_bookkeeping_under_thread_contention():
     released = []
 
     class Frame:
+        storageLevel = StorageLevel.NONE
+
         def cache(self):
             return self
 

@@ -5,10 +5,13 @@ is dropped, and compact back to one partial per day."""
 
 from __future__ import annotations
 
+import datetime as dt
 import glob
 import os
 import shutil
 import sys
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -149,3 +152,85 @@ def test_replay_from_fresh_checkpoint_is_identical_before_compaction(
          r.freq_items.total)
         for r in spark.read.parquet(pdir).collect())
     assert again == snap
+
+
+# ------------------------------------------- compaction crash safety
+def _freq_events(spark, vals):
+    return spark.createDataFrame(
+        [(dt.date(2024, 1, 1), str(v)) for v in vals],
+        "day date, user_id string")
+
+
+def test_compact_freq_partials_crash_swap_recovers(spark, tmp_path,
+                                                   monkeypatch):
+    """A crash between the source remove and the temp-dir rename leaves
+    the complete merged table in ``.compact-tmp``; the next call
+    finishes the swap before doing anything else and the serve sees the
+    full mass."""
+    pdir = str(tmp_path / "partials")
+    for bid, vals in enumerate([[1, 1, 2], [1, 3, 3, 3]]):
+        (freq_items_partial(_freq_events(spark, vals), ["day"], "user_id")
+         .write.parquet(os.path.join(pdir, f"batch_id={bid}")))
+
+    # the swap is routed through the Hadoop-FS gateway since the r12
+    # object-store work (ops.common.fs_rename), so THAT is the seam to
+    # sever — an os.rename patch no longer intercepts the rename
+    def boom(_spark, src, dst):
+        raise OSError("simulated crash before rename")
+
+    from maha_spark.ops import common as ops_common
+    monkeypatch.setattr(ops_common, "fs_rename", boom)
+    with pytest.raises(OSError, match="simulated crash"):
+        compact_freq_partials(spark, pdir)
+    monkeypatch.undo()
+
+    assert not os.path.isdir(pdir)          # the torn state
+    assert os.path.isdir(pdir + ".compact-tmp")
+    n = compact_freq_partials(spark, pdir)  # self-heals, then compacts
+    assert n >= 1 and not os.path.isdir(pdir + ".compact-tmp")
+    out = spark.read.parquet(pdir).select("day", "freq_items").collect()
+    total = sum(r.freq_items.total for r in out)
+    assert total == 7                        # no event lost or doubled
+    items = {}
+    for r in out:
+        for k, v in r.freq_items["items"].items():
+            items[k] = items.get(k, 0) + v
+    assert items == {"1": 3, "2": 1, "3": 3}
+
+
+def test_compact_freq_partials_crash_before_write_keeps_source(
+        spark, tmp_path, monkeypatch):
+    """A failure while writing the merged temp table leaves the source
+    untouched; the stale temp dir is cleared on the next call."""
+    pdir = str(tmp_path / "p2")
+    (freq_items_partial(_freq_events(spark, [5, 5]), ["day"], "user_id")
+     .write.parquet(os.path.join(pdir, "batch_id=0")))
+    os.makedirs(pdir + ".compact-tmp/garbage")  # stale prior attempt
+    n = compact_freq_partials(spark, pdir)
+    assert n == 1
+    out = spark.read.parquet(pdir).collect()
+    assert sum(r.freq_items.total for r in out) == 2
+
+
+def test_merge_preserves_residual_only_grain(spark):
+    """A grain whose input partials all carry EMPTY items maps used to
+    be dropped by the inner join (its others mass vanished); the merge
+    must be total-preserving for any structurally valid partial."""
+    schema = ("day date, freq_items struct<items:map<string,bigint>,"
+              "others_total:bigint,others_max:bigint,total:bigint>")
+    rows = [
+        (dt.date(2024, 1, 1), ({}, 100, 10, 100)),       # residual-only
+        (dt.date(2024, 1, 1), ({}, 40, 7, 40)),          # residual-only
+        (dt.date(2024, 1, 2), ({"a": 5}, 0, 0, 5)),      # normal grain
+    ]
+    out = (merge_freq_partials(spark.createDataFrame(rows, schema),
+                               ["day"])
+           .collect())
+    d1 = [r for r in out if r.day == dt.date(2024, 1, 1)]
+    assert len(d1) == 1                       # one residual row, no kept
+    p = d1[0].freq_items
+    assert p["items"] == {} and p.total == 140
+    assert p.others_total == 140 and p.others_max == 17  # 0 + (10 + 7)
+    d2 = [r for r in out if r.day == dt.date(2024, 1, 2)]
+    assert len(d2) == 1 and d2[0].freq_items["items"] == {"a": 5}
+    assert d2[0].freq_items.total == 5

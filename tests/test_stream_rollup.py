@@ -5,6 +5,8 @@ Structured Streaming as the maintenance job)."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 
 DAY = {"field": "day", "operator": "between",
@@ -150,3 +152,32 @@ def test_streamed_histogram_partial_bit_matches_batch(spark, sf_dir):
     want = {(r["hour"], r["event_type"]): list(r["h"])
             for r in batch.collect()}
     assert got == want and len(got) > 0
+
+
+# ---------------------------------------- footer-stat sentinel guard
+def _write_parquet(path, arr, name="ts"):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    pq.write_table(pa.table({name: arr}), path)
+
+
+def test_parquet_ts_max_accepts_only_naive_datetimes(tmp_path):
+    import pyarrow as pa
+
+    from maha_spark.streaming.hourly import _parquet_ts_max
+
+    naive = str(tmp_path / "naive.parquet")
+    _write_parquet(naive, pa.array(
+        [dt.datetime(2024, 1, 1, 5), dt.datetime(2024, 1, 2, 7)],
+        type=pa.timestamp("us")))
+    assert _parquet_ts_max(naive) == dt.datetime(2024, 1, 2, 7)
+
+    aware = str(tmp_path / "aware.parquet")
+    _write_parquet(aware, pa.array(
+        [dt.datetime(2024, 1, 1, 5, tzinfo=dt.timezone.utc)],
+        type=pa.timestamp("us", tz="UTC")))
+    assert _parquet_ts_max(aware) is None  # strftime would drop +00:00
+
+    ints = str(tmp_path / "ints.parquet")
+    _write_parquet(ints, pa.array([1704067200], type=pa.int64()))
+    assert _parquet_ts_max(ints) is None   # int + timedelta raises

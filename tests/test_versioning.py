@@ -11,6 +11,9 @@ from __future__ import annotations
 
 import os
 import sys
+import threading
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -164,3 +167,133 @@ def test_skipping_staleness_on_stamp_only_storage(spark, tmp_path,
     refresh_skipping_index(spark, t, idx,
                            days=["2000-01-01", "2000-01-02", "2000-01-03"])
     assert not index_stale(t, idx, "id")
+
+
+# ------------------------------------------- Hadoop-FS helpers on URIs
+def test_fs_helpers_raise_on_a_uri_without_filesystem(spark, tmp_path,
+                                                      monkeypatch):
+    """A scheme-qualified path whose FileSystem fails raises: only
+    scheme-less paths fall back to local I/O. (A local ``exists`` would
+    read False for a remote table, and a local ``touch`` would create
+    ``nosuchfs:/...`` under the working directory.)"""
+    from maha_spark.ops.common import (fs_delete, fs_exists, fs_list_files,
+                                       fs_rename, fs_rmtree, fs_touch)
+    monkeypatch.chdir(tmp_path)
+    uri = "nosuchfs://bucket/tbl"
+    for call in (lambda: fs_exists(spark, uri),
+                 lambda: fs_touch(spark, uri + "/_pending"),
+                 lambda: fs_list_files(spark, uri),
+                 lambda: fs_rename(spark, uri, uri + "_new"),
+                 lambda: fs_rmtree(spark, uri),
+                 lambda: fs_delete(spark, uri + "/_pending")):
+        with pytest.raises(Exception, match="nosuchfs"):
+            call()
+    assert os.listdir(tmp_path) == []
+    # a scheme-less path still works through the same helpers
+    marker = str(tmp_path / "d" / "_pending")
+    fs_touch(spark, marker)
+    assert fs_exists(spark, marker)
+    fs_delete(spark, marker)
+    assert not fs_exists(spark, marker)
+
+
+# -------------------------------------------------- stamps over URIs
+def test_table_version_stamp_roundtrip_over_uri(spark, tmp_path):
+    """Scheme-qualified table roots route stamp I/O through the Hadoop
+    FileSystem API — pinned over file:// (the one scheme the sandbox
+    can serve), where the POSIX spelling of the same directory must see
+    the stamp the URI spelling wrote."""
+    d = tmp_path / "tbl"
+    d.mkdir()
+    uri = "file://" + str(d)
+    v1 = bump_table_version(uri)
+    assert v1 > 0
+    assert abs(table_version(uri) - v1) < 1e-9
+    v2 = bump_table_version(uri)
+    assert v2 > v1
+    # same stamp file, read through plain local I/O
+    assert abs(table_version(str(d)) - v2) < 1e-9
+    # and a local bump is visible through the URI spelling
+    v3 = bump_table_version(str(d))
+    assert v3 > v2 and abs(table_version(uri) - v3) < 1e-9
+
+
+def test_table_version_uri_missing_root(spark, tmp_path):
+    uri = "file://" + str(tmp_path / "nope")
+    assert table_version(uri) == -1.0
+    assert bump_table_version(uri) == -1.0
+
+
+def test_fs_gateway_cached_per_scheme_authority(spark, tmp_path):
+    """A second version probe reuses the SAME FileSystem instance —
+    no new JVM newInstance per probe (the r11 per-probe create+close
+    was a per-request tax on URI-rooted serving)."""
+    d = tmp_path / "tbl"
+    d.mkdir()
+    uri = "file://" + str(d)
+    versioning._FS_CACHE.clear()
+    assert bump_table_version(uri) > 0
+    assert len(versioning._FS_CACHE) == 1
+    fs1, _ = versioning._hadoop_fs(uri)
+    for _ in range(5):
+        table_version(uri)
+    fs2, _ = versioning._hadoop_fs(uri)
+    assert fs1 is fs2
+    assert len(versioning._FS_CACHE) == 1
+    # a different path under the same (scheme, authority) shares it
+    fs3, _ = versioning._hadoop_fs("file://" + str(tmp_path))
+    assert fs3 is fs1 and len(versioning._FS_CACHE) == 1
+
+
+def test_concurrent_uri_bumpers_leave_valid_stamp(spark, tmp_path):
+    """Hammer one table root from several threads through the URI
+    path while a reader polls: every read parses as a complete float
+    (writer-unique tmps + overwrite rename — no partial stamp, no
+    delete-to-rename hole), and no ``.tmp`` debris survives."""
+    d = tmp_path / "tbl"
+    d.mkdir()
+    uri = "file://" + str(d)
+    assert bump_table_version(uri) > 0
+    errors: list[str] = []
+    stop = threading.Event()
+
+    def _bump():
+        for _ in range(15):
+            if bump_table_version(uri) <= 0:
+                errors.append("bump failed")
+
+    def _read():
+        while not stop.is_set():
+            v = table_version(uri)
+            if not (isinstance(v, float) and v > 0):
+                errors.append(f"bad read: {v!r}")
+
+    threads = [threading.Thread(target=_bump) for _ in range(3)]
+    reader = threading.Thread(target=_read)
+    reader.start()
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    stop.set()
+    reader.join()
+    assert not errors, errors[:5]
+    # the final stamp is a complete value both spellings agree on
+    assert table_version(uri) == table_version(str(d)) > 0
+    leftovers = [f for f in os.listdir(d) if f.endswith(".tmp")]
+    assert not leftovers, leftovers
+
+
+def test_posix_bump_tmp_is_writer_unique(tmp_path):
+    """The plain-path bump also names its tmp uniquely (version+pid):
+    the fixed '.tmp' spelling let two concurrent local bumpers
+    interleave writes into one file."""
+    d = tmp_path / "tbl"
+    d.mkdir()
+    p1 = versioning._tmp_stamp_path(str(d), 1.5)
+    p2 = versioning._tmp_stamp_path(str(d), 2.5)
+    assert p1 != p2
+    assert os.path.basename(p1).startswith("_table_version.")
+    v = bump_table_version(str(d))
+    assert v > 0
+    assert not [f for f in os.listdir(d) if f.endswith(".tmp")]
