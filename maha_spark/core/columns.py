@@ -170,16 +170,9 @@ def static_mapping_projection(col_sql: str, dtype: DataType) -> str:
     DECODE on Oracle / extraction fn on Druid; SURVEY §1.2)."""
     sm = dtype.static_mapping
     assert sm is not None
+    from .filters import sql_literal
     branches = " ".join(
-        f"WHEN ({col_sql}) = {_sql_lit(k)} THEN {_sql_lit(v)}"
+        f"WHEN ({col_sql}) = {sql_literal(k)} THEN {sql_literal(v)}"
         for k, v in sm.mapping.items()
     )
-    return f"CASE {branches} ELSE {_sql_lit(sm.default)} END"
-
-
-def _sql_lit(v: Any) -> str:
-    if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    return str(v)
+    return f"CASE {branches} ELSE {sql_literal(sm.default)} END"

@@ -1,8 +1,13 @@
 """Filter language: the reference's 17 filter operations
 (maha `core/.../FilterOperation.scala:37-54` ops, `:98-376` ASTs).
 
-Each filter AST resolves to a single Spark ``Column`` predicate given a
-``FieldResolver`` (alias -> physical expression + column metadata).
+Each filter AST renders to one Spark SQL boolean expression,
+``to_sql(resolve, params)``, given a ``FieldResolver`` (alias -> SQL
+fragment + column metadata). Filter values never enter the text: each
+is bound in ``params`` under a named marker (``:p0``, ``:p1``...) that
+``spark.sql(text, args=params)`` binds as a literal. ``params=None``
+renders the values as SQL literals instead — for registry-declared
+filters (a table's forced filters), which are not request input.
 Semantics preserved from the reference:
 
 * case-insensitive compare when the column is annotated (lower() both sides,
@@ -18,10 +23,8 @@ Semantics preserved from the reference:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Any, Callable, Optional, Protocol, Sequence
-
-from pyspark.sql import Column, functions as F
+from dataclasses import dataclass
+from typing import Any, Optional, Protocol, Sequence
 
 from .types import DataType
 
@@ -32,12 +35,35 @@ class FieldResolver(Protocol):
 
 @dataclass(frozen=True)
 class ResolvedField:
-    col: Column
+    #: SQL fragment for this field
+    sql: str
     dtype: Optional[DataType] = None
     case_insensitive: bool = False
-    #: SQL fragment for this field (needed by ExpressionFilter, which
-    #: splices resolved fields into a textual SQL predicate)
-    sql: Optional[str] = None
+
+
+def sql_literal(v: Any) -> str:
+    """``v`` as a Spark SQL literal of the type ``F.lit(v)`` gives it."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return repr(v) + "D"
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    raise TypeError(f"no SQL literal for {type(v).__name__} {v!r}")
+
+
+def bind(params: Optional[dict[str, Any]], v: Any) -> str:
+    """A named parameter marker bound to ``v`` in ``params`` — or, with
+    ``params=None``, ``v`` as a literal."""
+    if params is None:
+        return sql_literal(v)
+    name = f"p{len(params)}"
+    params[name] = v
+    return ":" + name
 
 
 def _map_value(rf: ResolvedField, v: Any) -> list[Any]:
@@ -52,16 +78,23 @@ def _map_value(rf: ResolvedField, v: Any) -> list[Any]:
 
 
 def _map_values(rf: ResolvedField, values: Sequence[Any]) -> list[Any]:
-    out: list[Any] = []
-    for v in values:
-        out.extend(_map_value(rf, v))
-    return out
+    return [m for v in values for m in _map_value(rf, v)]
 
 
-def _cmp_sides(rf: ResolvedField, v: Any) -> tuple[Column, Any]:
+def _lowered(rf: ResolvedField, v: Any) -> tuple[str, Any]:
+    """Compare sides: case-insensitive columns compare lower() of both."""
     if rf.case_insensitive and isinstance(v, str):
-        return F.lower(rf.col), v.lower()
-    return rf.col, v
+        return f"lower(({rf.sql}))", v.lower()
+    return f"({rf.sql})", v
+
+
+def _in(rf: ResolvedField, vals: list[Any], params) -> str:
+    if not vals:
+        return "false"   # IN over an empty list is false (OptimizeIn)
+    lhs = f"lower(({rf.sql}))" if rf.case_insensitive else f"({rf.sql})"
+    if rf.case_insensitive:
+        vals = [v.lower() if isinstance(v, str) else v for v in vals]
+    return f"{lhs} IN ({', '.join(bind(params, v) for v in vals)})"
 
 
 @dataclass(frozen=True)
@@ -72,7 +105,8 @@ class Filter:
     is_forced: bool = False
     is_overridable: bool = False
 
-    def to_column(self, resolve: FieldResolver) -> Column:  # pragma: no cover
+    def to_sql(self, resolve: FieldResolver,
+               params: Optional[dict[str, Any]]) -> str:  # pragma: no cover
         raise NotImplementedError
 
     def fields(self) -> list[str]:
@@ -84,12 +118,9 @@ class InFilter(Filter):
     values: tuple[Any, ...] = ()
     operator: str = "in"
 
-    def to_column(self, resolve: FieldResolver) -> Column:
+    def to_sql(self, resolve, params) -> str:
         rf = resolve(self.field)
-        vals = _map_values(rf, self.values)
-        if rf.case_insensitive:
-            return F.lower(rf.col).isin([v.lower() if isinstance(v, str) else v for v in vals])
-        return rf.col.isin(vals)
+        return _in(rf, _map_values(rf, self.values), params)
 
 
 @dataclass(frozen=True)
@@ -97,12 +128,9 @@ class NotInFilter(Filter):
     values: tuple[Any, ...] = ()
     operator: str = "not in"
 
-    def to_column(self, resolve: FieldResolver) -> Column:
+    def to_sql(self, resolve, params) -> str:
         rf = resolve(self.field)
-        vals = _map_values(rf, self.values)
-        if rf.case_insensitive:
-            return ~F.lower(rf.col).isin([v.lower() if isinstance(v, str) else v for v in vals])
-        return ~rf.col.isin(vals)
+        return f"NOT ({_in(rf, _map_values(rf, self.values), params)})"
 
 
 @dataclass(frozen=True)
@@ -111,9 +139,10 @@ class BetweenFilter(Filter):
     to_value: Any = None
     operator: str = "between"
 
-    def to_column(self, resolve: FieldResolver) -> Column:
-        rf = resolve(self.field)
-        return rf.col.between(F.lit(self.from_value), F.lit(self.to_value))
+    def to_sql(self, resolve, params) -> str:
+        x = resolve(self.field).sql
+        return (f"(({x}) >= {bind(params, self.from_value)}) AND "
+                f"(({x}) <= {bind(params, self.to_value)})")
 
 
 @dataclass(frozen=True)
@@ -124,10 +153,10 @@ class DateTimeBetweenFilter(Filter):
     to_value: str = ""
     operator: str = "datetimebetween"
 
-    def to_column(self, resolve: FieldResolver) -> Column:
-        rf = resolve(self.field)
-        return (rf.col >= F.to_timestamp(F.lit(self.from_value))) & (
-            rf.col <= F.to_timestamp(F.lit(self.to_value)))
+    def to_sql(self, resolve, params) -> str:
+        x = resolve(self.field).sql
+        return (f"(({x}) >= to_timestamp({bind(params, self.from_value)})) "
+                f"AND (({x}) <= to_timestamp({bind(params, self.to_value)}))")
 
 
 @dataclass(frozen=True)
@@ -135,13 +164,13 @@ class EqualityFilter(Filter):
     value: Any = None
     operator: str = "="
 
-    def to_column(self, resolve: FieldResolver) -> Column:
+    def to_sql(self, resolve, params) -> str:
         rf = resolve(self.field)
         vals = _map_value(rf, self.value)
         if len(vals) > 1:  # label with non-unique reverse map -> IN
-            return rf.col.isin(vals)
-        lhs, v = _cmp_sides(rf, vals[0])
-        return lhs == F.lit(v)
+            return _in(ResolvedField(rf.sql), vals, params)
+        lhs, v = _lowered(rf, vals[0])
+        return f"{lhs} = {bind(params, v)}"
 
 
 @dataclass(frozen=True)
@@ -149,31 +178,27 @@ class NotEqualToFilter(Filter):
     value: Any = None
     operator: str = "<>"
 
-    def to_column(self, resolve: FieldResolver) -> Column:
-        rf = resolve(self.field)
-        vals = _map_value(rf, self.value)
-        if len(vals) > 1:
-            return ~rf.col.isin(vals)
-        lhs, v = _cmp_sides(rf, vals[0])
-        return lhs != F.lit(v)
+    def to_sql(self, resolve, params) -> str:
+        return f"NOT ({EqualityFilter.to_sql(self, resolve, params)})"
 
 
 @dataclass(frozen=True)
-class GreaterThanFilter(Filter):
+class _CompareFilter(Filter):
     value: Any = None
+
+    def to_sql(self, resolve, params) -> str:
+        return (f"({resolve(self.field).sql}) {self.operator} "
+                f"{bind(params, self.value)}")
+
+
+@dataclass(frozen=True)
+class GreaterThanFilter(_CompareFilter):
     operator: str = ">"
 
-    def to_column(self, resolve: FieldResolver) -> Column:
-        return resolve(self.field).col > F.lit(self.value)
-
 
 @dataclass(frozen=True)
-class LessThanFilter(Filter):
-    value: Any = None
+class LessThanFilter(_CompareFilter):
     operator: str = "<"
-
-    def to_column(self, resolve: FieldResolver) -> Column:
-        return resolve(self.field).col < F.lit(self.value)
 
 
 @dataclass(frozen=True)
@@ -184,11 +209,9 @@ class LikeFilter(Filter):
     value: str = ""
     operator: str = "like"
 
-    def to_column(self, resolve: FieldResolver) -> Column:
-        rf = resolve(self.field)
-        if rf.case_insensitive:
-            return F.lower(rf.col).like(f"%{self.value.lower()}%")
-        return rf.col.like(f"%{self.value}%")
+    def to_sql(self, resolve, params) -> str:
+        lhs, v = _lowered(resolve(self.field), self.value)
+        return f"{lhs} LIKE {bind(params, f'%{v}%')}"
 
 
 @dataclass(frozen=True)
@@ -196,26 +219,26 @@ class NotLikeFilter(Filter):
     value: str = ""
     operator: str = "not like"
 
-    def to_column(self, resolve: FieldResolver) -> Column:
-        rf = resolve(self.field)
+    def to_sql(self, resolve, params) -> str:
         # SQL NOT LIKE is false for NULL; the reference renders plain NOT LIKE
-        return ~rf.col.like(f"%{self.value}%")
+        x = resolve(self.field).sql
+        return f"NOT (({x}) LIKE {bind(params, f'%{self.value}%')})"
 
 
 @dataclass(frozen=True)
 class IsNullFilter(Filter):
     operator: str = "isnull"
 
-    def to_column(self, resolve: FieldResolver) -> Column:
-        return resolve(self.field).col.isNull()
+    def to_sql(self, resolve, params) -> str:
+        return f"({resolve(self.field).sql}) IS NULL"
 
 
 @dataclass(frozen=True)
 class IsNotNullFilter(Filter):
     operator: str = "isnotnull"
 
-    def to_column(self, resolve: FieldResolver) -> Column:
-        return resolve(self.field).col.isNotNull()
+    def to_sql(self, resolve, params) -> str:
+        return f"({resolve(self.field).sql}) IS NOT NULL"
 
 
 @dataclass(frozen=True)
@@ -226,8 +249,9 @@ class FieldEqualityFilter(Filter):
     compare_to: str = ""
     operator: str = "=="
 
-    def to_column(self, resolve: FieldResolver) -> Column:
-        return resolve(self.field).col == resolve(self.compare_to).col
+    def to_sql(self, resolve, params) -> str:
+        return (f"({resolve(self.field).sql}) = "
+                f"({resolve(self.compare_to).sql})")
 
     def fields(self) -> list[str]:
         return [self.field, self.compare_to]
@@ -249,17 +273,11 @@ class ExpressionFilter(Filter):
     expression: str = ""
     operator: str = "expression"
 
-    def to_column(self, resolve: FieldResolver) -> Column:
+    def to_sql(self, resolve, params) -> str:
         from .columns import _PLACEHOLDER, expand_expr
-        resolver: dict[str, str] = {}
-        for name in set(_PLACEHOLDER.findall(self.expression)):
-            rf = resolve(name)
-            if rf.sql is None:
-                raise ValueError(
-                    f"field {name!r} cannot be used in an expression filter "
-                    "(no SQL rendering available)")
-            resolver[name] = rf.sql
-        return F.expr(expand_expr(self.expression, resolver))
+        resolver = {name: resolve(name).sql
+                    for name in set(_PLACEHOLDER.findall(self.expression))}
+        return expand_expr(self.expression, resolver)
 
     def fields(self) -> list[str]:
         from .columns import _PLACEHOLDER
@@ -270,53 +288,35 @@ class ExpressionFilter(Filter):
 
 
 @dataclass(frozen=True)
-class OrFilter(Filter):
+class _CompoundFilter(Filter):
     filters: tuple[Filter, ...] = ()
+    field: str = ""
+
+    def to_sql(self, resolve, params) -> str:
+        op = " OR " if self.operator == "or" else " AND "
+        return op.join(f"({f.to_sql(resolve, params)})"
+                       for f in self.filters)
+
+    def fields(self) -> list[str]:
+        return [fld for f in self.filters for fld in f.fields()]
+
+
+@dataclass(frozen=True)
+class OrFilter(_CompoundFilter):
     operator: str = "or"
-    field: str = ""
-
-    def to_column(self, resolve: FieldResolver) -> Column:
-        cols = [f.to_column(resolve) for f in self.filters]
-        out = cols[0]
-        for c in cols[1:]:
-            out = out | c
-        return out
-
-    def fields(self) -> list[str]:
-        return [fld for f in self.filters for fld in f.fields()]
 
 
 @dataclass(frozen=True)
-class AndFilter(Filter):
-    filters: tuple[Filter, ...] = ()
+class AndFilter(_CompoundFilter):
     operator: str = "and"
-    field: str = ""
-
-    def to_column(self, resolve: FieldResolver) -> Column:
-        cols = [f.to_column(resolve) for f in self.filters]
-        out = cols[0]
-        for c in cols[1:]:
-            out = out & c
-        return out
-
-    def fields(self) -> list[str]:
-        return [fld for f in self.filters for fld in f.fields()]
 
 
 @dataclass(frozen=True)
-class OuterFilter(Filter):
+class OuterFilter(_CompoundFilter):
     """Applied on the FINAL projected aliases after join/agg
     (FilterOperation.scala:141; QueryPipeline.scala:498-500)."""
 
-    filters: tuple[Filter, ...] = ()
     operator: str = "outer"
-    field: str = ""
-
-    def to_column(self, resolve: FieldResolver) -> Column:
-        return AndFilter(field="", filters=self.filters).to_column(resolve)
-
-    def fields(self) -> list[str]:
-        return [fld for f in self.filters for fld in f.fields()]
 
 
 @dataclass(frozen=True)
@@ -328,9 +328,9 @@ class PushDownFilter(Filter):
     operator: str = "pushdown"
     field: str = ""
 
-    def to_column(self, resolve: FieldResolver) -> Column:
+    def to_sql(self, resolve, params) -> str:
         assert self.inner is not None
-        return self.inner.to_column(resolve)
+        return self.inner.to_sql(resolve, params)
 
     def fields(self) -> list[str]:
         return self.inner.fields() if self.inner else []

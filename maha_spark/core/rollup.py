@@ -1,11 +1,12 @@
 """Rollup (aggregation) expressions.
 
 Mirrors the reference inventory (maha `core/.../fact/RollupExpression.scala:29-93`)
-as Spark aggregate builders. Every rollup builds one aggregate,
-``agg(col)``, over raw fact rows. The planner never re-aggregates a
-rollup's output: a request that needs an outer group-by aggregates once,
-at the final grain, after the dim joins (SURVEY §2.4;
-``plans/planner.py`` ``_build_join_then_agg``). ``reaggregatable`` says
+as Spark SQL aggregate renderers. Every rollup renders one aggregate,
+``agg(src)``, over the SQL text ``src`` of its source on raw fact rows
+(the planner's statement and the rollup materializer both use it). The
+planner never re-aggregates a rollup's output: a request that needs an
+outer group-by aggregates once, at the final grain, after the dim joins
+(``plans/planner.py`` ``_build_join_then_agg``). ``reaggregatable`` says
 whether a STORED value of the rollup merges losslessly at a coarser
 grain: a pre-aggregated table serves a non-reaggregatable metric only
 to requests grouping at its stored grain (``FactTable.serves_grain``).
@@ -22,13 +23,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, functions as F
-from pyspark.sql.types import DataType
-
 
 @dataclass(frozen=True)
 class Rollup:
-    def agg(self, col: Column) -> Column:  # pragma: no cover - abstract
+    def agg(self, src: str) -> str:  # pragma: no cover - abstract
         raise NotImplementedError
 
     #: whether a stored partial of this rollup merges losslessly at a
@@ -38,51 +36,46 @@ class Rollup:
 
 @dataclass(frozen=True)
 class SumRollup(Rollup):
-    def agg(self, col: Column) -> Column:
-        return F.sum(col)
+    def agg(self, src: str) -> str:
+        return f"sum({src})"
 
 
 @dataclass(frozen=True)
 class MaxRollup(Rollup):
-    def agg(self, col: Column) -> Column:
-        return F.max(col)
+    def agg(self, src: str) -> str:
+        return f"max({src})"
 
 
 @dataclass(frozen=True)
 class MinRollup(Rollup):
-    def agg(self, col: Column) -> Column:
-        return F.min(col)
+    def agg(self, src: str) -> str:
+        return f"min({src})"
 
 
 @dataclass(frozen=True)
 class CountRollup(Rollup):
     """COUNT(*) regardless of the named column (RollupExpression.scala:33)."""
 
-    def agg(self, col: Column) -> Column:
-        return F.count(F.lit(1))
-
-
-def exact_avg(total: Column, count: Column, avg_type: DataType) -> Column:
-    """AVG from its sum and count: ``total / count`` cast to
-    ``avg_type``, the type Spark's ``avg`` gives the same input. For a
-    decimal the cast rounds the exact quotient HALF_UP. Spark's own
-    ``avg`` of a decimal narrower than 12 digits is not exact: the
-    optimizer rule DecimalAggregates rewrites it into a double average,
-    which misses HALF_UP ties in the last digit (an exact mean of
-    52532.2545125 comes back as 52532.254512)."""
-    return (total / count).cast(avg_type)
+    def agg(self, src: str) -> str:
+        return "count(1)"
 
 
 @dataclass(frozen=True)
 class AverageRollup(Rollup):
-    """AVG through ``exact_avg``: the planner passes AVG's result type
-    for the source column. Not reaggregatable — an average of stored
-    averages is not the average."""
+    """AVG from its sum and count: ``sum / count`` cast to ``avg_type``
+    (a SQL type name), the type Spark's ``avg`` gives the same source —
+    the planner resolves it. For a decimal the cast rounds the exact
+    quotient HALF_UP. Spark's own ``avg`` of a decimal narrower than 12
+    digits is not exact: the optimizer rule DecimalAggregates rewrites
+    it into a double average, which misses HALF_UP ties in the last
+    digit (an exact mean of 52532.2545125 comes back as 52532.254512).
+    Not reaggregatable — an average of stored averages is not the
+    average."""
 
     reaggregatable = False
 
-    def agg(self, col: Column, avg_type: DataType) -> Column:
-        return exact_avg(F.sum(col), F.count(col), avg_type)
+    def agg(self, src: str, avg_type: str) -> str:
+        return f"CAST((sum({src}) / count({src})) AS {avg_type})"
 
 
 @dataclass(frozen=True)
@@ -92,15 +85,15 @@ class NoopRollup(Rollup):
 
     reaggregatable = False
 
-    def agg(self, col: Column) -> Column:
-        return F.first(col, ignorenulls=True)
+    def agg(self, src: str) -> str:
+        return f"first({src}, true)"
 
 
 @dataclass(frozen=True)
 class FilteredRollup(Rollup):
     """DruidFilteredRollup / DruidFilteredListRollup
     (RollupExpression.scala:71-82): aggregate only rows matching a
-    condition -> F.sum(F.when(cond, col)).
+    condition -> sum(CASE WHEN cond THEN src END).
 
     ``condition_sql`` is a Spark SQL boolean expression over physical fact
     columns; ``base`` is the inner aggregation (default sum).
@@ -109,8 +102,9 @@ class FilteredRollup(Rollup):
     condition_sql: str = "true"
     base: Rollup = field(default_factory=SumRollup)
 
-    def agg(self, col: Column) -> Column:
-        return self.base.agg(F.when(F.expr(self.condition_sql), col))
+    def agg(self, src: str) -> str:
+        return self.base.agg(f"CASE WHEN ({self.condition_sql}) "
+                             f"THEN ({src}) END")
 
 
 @dataclass(frozen=True)
@@ -123,10 +117,10 @@ class CardinalityRollup(Rollup):
     exact: bool = False
     reaggregatable = False
 
-    def agg(self, col: Column) -> Column:
+    def agg(self, src: str) -> str:
         if self.exact:
-            return F.count_distinct(col)
-        return F.approx_count_distinct(col, self.rsd)
+            return f"count(DISTINCT {src})"
+        return f"approx_count_distinct({src}, {self.rsd!r}D)"
 
 
 #: default HLL precision shared by every sketch producer (registry
@@ -139,20 +133,15 @@ HLL_LG_K = 12
 @dataclass(frozen=True)
 class HllSketchRollup(Rollup):
     """Mergeable datasketches HLL partial (the Druid hyperUnique ROLLUP
-    column: pre-aggregated tables store the sketch BYTES, not a count, so
-    distinct estimates re-aggregate at ANY coarser grain — union takes
-    the per-register max, so merged register state matches building from
-    raw values; estimates are exact-identical while sketches stay in
-    sparse mode and may differ by a few counts past it, where the direct
-    build can use the HIP estimator the union drops — both stay within
-    the sketch's error bound). ``agg`` builds the sketch from raw
-    values; a table storing the sketches merges them with
-    ``HllUnionRollup``."""
+    column): pre-aggregated tables store the sketch BYTES, so distinct
+    estimates re-aggregate at ANY coarser grain within the sketch's
+    error bound. ``agg`` builds the sketch from raw values; a table
+    storing the sketches merges them with ``HllUnionRollup``."""
 
     lg_k: int = HLL_LG_K
 
-    def agg(self, col: Column) -> Column:
-        return F.hll_sketch_agg(col, self.lg_k)
+    def agg(self, src: str) -> str:
+        return f"hll_sketch_agg({src}, {self.lg_k})"
 
 
 @dataclass(frozen=True)
@@ -160,8 +149,8 @@ class HllUnionRollup(Rollup):
     """Re-aggregation side of ``HllSketchRollup``: a table storing sketch
     partials merges them with union at any requested grain."""
 
-    def agg(self, col: Column) -> Column:
-        return F.hll_union_agg(col, True)
+    def agg(self, src: str) -> str:
+        return f"hll_union_agg({src}, true)"
 
 
 #: fixed-bin histogram defaults shared by every producer (registry
@@ -184,43 +173,34 @@ class HistogramRollup(Rollup):
     ``hist_quantile_sql`` is a deterministic function of the merged
     array).
 
-    ``agg`` builds the histogram with ``bins`` parallel conditional SUM
-    aggregates inside one array — each is map-side partially aggregated
-    (no collect_list, no per-group state beyond ``bins`` longs), so the
-    build scales like any other sum partial at 100 TB. A table storing
-    the partials merges them bin-by-bin with ``HistogramMergeRollup``.
-    Values outside [lo, hi) clamp to the edge bins (Druid's approxHistogram does the same with its
-    lowerLimit/upperLimit).
-
-    Beyond-reference operator (maha exposes no histogram aggregator);
-    modeled on the HllSketchRollup pattern above.
+    ``agg`` renders the histogram as ``bins`` parallel conditional SUM
+    aggregates inside one array, each partially aggregated map-side, so
+    the build scales like any sum partial. A table storing the partials
+    merges them bin-by-bin with ``HistogramMergeRollup``. Values outside
+    [lo, hi) clamp to the edge bins, as Druid's approxHistogram does.
+    Beyond-reference operator (maha exposes no histogram aggregator).
     """
 
     bins: int = HIST_BINS
     lo: float = HIST_LO
     hi: float = HIST_HI
 
-    def _bin(self, col: Column) -> Column:
+    def agg(self, src: str) -> str:
         w = (self.hi - self.lo) / self.bins
         # clamp on the LONG floor result, cast to int only afterwards:
         # with ANSI off, casting a beyond-2^31 raw bin index to int
         # overflow-wraps, so an extreme outlier could land in an
         # arbitrary bin (even bin 0) instead of the top edge bin
-        b = F.floor((col - F.lit(self.lo)) / F.lit(w))
-        return (F.least(F.greatest(b, F.lit(0)), F.lit(self.bins - 1))
-                .cast("int"))
-
-    def agg(self, col: Column) -> Column:
-        b = self._bin(col)
+        b = (f"CAST(least(greatest(FLOOR((({src}) - {self.lo!r}D) / "
+             f"{w!r}D), 0), {self.bins - 1}) AS INT)")
         # exclude NULL and NaN explicitly — a NaN would otherwise cast
         # to bin 0 and silently drag quantiles down (note Spark's
         # nonstandard NaN semantics: NaN = NaN is TRUE, so the SQL
         # x = x idiom does NOT filter NaN here)
-        ok = col.isNotNull() & ~F.isnan(col.cast("double"))
-        return F.array(*[
-            F.sum(F.when(ok & (b == i), F.lit(1))
-                  .otherwise(F.lit(0)).cast("bigint"))
-            for i in range(self.bins)])
+        ok = f"(({src}) IS NOT NULL) AND (NOT isnan(CAST(({src}) AS DOUBLE)))"
+        return "array(" + ", ".join(
+            f"sum(CAST(CASE WHEN (({ok}) AND ({b} = {i})) THEN 1 ELSE 0 END "
+            f"AS BIGINT))" for i in range(self.bins)) + ")"
 
 
 @dataclass(frozen=True)
@@ -230,8 +210,9 @@ class HistogramMergeRollup(Rollup):
 
     bins: int = HIST_BINS
 
-    def agg(self, col: Column) -> Column:
-        return F.array(*[F.sum(col.getItem(i)) for i in range(self.bins)])
+    def agg(self, src: str) -> str:
+        return "array(" + ", ".join(
+            f"sum(({src})[{i}])" for i in range(self.bins)) + ")"
 
 
 def hist_quantile_sql(ref: str, p: float, bins: int = HIST_BINS,
@@ -274,5 +255,5 @@ class RoundedSumRollup(Rollup):
 
     scale: int = 2
 
-    def agg(self, col: Column) -> Column:
-        return F.round(F.sum(col), self.scale)
+    def agg(self, src: str) -> str:
+        return f"round(sum({src}), {self.scale})"

@@ -1,6 +1,6 @@
 """MahaSparkEngine: the service facade (maha `service/.../MahaService.scala`).
 
-request JSON -> parse/validate -> RequestModel -> DataFrame plan ->
+request JSON -> parse/validate -> RequestModel -> SQL statement ->
 execute/serialize, with curators (drilldown / timeshift / totalmetrics /
 rowcount) composed into one response
 (RequestCoordinator.scala:97-151 semantics).
@@ -214,11 +214,13 @@ class MahaSparkEngine:
             debug = None
             if req.is_debug:
                 # the reference's debug response carries the generated
-                # engine query (QueryPipeline debug output); the Spark
-                # analog is the optimized logical plan
+                # engine query (QueryPipeline debug output): the rendered
+                # SQL text, its bound parameters, and the optimized plan
                 plan = df._jdf.queryExecution().optimizedPlan().toString()
                 debug = {"requestType": req.request_type,
                          "factTable": model.fact_table.name,
+                         "sql": df.statement.text,
+                         "parameters": df.statement.params,
                          "plan": plan[:8000]}
             envelope = to_json_response(
                 df, cube=req.cube,

@@ -7,12 +7,13 @@ Determinism contract with the DuckDB oracle: every hash is derived from
 association order on both sides so IEEE results are bit-equal.
 
 Storage lifecycle: a :class:`Scope` owns the caches, eager local
-checkpoints and warm threads created while it is current, and releases
-only those. The current scope is a ``ContextVar``, so threads never see
-each other's. ``MahaSparkEngine.execute`` opens one per request (its
-curator threads run in the request's context), as do the dry-run shadow
-thread and the async report worker; ``@in_scope`` opens one per
-maintenance rewrite; ``drain`` one per stream micro-batch. Library
+checkpoints, temp views and warm threads created while it is current,
+and releases only those. The current scope is a ``ContextVar``, so
+threads never see each other's. ``MahaSparkEngine.execute`` opens one
+per request (its curator threads run in the request's context), as do
+the dry-run shadow thread and the async report worker; ``@in_scope``
+opens one per maintenance rewrite; ``drain`` one per stream
+micro-batch. Library
 callers outside any scope (an op called directly, bench harnesses) use
 the root scope and call ``release_scoped_caches()`` once they have
 consumed the op's lazily returned plan.
@@ -22,6 +23,7 @@ from __future__ import annotations
 
 import contextvars
 import functools
+import itertools
 import os
 import threading
 from typing import Callable, Optional
@@ -45,6 +47,7 @@ class Scope:
     def __init__(self) -> None:
         self._lock = threading.Lock()  # a scope is shared by threads
         self._held: list[Callable[[], None]] = []  # unpersist callbacks
+        self._views: list[tuple[SparkSession, str]] = []
         self._threads: list[threading.Thread] = []
 
     def _hold(self, unpersist: Callable[[], None]) -> None:
@@ -79,12 +82,23 @@ class Scope:
         self._hold(unpersist)
         return df
 
-    def spawn(self, fn: Callable[[], None]) -> threading.Thread:
-        """Run ``fn`` on a daemon thread carrying this context (scope
-        and Spark local properties); release joins it first."""
+    def view(self, df: DataFrame) -> str:
+        """Register ``df`` as a temp view under a fresh name, dropped on
+        release; returns the name."""
+        name = f"maha_scope_view_{next(_VIEW_IDS)}"
+        df.createOrReplaceTempView(name)
+        with self._lock:
+            self._views.append((df.sparkSession, name))
+        return name
+
+    def spawn(self, spark: SparkSession,
+              fn: Callable[[], None]) -> threading.Thread:
+        """Run ``fn`` on a daemon thread carrying this context (scope,
+        and ``spark``'s job tags and local properties); release joins it
+        first."""
         ctx = contextvars.copy_context()
         t = threading.Thread(
-            target=inheritable_thread_target(lambda: ctx.run(fn)),
+            target=inheritable_thread_target(spark)(lambda: ctx.run(fn)),
             daemon=True)
         with self._lock:
             self._threads.append(t)
@@ -96,14 +110,17 @@ class Scope:
         return len(self._held)
 
     def release(self) -> int:
-        """Join the spawned threads, then unpersist every held frame;
-        returns how many."""
+        """Join the spawned threads, drop the views, then unpersist every
+        held frame; returns how many frames."""
         with self._lock:
             threads, self._threads = self._threads, []
         for t in threads:
             t.join()
         with self._lock:
             held, self._held = self._held, []
+            views, self._views = self._views, []
+        for spark, name in views:
+            drop_view(spark, name)
         for unpersist in reversed(held):
             unpersist()
         return len(held)
@@ -121,10 +138,19 @@ class Scope:
 
 #: makes a scope's CacheManager lookup and its ``cache()`` one step
 _CACHE_LOCK = threading.Lock()
+_VIEW_IDS = itertools.count()
 _ROOT = Scope()
 _CURRENT = contextvars.ContextVar("maha_spark_scope", default=_ROOT)
 #: the root and every open scope, for ``held_frames`` telemetry
 _OPEN: set[Scope] = {_ROOT}
+
+
+def drop_view(spark: SparkSession, name: str) -> None:
+    """Drop temp view ``name`` from the session catalog only.
+    ``spark.catalog.dropTempView`` also uncaches every cached plan equal
+    to the view's, which would unpersist a frame another scope or the
+    binding still holds."""
+    spark._jsparkSession.sessionState().catalog().dropTempView(name)
 
 
 def current_scope() -> Scope:
@@ -167,7 +193,7 @@ def warm(df: DataFrame) -> threading.Thread:
             df.write.format("noop").mode("overwrite").save()
         except Exception:  # noqa: BLE001 — cache miss just recomputes
             pass
-    return current_scope().spawn(run)
+    return current_scope().spawn(df.sparkSession, run)
 
 
 def drain(spark: SparkSession, schema, src_dir: str, ckpt_dir: str,

@@ -1,4 +1,5 @@
-"""Physical table binding: physical table name -> DataFrame.
+"""Physical table binding: physical table name -> DataFrame, and the
+temp view the planner's SQL statement reads it through.
 
 The reference binds facts/dims to engines (Druid/Oracle/...); here a
 binding maps a physical name to a Spark DataFrame — by default parquet
@@ -8,10 +9,22 @@ DataFrame source (Delta, JDBC, a registered temp view) can be bound.
 
 from __future__ import annotations
 
+import itertools
 import os
-from typing import Callable, Optional
+import re
+import threading
+from typing import Callable, NamedTuple, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+class View(NamedTuple):
+    """A temp view over a bound table: its name, its column names, and
+    whether it is shared across requests (named per table version)
+    rather than owned by the current request's scope."""
+    name: str
+    columns: tuple[str, ...]
+    shared: bool
 
 
 class TableBinding:
@@ -26,6 +39,14 @@ class TableBinding:
         if name in self._overrides:
             return self._overrides[name]()
         raise KeyError(f"no binding for table {name!r}")
+
+    def view(self, name: str) -> View:
+        """A view over ``table(name)``. Frames this binding does not
+        memoize get a view the current ``ops.common.Scope`` drops on
+        release."""
+        from ..ops.common import current_scope
+        df = self.table(name)
+        return View(current_scope().view(df), tuple(df.columns), False)
 
     def has_table(self, name: str) -> bool:
         """Availability probe for candidate selection: a registered
@@ -65,6 +86,32 @@ def _df_cache_get(spark, path: str):
         del _DF_CACHE[key]
         return None
     return df
+
+
+# (spark-session id, path) -> (memoized DataFrame, its View). A view is
+# registered once per memo entry under a name carrying the table's
+# version, so a rewrite registers a new view instead of swapping the
+# one an in-flight request's statement names; the replaced view is
+# dropped.
+_VIEWS: dict[tuple[int, str], tuple[DataFrame, View]] = {}
+_VIEWS_LOCK = threading.Lock()
+_VIEW_IDS = itertools.count()
+
+
+def _shared_view(spark, path: str, name: str, df: DataFrame) -> View:
+    key = (id(spark), path)
+    with _VIEWS_LOCK:
+        hit = _VIEWS.get(key)
+        if hit is not None and hit[0] is df:
+            return hit[1]
+        vname = re.sub(r"\W", "_", f"{name}__v{_mtime(path):.6f}")
+        view = View(f"{vname}_{next(_VIEW_IDS)}", tuple(df.columns), True)
+        df.createOrReplaceTempView(view.name)
+        _VIEWS[key] = (df, view)
+    if hit is not None:
+        from ..ops.common import drop_view
+        drop_view(spark, hit[1].name)
+    return view
 
 
 def _df_cache_put(spark, path: str, df: DataFrame) -> DataFrame:
@@ -183,6 +230,12 @@ class ParquetBinding(TableBinding):
     def __init__(self, spark: SparkSession, base_dir: str):
         super().__init__(spark)
         self.base_dir = base_dir
+
+    def view(self, name: str) -> View:
+        path = None if name in self._overrides else self.table_path(name)
+        if path is None:
+            return super().view(name)
+        return _shared_view(self.spark, path, name, self.table(name))
 
     def table(self, name: str) -> DataFrame:
         if name in self._overrides:

@@ -15,9 +15,9 @@ declaration:
   build-time LEFT join per base FK (``_chain_frame``); exactly one base
   FK must reach each such dim;
 * metric partials: each stored non-derived ``FactCol`` is its base
-  column's aggregate through the planner's own renderer
-  (``Planner._agg_expr``: expression, filter and rollup), so build-time
-  partials and query-time aggregation cannot drift;
+  column's aggregate as the planner's statement spells it
+  (``Planner._agg_sql``: expression, filter and rollup SQL text), so
+  build-time partials and query-time aggregation cannot drift;
 * a ``dt`` date column for the day-partitioned layout.
 
 ``materialize_rollup`` writes the table flat or day-partitioned;
@@ -340,7 +340,7 @@ def rollup_frame(spark, binding, registry: Registry, cube: PublicFact,
             src = c.materializes.split(".", 1)[1] if c.materializes else n
             keys.append(F.col(src).alias(n))
     planner = Planner(spark, binding)
-    aggs = [planner._agg_expr(base.columns[n], base, df).alias(n)
+    aggs = [F.expr(planner._agg_sql(base.columns[n], base)).alias(n)
             for n, c in table.columns.items() if isinstance(c, FactCol)]
     return (df.groupBy(*keys).agg(*aggs)
             .withColumn("dt", F.to_date(F.col(day))))

@@ -112,10 +112,9 @@ def cube_view_df(spark: SparkSession, registry: Registry,
     for ff in table.forced_filters:
         def raw_resolve(alias: str, _t=table) -> ResolvedField:
             col = _t.columns.get(alias)
-            sql = _col_sql(_t.columns, alias)
-            return ResolvedField(col=F.expr(sql), sql=sql,
+            return ResolvedField(_col_sql(_t.columns, alias),
                                  dtype=col.dtype if col else None)
-        df = df.filter(ff.to_column(raw_resolve))
+        df = df.filter(F.expr(ff.to_sql(raw_resolve, None)))
 
     used: set[str] = set()
     cols = []

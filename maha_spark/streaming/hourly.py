@@ -71,7 +71,7 @@ def hourly_stream(spark: SparkSession, events_dir: str,
         # (core/rollup.py HistogramRollup), so streamed quantile
         # partials are bit-identical to the batch rollup's
         from ..core.rollup import HistogramRollup
-        aggs.append(HistogramRollup().agg(F.col("value"))
+        aggs.append(F.expr(HistogramRollup().agg("value"))
                     .alias("value_hist"))
         outs.append("value_hist")
     return (ev

@@ -125,14 +125,14 @@ def test_merge_rollup_equals_direct_build(spark):
     df = spark.createDataFrame(rows, "g INT, value DOUBLE")
     hr = HistogramRollup()
     direct = {r["g"]: r["h"] for r in
-              df.groupBy("g").agg(hr.agg(F.col("value")).alias("h"))
+              df.groupBy("g").agg(F.expr(hr.agg("value")).alias("h"))
               .collect()}
     # partials at a finer grain (g, value-parity), merged up to g
     fine = df.withColumn("sub", (F.col("value") % 2 == 0).cast("int")) \
-             .groupBy("g", "sub").agg(hr.agg(F.col("value")).alias("h"))
+             .groupBy("g", "sub").agg(F.expr(hr.agg("value")).alias("h"))
     merged = {r["g"]: r["h"] for r in
               fine.groupBy("g")
-              .agg(HistogramMergeRollup().agg(F.col("h")).alias("h"))
+              .agg(F.expr(HistogramMergeRollup().agg("h")).alias("h"))
               .collect()}
     assert direct == merged and len(direct) == 3
 
@@ -141,7 +141,7 @@ def test_empty_histogram_yields_null_quantile(spark):
     from pyspark.sql import functions as F
     df = spark.createDataFrame([(1, None)], "g INT, value DOUBLE")
     hr = HistogramRollup()
-    out = (df.groupBy("g").agg(hr.agg(F.col("value")).alias("h"))
+    out = (df.groupBy("g").agg(F.expr(hr.agg("value")).alias("h"))
            .selectExpr(hist_quantile_sql("h", 0.95) + " AS q").collect())
     assert out[0]["q"] is None
 
@@ -153,7 +153,7 @@ def test_clamping_to_edge_bins(spark):
     df = spark.createDataFrame(
         [(1, -5.0), (1, 9999.0), (1, 250.0)], "g INT, value DOUBLE")
     h = (df.groupBy("g")
-         .agg(HistogramRollup().agg(F.col("value")).alias("h"))
+         .agg(F.expr(HistogramRollup().agg("value")).alias("h"))
          .collect()[0]["h"])
     assert h[0] == 1 and h[-1] == 1 and sum(h) == 3
 
@@ -169,7 +169,7 @@ def test_extreme_outlier_clamps_to_top_bin(spark):
     df = spark.createDataFrame(
         [(1, wrap_to_zero), (1, -1e18), (1, 250.0)], "g INT, value DOUBLE")
     h = (df.groupBy("g")
-         .agg(HistogramRollup().agg(F.col("value")).alias("h"))
+         .agg(F.expr(HistogramRollup().agg("value")).alias("h"))
          .collect()[0]["h"])
     assert h[-1] == 1 and h[0] == 1 and sum(h) == 3
 
@@ -232,7 +232,7 @@ def test_nan_values_excluded_from_histogram(spark):
     df = spark.createDataFrame(
         [(1, float("nan")), (1, 250.0), (1, None)], "g INT, value DOUBLE")
     h = (df.groupBy("g")
-         .agg(HistogramRollup().agg(F.col("value")).alias("h"))
+         .agg(F.expr(HistogramRollup().agg("value")).alias("h"))
          .collect()[0]["h"])
     assert sum(h) == 1 and h[0] == 0
 

@@ -72,7 +72,7 @@ def test_scope_nesting_checkpoint_and_spawn(spark):
             ck = inner.checkpoint(spark.range(100).selectExpr("id + 1 AS z"))
             assert _persisted(spark) == base + 1
             seen = []
-            t = inner.spawn(lambda: seen.append(current_scope()))
+            t = inner.spawn(spark, lambda: seen.append(current_scope()))
         assert not t.is_alive() and seen == [inner]
         assert current_scope() is outer
         assert _persisted(spark) == base
@@ -167,6 +167,56 @@ def test_scope_bookkeeping_under_thread_contention():
     counts.append(scope.release())
     assert sum(counts) == len(released) == 3 * n
     assert len(set(map(id, released))) == 3 * n
+
+
+def test_scope_view_release_keeps_an_equal_cache(spark):
+    """A scope's temp views go on release, and dropping one leaves a
+    cache of an equal plan that another scope holds in place."""
+    def plan():
+        return spark.range(4000).selectExpr("id * 11 AS v")
+
+    with Scope():
+        held = scoped_cache(plan())
+        held.count()
+        with Scope() as inner:
+            name = inner.view(plan())
+            assert spark.sql(f"SELECT count(*) FROM {name}").first()[0] == 4000
+        assert not spark.catalog.tableExists(name)
+        assert _is_cached(held)
+    assert not _is_cached(held)
+
+
+def test_warm_thread_inherits_session_tags(spark):
+    """A scope's warm thread runs with the caller's Spark session tags
+    (and local properties), and spawning it warns nothing."""
+    import warnings
+
+    from maha_spark.ops.common import warm
+
+    seen = {}
+
+    class Frame:   # stands in for the DataFrame a warm thread writes
+        sparkSession = spark
+
+        @property
+        def write(self):
+            seen["tags"] = spark.getTags()
+            seen["prop"] = spark.sparkContext.getLocalProperty("maha.test")
+            raise RuntimeError("not a real frame")
+
+    spark.addTag("maha-warm-tag")
+    spark.sparkContext.setLocalProperty("maha.test", "inherited")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            with Scope():
+                warm(Frame())
+    finally:
+        spark.removeTag("maha-warm-tag")
+        spark.sparkContext.setLocalProperty("maha.test", None)
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]
+    assert "maha-warm-tag" in seen["tags"]
+    assert seen["prop"] == "inherited"
 
 
 def test_root_scope_caches_survive_a_request(spark, engine, sf_dir,

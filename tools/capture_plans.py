@@ -11,10 +11,16 @@ values and the per-process dedup index path (``maha-dedup-idx-*``)
 differ between two runs of the same code, so they are replaced by fixed
 tokens and two captures of one commit are byte-identical — ``diff``
 shows plan changes only.
+
+A cube entry (a frame the planner built) also gets
+``<out_dir>/<query>_<suffix>.sql``: its rendered SQL statement, with the
+per-process view-name suffixes normalized, followed by its bound
+parameters as JSON, so the statement text can be diffed too.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import sys
@@ -29,9 +35,16 @@ _VOLATILE = (
     (re.compile(r"plan_id=[0-9]+"), "plan_id=N"),
 )
 
+#: view names carry the table version and a per-process counter
+#: (``plans/binding.py``, ``ops/common.Scope.view``)
+_VIEW_NAMES = (
+    (re.compile(r"__v[0-9_]+_[0-9]+`"), "__vN`"),
+    (re.compile(r"maha_scope_view_[0-9]+"), "maha_scope_view_N"),
+)
 
-def normalize(plan: str) -> str:
-    for pattern, token in _VOLATILE:
+
+def normalize(plan: str, patterns=_VOLATILE) -> str:
+    for pattern, token in patterns:
         plan = pattern.sub(token, plan)
     return plan
 
@@ -51,6 +64,7 @@ def main() -> int:
             continue
         if name.startswith("op_stream"):
             continue
+        df = None
         try:
             df = fn(spark, SF_DIR)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
@@ -59,6 +73,12 @@ def main() -> int:
             plan = f"ERROR {type(e).__name__}: {e}"
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
             f.write(normalize(plan))
+        statement = getattr(df, "statement", None)
+        if statement is not None:
+            with open(os.path.join(out_dir, f"{name}_{suffix}.sql"),
+                      "w") as f:
+                f.write(normalize(statement.text, _VIEW_NAMES) + "\n"
+                        + json.dumps(statement.params, default=str) + "\n")
         print("wrote", name)
     spark.stop()
     return 0
