@@ -352,11 +352,9 @@ def main() -> None:
             scaled_oracles[_n] = _contract_mod.OFFCONTRACT_QUERIES[_n]["sql"]
 
     def clear_caches():
-        from maha_spark.examples import contract as _contract
         from maha_spark.ops import common as _ops_common
-        from maha_spark.plans import binding as _binding
-        _binding._DF_CACHE.clear()
-        _contract._PLAN_CACHE.clear()
+        from maha_spark.plans.binding import forget_tables
+        forget_tables()
         _ops_common.release_scoped_caches()
         spark.catalog.clearCache()
 

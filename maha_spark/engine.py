@@ -63,10 +63,11 @@ class MahaSparkEngine:
         """Operational telemetry for a serving operator (REST
         ``/registry/{name}/status``): result-cache hit rates and
         residency, the frames held by open scopes (``scopedCaches``),
-        binding DataFrame-memo entries, and the Spark storage layer's
+        the binding memo's table entries (one per session and table,
+        ``bindingCachedTables``), and the Spark storage layer's
         persisted-block count — everything needed to see cache behavior
         without a debugger."""
-        from .plans.binding import _DF_CACHE
+        from .plans.binding import memoized_tables
 
         try:
             n_rdds = int(self.spark.sparkContext._jsc
@@ -78,7 +79,7 @@ class MahaSparkEngine:
             "resultCache": (self.result_cache.stats()
                             if self.result_cache is not None else None),
             "scopedCaches": held_frames(),
-            "bindingCachedTables": len(_DF_CACHE),
+            "bindingCachedTables": memoized_tables(),
             "persistedRdds": n_rdds,
             "dryRunsLogged": len(self.dry_run_log),
         }
@@ -203,7 +204,7 @@ class MahaSparkEngine:
                         model, self.binding, request, schema, today,
                         self.registry_name)
                 if cache_key is None:
-                    self.result_cache.bypasses += 1
+                    self.result_cache.bypass()
                 elif cache_use:
                     cached = self.result_cache.get(cache_key)
                     if cached is not None:

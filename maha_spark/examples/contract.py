@@ -1402,21 +1402,9 @@ def ensure_udfs(spark) -> None:
         "string")
 
 
-# (session id, sf_dir, query name) -> planned DataFrame. A DataFrame is an
-# immutable logical plan: re-executing it recomputes values, so caching the
-# plan (like the reference caches generated SQL per registered request) is
-# semantics-free and skips registry build + validate + plan on repeats.
-_PLAN_CACHE: dict[tuple[int, str, str], object] = {}
-
-
 def run_query(spark, sf_dir: str, name: str):
     """Execute one contract query through the full engine."""
-    import os
     from ..engine import engine_for_dir
-    key = (id(spark), sf_dir, name)
-    if os.environ.get("MAHA_SPARK_PLAN_CACHE", "1") == "1" \
-            and key in _PLAN_CACHE:
-        return _PLAN_CACHE[key]
     q = QUERIES.get(name) or OFFCONTRACT_QUERIES[name]
     ensure_udfs(spark)
     eng = engine_for_dir(spark, build_contract_registry(), sf_dir)
@@ -1431,7 +1419,6 @@ def run_query(spark, sf_dir: str, name: str):
             df = part if df is None else df.unionByName(part)
     else:
         df = eng.dataframe(q["request"])
-    _PLAN_CACHE[key] = df
     return df
 
 

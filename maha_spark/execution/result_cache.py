@@ -45,6 +45,7 @@ from __future__ import annotations
 
 import copy
 import json
+import threading
 from collections import OrderedDict
 from typing import Any, Optional
 
@@ -129,9 +130,9 @@ def canonical_request(request: Any) -> Optional[str]:
 
 
 class ResultCache:
-    """LRU over JSON response envelopes. Thread-compatible with the
-    engine's dry-run threads (those never touch the cache); not designed
-    for concurrent multi-engine mutation — one cache per engine."""
+    """LRU over JSON response envelopes, shared by the concurrent
+    requests of one engine: every public method holds one lock, so
+    lookups, inserts, evictions and the byte count move together."""
 
     def __init__(self, max_entries: int = 256,
                  max_bytes: int = 64 * 1024 * 1024):
@@ -139,6 +140,7 @@ class ResultCache:
         self.max_bytes = max_bytes
         self._data: "OrderedDict[tuple, tuple[dict, int]]" = OrderedDict()
         self._bytes = 0
+        self._lock = threading.Lock()
         self.hits = 0
         self.misses = 0
         self.bypasses = 0
@@ -162,13 +164,19 @@ class ResultCache:
 
     # -- storage ---------------------------------------------------------
     def get(self, key: tuple) -> Optional[dict]:
-        hit = self._data.get(key, _MISS)
-        if hit is _MISS:
-            self.misses += 1
-            return None
-        self._data.move_to_end(key)
-        self.hits += 1
+        with self._lock:
+            hit = self._data.get(key, _MISS)
+            if hit is _MISS:
+                self.misses += 1
+                return None
+            self._data.move_to_end(key)
+            self.hits += 1
         return copy.deepcopy(hit[0])
+
+    def bypass(self) -> None:
+        """Count a request that could not be keyed."""
+        with self._lock:
+            self.bypasses += 1
 
     def put(self, key: tuple, envelope: dict) -> None:
         try:
@@ -177,22 +185,26 @@ class ResultCache:
             return      # unsizeable payloads are not cached
         if nbytes > self.max_bytes:
             return
-        old = self._data.pop(key, None)
-        if old is not None:
-            self._bytes -= old[1]
-        self._data[key] = (copy.deepcopy(envelope), nbytes)
-        self._bytes += nbytes
-        while self._data and (len(self._data) > self.max_entries
-                              or self._bytes > self.max_bytes):
-            _, (_, b) = self._data.popitem(last=False)
-            self._bytes -= b
-            self.evictions += 1
+        envelope = copy.deepcopy(envelope)
+        with self._lock:
+            old = self._data.pop(key, None)
+            if old is not None:
+                self._bytes -= old[1]
+            self._data[key] = (envelope, nbytes)
+            self._bytes += nbytes
+            while self._data and (len(self._data) > self.max_entries
+                                  or self._bytes > self.max_bytes):
+                _, (_, b) = self._data.popitem(last=False)
+                self._bytes -= b
+                self.evictions += 1
 
     def clear(self) -> None:
-        self._data.clear()
-        self._bytes = 0
+        with self._lock:
+            self._data.clear()
+            self._bytes = 0
 
     def stats(self) -> dict[str, int]:
-        return {"entries": len(self._data), "bytes": self._bytes,
-                "hits": self.hits, "misses": self.misses,
-                "bypasses": self.bypasses, "evictions": self.evictions}
+        with self._lock:
+            return {"entries": len(self._data), "bytes": self._bytes,
+                    "hits": self.hits, "misses": self.misses,
+                    "bypasses": self.bypasses, "evictions": self.evictions}

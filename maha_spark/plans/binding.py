@@ -5,6 +5,14 @@ The reference binds facts/dims to engines (Druid/Oracle/...); here a
 binding maps a physical name to a Spark DataFrame — by default parquet
 files under a base directory (the driver's testdata layout), but any
 DataFrame source (Delta, JDBC, a registered temp view) can be bound.
+
+``ParquetBinding`` reads through one memo shared by every binding of a
+session: one entry per (session, table path) holds the table version
+(plans/versioning.py), the frame — cached when the size gates pass —
+and a temp view named with the version. Concurrent requests share each
+entry; a rewrite plus ``bump_table_version`` installs a new one (the
+engine's own rewrites bump the version; external writers must call it
+themselves). ``forget_tables`` drops entries.
 """
 
 from __future__ import annotations
@@ -55,68 +63,87 @@ class TableBinding:
         return name in self._overrides
 
 
-# (spark-session id, path) -> (table version, cached DataFrame);
-# survives across the short-lived ParquetBinding instances the contract
-# queries create so a benchmark loop re-reads hot tables from Spark's
-# in-memory columnar cache. The version (plans/versioning.py: explicit
-# _table_version stamp, root mtime as the local-FS fallback) detects an
-# in-process rewrite: the stale cached DataFrame is unpersisted and
-# rebuilt. Every engine-maintained rewrite bumps the stamp
-# (overwrite_day_partitions and the delete/retention legs); external
-# writers must call bump_table_version themselves.
-_DF_CACHE: dict[tuple[int, str], tuple[float, DataFrame]] = {}
+class _Entry(NamedTuple):
+    """One memoized table version: the frame (cached when the size
+    gates pass), its shared view, and the view of the entry it replaced
+    (none or one), which in-flight statements may still name."""
+    version: float
+    frame: DataFrame
+    view: View
+    prior_views: tuple[str, ...]
 
 
-def _mtime(path: str) -> float:
-    from .versioning import table_version
-    return table_version(path)
-
-
-def _df_cache_get(spark, path: str):
-    key = (id(spark), path)
-    hit = _DF_CACHE.get(key)
-    if hit is None:
-        return None
-    mt, df = hit
-    if mt != _mtime(path):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-        del _DF_CACHE[key]
-        return None
-    return df
-
-
-# (spark-session id, path) -> (memoized DataFrame, its View). A view is
-# registered once per memo entry under a name carrying the table's
-# version, so a rewrite registers a new view instead of swapping the
-# one an in-flight request's statement names; the replaced view is
-# dropped.
-_VIEWS: dict[tuple[int, str], tuple[DataFrame, View]] = {}
-_VIEWS_LOCK = threading.Lock()
+# (session, path) -> the table's current entry. Module-level so it
+# outlives the short-lived ParquetBinding instances load_table and the
+# contract create per call. _LOCK covers lookups, installs and retires
+# only; the parquet read and the size gates run outside it.
+_MEMO: dict[tuple[SparkSession, str], _Entry] = {}
+_LOCK = threading.Lock()
 _VIEW_IDS = itertools.count()
 
 
-def _shared_view(spark, path: str, name: str, df: DataFrame) -> View:
-    key = (id(spark), path)
-    with _VIEWS_LOCK:
-        hit = _VIEWS.get(key)
-        if hit is not None and hit[0] is df:
-            return hit[1]
-        vname = re.sub(r"\W", "_", f"{name}__v{_mtime(path):.6f}")
+def _memo_entry(spark: SparkSession, path: str, name: str,
+                read: Callable[[str], DataFrame]) -> _Entry:
+    """The entry for the current version of the table at ``path``.
+
+    A hit is one version probe (plans/versioning.py) and one lookup.
+    Versions only grow, so an entry at least as new as the probe is
+    current; racing readers of one version adopt whichever entry is
+    installed first and never cache their own frame. Installing a new
+    version retires the old entry once: its frame is unpersisted before
+    the new one is cached (Spark's CacheManager matches plans by path,
+    so a stale cache would serve the rewritten table), and its view
+    lives until this entry is itself replaced."""
+    from ..ops.common import drop_view
+    from .versioning import table_version
+    key = (spark, path)
+    version = table_version(path)
+    with _LOCK:
+        hit = _MEMO.get(key)
+    if hit is not None and hit.version >= version:
+        return hit
+    # memoize even when not caching: the frame's resolved FileIndex
+    # makes partition discovery over a 2500-directory dt layout run once
+    # per table version, not once per query
+    df = read(path)
+    cache = _should_cache(path)
+    with _LOCK:
+        old = _MEMO.get(key)
+        if old is not None and old.version >= version:
+            return old
+        if old is not None:
+            old.frame.unpersist()
+            for v in old.prior_views:
+                drop_view(spark, v)
+        if cache:
+            df = df.cache()
+        vname = re.sub(r"\W", "_", f"{name}__v{version:.6f}")
         view = View(f"{vname}_{next(_VIEW_IDS)}", tuple(df.columns), True)
         df.createOrReplaceTempView(view.name)
-        _VIEWS[key] = (df, view)
-    if hit is not None:
-        from ..ops.common import drop_view
-        drop_view(spark, hit[1].name)
-    return view
+        entry = _MEMO[key] = _Entry(version, df, view,
+                                    (old.view.name,) if old else ())
+    return entry
 
 
-def _df_cache_put(spark, path: str, df: DataFrame) -> DataFrame:
-    _DF_CACHE[(id(spark), path)] = (_mtime(path), df)
-    return df
+def forget_tables(*paths: str) -> int:
+    """Drop the memo entries of ``paths`` (every entry when none are
+    named) in every session: unpersist their frames and drop their
+    views. Returns how many entries were dropped."""
+    from ..ops.common import drop_view
+    with _LOCK:
+        gone = [(k[0], _MEMO.pop(k)) for k in list(_MEMO)
+                if not paths or k[1] in paths]
+    for spark, e in gone:
+        e.frame.unpersist(blocking=True)
+        for v in (e.view.name, *e.prior_views):
+            drop_view(spark, v)
+    return len(gone)
+
+
+def memoized_tables() -> int:
+    """Entries in the memo (one per session and table)."""
+    return len(_MEMO)
+
 
 #: on-disk bytes ceiling for auto-caching a bound table (one of TWO
 #: gates — see CACHE_MAX_ROWS_DEFAULT for the row-count gate). Dims and
@@ -127,27 +154,26 @@ def _df_cache_put(spark, path: str, df: DataFrame) -> DataFrame:
 CACHE_MAX_BYTES_DEFAULT = 2 << 30
 
 
-def _cache_max_bytes() -> int:
-    return int(os.environ.get("MAHA_SPARK_CACHE_MAX_BYTES",
-                              CACHE_MAX_BYTES_DEFAULT))
+def _files(path: str) -> list[str]:
+    """``path`` itself when it is a file, else every file under it.
+    os.walk does not follow directory links (bench layouts symlink
+    FILES, whose sizes still resolve; directory links risk cycles)."""
+    if os.path.isfile(path):
+        return [path]
+    return [os.path.join(r, f) for r, _d, fs in os.walk(path) for f in fs]
+
+
+def _size(f: str) -> int:
+    try:
+        return os.path.getsize(f)
+    except OSError:
+        return 0
 
 
 def _path_bytes(path: str) -> int:
     """Total on-disk bytes of a parquet file or directory tree (cheap
     metadata walk; no data read)."""
-    if os.path.isfile(path):
-        total = os.path.getsize(path)
-    else:
-        total = 0
-        # followlinks=False: bench layouts symlink FILES (getsize still
-        # resolves those); following directory links risks symlink cycles
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    return total
+    return sum(map(_size, _files(path)))
 
 
 #: row-count ceiling for auto-caching. Spark's in-memory columnar cache
@@ -172,11 +198,6 @@ CACHE_MAX_ROWS_DEFAULT = 200_000_000
 _ROWS_SAMPLE_FILES = 8
 
 
-def _cache_max_rows() -> int:
-    return int(os.environ.get("MAHA_SPARK_CACHE_MAX_ROWS",
-                              CACHE_MAX_ROWS_DEFAULT))
-
-
 def _est_rows(path: str) -> int:
     """Estimated row count of a parquet file/tree: exact footer
     ``num_rows`` summed over a bounded sample of files, extrapolated by
@@ -184,21 +205,11 @@ def _est_rows(path: str) -> int:
     single file; on a multi-file tree the rows-per-byte of the sample is
     applied to the total tree size. Unreadable/non-parquet paths
     estimate 0 (the disk-bytes gate still applies)."""
-    if os.path.isfile(path):
-        files = [path]
-    else:
-        files = sorted(
-            os.path.join(r, f)
-            for r, _d, fs in os.walk(path)  # no dir links: cycle-safe
-            for f in fs if f.endswith(".parquet"))
     # extrapolate over parquet bytes only — _SUCCESS/metadata files must
     # not inflate the denominator's total
-    def _sz(f):
-        try:
-            return os.path.getsize(f)
-        except OSError:
-            return 0
-    total_bytes = sum(_sz(f) for f in files)
+    files = [path] if os.path.isfile(path) else sorted(
+        f for f in _files(path) if f.endswith(".parquet"))
+    total_bytes = sum(map(_size, files))
     full = len(files) <= _ROWS_SAMPLE_FILES
     if not full:
         step = (len(files) - 1) / (_ROWS_SAMPLE_FILES - 1)
@@ -217,11 +228,13 @@ def _est_rows(path: str) -> int:
 
 
 def _should_cache(path: str) -> bool:
-    """The size gates, walked once per ``_DF_CACHE`` miss (a new
-    session, path or table version)."""
+    """The size gates, walked once per memo miss (a new session, path
+    or table version)."""
     return (os.environ.get("MAHA_SPARK_CACHE", "1") == "1"
-            and _path_bytes(path) <= _cache_max_bytes()
-            and _est_rows(path) <= _cache_max_rows())
+            and _path_bytes(path) <= int(os.environ.get(
+                "MAHA_SPARK_CACHE_MAX_BYTES", CACHE_MAX_BYTES_DEFAULT))
+            and _est_rows(path) <= int(os.environ.get(
+                "MAHA_SPARK_CACHE_MAX_ROWS", CACHE_MAX_ROWS_DEFAULT)))
 
 
 class ParquetBinding(TableBinding):
@@ -235,45 +248,24 @@ class ParquetBinding(TableBinding):
         path = None if name in self._overrides else self.table_path(name)
         if path is None:
             return super().view(name)
-        return _shared_view(self.spark, path, name, self.table(name))
+        return _memo_entry(self.spark, path, name, self._read_parquet).view
 
     def table(self, name: str) -> DataFrame:
         if name in self._overrides:
             return self._overrides[name]()
-        # Hive-partitioned directory layout ({base}/{name}/dt=.../*.parquet)
-        # takes precedence: the 100 TB shape, read with partition discovery
-        # so the planner's day bound becomes a PartitionFilter
-        pdir = os.path.join(self.base_dir, name)
-        if os.path.isdir(pdir):
-            hit = _df_cache_get(self.spark, pdir)
-            if hit is not None:  # hit: skip the size-gate metadata walk
-                return hit
-            df = normalize_timestamps(self.spark.read.parquet(pdir))
-            if _should_cache(pdir):
-                df = df.cache()
-            # memoize even when NOT persisting: reusing the DataFrame
-            # reuses its resolved FileIndex, so partition discovery over
-            # a 2500-directory dt layout runs once per session, not once
-            # per query (unpersist on an unpersisted df is a no-op, so
-            # the mtime invalidation path needs no cached/uncached split)
-            return _df_cache_put(self.spark, pdir, df)
-        path = os.path.join(self.base_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            hit = _df_cache_get(self.spark, path)
-            if hit is not None:
-                return hit
-            df = self._read_parquet(path)
-            if _should_cache(path):
-                df = df.cache()
-            return _df_cache_put(self.spark, path, df)
-        return self.spark.table(name)
+        path = self.table_path(name)
+        if path is None:
+            return self.spark.table(name)
+        return _memo_entry(self.spark, path, name, self._read_parquet).frame
 
     def table_path(self, name: str) -> Optional[str]:
         """On-disk location of ``name`` under this binding's layout
-        rules — partitioned directory first, flat ``{name}.parquet``
-        second — or None when neither exists (catalog tables have no
-        path). THE single place that encodes the layout convention:
-        the planner's sidecar probe and the advisor's freshness gate
+        rules — partitioned directory first (the 100 TB shape: read with
+        partition discovery, so the planner's day bound becomes a
+        PartitionFilter), flat ``{name}.parquet`` second — or None
+        when neither exists (catalog tables have no path). THE single
+        place that encodes the layout convention: the memo, the
+        planner's sidecar probe and the advisor's freshness gate
         resolve through here instead of re-implementing it."""
         pdir = os.path.join(self.base_dir, name)
         if os.path.isdir(pdir):

@@ -51,6 +51,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import threading
 from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -248,7 +249,8 @@ def build_skipping_index(spark: SparkSession, table_dir: str,
         # in-process probes must not serve the replaced sidecar even on
         # filesystems whose mtime granularity can't distinguish two
         # rebuilds in one tick
-        _SIDECAR_CACHE.pop(path, None)
+        with _SIDECAR_LOCK:
+            _SIDECAR_CACHE.pop(path, None)
         _record_src_mtime(index_dir, col, src_mtime)
         out_paths.append(path)
     return out_paths
@@ -311,8 +313,11 @@ def index_file_count(index_dir: str, col: str) -> Optional[int]:
 #: sidecar (bloom word maps included) can run to ~1 GB of driver heap —
 #: resident copies, not the per-probe transient, are what the cap
 #: bounds. FIFO eviction; a hot workload probes few distinct sidecars.
+#: _SIDECAR_LOCK makes each eviction and insert one step for concurrent
+#: planners.
 _SIDECAR_CACHE: dict[str, tuple[float, dict]] = {}
 _SIDECAR_CACHE_MAX = 16
+_SIDECAR_LOCK = threading.Lock()
 
 
 def _load_sidecar(path: str) -> Optional[dict]:
@@ -337,9 +342,11 @@ def _load_sidecar(path: str) -> Optional[dict]:
     # validate ONCE at load (cached) and let probes abstain.
     cols["_mixed_params"] = len(
         set(zip(cols.get("bits_m", ()), cols.get("hashes", ())))) > 1
-    if len(_SIDECAR_CACHE) >= _SIDECAR_CACHE_MAX:
-        _SIDECAR_CACHE.pop(next(iter(_SIDECAR_CACHE)))
-    _SIDECAR_CACHE[path] = (mtime, cols)
+    with _SIDECAR_LOCK:
+        _SIDECAR_CACHE.pop(path, None)
+        if len(_SIDECAR_CACHE) >= _SIDECAR_CACHE_MAX:
+            del _SIDECAR_CACHE[next(iter(_SIDECAR_CACHE))]
+        _SIDECAR_CACHE[path] = (mtime, cols)
     return cols
 
 

@@ -91,10 +91,7 @@ def test_cache_policy_size_gated(spark, monkeypatch):
     np_ = "/root/testdata/sf0.01/nation.parquet"
     # start from a clean memo: an earlier module may have bound either
     # table under the default (permissive) caps
-    for p in (lp, np_):
-        hit = b._DF_CACHE.pop((id(spark), p), None)
-        if hit is not None:
-            hit[1].unpersist(blocking=True)
+    b.forget_tables(lp, np_)
     pb = b.ParquetBinding(spark, "/root/testdata/sf0.01")
     monkeypatch.setenv("MAHA_SPARK_CACHE", "1")
     # rows cap below lineitem's count but above nation's (footer-exact
@@ -114,9 +111,7 @@ def test_cache_policy_size_gated(spark, monkeypatch):
     assert not b._should_cache(lp)
     # drop BOTH memo entries: they were built under this test's tiny cap
     # (an uncached lineitem memo would otherwise stick for the session)
-    dim.unpersist()
-    for p in (lp, np_):
-        b._DF_CACHE.pop((id(spark), p), None)
+    b.forget_tables(lp, np_)
 
 
 def test_est_rows_sees_through_rle_compression(spark, tmp_path):

@@ -29,10 +29,8 @@ def contract_engine(spark):
     # substitutes ANY matching plan with a cached one, so tables cached by
     # earlier test modules must be unpersisted too.
     os.environ["MAHA_SPARK_CACHE"] = "0"
-    from maha_spark.plans.binding import _DF_CACHE
-    for _mt, df in _DF_CACHE.values():
-        df.unpersist(blocking=True)
-    _DF_CACHE.clear()
+    from maha_spark.plans.binding import forget_tables
+    forget_tables()
     from maha_spark.engine import engine_for_dir
     from maha_spark.examples.contract import build_contract_registry
     yield engine_for_dir(spark, build_contract_registry(),
@@ -356,6 +354,7 @@ def test_generators_explode_only_cheap_sequences(spark):
 
     from maha_spark.ops import (chunking, contamination, dedup, similarity,
                                 text, winnow)
+    from maha_spark.ops.common import release_scoped_caches
 
     sf = "/root/testdata/sf0.001"
     dfs = {
@@ -379,6 +378,10 @@ def test_generators_explode_only_cheap_sequences(spark):
             f"{name}: generator child builds values ({m.group(0)}...) — "
             f"it will re-evaluate per output row; explode indices and "
             f"derive values after the Generate")
+    # the ops cached their intermediates in the root scope; plans never
+    # materialized here must not leave CacheManager entries for later
+    # tests to adopt
+    release_scoped_caches()
 
 
 def test_chunking_tokenizes_below_the_generate(spark):
@@ -469,10 +472,8 @@ def test_q5_via_nation_rollup_never_touches_orders_or_customer(
         for t in os.listdir(src):
             os.symlink(os.path.join(src, t), os.path.join(d, t))
         materialize_lineitem_nation_rollup(spark, src, d)
-        from maha_spark.plans.binding import _DF_CACHE
-        for _mt, cdf in _DF_CACHE.values():
-            cdf.unpersist(blocking=True)
-        _DF_CACHE.clear()
+        from maha_spark.plans.binding import forget_tables
+        forget_tables()
         eng = engine_for_dir(spark, build_contract_registry(), d)
         df = eng.dataframe({
             "cube": "tpch",
@@ -510,10 +511,8 @@ def test_q4_via_segment_rollup_filter_pushed_no_customer_join(
         for t in os.listdir(src):
             os.symlink(os.path.join(src, t), os.path.join(d, t))
         materialize_lineitem_nation_rollup(spark, src, d)
-        from maha_spark.plans.binding import _DF_CACHE
-        for _mt, cdf in _DF_CACHE.values():
-            cdf.unpersist(blocking=True)
-        _DF_CACHE.clear()
+        from maha_spark.plans.binding import forget_tables
+        forget_tables()
         eng = engine_for_dir(spark, build_contract_registry(), d)
         df = eng.dataframe({
             "cube": "tpch",

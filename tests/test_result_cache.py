@@ -285,3 +285,38 @@ def test_unmaterialized_rollup_candidates_do_not_bypass(spark):
     k_present = cache.key_for(model, _Probe(), req, "internal",
                               dt.date(2002, 1, 1), "maha")
     assert k_absent != k_present
+
+
+def test_concurrent_get_put_keep_bytes_consistent():
+    """Threads serving one engine share its cache: four threads hammering
+    ``get``/``put`` on a 4-entry cache raise nothing, and the byte count
+    equals the bytes of the live entries."""
+    import threading
+
+    cache = ResultCache(max_entries=4)
+    errors = []
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+
+    def hammer(seed: int) -> None:
+        try:
+            for i in range(20_000):
+                k = ("k", (i * 7 + seed) % 8)
+                if cache.get(k) is None:
+                    cache.put(k, {"rows": [[i % 3]]})
+        except Exception as e:  # noqa: BLE001 - collected for the assert
+            errors.append(e)
+
+    try:
+        threads = [threading.Thread(target=hammer, args=(s,))
+                   for s in range(4)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]
+    assert cache._bytes == sum(n for _env, n in cache._data.values())
+    assert len(cache._data) <= 4

@@ -1121,3 +1121,50 @@ def test_dim_driven_page_keys_prune_fact_files(spark, tmp_path):
     assert sorted(map(tuple, got.collect())) \
         == sorted(map(tuple, exp.collect()))
     assert got.count() == 25
+
+
+def test_sidecar_memo_eviction_is_thread_safe(tmp_path, monkeypatch):
+    """Concurrent planners loading more sidecars than the memo holds
+    evict and insert without racing each other."""
+    import sys
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from maha_spark.plans import skipping
+
+    tables, paths = {}, []
+    for i in range(8):
+        p = str(tmp_path / f"skip_c{i}.parquet")
+        tables[p] = pa.table({"file": [f"f{i}"]})
+        pq.write_table(tables[p], p)
+        paths.append(p)
+    # decode from memory: the race is in the memo, not the parquet read
+    monkeypatch.setattr(pq, "read_table", lambda p: tables[p])
+    monkeypatch.setattr(skipping, "_SIDECAR_CACHE", {})
+    monkeypatch.setattr(skipping, "_SIDECAR_CACHE_MAX", 2)
+    errors = []
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+
+    def load(seed: int) -> None:
+        try:
+            for i in range(20_000):
+                k = (i * 3 + seed) % len(paths)
+                assert skipping._load_sidecar(paths[k])["file"] == [f"f{k}"]
+        except Exception as e:  # noqa: BLE001 - collected for the assert
+            errors.append(e)
+
+    try:
+        threads = [threading.Thread(target=load, args=(s,))
+                   for s in range(4)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]
+    assert len(skipping._SIDECAR_CACHE) <= 2

@@ -132,8 +132,9 @@ def test_debug_envelope_carries_the_statement(engine):
 
 def test_rewritten_dim_is_read_through_a_new_view(spark, sf_dir, tmp_path):
     """After a dim rewrite plus ``bump_table_version``, the next request
-    reads the new rows through a newly registered view, and the old view
-    is gone from the catalog."""
+    reads the new rows through a newly registered view. The old view
+    stays registered for statements already rendered against it, and is
+    gone from the catalog after the next rewrite."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -169,6 +170,11 @@ def test_rewritten_dim_is_read_through_a_new_view(spark, sf_dir, tmp_path):
     after, new_view = names_and_view()
     assert before and after == {f"{n} v2" for n in before}
     assert new_view != old_view
+    assert spark.catalog.tableExists(old_view)
+    assert spark.catalog.tableExists(new_view)
+    bump_table_version(ndir)
+    again, last_view = names_and_view()
+    assert again == after and last_view not in (old_view, new_view)
     assert not spark.catalog.tableExists(old_view)
     assert spark.catalog.tableExists(new_view)
 

