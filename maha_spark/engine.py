@@ -66,8 +66,12 @@ class MahaSparkEngine:
         the binding memo's table entries (one per session and table,
         ``bindingCachedTables``), and the Spark storage layer's
         persisted-block count — everything needed to see cache behavior
-        without a debugger."""
+        without a debugger — and the driver's generated-code compiles
+        and their milliseconds so far (``codegenCompiles``,
+        ``codegenCompileMs``): a request that compiles nothing reused
+        every class an earlier request compiled."""
         from .plans.binding import memoized_tables
+        from .session import codegen_stats
 
         try:
             n_rdds = int(self.spark.sparkContext._jsc
@@ -82,6 +86,7 @@ class MahaSparkEngine:
             "bindingCachedTables": memoized_tables(),
             "persistedRdds": n_rdds,
             "dryRunsLogged": len(self.dry_run_log),
+            **codegen_stats(self.spark),
         }
 
     # ------------------------------------------------------------------

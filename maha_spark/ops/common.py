@@ -109,13 +109,17 @@ class Scope:
         """Frames (caches and checkpoints) held now."""
         return len(self._held)
 
-    def release(self) -> int:
-        """Join the spawned threads, drop the views, then unpersist every
-        held frame; returns how many frames."""
+    def join(self) -> None:
+        """Wait for the threads this scope has spawned so far."""
         with self._lock:
             threads, self._threads = self._threads, []
         for t in threads:
             t.join()
+
+    def release(self) -> int:
+        """Join the spawned threads, drop the views, then unpersist every
+        held frame; returns how many frames."""
+        self.join()
         with self._lock:
             held, self._held = self._held, []
             views, self._views = self._views, []

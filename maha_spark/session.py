@@ -82,29 +82,63 @@ def get_spark(app_name: str = "maha-spark", master: str | None = None,
                                    ".spark-tmp")))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
-    # Local-filesystem fast path (r13, guide §7.3): Hadoop's default
-    # file:// stack costs one .crc sidecar file AND one fork+exec'd
-    # chmod per created file/dir when libhadoop is absent (always, in a
-    # pip-installed PySpark). On hosts with supervised process spawn
-    # (~85 ms per exec measured here) a dynamic-partition write of a few
-    # thousand files serializes into MINUTES of chmod execs, and every
-    # streaming-checkpoint metadata file pays the same tax (driver
-    # thread dumps showed executor tasks parked in
-    # Shell.runCommand <- RawLocalFileSystem.setPermission). The
-    # committed FastLocalFileSystem jar no-ops setPermission and skips
-    # the checksum layer; only the "file" scheme is remapped — cluster
+    # The committed jar (maha_spark/jvm/src, built by tools/build_jvm.sh)
+    # holds two independent pieces.
+    #
+    # mahaspark.sql.MahaSparkExtensions: value-free whole-stage codegen.
+    # Spark's Literal.doGenCode writes date, timestamp and numeric values
+    # into the generated Java, and compiled classes are cached by source
+    # text, so an ad-hoc request that differs from an earlier one only in
+    # its day window or filter values would compile ~3 new classes with
+    # Janino (~18 ms each) and run them cold. The extension's physical rule
+    # makes comparison and IN-list literals inside FilterExec conditions
+    # read their value from the class's references[] instead, so such a
+    # request reuses the compiled classes. Scans keep their plain
+    # literals (pushdown, partition and cached-batch pruning match on
+    # them): the one compile a new value still costs is the small
+    # cached-batch stats predicate. Plans print and compare unchanged.
+    #
+    # mahaspark.fs.FastLocalFileSystem (r13, guide §7.3): Hadoop's
+    # default file:// stack costs one .crc sidecar file AND one
+    # fork+exec'd chmod per created file/dir when libhadoop is absent
+    # (always, in a pip-installed PySpark). On hosts with supervised
+    # process spawn (~85 ms per exec measured here) a dynamic-partition
+    # write of a few thousand files serializes into MINUTES of chmod
+    # execs, and every streaming-checkpoint metadata file pays the same
+    # tax (driver thread dumps showed executor tasks parked in
+    # Shell.runCommand <- RawLocalFileSystem.setPermission). It no-ops
+    # setPermission and skips the checksum layer; only the "file" scheme
+    # is remapped (MAHA_SPARK_NO_FASTLOCALFS turns that off) — cluster
     # schemes (hdfs/s3a/abfs) are untouched, so this is pure local-
     # deployment hygiene, not a bench special case.
+    builder = builder.config("spark.sql.extensions",
+                             "mahaspark.sql.MahaSparkExtensions")
     jvm_jar = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "jvm", "maha-fastlocalfs.jar")
-    if os.path.exists(jvm_jar) and not os.environ.get(
-            "MAHA_SPARK_NO_FASTLOCALFS"):
+                           "jvm", "maha-spark.jar")
+    if os.path.exists(jvm_jar):
         builder = (
             builder
             .config("spark.driver.extraClassPath", jvm_jar)
-            .config("spark.executor.extraClassPath", jvm_jar)
-            .config("spark.hadoop.fs.file.impl",
-                    "mahaspark.fs.FastLocalFileSystem")
-            .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-                    "mahaspark.fs.FastLocalFs"))
+            .config("spark.executor.extraClassPath", jvm_jar))
+        if not os.environ.get("MAHA_SPARK_NO_FASTLOCALFS"):
+            builder = (
+                builder
+                .config("spark.hadoop.fs.file.impl",
+                        "mahaspark.fs.FastLocalFileSystem")
+                .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+                        "mahaspark.fs.FastLocalFs"))
     return builder.getOrCreate()
+
+
+def codegen_stats(spark: SparkSession) -> dict[str, float]:
+    """Janino compiles of generated code in this driver JVM so far, and
+    their total milliseconds: Spark's own ``CodegenMetrics`` compilation
+    histogram count and ``CodeGenerator.compileTime``. A compiled class
+    is cached by its source text, so a cache hit counts nothing."""
+    jvm = spark._jvm
+    compiles = (jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME().getCount())
+    nanos = (jvm.org.apache.spark.sql.catalyst.expressions.codegen
+             .CodeGenerator.compileTime())
+    return {"codegenCompiles": int(compiles),
+            "codegenCompileMs": round(nanos / 1e6, 1)}

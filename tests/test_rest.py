@@ -122,8 +122,9 @@ def test_status_endpoint_surfaces_cache_telemetry(spark, sf_dir):
         assert {"hits", "misses", "bypasses", "entries",
                 "bytes", "evictions"} <= set(rc)
         for k in ("scopedCaches", "bindingCachedTables",
-                  "persistedRdds", "dryRunsLogged"):
+                  "persistedRdds", "dryRunsLogged", "codegenCompiles"):
             assert isinstance(body[k], int)
+        assert body["codegenCompileMs"] >= 0
 
         req = json.dumps({
             "cube": "lineitem_stats",

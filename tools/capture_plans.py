@@ -10,7 +10,11 @@ Plans are written normalized: expression ids (``#123L``), ``plan_id=``
 values and the per-process dedup index path (``maha-dedup-idx-*``)
 differ between two runs of the same code, so they are replaced by fixed
 tokens and two captures of one commit are byte-identical — ``diff``
-shows plan changes only.
+shows plan changes only. Each entry runs in its own ``Scope``: its warm
+threads finish before the plan is formatted (the formatted plan prints
+the adaptive plans of the caches they materialize), and its caches are
+released after, so no entry's plan depends on what an earlier entry
+cached or on which of two concurrent jobs finished first.
 
 A cube entry (a frame the planner built) also gets
 ``<out_dir>/<query>_<suffix>.sql``: its rendered SQL statement, with the
@@ -54,6 +58,7 @@ def main() -> int:
     only = set(sys.argv[3:])
     os.makedirs(out_dir, exist_ok=True)
     import __spark_entry__ as entry
+    from maha_spark.ops.common import Scope
     from maha_spark.session import get_spark
 
     spark = get_spark("capture-plans")
@@ -65,12 +70,14 @@ def main() -> int:
         if name.startswith("op_stream"):
             continue
         df = None
-        try:
-            df = fn(spark, SF_DIR)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted")
-        except Exception as e:  # noqa: BLE001
-            plan = f"ERROR {type(e).__name__}: {e}"
+        with Scope() as scope:
+            try:
+                df = fn(spark, SF_DIR)
+                scope.join()
+                plan = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted")
+            except Exception as e:  # noqa: BLE001
+                plan = f"ERROR {type(e).__name__}: {e}"
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
             f.write(normalize(plan))
         statement = getattr(df, "statement", None)
