@@ -121,19 +121,23 @@ def lsh_band_frame(base: DataFrame) -> DataFrame:
                 f"+ mhs[band * {ROWS} + 1] AS key"))
 
 
-def verified_jaccard_pairs(cand: DataFrame, a_sh: DataFrame,
-                           b_sh: DataFrame) -> DataFrame:
+def verified_jaccard_pairs(cand: DataFrame, sets: DataFrame,
+                           threshold: float) -> DataFrame:
     """Exact-Jaccard verification of candidate (a_id, b_id) pairs against
-    shingle sources (doc_id, sh). Candidates must be id-deduped BEFORE
-    this: the banded join multiplies pairs up to 12x and shuffling the
-    (large) shingle arrays through that would dominate the run."""
+    one (doc_id, sh) set source: pairs with ``round(|a∩b| / |a∪b|, 6) >=
+    threshold``. Candidates must be id-deduped BEFORE this: a banded
+    join multiplies pairs up to 12x and shuffling the (large) set arrays
+    through that would dominate the run. ``array_intersect`` is a native
+    codegen'd builtin; the two plain equi-joins on doc_id let AQE
+    broadcast while the set side fits and fall back to a keyed shuffle
+    join at scale (no forced broadcast of the corpus)."""
     cand = (cand
-            .join(a_sh.selectExpr("doc_id AS a_id", "sh AS a_sh"), "a_id")
-            .join(b_sh.selectExpr("doc_id AS b_id", "sh AS b_sh"), "b_id"))
-    jac = ("CAST(size(array_intersect(a_sh, b_sh)) AS DOUBLE) / "
-           "(size(a_sh) + size(b_sh) - size(array_intersect(a_sh, b_sh)))")
+            .join(sets.selectExpr("doc_id AS a_id", "sh AS a_sh"), "a_id")
+            .join(sets.selectExpr("doc_id AS b_id", "sh AS b_sh"), "b_id"))
+    inter = "size(array_intersect(a_sh, b_sh))"
+    jac = f"CAST({inter} AS DOUBLE) / (size(a_sh) + size(b_sh) - {inter})"
     return (cand.selectExpr("a_id", "b_id", f"round({jac}, 6) AS jaccard")
-            .filter(f"jaccard >= {JACCARD_T}"))
+            .filter(f"jaccard >= {threshold}"))
 
 
 def cap_hot_buckets(bands: DataFrame, cap: int,
@@ -274,7 +278,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str,
             .unionByName(hot_bucket_chain_links(counted,
                                                 max_bucket_docs))
             .distinct())
-    return verified_jaccard_pairs(cand, base, base)
+    return verified_jaccard_pairs(cand, base, JACCARD_T)
 
 
 def dedup_minhash_lsh_oracle() -> str:
@@ -380,21 +384,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(f"1 + least(a_n - a_pos, b_n - b_pos) >= {alpha}")
             .select("a_id", "b_id")
             .distinct())
-    # exact verify on the deduped candidates: array_intersect of the
-    # per-doc token arrays is a native codegen'd builtin (the earlier
-    # dense-bitmap + lambda-fold variant blew janino's 64 KB method limit
-    # and fell back to interpreted evaluation — slower in practice)
-    # plain equi-joins on doc_id: AQE broadcasts while the side fits and
-    # falls back to a keyed shuffle join at scale (no forced broadcast of
-    # the corpus — that was the cluster-unsafe pattern to avoid)
-    sets_a = sorted_sets.selectExpr("doc_id AS a_id", "toks AS a_t")
-    sets_b = sorted_sets.selectExpr("doc_id AS b_id", "toks AS b_t")
-    inter = "size(array_intersect(a_t, b_t))"
-    jac = f"CAST({inter} AS DOUBLE) / (size(a_t) + size(b_t) - {inter})"
-    return (cand.join(sets_a, "a_id")
-            .join(sets_b, "b_id")
-            .selectExpr("a_id", "b_id", f"round({jac}, 6) AS jaccard")
-            .filter(f"jaccard >= {NGRAM_JACCARD_T}"))
+    return verified_jaccard_pairs(
+        cand, sorted_sets.selectExpr("doc_id", "toks AS sh"),
+        NGRAM_JACCARD_T)
 
 
 def dedup_ngram_jaccard_oracle() -> str:

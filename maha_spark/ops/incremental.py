@@ -41,7 +41,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .dedup import lsh_band_frame, lsh_shingle_frame, verified_jaccard_pairs
+from .dedup import (JACCARD_T, lsh_band_frame, lsh_shingle_frame,
+                    verified_jaccard_pairs)
 
 BANDS_TABLE = "dedup_bands"
 SHINGLES_TABLE = "dedup_shingles"
@@ -176,7 +177,7 @@ def dedup_incremental(spark: SparkSession, index_dir: str,
     # batch's (newer) shingles
     all_sh = base_new.unionByName(
         idx_sh.join(base_new.select("doc_id"), "doc_id", "left_anti"))
-    return verified_jaccard_pairs(cand, all_sh, all_sh)
+    return verified_jaccard_pairs(cand, all_sh, JACCARD_T)
 
 
 # ------------------------------------------------------- ANN (IVF) index

@@ -140,18 +140,6 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("bucket") < F.col("rate_pm")))
 
 
-def sample_stratified_oracle() -> str:
-    bucket, rate, weight = _bucket_exprs(spark_side=False)
-    return f"""
-        SELECT doc_id, lang, bucket, rate_pm, weight FROM (
-            SELECT doc_id, lang, {bucket} AS bucket,
-                   CAST({rate} AS BIGINT) AS rate_pm,
-                   {weight} AS weight
-            FROM documents)
-        WHERE bucket < rate_pm
-    """
-
-
 # -------------------------------------------------------------- quantiles
 _QS = (0.5, 0.9, 0.99)
 

@@ -71,26 +71,16 @@ def _cos_sql(a: str, b: str, one_based: bool) -> str:
 
 
 # ---------------------------------------------- vectorized kernel
-def _np_dots(q: "object", mat: "object") -> "object":
-    """Dot products of one query against every corpus row, accumulated
-    dim-by-dim left-to-right — the exact IEEE association order of the
-    explicit 64-term SQL sum (dot64_sql), so results hash-match the
-    DuckDB oracle bit-for-bit."""
-    acc = q[0] * mat[:, 0]
-    for c in range(1, mat.shape[1]):
-        acc = acc + q[c] * mat[:, c]
-    return acc
-
-
 def _np_dots_mat(l_mat: "object", r_mat: "object") -> "object":
     """All-pairs dot-product MATRIX (len(l) x len(r)), accumulated
     dim-by-dim left-to-right: element (i, j) sums l[i,c]*r[j,c] over c
-    in ascending order — bit-identical to ``_np_dots(l_mat[i], r_mat)``
-    per row, but one broadcasted numpy op per dimension instead of a
-    Python-level loop over query rows (O(dims) interpreter steps for the
-    whole block, not O(rows x dims)). Deliberately NOT ``l_mat @
-    r_mat.T``: BLAS reassociates the per-dim accumulation and the last
-    float bits would drift off the DuckDB oracle's explicit sum."""
+    in ascending order — the exact IEEE association order of the
+    explicit 64-term SQL sum (dot64_sql), so results hash-match the
+    DuckDB oracle bit-for-bit. One broadcasted numpy op per dimension
+    for the whole block (O(dims) interpreter steps, not O(rows x
+    dims)). Deliberately NOT ``l_mat @ r_mat.T``: BLAS reassociates the
+    per-dim accumulation and the last float bits would drift off the
+    oracle's explicit sum."""
     acc = l_mat[:, 0:1] * r_mat[:, 0]
     for c in range(1, r_mat.shape[1]):
         acc = acc + l_mat[:, c:c + 1] * r_mat[:, c]
@@ -160,9 +150,8 @@ def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             if pdf.empty:
                 continue
             c_ids, c_mat, c_norms = _pdf_matrix(pdf)
-            # one broadcasted op per dim for the whole query block
-            # (bit-identical to the per-query _np_dots loop — see
-            # _np_dots_mat)
+            # one broadcasted op per dim for the whole query block, in
+            # the SQL sum's ascending-dim order (_np_dots_mat)
             cos_all = np.round(
                 _np_dots_mat(l_mat, c_mat)
                 / (l_norms[:, None] * c_norms), 6)
@@ -238,9 +227,9 @@ def exact_cos_pairs(emb: DataFrame, threshold: float,
         l_ids, l_mat, l_norms = _pdf_matrix(lpdf)
         r_ids, r_mat, r_norms = _pdf_matrix(rpdf, "r_vec_id",
                                             "r_embedding")
-        # whole-block cosine matrix + vectorized pair emit (row-major
-        # nonzero order == the old per-i loop's emit order); per-element
-        # floats are bit-identical to the per-query loop (_np_dots_mat)
+        # whole-block cosine matrix (ascending-dim sums, _np_dots_mat)
+        # + vectorized pair emit in row-major nonzero order: left rows
+        # in ascending i, each row's pairs in ascending j
         cos = np.round(
             _np_dots_mat(l_mat, r_mat) / (l_norms[:, None] * r_norms), 6)
         if bi == bj:
@@ -295,11 +284,10 @@ def cos_neighbor_stats(emb: DataFrame, threshold: float,
         l_ids, l_mat, l_norms = _pdf_matrix(lpdf)
         r_ids, r_mat, r_norms = _pdf_matrix(rpdf, "r_vec_id",
                                             "r_embedding")
-        # whole-block cosine matrix (bit-identical per element to the
-        # old per-query loop — _np_dots_mat), then vectorized row/column
-        # reductions; emit order matches the old loop (left rows in
-        # ascending i, then right rows in ascending j) though the
-        # downstream groupBy(vec_id) is order-insensitive anyway
+        # whole-block cosine matrix (ascending-dim sums, _np_dots_mat),
+        # then vectorized row/column reductions; emits left rows in
+        # ascending i, then right rows in ascending j (the downstream
+        # groupBy(vec_id) is order-insensitive anyway)
         big = np.iinfo(np.int64).max
         cos = np.round(
             _np_dots_mat(l_mat, r_mat) / (l_norms[:, None] * r_norms), 6)

@@ -1,4 +1,4 @@
-"""Result serialization: the reference's JSON envelope + CSV.
+"""Result serialization: the reference's JSON envelope + Excel.
 
 JSON shape mirrors maha `service/.../output/JsonOutputFormat.scala:80-335`:
 
@@ -7,7 +7,6 @@ JSON shape mirrors maha `service/.../output/JsonOutputFormat.scala:80-335`:
      "rows": [[...], ...],
      "curators": {name: {...}}}
 
-CSV mirrors `core/.../report/RowCSVWriter.scala` (header row + values).
 Rows stream via ``toLocalIterator`` so the driver never materializes the
 whole result (the reference spills RowLists to RocksDB for the same
 reason, query/OffHeapRowList.scala:40-83).
@@ -15,10 +14,8 @@ reason, query/OffHeapRowList.scala:40-83).
 
 from __future__ import annotations
 
-import csv
 import datetime as _dt
 import io
-import json
 from decimal import Decimal
 from typing import Any, Iterable, Optional
 
@@ -65,19 +62,6 @@ def to_json_response(df: DataFrame, cube: str,
     if curators:
         out["curators"] = curators
     return out
-
-
-def to_json_string(df: DataFrame, cube: str, **kw: Any) -> str:
-    return json.dumps(to_json_response(df, cube, **kw))
-
-
-def to_csv_string(df: DataFrame) -> str:
-    buf = io.StringIO()
-    w = csv.writer(buf, lineterminator="\n")
-    w.writerow(df.columns)
-    for row in df.toLocalIterator():
-        w.writerow(["" if v is None else _json_value(v) for v in row])
-    return buf.getvalue()
 
 
 # ------------------------------------------------------------------ excel

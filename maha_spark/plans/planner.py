@@ -66,7 +66,7 @@ from ..core.columns import (
     BaseCol, ConstCol, DerivedDimCol, DerivedFactCol, DimCol, FactCol,
     PostResultCol, _PLACEHOLDER, expand_expr, static_mapping_projection,
 )
-from ..core.filters import Filter, ResolvedField, bind, sql_literal
+from ..core.filters import ResolvedField, bind, sql_literal
 from ..core.rollup import AverageRollup, NoopRollup
 from ..model.request_model import (
     CONSTANT, DIM_ATTR, FACT_DIM, METRIC, DimJoinChain, RequestModel,
@@ -74,54 +74,10 @@ from ..model.request_model import (
 )
 from ..ops.common import current_scope, scoped_cache
 from ..registry.cube import FactTable, PubCol, PublicDimension
+from . import skipping
 from .binding import TableBinding
 
 ROW_COUNT_ALIAS = "TOTALROWS"  # Count(*) OVER() TOTALROWS (OracleQueryGeneratorTest.scala:44)
-
-#: sentinel for _canon_needle: the needle's string form may not match
-#: Spark's CAST(stored AS STRING) — never prune on it
-_SKIP = object()
-
-
-def _canon_needle(dtype, value):
-    """Canonicalize an equality/IN needle so ``str(value)`` matches the
-    string Spark's CAST(stored AS STRING) produced at Bloom-build time —
-    a mismatch would prune files that DO contain the value. Int columns
-    take ints, integral floats and digit strings; string columns only
-    strings ('013' = 13 compares numerically, invisible to the Bloom);
-    date columns date objects and 'YYYY-M-D' strings. Anything else is
-    the _SKIP sentinel."""
-    import datetime as _dt
-
-    from ..core.types import DateType, IntType, StrType
-    if isinstance(dtype, IntType):
-        if isinstance(value, bool):
-            return _SKIP
-        if isinstance(value, int):
-            return value
-        if isinstance(value, float) and value.is_integer():
-            return int(value)
-        if isinstance(value, str):
-            try:
-                return int(value, 10)
-            except ValueError:
-                return _SKIP
-        return _SKIP
-    if isinstance(dtype, StrType):
-        return value if isinstance(value, str) else _SKIP
-    if isinstance(dtype, DateType):
-        if isinstance(value, _dt.datetime):    # before date: subclass
-            return _SKIP
-        if isinstance(value, _dt.date):
-            return value
-        if isinstance(value, str):
-            try:
-                return _dt.datetime.strptime(value, "%Y-%m-%d").date()
-            except ValueError:
-                return _SKIP
-        return _SKIP
-    return _SKIP
-
 
 #: cap on the cartesian product a dim-only DISTINCT request over UNRELATED
 #: chains may combine — past it, a client error instead of a blow-up
@@ -372,139 +328,44 @@ class Planner:
 
     def _load_fact(self, table: FactTable, model: RequestModel,
                    params: dict[str, Any],
-                   extra_needles: Optional[list] = None) -> _Rel:
+                   page_keys: Optional[list] = None) -> _Rel:
         rel, _ = self._fact_base(table)
-        if not table.parts:
-            pruned = self._apply_file_skipping(table, model, extra_needles)
-            if pruned is not None:
-                rel = pruned
+        rel = self._apply_file_skipping(rel, model, page_keys)
         rel = self._apply_partition_pruning(rel, table, model, params)
         return self._apply_timezone(rel, table, model, params)
 
-    def _sidecar_dirs(self, table: FactTable,
-                      model: Optional[RequestModel]
-                      ) -> Optional[tuple[str, str]]:
+    def _sidecar_dirs(self, table: FactTable) -> Optional[tuple[str, str]]:
         """``(index dir, table dir)`` when the binding dir carries a
-        skipping sidecar directory for this fact and the request may
-        prune on it; None otherwise.
-
-        A shifted-timezone request filters LOCAL-day expressions over
-        stored UTC values (_apply_timezone), which the sidecar never
-        saw — it abstains, as rollup serving does."""
-        if model is None or getattr(model, "timezone", None) \
-                or getattr(model, "utc_shifted", False):
-            return None
+        skipping sidecar directory for this fact; None otherwise."""
         base_dir = getattr(self.binding, "base_dir", None)
         if base_dir is None or not hasattr(self.binding, "table_pruned"):
             return None
-        from .skipping import table_index_dir
-        idx_dir = table_index_dir(base_dir, table.name)
+        idx_dir = skipping.table_index_dir(base_dir, table.name)
         if not os.path.isdir(idx_dir):
             return None
-        tdir = self.binding.table_path(table.name) \
-            if hasattr(self.binding, "table_path") else None
+        tdir = self.binding.table_path(table.name)
         return None if tdir is None else (idx_dir, tdir)
 
-    def _apply_file_skipping(self, table: FactTable,
-                             model: Optional[RequestModel],
-                             extra_needles: Optional[list] = None
-                             ) -> Optional[_Rel]:
+    def _apply_file_skipping(self, rel: _Rel, model: RequestModel,
+                             page_keys: Optional[list] = None) -> _Rel:
         """File-level data skipping for needle requests: when the
-        binding dir carries a sidecar index (``plans/skipping.py``,
-        under ``{dir}/_skipidx/{table}/``) for a physical column the
-        request filters by ``=``/``in``/range/``isnull``, the fact scan
-        reads ONLY files whose zone map + Bloom filter may contain the
-        value(s). Every original filter still applies to the pruned
-        rows, so a Bloom false positive costs a file open, never
-        correctness. ``extra_needles`` are runtime ``(column, values)``
-        needles (the dim-driven page keys) under the same guards.
-
-        Eligible columns are plain stored DimCols only: no derived
-        expressions or static mappings (their values differ from the
-        stored bytes), no case-insensitive columns (the index hashes
-        exact values), no day columns (partition pruning serves them).
-        Returns None when no needle matches an index — the normal
-        (cached) scan proceeds."""
-        dirs = self._sidecar_dirs(table, model)
-        if dirs is None:
-            return None
-        idx_dir, tdir = dirs
-        from .skipping import index_file_count, index_stale
-
-        # top-level request filters are CONJUNCTIVE, so per-needle keep
-        # sets intersect (an Or combinator never matches a column)
-        needles: list[tuple[Optional[str], Filter | list]] = []
-        for f in model.fact_filters:
-            pub = model.cube.col_by_alias(f.field) \
-                if hasattr(f, "field") else None
-            needles.append((pub.name if pub is not None
-                            else getattr(f, "field", None), f))
-        for name, values in (extra_needles or []):
-            vals = [v for v in values if v is not None]
-            if vals:
-                needles.append((name, vals))
-        kept_sets: list[set[str]] = []
-        totals: list[int] = []
-        for name, needle in needles:
-            col = table.columns.get(name) if name else None
-            if not isinstance(col, DimCol) or col.case_insensitive \
-                    or col.dtype.has_static_mapping or col.is_day_column:
-                continue
-            if index_stale(tdir, idx_dir, name):
-                continue   # a rewrite since the build: it may miss files
-            files = self._prune_files(idx_dir, name, col, needle)
-            if files is None:   # no sidecar for this column / no needle
-                continue
-            kept_sets.append(set(files))
-            total = index_file_count(idx_dir, name)
-            if total is not None:
-                totals.append(total)
-        if not kept_sets:
-            return None
-        kept = set.intersection(*kept_sets)
+        binding dir carries sidecar indexes (``plans/skipping.py``,
+        under ``{dir}/_skipidx/{table}/``), the fact scan reads only the
+        files ``skipping.prune_needles`` keeps for the request's
+        ``skipping.request_needles`` (``page_keys``: the dim-driven
+        page's collected keys). Every original filter still applies to
+        the pruned rows, so a Bloom false positive costs a file open,
+        never correctness. Otherwise ``rel``, the normal (cached) scan."""
+        needles = skipping.request_needles(model, page_keys)
+        dirs = self._sidecar_dirs(model.fact_table) if needles else None
+        kept = None if dirs is None \
+            else skipping.prune_needles(*dirs, needles)
+        if kept is None:
+            return rel
         if not kept:
-            # the index proves the conjunction unsatisfiable
-            return self._fact_base(table)[0].where("false")
-        if totals and len(kept) * 2 >= min(totals):
-            # an N-root-path read lists each root separately and loses
-            # to the one-root (cacheable) scan when most files survive
-            return None
-        pruned = self.binding.table_pruned(table.name, sorted(kept))
+            return rel.where("false")
+        pruned = self.binding.table_pruned(model.fact_table.name, kept)
         return _Rel.of(current_scope().view(pruned), pruned.columns)
-
-    def _prune_files(self, idx_dir: str, name: str, col: DimCol,
-                     needle: Filter | list) -> Optional[list[str]]:
-        """Files the sidecar of ``name`` keeps for one needle: a request
-        filter, or a list of page-key values. None = cannot prune."""
-        from ..core.filters import (BetweenFilter, EqualityFilter,
-                                    GreaterThanFilter, InFilter,
-                                    IsNullFilter, LessThanFilter)
-        from .skipping import (prune_files_any, prune_files_null,
-                               prune_files_range)
-        if isinstance(needle, GreaterThanFilter):
-            return prune_files_range(self.spark, idx_dir, name,
-                                     lo=needle.value, lo_inclusive=False)
-        if isinstance(needle, LessThanFilter):
-            return prune_files_range(self.spark, idx_dir, name,
-                                     hi=needle.value, hi_inclusive=False)
-        if isinstance(needle, BetweenFilter):
-            return prune_files_range(self.spark, idx_dir, name,
-                                     lo=needle.from_value,
-                                     hi=needle.to_value)
-        if isinstance(needle, IsNullFilter):
-            return prune_files_null(self.spark, idx_dir, name)
-        if isinstance(needle, EqualityFilter):
-            values = [needle.value]
-        elif isinstance(needle, InFilter):
-            values = list(needle.values)
-        elif isinstance(needle, list):
-            values = needle
-        else:
-            return None
-        canon = [_canon_needle(col.dtype, v) for v in values]
-        if any(c is _SKIP for c in canon):
-            return None   # could hash off the stored form: abstain
-        return prune_files_any(self.spark, idx_dir, name, canon)
 
     def _apply_partition_pruning(self, rel: _Rel, table: FactTable,
                                  model: RequestModel,
@@ -655,10 +516,8 @@ class Planner:
         ``prefilter_values`` (those keys, collected when a skipping
         sidecar on the fk exists) also prune the files the scan opens."""
         table = model.fact_table
-        needles = None
-        if prefilter_keys is not None and prefilter_values:
-            needles = [(prefilter_keys[0], prefilter_values)]
-        rel = self._load_fact(table, model, params, extra_needles=needles)
+        rel = self._load_fact(table, model, params,
+                              page_keys=prefilter_values)
 
         # physical forced filters (over physical column names), declared
         # by the registry: their values render as literals
@@ -960,7 +819,7 @@ class Planner:
             # values also prune the fact's files. The page is cached
             # (released with the request's scope), so the collect, the
             # semi-join and the dim join reuse ONE evaluation of it.
-            if self._fact_has_sidecar(model, driving.fact_fk_col):
+            if self._page_keys_prune(model):
                 page_df, dim = _cached_view(self.spark, dim, params)
                 page_values = [r[0] for r in
                                page_df.select(_q(key)).collect()]
@@ -997,18 +856,16 @@ class Planner:
             out = _with_row_count(out, entities)
         return out
 
-    def _fact_has_sidecar(self, model: RequestModel, col: str) -> bool:
-        """Cheap driver-side probe: does a fresh skipping sidecar for
-        ``col`` exist for this request's fact? Gates the dim-driven
-        page-key collect — without a sidecar the collect would be a
-        wasted job."""
-        from .skipping import _index_path, index_stale
-        dirs = self._sidecar_dirs(model.fact_table, model)
-        if dirs is None:
-            return False
-        idx_dir, tdir = dirs
-        return os.path.exists(_index_path(idx_dir, col)) \
-            and not index_stale(tdir, idx_dir, col)
+    def _page_keys_prune(self, model: RequestModel) -> bool:
+        """Cheap driver-side probe: would the page's keys prune the
+        fact's files, i.e. is there a PAGE_KEYS needle with a fresh
+        sidecar? Gates the page-key collect — without one the collect
+        would be a wasted job."""
+        page = [n for n in skipping.request_needles(model)
+                if n.operator == skipping.PAGE_KEYS]
+        dirs = self._sidecar_dirs(model.fact_table) if page else None
+        return dirs is not None \
+            and skipping.sidecar_fresh(*dirs, page[0].column)
 
     def _build_dim_only(self, model: RequestModel,
                         params: dict[str, Any]) -> _Rel:

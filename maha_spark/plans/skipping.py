@@ -45,16 +45,28 @@ without a JVM round-trip. Index integer/string/date columns — types
 whose Python ``str(value)`` matches Spark's ``CAST(v AS STRING)``;
 floats are deliberately out of scope (representation-sensitive, and a
 float equality needle is a smell anyway).
+
+One policy decides every prune: ``request_needles`` (which conjuncts of
+a request may prune) and ``prune_needles`` (which files they keep). The
+planner, ``needle_scan`` and the skip advisor
+(``registry/skip_advisor.py``) ask these two instead of re-stating
+them.
 """
 
 from __future__ import annotations
 
+import datetime as _dt
 import hashlib
 import os
 import threading
-from typing import Any, Optional
+from typing import Any, NamedTuple, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..core.columns import DimCol
+from ..core.filters import (BetweenFilter, EqualityFilter, GreaterThanFilter,
+                            InFilter, IsNullFilter, LessThanFilter)
+from ..core.types import DateType, IntType, StrType
 
 #: defaults shared by build and probe — both sides must agree, exactly
 #: like HLL_LG_K for sketch partials (core/rollup.py)
@@ -78,8 +90,8 @@ def _index_path(index_dir: str, col: str) -> str:
 def table_index_dir(base_dir: str, table: str) -> str:
     """Conventional sidecar location the PLANNER probes: a maintenance
     job that builds indexes under ``{data_dir}/_skipidx/{table}/`` makes
-    every engine request with an equality/IN needle filter on an indexed
-    column prune its fact scan automatically (planner._load_fact)."""
+    every engine request with a needle (``request_needles``) on an
+    indexed column prune its fact scan automatically."""
     return os.path.join(base_dir, "_skipidx", table)
 
 
@@ -369,8 +381,7 @@ def prune_files(spark: SparkSession, index_dir: str, col: str,
     planning happens on the driver, data processing on executors.
     (``spark`` is kept in the signature for API stability; the probe
     does not use it.)"""
-    files = prune_files_any(spark, index_dir, col, [value])
-    return None if files is None else files
+    return prune_files_any(spark, index_dir, col, [value])
 
 
 def prune_files_any(spark: SparkSession, index_dir: str, col: str,
@@ -472,32 +483,219 @@ def prune_files_null(spark: SparkSession, index_dir: str,
             if (cols["null_count"][i] or 0) > 0]
 
 
+# ------------------------------------------------------------- policy
+
+#: operator of the dim-driven page-key needle
+PAGE_KEYS = "dim-driven-page"
+
+#: sentinel for _canon_needle: the needle's string form may not match
+#: Spark's CAST(stored AS STRING) — never prune on it
+_SKIP = object()
+
+
+def _canon_supported(dtype) -> bool:
+    """Dtypes whose equality/IN needles canonicalize (``_canon_needle``):
+    int, string, date. Everything else (decimals, timestamps) abstains,
+    so only range/null needles prune on such a column."""
+    return isinstance(dtype, (IntType, StrType, DateType))
+
+
+def _canon_needle(dtype, value):
+    """Canonicalize an equality/IN needle so ``str(value)`` matches the
+    string Spark's CAST(stored AS STRING) produced at Bloom-build time —
+    a mismatch would prune files that DO contain the value. Int columns
+    take ints, integral floats and digit strings; string columns only
+    strings ('013' = 13 compares numerically, invisible to the Bloom);
+    date columns date objects and 'YYYY-M-D' strings. Anything else is
+    the _SKIP sentinel."""
+    if isinstance(dtype, IntType):
+        if isinstance(value, bool):
+            return _SKIP
+        if isinstance(value, int):
+            return value
+        if isinstance(value, float) and value.is_integer():
+            return int(value)
+        if isinstance(value, str):
+            try:
+                return int(value, 10)
+            except ValueError:
+                return _SKIP
+        return _SKIP
+    if isinstance(dtype, StrType):
+        return value if isinstance(value, str) else _SKIP
+    if isinstance(dtype, DateType):
+        if isinstance(value, _dt.datetime):    # before date: subclass
+            return _SKIP
+        if isinstance(value, _dt.date):
+            return value
+        if isinstance(value, str):
+            try:
+                return _dt.datetime.strptime(value, "%Y-%m-%d").date()
+            except ValueError:
+                return _SKIP
+        return _SKIP
+    return _SKIP
+
+
+def _canon_values(dtype, values) -> Optional[tuple]:
+    """The canonical needles, or None when any may hash off the stored
+    form (the whole needle abstains)."""
+    canon = tuple(_canon_needle(dtype, v) for v in values)
+    return None if any(c is _SKIP for c in canon) else canon
+
+
+class Needle(NamedTuple):
+    """One conjunct the sidecar of ``column`` may prune on.
+    ``operator`` is the request filter's (``=``, ``in``, ``>``, ``<``,
+    ``between``, ``isnull``) or PAGE_KEYS. ``values``: the canonical
+    ``=``/IN values or page keys; a range's bound(s) in operator order;
+    None for page keys not collected yet (such a needle never prunes)."""
+    column: str
+    operator: str
+    values: Optional[tuple] = ()
+
+
+def _eligible(table, name: Optional[str]) -> Optional[DimCol]:
+    """The column ``name`` when its sidecar may prune: a plain stored
+    DimCol — no derived expression or static mapping (their values
+    differ from the stored bytes), not case-insensitive (the index
+    hashes exact values), not the day or a partition column (directory
+    pruning serves those)."""
+    col = table.columns.get(name) if name else None
+    if not isinstance(col, DimCol) or col.case_insensitive \
+            or col.dtype.has_static_mapping or col.is_day_column \
+            or name in table.partition_columns:
+        return None
+    return col
+
+
+def _filter_needle(name: str, col: DimCol, f) -> Optional[Needle]:
+    """The needle of one fact filter on an eligible column, or None for
+    a shape no sidecar serves or a value that may hash off the stored
+    form."""
+    if isinstance(f, (EqualityFilter, InFilter)):
+        canon = _canon_values(col.dtype, (f.value,) if isinstance(
+            f, EqualityFilter) else f.values)
+        return None if canon is None else Needle(name, f.operator, canon)
+    if isinstance(f, (GreaterThanFilter, LessThanFilter)):
+        return Needle(name, f.operator, (f.value,))
+    if isinstance(f, BetweenFilter):
+        return Needle(name, f.operator, (f.from_value, f.to_value))
+    if isinstance(f, IsNullFilter):
+        return Needle(name, f.operator)
+    return None
+
+
+def request_needles(model, page_keys: Optional[list] = None
+                    ) -> list[Needle]:
+    """The conjuncts of ``model`` a sidecar of its fact table may prune
+    on — what the planner prunes with and the advisor counts.
+
+    None at all for a request that reads no single physical fact (a
+    dim-only request, a union-view fact) or one in a shifted timezone
+    (its filters are LOCAL-day expressions over stored UTC values the
+    sidecar never saw — it abstains, as rollup serving does). Otherwise
+    one needle per ``=``/IN/``>``/``<``/between/IS NULL fact filter on
+    an eligible column (top-level filters are conjunctive; an Or
+    combinator never matches a column), plus, on a dim-driven request
+    whose dim side is paginated to a bounded page, the driving fk's
+    PAGE_KEYS needle: ``page_keys`` are the page's collected key values,
+    None before the collect."""
+    table = model.fact_table
+    if model.is_dim_only or table.parts or model.timezone \
+            or model.utc_shifted:
+        return []
+    out = []
+    for f in model.fact_filters:
+        pub = model.cube.col_by_alias(f.field) \
+            if hasattr(f, "field") else None
+        name = pub.name if pub is not None else getattr(f, "field", None)
+        col = _eligible(table, name)
+        needle = _filter_needle(name, col, f) if col is not None else None
+        if needle is not None:
+            out.append(needle)
+    if model.is_dim_driven and not model.request_distinct \
+            and model.max_rows >= 0:
+        fk = model.chains[0].fact_fk_col
+        col = _eligible(table, fk)
+        if col is not None and _canon_supported(col.dtype):
+            keys = None if page_keys is None else _canon_values(
+                col.dtype, [v for v in page_keys if v is not None])
+            if page_keys is None or keys:
+                out.append(Needle(fk, PAGE_KEYS, keys))
+    return out
+
+
+def sidecar_fresh(index_dir: str, table_dir: str, col: str) -> bool:
+    """True when ``col`` has a sidecar built since the table's last
+    rewrite (``index_stale``) — the only kind that may prune."""
+    return os.path.exists(_index_path(index_dir, col)) \
+        and not index_stale(table_dir, index_dir, col)
+
+
+def _probe(index_dir: str, n: Needle) -> Optional[list[str]]:
+    """The files one needle keeps, through its sidecar algorithm's probe
+    (None = no sidecar)."""
+    if n.operator == ">":
+        return prune_files_range(None, index_dir, n.column,
+                                 lo=n.values[0], lo_inclusive=False)
+    if n.operator == "<":
+        return prune_files_range(None, index_dir, n.column,
+                                 hi=n.values[0], hi_inclusive=False)
+    if n.operator == "between":
+        return prune_files_range(None, index_dir, n.column,
+                                 lo=n.values[0], hi=n.values[1])
+    if n.operator == "isnull":
+        return prune_files_null(None, index_dir, n.column)
+    return prune_files_any(None, index_dir, n.column, list(n.values))
+
+
+def prune_needles(index_dir: str, table_dir: str,
+                  needles: list[Needle]) -> Optional[list[str]]:
+    """The files of the table at ``table_dir`` a conjunction of needles
+    keeps: None = read the whole table, [] = the sidecars prove the
+    conjunction unsatisfiable, else the sorted kept files.
+
+    Only fresh sidecars prune (a stale one may miss a rewrite's files);
+    per-needle keep sets intersect. When at least half the files
+    survive, pruning loses: an N-root-path read lists each root
+    separately and loses to the one-root (cacheable) scan — None."""
+    kept_sets: list[set[str]] = []
+    totals: list[int] = []
+    for n in needles:
+        if n.values is None \
+                or not sidecar_fresh(index_dir, table_dir, n.column):
+            continue
+        files = _probe(index_dir, n)
+        if files is None:
+            continue
+        kept_sets.append(set(files))
+        total = index_file_count(index_dir, n.column)
+        if total is not None:
+            totals.append(total)
+    if not kept_sets:
+        return None
+    kept = set.intersection(*kept_sets)
+    if not kept:
+        return []
+    if totals and len(kept) * 2 >= min(totals):
+        return None
+    return sorted(kept)
+
+
 def needle_scan(spark: SparkSession, table_dir: str, index_dir: str,
                 col: str, value: Any) -> DataFrame:
-    """``SELECT * FROM table WHERE col = value`` with the file list
-    pruned by the sidecar BEFORE the scan. Identical rows to the full
+    """``SELECT * FROM table WHERE col = value`` over the files
+    ``prune_needles`` keeps for the needle. Identical rows to the full
     scan (no false negatives by construction); the residual filter still
     applies because surviving files may be Bloom false positives.
 
-    The empty-prune case returns the full table under ``WHERE false`` —
-    a footer-only plan with the correct schema, no data read."""
-    if index_stale(table_dir, index_dir, col):
-        return spark.read.parquet(table_dir).filter(F.col(col) == F.lit(value))
-    files = prune_files(spark, index_dir, col, value)
-    if files is None:
-        return spark.read.parquet(table_dir).filter(F.col(col) == F.lit(value))
+    When the index proves the value absent, the full table is read under
+    ``WHERE false`` — a footer-only plan with the correct schema."""
+    files = prune_needles(index_dir, table_dir, [Needle(col, "=", (value,))])
     if not files:
-        # rare path (index proves the value absent): the full-table read
-        # under WHERE false is footer-only and gives the right schema
-        return spark.read.parquet(table_dir).filter(F.lit(False))
-    total = index_file_count(index_dir, col)
-    if total is not None and len(files) * 2 >= total:
-        # no-benefit prune (the planner's guard, mirrored): an explicit
-        # N-root-path read lists each root separately and MEASURABLY
-        # LOSES to the one-root directory scan when most files survive
-        # — a low-selectivity needle uses the plain scan
-        return spark.read.parquet(table_dir) \
-            .filter(F.col(col) == F.lit(value))
+        return spark.read.parquet(table_dir).filter(
+            F.lit(False) if files == [] else F.col(col) == F.lit(value))
     # basePath keeps directory-derived partition columns (dt=) intact
     # when reading an explicit leaf-file list; a FLAT single-file table
     # has no directory-derived columns and basePath rejects non-dirs.

@@ -10,11 +10,10 @@ eligible point/range/null predicate on a physical column is a needle
 the sidecar could have pruned files for — repeated needles on the same
 (table, column) rank it.
 
-Eligibility mirrors ``planner._apply_file_skipping`` exactly (plain
-stored ``DimCol``, not case-insensitive, no static mapping) so a
-recommendation is never something the planner would refuse to prune on.
-Day/partition columns are excluded — directory partition pruning
-already serves those for free.
+A request counts toward exactly the (table, column) pairs the planner
+would prune on with a sidecar built: ``plans.skipping.request_needles``,
+the one eligibility the planner itself asks, so a recommendation is
+never something the planner would refuse to prune on.
 
 At 100 TB the loop is: serve traffic -> ledger -> this advisor ->
 ``build_recommended_indexes`` (one indexing pass per table over the
@@ -26,7 +25,6 @@ scans facts.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 from typing import Any, Iterable, Optional
 
@@ -48,15 +46,6 @@ class SkippingIndexRecommendation:
                 f"needle filter(s) [{ops}]")
 
 
-def _canon_supported(dtype) -> bool:
-    """Dtypes whose equality/IN needles the planner can canonicalize
-    (``planner._canon_needle``): int, string, date. Everything else
-    (decimals, timestamps) abstains there, so an equality-only workload
-    on such a column gains nothing from a sidecar."""
-    from ..core.types import DateType, IntType, StrType
-    return isinstance(dtype, (IntType, StrType, DateType))
-
-
 def recommend_skipping_indexes(engine, entries: Iterable[Any], *,
                                top_n: int = 5, min_count: int = 2,
                                today=None
@@ -75,12 +64,7 @@ def recommend_skipping_indexes(engine, entries: Iterable[Any], *,
     ``min_count`` guards against indexing one-off investigations;
     ``top_n`` bounds the build cost downstream.
     """
-    from ..core.columns import DimCol
-    from ..core.filters import (BetweenFilter, EqualityFilter,
-                                GreaterThanFilter, InFilter, IsNullFilter,
-                                LessThanFilter)
-    needle_types = (EqualityFilter, InFilter, GreaterThanFilter,
-                    LessThanFilter, BetweenFilter, IsNullFilter)
+    from ..plans.skipping import request_needles
     counts: dict[tuple[str, str], list] = {}
     for e in entries:
         raw = e if isinstance(e, (str, bytes, dict)) else None
@@ -95,49 +79,11 @@ def recommend_skipping_indexes(engine, entries: Iterable[Any], *,
         except Exception:
             # stale/invalid logged requests must not abort mining
             continue
-        table = model.fact_table
-        parts = set(table.partition_columns or ())
-        for f in model.fact_filters:
-            if not isinstance(f, needle_types):
-                continue
-            pub = model.cube.col_by_alias(f.field) \
-                if hasattr(f, "field") else None
-            name = pub.name if pub is not None else \
-                getattr(f, "field", None)
-            col = table.columns.get(name) if name else None
-            # the planner's pruning eligibility, verbatim — plus day /
-            # partition columns, which directory pruning already serves
-            if not isinstance(col, DimCol) or col.case_insensitive \
-                    or col.dtype.has_static_mapping \
-                    or col.is_day_column or name in parts:
-                continue
-            if isinstance(f, (EqualityFilter, InFilter)) \
-                    and not _canon_supported(col.dtype):
-                # the planner's _canon_needle abstains on every
-                # equality/IN needle for this dtype (e.g. decimals) —
-                # an index would be built and maintained but never
-                # consulted. Range/null needles still count: zone maps
-                # serve those for any ordered type.
-                continue
-            rec = counts.setdefault((table.name, name), [0, set()])
+        for n in request_needles(model):
+            rec = counts.setdefault((model.fact_table.name, n.column),
+                                    [0, set()])
             rec[0] += 1
-            rec[1].add(f.operator)
-        # dim-driven requests with a bounded page consult a sidecar on
-        # the DRIVING fk (planner page-key pruning): the page's key set
-        # probes it so the fact scan opens only candidate files — count
-        # that traffic toward an fk-column recommendation with the same
-        # eligibility the planner applies
-        if getattr(model, "is_dim_driven", False) and model.chains \
-                and model.max_rows >= 0:
-            fk = model.chains[0].fact_fk_col
-            col = table.columns.get(fk)
-            if isinstance(col, DimCol) and not col.case_insensitive \
-                    and not col.dtype.has_static_mapping \
-                    and not col.is_day_column and fk not in parts \
-                    and _canon_supported(col.dtype):
-                rec = counts.setdefault((table.name, fk), [0, set()])
-                rec[0] += 1
-                rec[1].add("dim-driven-page")
+            rec[1].add(n.operator)
     out = [SkippingIndexRecommendation(t, c, n, tuple(sorted(ops)))
            for (t, c), (n, ops) in counts.items() if n >= min_count]
     out.sort(key=lambda r: (-r.count, r.table, r.column))
@@ -153,16 +99,16 @@ def build_recommended_indexes(spark, base_dir: str,
     the conventional ``{base_dir}/_skipidx/{table}/`` the planner
     probes. Returns ``{table: [sidecar paths]}``. Missing tables are
     skipped (a recommendation can outlive a dropped binding)."""
+    from ..plans.binding import ParquetBinding
     from ..plans.skipping import build_skipping_index, table_index_dir
     by_table: dict[str, list[str]] = {}
     for r in recs:
         by_table.setdefault(r.table, []).append(r.column)
+    binding = ParquetBinding(spark, base_dir)
     out: dict[str, list[str]] = {}
     for table, cols in by_table.items():
-        tdir = os.path.join(base_dir, table)
-        if not os.path.exists(tdir):
-            tdir = os.path.join(base_dir, f"{table}.parquet")
-        if not os.path.exists(tdir):
+        tdir = binding.table_path(table)
+        if tdir is None:
             continue
         out[table] = build_skipping_index(
             spark, tdir, sorted(set(cols)),

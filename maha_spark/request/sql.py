@@ -1,6 +1,7 @@
-"""SQL entry point: SQL SELECT over a cube's public aliases ->
-``ReportingRequest`` (service/.../calcite/MahaCalciteSqlParser.scala:39-380
-semantics, reimplemented without Calcite).
+"""SQL entry point: SQL SELECT over a cube's public aliases -> the
+request JSON a ``ReportingRequest`` parses from
+(service/.../calcite/MahaCalciteSqlParser.scala:39-380 semantics,
+reimplemented without Calcite).
 
 Supported surface — deliberately the same narrow one the reference parses:
 
@@ -23,7 +24,6 @@ from __future__ import annotations
 import re
 from typing import Any, Optional
 
-from .request import ReportingRequest, parse_request
 
 _TOKEN_RE = re.compile(r"""
     \s*(?:
@@ -255,9 +255,3 @@ def sql_to_request_json(sql: str,
     if p.peek()[0] != "eof":
         raise SqlParseError(f"trailing tokens at {p.peek()[1]!r}")
     return req
-
-
-def parse_sql(sql: str, schema: str = "internal",
-              star_fields: Optional[list[str]] = None) -> ReportingRequest:
-    return parse_request(sql_to_request_json(sql, star_fields),
-                         schema=schema)

@@ -193,7 +193,7 @@ def test_equality_needles_on_uncanonical_dtypes_excluded():
     from a sidecar — the advisor must not recommend building one."""
     from maha_spark.core.types import (DateType, DecType, IntType,
                                        StrType, TimestampType)
-    from maha_spark.registry.skip_advisor import _canon_supported
+    from maha_spark.plans.skipping import _canon_supported
     assert _canon_supported(IntType())
     assert _canon_supported(StrType())
     assert _canon_supported(DateType())
@@ -230,3 +230,112 @@ def test_dim_driven_traffic_recommends_driving_fk(eng):
     recs2 = recommend_skipping_indexes(eng, [json.dumps(unbounded)] * 3,
                                        min_count=1)
     assert not [r for r in recs2 if r.column == "l_orderkey"]
+
+
+def _dim_driven_page(**extra):
+    req = {
+        "cube": "tpch",
+        "selectFields": [{"field": "order_key"},
+                         {"field": "order_priority"},
+                         {"field": "revenue"}],
+        "filterExpressions": [
+            {"field": "day", "operator": "between",
+             "from": "1995-01-01", "to": "2002-12-31"}],
+        "sortBy": [{"field": "order_priority", "order": "ASC"}],
+        "forceDimensionDriven": True,
+        "rowsPerPage": 25,
+    }
+    req.update(extra)
+    return json.dumps(req)
+
+
+#: case -> (request, table, column, whether the planner prunes on it)
+AGREE_CASES = {
+    "plain_needle": (_needle(13), "events", "user_id", True),
+    "shifted_timezone_needle": (
+        json.dumps({**json.loads(_needle(13)), "additionalParameters": {
+            "timeZone": "America/Los_Angeles"}}),
+        "events", "user_id", False),
+    "bounded_dim_driven_page": (
+        _dim_driven_page(), "lineitem", "l_orderkey", True),
+    "bounded_distinct_dim_driven_page": (
+        _dim_driven_page(additionalParameters={"Distinct": "true"}),
+        "lineitem", "l_orderkey", False),
+    "decimal_equality_needle": (json.dumps({
+        "cube": "events_dec",
+        "selectFields": [{"field": "value"}, {"field": "event_count"}],
+        "filterExpressions": [
+            {"field": "day", "operator": "between",
+             "from": "2024-01-01", "to": "2024-12-31"},
+            {"field": "value", "operator": "=", "value": 185.22}],
+    }), "events", "value", False),
+}
+
+
+def _n_files(d, table):
+    return sum(len([f for f in os.listdir(os.path.join(d, table, p))
+                    if f.endswith(".parquet")])
+               for p in os.listdir(os.path.join(d, table))
+               if p.startswith("dt="))
+
+
+@pytest.fixture(scope="module")
+def agree_layout(spark, tmp_path_factory):
+    """Value-clustered, day-partitioned events and lineitem layouts with
+    sidecars on every column the cases filter, and an engine whose
+    registry adds ``events_dec``: the events fact with its ``value``
+    column as a decimal dimension."""
+    from dataclasses import replace
+
+    from maha_spark.core.columns import DimCol
+    from maha_spark.core.types import DecType
+    from maha_spark.plans.skipping import (build_skipping_index,
+                                           table_index_dir)
+    from maha_spark.registry.cube import PubCol, PublicFact
+
+    d = str(tmp_path_factory.mktemp("agree") / "sf")
+    os.makedirs(d)
+    for t in os.listdir(SRC):
+        if t not in ("events.parquet", "lineitem.parquet"):
+            os.symlink(os.path.join(SRC, t), os.path.join(d, t))
+    for table, day, key in (("events", "ts", "user_id"),
+                            ("lineitem", "l_shipdate", "l_orderkey")):
+        (spark.read.parquet(os.path.join(SRC, f"{table}.parquet"))
+         .withColumn("dt", F.to_date(day))
+         .withColumn("kb", F.expr(f"CAST({key} % 4 AS INT)"))
+         .repartition(4, F.col("kb")).sortWithinPartitions(key)
+         .drop("kb")
+         .write.mode("overwrite").partitionBy("dt")
+         .parquet(os.path.join(d, table)))
+    build_skipping_index(spark, os.path.join(d, "events"),
+                         ["user_id", "value"], table_index_dir(d, "events"))
+    build_skipping_index(spark, os.path.join(d, "lineitem"),
+                         ["l_orderkey"], table_index_dir(d, "lineitem"))
+
+    reg = build_contract_registry()
+    events = reg.fact("events_cube").tables[0]
+    reg.register_fact(PublicFact(
+        name="events_dec",
+        tables=[replace(events, columns={
+            **events.columns, "value": DimCol("value", DecType())})],
+        pub_cols=[PubCol("day", "event_day"), PubCol("value", "value")],
+        pub_fact_cols=[PubCol("event_count", "event_count")],
+        day_alias="day"))
+    return d, engine_for_dir(spark, reg, d)
+
+
+@pytest.mark.parametrize("case", sorted(AGREE_CASES))
+def test_advisor_counts_iff_planner_prunes(agree_layout, case):
+    """The advisor counts a (table, column) for a request exactly when a
+    built sidecar on that column makes the engine's request read a
+    pruned file list — never a sidecar no request consults. A pruned
+    read lists a strict, non-empty subset of the table's files; an
+    unpruned one lists them all, or none when the scan is cached."""
+    d, eng = agree_layout
+    req, table, column, prunes = AGREE_CASES[case]
+    recs = recommend_skipping_indexes(eng, [req], min_count=1)
+    counted = (table, column) in {(r.table, r.column) for r in recs}
+    files = {f for f in eng.dataframe(req).inputFiles()
+             if f"/{table}/" in f}
+    pruned = 0 < len(files) < _n_files(d, table)
+    assert (counted, pruned) == (prunes, prunes)

@@ -786,7 +786,7 @@ def test_date_needle_canonicalization(spark, tmp_path):
     import datetime as dt
 
     from maha_spark.core.types import DateType
-    from maha_spark.plans.planner import _SKIP, _canon_needle
+    from maha_spark.plans.skipping import _SKIP, _canon_needle
 
     assert _canon_needle(DateType(), "2024-07-02") == dt.date(2024, 7, 2)
     assert _canon_needle(DateType(), "2024-7-2") == dt.date(2024, 7, 2)
